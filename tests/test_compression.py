@@ -86,3 +86,22 @@ def test_spark_block_roundtrip(spark, turns_small):
         F.sum(F.col("n") * 16).alias("raw"),
     ).first()
     assert sizes["c"] < sizes["raw"]
+
+
+def test_decompress_rejects_unknown_codec(spark):
+    """Blocks are read back from tables on disk: a block tagged with any
+    codec other than gorilla must fail the decode, not be misread."""
+    import datetime as dt
+
+    from ts_raster_spark.operators.compress import BLOCK_SCHEMA, decompress_blocks
+
+    ts = np.array([1_700_000_000_000_000, 1_700_000_060_000_000], dtype=np.int64)
+    vals = np.array([1.5, 2.5])
+
+    def blocks(codec):
+        row = ("c", "k", dt.datetime(2023, 11, 14), 2, codec, encode_timestamps(ts), encode_values(vals))
+        return spark.createDataFrame([row], BLOCK_SCHEMA)
+
+    assert [r["value"] for r in decompress_blocks(blocks("gorilla")).collect()] == [1.5, 2.5]
+    with pytest.raises(Exception, match="unsupported block codec 'chimp'"):
+        decompress_blocks(blocks("chimp")).collect()

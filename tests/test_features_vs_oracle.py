@@ -15,6 +15,9 @@ import numpy as np
 import pandas as pd
 import pytest
 
+from pyspark.sql import functions as F
+from pyspark.sql.window import Window
+
 from ts_raster_spark.functions import oracle as ORC
 from ts_raster_spark.functions import features as FT
 from ts_raster_spark.operators.longform import to_long_panel
@@ -94,3 +97,57 @@ def test_ordering_invariant(spark, turns_small):
         .toPandas()
     )
     pd.testing.assert_frame_equal(a, b)
+
+
+# Exact rank-sum quantiles vs Spark's built-in percentile(): every q the
+# engine uses (plus the endpoints), on the group shapes where the
+# interpolation arithmetic has edge cases.
+QUANTILE_QS = (0, 0.05, 0.15, 0.25, 0.5, 0.75, 0.85, 0.95, 1)
+QUANTILE_GROUPS = {
+    "ties": [3.0, 1.0, 3.0, 3.0, 2.0, 1.0, 3.0],
+    "interior_nulls": [4.0, None, 1.0, None, 9.0, 2.5],
+    "one_row": [7.25],
+    "two_rows": [-1.5, 10.0],
+    "only_nulls": [None, None, None],
+    "seeded": [float(v) for v in np.round(np.random.RandomState(7).normal(0, 3, 41), 1)],
+}
+
+
+@pytest.fixture(scope="module")
+def quantile_groups(spark):
+    rows = [(g, i, v) for g, xs in QUANTILE_GROUPS.items() for i, v in enumerate(xs)]
+    df = spark.createDataFrame(rows, "g string, i int, value double")
+    return FT.attach_value_rank(df, ["g"])
+
+
+def _assert_same_quantiles(rows, label):
+    assert len(rows) == len(QUANTILE_GROUPS)
+    for row in rows:
+        for j, q in enumerate(QUANTILE_QS):
+            got, want = row[f"rank_{j}"], row[f"pct_{j}"]
+            assert got == want, f"{label} q={q} group={row['g']}: rank-sum {got!r} vs percentile {want!r}"
+
+
+def test_rank_quantile_agg_equals_percentile(quantile_groups):
+    aggs = []
+    for j, q in enumerate(QUANTILE_QS):
+        aggs += [
+            FT.rank_quantile_agg(q).alias(f"rank_{j}"),
+            F.expr(f"percentile(value, {q})").alias(f"pct_{j}"),
+        ]
+    rows = quantile_groups.groupBy("g").agg(*aggs).collect()
+    _assert_same_quantiles(rows, "aggregate")
+    only_nulls = next(r for r in rows if r["g"] == "only_nulls")
+    assert all(only_nulls[f"rank_{j}"] is None for j in range(len(QUANTILE_QS)))
+
+
+def test_rank_quantile_window_equals_percentile(quantile_groups):
+    w = Window.partitionBy("g")
+    cols = []
+    for j, q in enumerate(QUANTILE_QS):
+        cols += [
+            FT.rank_quantile_window(q, ["g"]).alias(f"rank_{j}"),
+            F.expr(f"percentile(value, {q})").over(w).alias(f"pct_{j}"),
+        ]
+    rows = quantile_groups.select("g", *cols).dropDuplicates(["g"]).collect()
+    _assert_same_quantiles(rows, "window")

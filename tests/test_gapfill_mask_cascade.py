@@ -146,3 +146,6 @@ def test_algebraic_features_derive_exactly_from_cascade(spark, turns_small):
         # variation_coefficient is NULL on zero mean in both paths
         mask = ~(np.isnan(a) & np.isnan(b))
         assert np.allclose(a[mask], b[mask], rtol=1e-9, atol=1e-9), c
+    # a misspelt name fails loudly instead of silently dropping its column
+    with pytest.raises(ValueError, match=r"unknown feature names \['meen'\]"):
+        rollup_features(long_df, tier="hour", feature_names=[*cols, "meen"])

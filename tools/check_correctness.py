@@ -3,11 +3,14 @@
 Runs every ``__spark_entry__.queries()`` entry on Spark and its
 ``oracle_sql()`` twin on DuckDB at the given sf dir, then compares
 row count, sorted column-name schema, and an order-insensitive value
-hash. Usage:  python tools/check_correctness.py [sf_dir] [name ...]
+hash. Each PASS/OK? line ends with ``hash=<16 hex>``, a digest of the
+normalized Spark result, so two trees' runs can be diffed query by
+query. Usage:  python tools/check_correctness.py [sf_dir] [name ...]
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
 import sys
 import time
@@ -34,6 +37,12 @@ def norm(df: pd.DataFrame) -> pd.DataFrame:
         if pd.api.types.is_integer_dtype(df[c]):
             df[c] = df[c].astype("Int64")
     return df.sort_values(list(df.columns)).reset_index(drop=True)
+
+
+def value_hash(df: pd.DataFrame) -> str:
+    """Order-insensitive digest of a result's column names and values
+    (CSV floats print round-trip exact, so a last-bit change shows)."""
+    return hashlib.sha256(norm(df).to_csv(index=False).encode()).hexdigest()[:16]
 
 
 def compare(name: str, sdf: pd.DataFrame, odf: pd.DataFrame) -> list[str]:
@@ -80,7 +89,7 @@ def main():
             failed.append(name)
             continue
         if name not in os_:
-            print(f"OK?  {name}: rows={len(sdf)} (no oracle, rows-only) [{time.time()-t0:.1f}s]")
+            print(f"OK?  {name}: rows={len(sdf)} (no oracle, rows-only) [{time.time()-t0:.1f}s] hash={value_hash(sdf)}")
             continue
         try:
             odf = con.execute(os_[name]).fetchdf()
@@ -93,7 +102,7 @@ def main():
             print(f"FAIL {name}: rows={len(sdf)}/{len(odf)} " + "; ".join(problems))
             failed.append(name)
         else:
-            print(f"PASS {name}: rows={len(sdf)} [{time.time()-t0:.1f}s]")
+            print(f"PASS {name}: rows={len(sdf)} [{time.time()-t0:.1f}s] hash={value_hash(sdf)}")
     print(f"\n{n_run - len(failed)}/{n_run} pass")
     sys.exit(1 if failed else 0)
 

@@ -1,3 +1,9 @@
+"""Time the minute -> hour -> day rollup pipeline on
+``.bench_tmp/turns_4000000.parquet`` with the dense-join and the
+window-lag latency (``to_long_panel(dense_turn_idx=...)``) at 8 and 32
+cores, each in a child process pinned with ``taskset``.  Writes only
+under ``.bench_tmp/``.  Usage: python tools/exp_scaling.py
+"""
 import json, os, subprocess, sys, time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 CHILD = """
@@ -13,7 +19,7 @@ spark = get_spark(app_name="exp", master=f"local[{cpus}]", shuffle_partitions=cp
 spark.sparkContext.setLogLevel("ERROR")
 turns = spark.read.parquet(%(repo)r + "/.bench_tmp/turns_4000000.parquet")
 def pipe():
-    long_df = LF.to_long_panel(turns) if dense else LF.to_long_panel_window(turns)
+    long_df = LF.to_long_panel(turns, dense_turn_idx=dense)
     m = rollup_simple(long_df, "minute")
     m.write.mode("overwrite").parquet(%(repo)r + f"/.bench_tmp/exp_min_{cpus}")
     mm = spark.read.parquet(%(repo)r + f"/.bench_tmp/exp_min_{cpus}")
@@ -26,21 +32,6 @@ for _ in range(3):
     os.sync(); t0 = time.time(); pipe(); times.append(round(time.time()-t0, 2))
 print("RESULT", times)
 """
-# add a window-variant helper to longform for the experiment
-import re
-lf = open(os.path.join(REPO, "ts_raster_spark/operators/longform.py")).read()
-if "to_long_panel_window" not in lf:
-    lf += """
-
-def to_long_panel_window(turns, channels=CHANNELS):
-    wide = with_channels(turns, dense_turn_idx=False)
-    chan_cols = [c for c in channels if c != "value"] + (["value"] if "value" in channels else [])
-    pairs = ", ".join(f"'{c}', {'value' if c == 'value' else c}" for c in chan_cols)
-    stacked = wide.selectExpr("conv_id", "turn_idx", "ts", f"stack({len(chan_cols)}, {pairs}) AS (kind, value_out)")
-    return stacked.where(F.col("value_out").isNotNull()).withColumnRenamed("value_out", "value")
-"""
-    open(os.path.join(REPO, "ts_raster_spark/operators/longform.py"), "w").write(lf)
-
 for dense in (True, False):
     for cpus in (8, 32):
         code = CHILD % {"repo": REPO, "dense": dense, "cpus": cpus}

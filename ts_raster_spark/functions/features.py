@@ -16,8 +16,11 @@ Numeric contracts that matter for rolled-up point equality:
 - ``skewness``/``kurtosis`` are the **bias-corrected** pandas G1/G2, not
   Spark's population g1/g2. Computed from central moments against a
   window-attached group mean (numerically stable two-pass).
-- ``median``/``quantile(q)`` use exact linear interpolation
-  (``percentile``, not ``percentile_approx``).
+- ``median``/``quantile(q)`` are exact linear-interpolation quantiles,
+  bit-identical to ``percentile`` (not ``percentile_approx``), computed
+  as rank-sums: :func:`attach_value_rank` ranks each row's value and
+  two conditional sums per quantile pick and weight the interpolation
+  neighbours (:func:`rank_quantile_agg`).
 - ``autocorrelation(lag)`` uses the tsfresh estimator: global mean and
   population variance, divisor ``(n - lag) * var_pop``.
 
@@ -43,7 +46,7 @@ ORDER_COLS = ("turn_idx", "ts")
 PEAK_NS = (1, 3)
 
 
-def attach_group_stats(df: DataFrame, keys: list[str], order_cols=ORDER_COLS, lags=(1, 2)) -> DataFrame:
+def attach_group_stats(df: DataFrame, keys: list[str], lags=(1, 2)) -> DataFrame:
     """Attach per-group stats + ordered lag/row-number as row columns.
 
     One hash-partitioning on ``keys`` serves every window here and the
@@ -52,13 +55,13 @@ def attach_group_stats(df: DataFrame, keys: list[str], order_cols=ORDER_COLS, la
     feed :func:`autocorrelation_agg` at those lags; all windows share the
     same partitioning so extra lags add no exchange).
     """
-    wo = Window.partitionBy(*keys).orderBy(*[F.col(c) for c in order_cols])
+    wo = Window.partitionBy(*keys).orderBy(*[F.col(c) for c in ORDER_COLS])
     # Whole-partition stats use the SAME (partition, order) spec as the
     # ordered columns, with an explicit unbounded-unbounded frame: the
-    # aggregate value is identical (whole partition), but every window
-    # here now collapses into ONE Window operator over ONE sort —
-    # round 6; the previous unordered spec forced a second full sort
-    # (sort by keys, then sort by keys+order) on the hot rollup path.
+    # aggregate value is identical (whole partition), and every window
+    # here collapses into ONE Window operator over ONE sort.  An
+    # unordered spec would need its own sort by keys before the sort by
+    # keys+order.
     wf = wo.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     out = (
         df.withColumn(MU, F.avg(V).over(wf))
@@ -101,26 +104,27 @@ def _n() -> Column:
 RNV, NV = "_rnv", "_nv"
 
 
-def attach_value_rank(df: DataFrame, keys: list[str], v: str = V) -> DataFrame:
+def attach_value_rank(df: DataFrame, keys: list[str]) -> DataFrame:
     """Attach ``_rnv`` (rank among the group's non-null values in
     ascending value order) and ``_nv`` (non-null count) — the helper
-    columns behind the exact rank-sum quantiles (round 6).  count()
+    columns behind the exact rank-sum quantiles.  count()
     skips nulls, so a null row shares its predecessor's rank and its
     null value contributes nothing to the conditional sums."""
-    w_v = Window.partitionBy(*keys).orderBy(F.col(v).asc())
+    w_v = Window.partitionBy(*keys).orderBy(F.col(V).asc())
     return df.withColumn(
-        RNV, F.count(v).over(w_v.rowsBetween(Window.unboundedPreceding, Window.currentRow))
+        RNV, F.count(V).over(w_v.rowsBetween(Window.unboundedPreceding, Window.currentRow))
     ).withColumn(
-        NV, F.count(v).over(w_v.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing))
+        NV, F.count(V).over(w_v.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing))
     )
 
 
-def _rank_quantile_terms(q: float, v: Column) -> tuple[Column, Column]:
+def _rank_quantile_terms(q: float) -> tuple[Column, Column]:
     """The two conditional per-row terms whose group-sums reproduce
     Spark Percentile's interpolation arithmetic exactly: pos = q*(n-1)
     0-based, lower = floor(pos), higher = ceil(pos), result =
     lowerVal*(higher-pos) + higherVal*(pos-lower), single-row value
     when higher == lower.  Requires :func:`attach_value_rank`."""
+    v = F.col(V)
     pos = F.lit(float(q)) * (F.col(NV) - F.lit(1)).cast("double")
     lower = F.floor(pos)
     higher = F.ceil(pos)
@@ -134,31 +138,33 @@ def _rank_quantile_terms(q: float, v: Column) -> tuple[Column, Column]:
     return term_low, term_high
 
 
-def rank_quantile_agg(q: float, v: Column | None = None) -> Column:
-    """Exact quantile as two codegen-able conditional SUM aggregates —
-    the replacement for the holistic percentile() aggregate, which
-    demotes every co-grouped aggregate to interpreted
-    ObjectHashAggregate and buffers per-group value maps.  Bit-identical
-    to ``percentile(v, q)``.  Requires :func:`attach_value_rank`."""
-    term_low, term_high = _rank_quantile_terms(q, v if v is not None else F.col(V))
+def rank_quantile_agg(q: float) -> Column:
+    """Exact quantile as two codegen-able conditional SUM aggregates,
+    bit-identical to ``percentile(value, q)``.  The holistic percentile()
+    aggregate would demote every co-grouped aggregate to interpreted
+    ObjectHashAggregate and buffer a per-group value map (an OOM hazard
+    on mega-groups).  Requires :func:`attach_value_rank`."""
+    term_low, term_high = _rank_quantile_terms(q)
     return F.sum(term_low) + F.coalesce(F.sum(term_high), F.lit(0.0))
 
 
-def rank_quantile_window(q: float, keys: list[str], v: str = V) -> Column:
+def rank_quantile_window(q: float, keys: list[str]) -> Column:
     """Per-row group-quantile column (window form of
     :func:`rank_quantile_agg`), riding the same ascending-value sort as
     :func:`attach_value_rank`."""
     wvf = (
         Window.partitionBy(*keys)
-        .orderBy(F.col(v).asc())
+        .orderBy(F.col(V).asc())
         .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     )
-    term_low, term_high = _rank_quantile_terms(q, F.col(v))
+    term_low, term_high = _rank_quantile_terms(q)
     return F.sum(term_low).over(wvf) + F.coalesce(F.sum(term_high).over(wvf), F.lit(0.0))
 
 
 def core_aggs() -> dict[str, Column]:
-    """Closed-form aggregates needing no helper columns."""
+    """Closed-form aggregates.  ``count_above_mean``/``count_below_mean``
+    read the group mean ``_mu`` (``attach_group_stats``); the rest need
+    no helper column."""
     v = F.col(V)
     return {
         "turn_count": _n().cast("long"),
@@ -166,7 +172,6 @@ def core_aggs() -> dict[str, Column]:
         "maximum": F.max(v),
         "minimum": F.min(v),
         "sum_values": F.sum(v),
-        "median": F.expr(f"percentile({V}, 0.5)"),
         "variance": F.var_pop(v),
         "standard_deviation": F.stddev_pop(v),
         "abs_energy": F.sum(v * v),
@@ -184,12 +189,18 @@ def core_aggs() -> dict[str, Column]:
     }
 
 
-def quantile_aggs(qs=(0.05, 0.15, 0.85, 0.95)) -> dict[str, Column]:
-    """tsfresh ``quantile(q)`` — exact linear-interp percentile
-    (README.md:112; tests/calculateFeatures.py:16)."""
-    return {
-        f"quantile_q{str(q).replace('0.', '')}": F.expr(f"percentile({V}, {q})") for q in qs
-    }
+# column name -> q of the default feature set's exact quantiles
+QUANTILES = {
+    "median": 0.5, "quantile_q05": 0.05, "quantile_q15": 0.15,
+    "quantile_q85": 0.85, "quantile_q95": 0.95,
+}
+
+
+def quantile_aggs(qs: dict[str, float] = QUANTILES) -> dict[str, Column]:
+    """tsfresh ``median``/``quantile(q)`` as rank-sums, one column per
+    ``name -> q`` entry (README.md:112; tests/calculateFeatures.py:16).
+    Requires :func:`attach_value_rank`."""
+    return {name: rank_quantile_agg(q) for name, q in qs.items()}
 
 
 def moment_aggs() -> dict[str, Column]:
@@ -296,8 +307,8 @@ def attach_benford_digit(df: DataFrame) -> DataFrame:
     agrees with tsfresh's string-scientific extraction except on values
     within 1 ulp below a power of ten. Computing it here instead of
     inside :func:`benford_agg` keeps the two transcendentals (log10,
-    pow) at 2 per row rather than 2 × 9 conditional aggregate branches —
-    the round-2 flagship-rollup regression."""
+    pow) at 2 per row rather than 2 × 9 conditional aggregate branches
+    on the hot rollup path."""
     absv = F.abs(F.col(V))
     digit = F.when(absv == 0, F.lit(0)).otherwise(
         F.floor(absv / F.pow(F.lit(10.0), F.floor(F.log10(absv)))).cast("int")
@@ -314,8 +325,7 @@ def benford_agg() -> dict[str, Column]:
 
     Pearson r is invariant to positive scaling of q, so the choice of
     normalizer (full length n, nonzero count, or none) provably cannot
-    change the value — the feature-contract question raised in round-2
-    review is moot, and the closed form below uses the RAW counts c_d
+    change the value, and the closed form below uses the RAW counts c_d
     (the n cancels):
         r = (Σ p_d c_d − p̄ Σc) / (σ_p · sqrt(Σ c_d² − (Σc)²/9)).
     Requires :func:`attach_benford_digit` (``_bdigit`` column).
@@ -393,8 +403,8 @@ def large_standard_deviation_aggs(rs=(0.25,)) -> dict[str, Column]:
     dust on sigma and a strict ``>`` splits across engines; quantizing
     the RATIO snaps true equality to 0 on both sides at every value
     magnitude — an absolute round(diff, 9) broke for |x|~1e-9 (genuine
-    inequalities rounded to 0) and |x|~1e6 (dust survived), per the
-    round-3 advisor.  Mirrored textually in the DuckDB twin."""
+    inequalities rounded to 0) and |x|~1e6 (dust survived).  Mirrored
+    textually in the DuckDB twin."""
     out = {}
     for r in rs:
         sigma = F.stddev_pop(V)
@@ -407,124 +417,50 @@ def large_standard_deviation_aggs(rs=(0.25,)) -> dict[str, Column]:
     return out
 
 
-def default_feature_aggs(include_order_sensitive: bool = True) -> dict[str, Column]:
-    """The full native aggregate map (column name -> aggregate Column)."""
+def default_feature_aggs() -> dict[str, Column]:
+    """The full native aggregate map (column name -> aggregate Column).
+
+    The order is the output column order, which ``feature_names_dim``
+    band positions follow: ``median`` sits after ``sum_values`` and the
+    other quantiles follow the core block."""
+    quantiles = quantile_aggs()
     aggs: dict[str, Column] = {}
-    aggs.update(core_aggs())
-    aggs.update(quantile_aggs())
+    for name, agg in core_aggs().items():
+        aggs[name] = agg
+        if name == "sum_values":
+            aggs["median"] = quantiles.pop("median")
+    aggs.update(quantiles)
     aggs.update(moment_aggs())
     aggs.update(ratio_beyond_r_sigma_aggs())
     aggs.update(large_standard_deviation_aggs())
     aggs.update(benford_agg())
-    if include_order_sensitive:
-        aggs.update(change_aggs())
-        aggs.update(autocorrelation_agg(1))
-        aggs.update(location_aggs())
-        aggs.update(peaks_aggs())
-        aggs.update(energy_ratio_agg())
+    aggs.update(change_aggs())
+    aggs.update(autocorrelation_agg(1))
+    aggs.update(location_aggs())
+    aggs.update(peaks_aggs())
+    aggs.update(energy_ratio_agg())
     return aggs
 
 
-def longest_strike(
-    df: DataFrame, keys: list[str], above: bool = True, order_cols=ORDER_COLS
-) -> DataFrame:
-    """longest_strike_above_mean / _below_mean (README.md:113-114).
+# --- strikes / entropy / chunked trend as window columns + plain -------
+# aggregates.  Every helper window here partitions on the rollup keys
+# (or a superset), so the subset rule keeps them all on the ONE
+# rollup-key exchange and they fold into the main groupBy: no extra
+# aggregation level and no join back to the per-group rows.
 
-    Gaps-and-islands: within a group ordered by (turn_idx, ts), an
-    island of consecutive rows with the same above/below-mean flag is
-    identified by ``rn - row_number() over (keys + flag)``; the feature
-    is the max island length where the flag holds. Returns one row per
-    key tuple with column ``longest_strike_{above,below}_mean`` (0 when
-    no row satisfies the flag, matching tsfresh's max of empty runs).
-
-    Requires ``attach_group_stats`` columns (MU, RN).
-    """
-    name = f"longest_strike_{'above' if above else 'below'}_mean"
-    flag = (F.col(V) > F.col(MU)) if above else (F.col(V) < F.col(MU))
-    d = df.withColumn("_flag", flag.cast("int"))
-    # MUST order identically to the RN window in attach_group_stats —
-    # a caller-supplied order_cols there has to be passed here too
-    w_flag = Window.partitionBy(*(keys + ["_flag"])).orderBy(*[F.col(c) for c in order_cols])
-    d = d.withColumn("_island", F.col(RN) - F.row_number().over(w_flag))
-    runs = (
-        d.where(F.col("_flag") == 1)
-        .groupBy(*(keys + ["_island"]))
-        .agg(F.count("*").alias("_run"))
-        .groupBy(*keys)
-        .agg(F.max("_run").alias(name))
-    )
-    base = df.select(*keys).distinct()
-    return base.join(runs, keys, "left").withColumn(name, F.coalesce(F.col(name), F.lit(0)).cast("long"))
-
-
-def binned_entropy(df: DataFrame, keys: list[str], bins: int = 10) -> DataFrame:
-    """tsfresh binned_entropy(max_bins): Shannon entropy of the
-    equal-width histogram over [min, max]. Histogram = one extra
-    aggregation level on (keys, bin), entropy folded per keys — the
-    same join-back pattern as :func:`longest_strike`.
-
-    Requires ``attach_group_stats`` (VMAX/VMIN)."""
-    name = f"binned_entropy_{bins}"
-    width = (F.col(VMAX) - F.col(VMIN)) / bins
-    bin_id = F.when(
-        F.col(VMAX) > F.col(VMIN),
-        F.least(F.floor((F.col(V) - F.col(VMIN)) / width), F.lit(bins - 1)),
-    ).otherwise(F.lit(0))
-    counts = df.withColumn("_bin", bin_id).groupBy(*(keys + ["_bin"])).agg(
-        F.count("*").cast("double").alias("_c")
-    )
-    w = Window.partitionBy(*keys)
-    p = counts.withColumn("_p", F.col("_c") / F.sum("_c").over(w))
-    return p.groupBy(*keys).agg((-F.sum(F.col("_p") * F.log("_p"))).alias(name))
-
-
-def agg_linear_trend_slope(
-    df: DataFrame, keys: list[str], chunk_len: int = 3, f_agg: str = "max"
-) -> DataFrame:
-    """agg_linear_trend(attr='slope', chunk_len, f_agg) — examples nb group_2.
-
-    Chunk the ordered series into blocks of ``chunk_len`` (final partial
-    block included, tsfresh semantics), aggregate each block with
-    ``f_agg``, then OLS-regress the block aggregates on the block index
-    (``regr_slope``, native since Spark 3.4).
-
-    Requires ``attach_group_stats`` (RN). Output column:
-    ``agg_linear_trend_slope_{f_agg}_chunk{chunk_len}``.
-    """
-    name = f"agg_linear_trend_slope_{f_agg}_chunk{chunk_len}"
-    agg_fn = {"max": F.max, "min": F.min, "mean": F.avg}[f_agg]
-    chunks = (
-        df.withColumn("_chunk", F.floor((F.col(RN) - 1) / chunk_len))
-        .groupBy(*(keys + ["_chunk"]))
-        .agg(agg_fn(V).alias("_chunk_agg"))
-    )
-    return chunks.groupBy(*keys).agg(
-        F.expr("regr_slope(_chunk_agg, _chunk)").alias(name)
-    )
-
-
-# --- fused extras (round 3): strikes / entropy / chunked trend as ------
-# window columns + plain aggregates, replacing the 4-pre-pass join-back
-# shape (each extra window partitions on a SUPERSET of the rollup keys,
-# so the subset rule keeps everything on the ONE rollup-key exchange;
-# measured ~6x on the whole-series conv_features extraction)
-
-def attach_strike_cols(df: DataFrame, keys: list[str], order_cols=ORDER_COLS) -> DataFrame:
+def attach_strike_cols(df: DataFrame, keys: list[str]) -> DataFrame:
     """Per-row running strike length for the above/below-mean flags.
 
-    Round 6: the run length ending at row t is ``RN(t) - RN(last break
-    at or before t)`` (break = any row whose flag is not 1), a running
-    max on the SAME (keys, order_cols) window spec every other helper
-    uses — so both flags fuse into the one existing Window operator and
-    sort.  The previous gaps-and-islands shape needed four extra window
-    specs ((keys, flag) row_number and (keys, flag, island) count per
-    flag), each with its own full sort.  ``strike_aggs``'s
-    max-over-flag-rows is unchanged: the maximum running length over an
-    island equals the island length.  Requires ``attach_group_stats``
-    (MU, RN)."""
+    The run length ending at row t is ``RN(t) - RN(last break at or
+    before t)`` (break = any row whose flag is not 1): a running max on
+    the SAME (keys, ORDER_COLS) window spec every other helper uses, so
+    both flags fuse into the one existing Window operator and sort.
+    ``strike_aggs`` takes the max over flag rows, and the maximum
+    running length over an island equals the island length.  Requires
+    ``attach_group_stats`` (MU, RN)."""
     wo_cum = (
         Window.partitionBy(*keys)
-        .orderBy(*[F.col(c) for c in order_cols])
+        .orderBy(*[F.col(c) for c in ORDER_COLS])
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     out = df
@@ -552,11 +488,11 @@ def strike_aggs() -> dict[str, Column]:
 
 
 def attach_entropy_cols(df: DataFrame, keys: list[str], bins: int = 10) -> DataFrame:
-    """Equal-width histogram bin id as a row column (pure projection —
-    round 6 dropped the per-(keys, bin) count window and its full sort;
-    ``entropy_agg`` now folds the fixed-width histogram with ``bins``
-    conditional sums in the main codegen aggregate instead).
-    Requires ``attach_group_stats`` (VMAX/VMIN/_nrows)."""
+    """Equal-width histogram bin id as a row column: a pure projection,
+    so no per-(keys, bin) count window and no sort.  ``entropy_agg``
+    folds the fixed-width histogram with ``bins`` conditional sums in
+    the main codegen aggregate.  Requires ``attach_group_stats``
+    (VMAX/VMIN/_nrows)."""
     width = (F.col(VMAX) - F.col(VMIN)) / bins
     bin_id = F.when(
         F.col(VMAX) > F.col(VMIN),
@@ -579,19 +515,19 @@ def entropy_agg(bins: int = 10) -> dict[str, Column]:
     return {f"binned_entropy_{bins}": -terms}
 
 
-def attach_trend_cols(df: DataFrame, keys: list[str], chunk_len: int = 3, order_cols=ORDER_COLS) -> DataFrame:
+def attach_trend_cols(df: DataFrame, keys: list[str], chunk_len: int = 3) -> DataFrame:
     """Chunk id, chunk aggregate (max) and first-of-chunk flag as row
     columns. Requires ``attach_group_stats`` (RN).
 
-    Round 6: a chunk's rows are consecutive in the (keys, order_cols)
-    sort, so the chunk max seen from its FIRST row is a forward row
-    frame (0 .. chunk_len-1) on the ordered spec every other helper
-    already uses — no per-(keys, chunk) window partition, no extra
-    sort.  Non-first rows get the max of the wrong frame, which is fine:
+    A chunk's rows are consecutive in the (keys, ORDER_COLS) sort, so
+    the chunk max seen from its FIRST row is a forward row frame
+    (0 .. chunk_len-1) on the ordered spec every other helper already
+    uses: no per-(keys, chunk) window partition, no extra sort.
+    Non-first rows get the max of the wrong frame, which is fine:
     ``trend_agg`` only reads ``_chunk_agg`` where ``_chunk_first``."""
     wo_fwd = (
         Window.partitionBy(*keys)
-        .orderBy(*[F.col(c) for c in order_cols])
+        .orderBy(*[F.col(c) for c in ORDER_COLS])
         .rowsBetween(Window.currentRow, chunk_len - 1)
     )
     chunk = F.floor((F.col(RN) - 1) / chunk_len)
@@ -600,8 +536,9 @@ def attach_trend_cols(df: DataFrame, keys: list[str], chunk_len: int = 3, order_
     return out.withColumn("_chunk_first", ((F.col(RN) - 1) % chunk_len == 0).cast("int"))
 
 
-def trend_agg(chunk_len: int = 3, f_agg: str = "max") -> dict[str, Column]:
-    """OLS slope of chunk aggregate on chunk index over the
+def trend_agg(chunk_len: int = 3) -> dict[str, Column]:
+    """tsfresh agg_linear_trend(attr='slope', chunk_len, f_agg='max'):
+    OLS slope of the chunk max on the chunk index over the
     first-of-chunk rows — regr_slope semantics (NULL for <2 chunks) from
     null-safe conditional sums."""
     first = F.col("_chunk_first") == 1
@@ -612,6 +549,6 @@ def trend_agg(chunk_len: int = 3, f_agg: str = "max") -> dict[str, Column]:
     sxx, sxy = F.sum(x * x), F.sum(x * y)
     denom = n * sxx - sx * sx
     return {
-        f"agg_linear_trend_slope_{f_agg}_chunk{chunk_len}": (n * sxy - sx * sy)
+        f"agg_linear_trend_slope_max_chunk{chunk_len}": (n * sxy - sx * sy)
         / F.when(F.abs(denom) > 0, denom)
     }

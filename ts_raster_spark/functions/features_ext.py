@@ -1,6 +1,6 @@
 """Extended tsfresh-parity calculators as native Catalyst aggregates.
 
-Round-3 breadth beyond the reference's exercised subset (SURVEY.md
+Breadth beyond the reference's exercised subset (SURVEY.md
 §2.5): the reference pins tsfresh's default feature dictionary
 (tsraster/calculate.py:103-112) but only exercises ~40 calculators in
 its tests/README; this module adds the next tier of tsfresh's
@@ -55,11 +55,15 @@ from ts_raster_spark.functions.features import (
     MU,
     ORDER_COLS,
     RN,
-    SIG,
     V,
     VMAX,
     VMIN,
     _n,
+    attach_group_stats,
+    attach_value_rank,
+    quantile_aggs,
+    rank_quantile_agg,
+    rank_quantile_window,
 )
 
 VCNT, VRN, CUMABS, TOTABS, RNABS, QL, QH = (
@@ -69,34 +73,31 @@ VCNT, VRN, CUMABS, TOTABS, RNABS, QL, QH = (
 CHANGE_QL, CHANGE_QH = 0.25, 0.75
 
 
-def attach_ext_stats(df: DataFrame, keys: list[str], order_cols=ORDER_COLS) -> DataFrame:
+def attach_ext_stats(df: DataFrame, keys: list[str]) -> DataFrame:
     """Attach the extended helper columns.  Requires (and composes with)
     ``features.attach_group_stats`` — call that first so MU/RN/LAG1 exist.
 
     All four window specs partition on supersets of ``keys`` (or keys
     itself with a different ORDER), so they reuse the one hash exchange.
     """
-    from ts_raster_spark.functions.features import attach_value_rank, rank_quantile_window
-
+    order = [F.col(c) for c in ORDER_COLS]
     wu = Window.partitionBy(*keys)
-    wo = wu.orderBy(*[F.col(c) for c in order_cols])
+    wo = wu.orderBy(*order)
     # whole-partition aggregates ride wo's sort via an explicit
-    # unbounded frame instead of a second keys-only sort (round 6; same
+    # unbounded frame instead of a second keys-only sort (the same
     # one-sort collapse as features.attach_group_stats)
     wof = wo.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    wabs = wu.orderBy(F.abs(F.col(V)).desc(), *[F.col(c) for c in order_cols])
+    wabs = wu.orderBy(F.abs(F.col(V)).desc(), *order)
     wval = Window.partitionBy(*keys, F.col(V))
-    wval_o = wval.orderBy(*[F.col(c) for c in order_cols])
-    # Window specs are attached GROUPED BY SORT ORDER (round 6) so each
-    # distinct (partition, order) pair sorts once and every compatible
-    # spec rides it: first the wo family (rides attach_group_stats'
-    # sort), then the ascending-value family ((keys, V, order) sort —
-    # wval_o, then wval and the value-rank/corridor columns whose
-    # required (keys, V) prefix it satisfies), then the |x|-descending
-    # sort.  The corridor bounds come from the exact rank-sum windows
-    # (bit-identical to the previous percentile(array(...)) window,
-    # which as a TypedImperativeAggregate buffered a per-group value
-    # map and forced its own pass).
+    wval_o = wval.orderBy(*order)
+    # Window specs are attached GROUPED BY SORT ORDER so each distinct
+    # (partition, order) pair sorts once and every compatible spec
+    # rides it: first the wo family (rides attach_group_stats' sort),
+    # then the ascending-value family ((keys, V, order) sort — wval_o,
+    # then wval and the value-rank/corridor columns whose required
+    # (keys, V) prefix it satisfies), then the |x|-descending sort.  The
+    # corridor bounds are exact rank-sum windows: a percentile() window
+    # would buffer a per-group value map and force its own pass.
     out = (
         df.withColumn(CUMABS, F.sum(F.abs(F.col(V))).over(wo.rowsBetween(Window.unboundedPreceding, 0)))
         .withColumn(TOTABS, F.sum(F.abs(F.col(V))).over(wof))
@@ -168,8 +169,6 @@ def symmetry_looking_agg(r: float = 0.25) -> dict[str, Column]:
     quantized-difference boundary contract as large_standard_deviation
     (strict comparisons on exactly-equal sides must not split across
     engines' aggregation dust, at any value magnitude)."""
-    from ts_raster_spark.functions.features import rank_quantile_agg
-
     name = f"symmetry_looking_r{str(r).replace('0.', '')}"
     bound = F.lit(float(r)) * (F.max(V) - F.min(V))
     dev = F.abs(F.avg(F.col(V)) - rank_quantile_agg(0.5))
@@ -246,11 +245,10 @@ def change_quantiles_agg(
     }
 
 
-def partial_autocorrelation_agg(lag: int = 2) -> dict[str, Column]:
+def partial_autocorrelation_agg() -> dict[str, Column]:
     """Levinson-Durbin phi_22 on biased autocovariances (see module
     docstring).  Only lag 2 has a closed form this small; lag 1 equals
     rho1 and is covered by ``autocorrelation_agg``-adjacent surface."""
-    assert lag == 2, "closed form implemented for lag 2 only"
     v, mu = F.col(V), F.col(MU)
     n = _n().cast("double")
     g0 = F.sum((v - mu) * (v - mu))
@@ -295,12 +293,10 @@ def linear_trend_aggs() -> dict[str, Column]:
     }
 
 
-def quantile_ext_aggs(qs=(0.25, 0.75)) -> dict[str, Column]:
-    from ts_raster_spark.functions.features import rank_quantile_agg
-
-    return {
-        f"quantile_q{str(q).replace('0.', '')}": rank_quantile_agg(q) for q in qs
-    }
+def quantile_ext_aggs() -> dict[str, Column]:
+    """The quartiles, as rank-sums over ``attach_ext_stats``' value
+    rank."""
+    return quantile_aggs({"quantile_q25": 0.25, "quantile_q75": 0.75})
 
 
 def ext_feature_aggs() -> dict[str, Column]:
@@ -320,15 +316,10 @@ def ext_feature_aggs() -> dict[str, Column]:
     return aggs
 
 
-
-def rollup_ext_features(
-    long_df: DataFrame, keys: list[str], order_cols=ORDER_COLS
-) -> DataFrame:
+def rollup_ext_features(long_df: DataFrame, keys: list[str]) -> DataFrame:
     """One-shot extended-feature rollup: helper windows + a single
     groupBy on ``keys`` sharing one hash partitioning."""
-    from ts_raster_spark.functions.features import attach_group_stats
-
-    df = attach_group_stats(long_df, keys, order_cols=order_cols)
-    df = attach_ext_stats(df, keys, order_cols=order_cols)
+    df = attach_group_stats(long_df, keys)
+    df = attach_ext_stats(df, keys)
     aggs = ext_feature_aggs()
     return df.groupBy(*keys).agg(*[c.alias(n) for n, c in aggs.items()])

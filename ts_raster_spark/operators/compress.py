@@ -2,10 +2,13 @@
 
 The at-rest format for raw-resolution series under a retention tier:
 one row per (conv_id, kind, block_start) carrying
-``(n, ts_block binary, val_block binary)`` — the engine analog of the
-reference's multi-band GTiff sink with float32 downcast
+``(n, codec, ts_block binary, val_block binary)`` — the engine analog of
+the reference's multi-band GTiff sink with float32 downcast
 (tsraster/calculate.py:23-55, prep.py:132), upgraded to bit-exact
-lossless blocks.
+lossless blocks.  Timestamps are delta-of-delta coded and values are
+Gorilla XOR coded (compression/gorilla.py); ``codec`` is always
+``"gorilla"``, and decoding rejects any other tag because blocks are
+read back from tables on disk.
 
 ``compress_blocks`` is a ``groupBy(...).applyInPandas`` grouped-map
 Arrow kernel (one Arrow batch per group, vectorized sort + int64 view,
@@ -22,7 +25,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ts_raster_spark.compression.chimp import decode_values_chimp, encode_values_chimp
 from ts_raster_spark.compression.gorilla import (
     decode_timestamps,
     decode_values,
@@ -30,10 +32,7 @@ from ts_raster_spark.compression.gorilla import (
     encode_values,
 )
 
-VALUE_CODECS = {
-    "gorilla": (encode_values, decode_values),
-    "chimp": (encode_values_chimp, decode_values_chimp),
-}
+CODEC = "gorilla"
 
 BLOCK_SCHEMA = (
     "conv_id string, kind string, block_start timestamp, "
@@ -43,12 +42,11 @@ BLOCK_SCHEMA = (
 POINT_SCHEMA = "conv_id string, kind string, ts timestamp, value double"
 
 
-def _encode_series(pdf: pd.DataFrame, codec: str = "gorilla") -> pd.DataFrame:
+def _encode_series(pdf: pd.DataFrame) -> pd.DataFrame:
     """Encode every time block of one (conv_id, kind) series in a single
     kernel call — grouping at block granularity would pay the Arrow
     per-group overhead (~ms) for every tiny block; per-series grouping
     amortizes it ~30× while a block-keyed output still bounds the rows."""
-    enc_vals = VALUE_CODECS[codec][0]
     pdf = pdf.sort_values(["turn_idx", "ts"]) if "turn_idx" in pdf.columns else pdf.sort_values("ts")
     rows = []
     for b, sub in pdf.groupby("block_start", sort=True):
@@ -60,34 +58,32 @@ def _encode_series(pdf: pd.DataFrame, codec: str = "gorilla") -> pd.DataFrame:
                 sub["kind"].iloc[0],
                 b,
                 len(sub),
-                codec,
+                CODEC,
                 encode_timestamps(ts_us),
-                enc_vals(vals),
+                encode_values(vals),
             )
         )
     return pd.DataFrame(rows, columns=["conv_id", "kind", "block_start", "n", "codec", "ts_block", "val_block"])
 
 
-def compress_blocks(long_df: DataFrame, block: str = "day", codec: str = "gorilla") -> DataFrame:
+def compress_blocks(long_df: DataFrame, block: str = "day") -> DataFrame:
     """long panel (conv_id, turn_idx, ts, kind, value) → Gorilla blocks.
 
     One applyInPandas group per (conv_id, kind); a mega-conversation's
     full channel must fit a task (~16 MB per 1M turns) — beyond that,
     add a coarse time salt to the grouping keys (SURVEY.md §4)."""
-    if codec not in VALUE_CODECS:
-        raise ValueError(f"unknown codec {codec!r}; want one of {sorted(VALUE_CODECS)}")
     keyed = long_df.withColumn("block_start", F.date_trunc(block, F.col("ts")))
-    return keyed.groupBy("conv_id", "kind").applyInPandas(
-        lambda pdf: _encode_series(pdf, codec), schema=BLOCK_SCHEMA
-    )
+    return keyed.groupBy("conv_id", "kind").applyInPandas(_encode_series, schema=BLOCK_SCHEMA)
 
 
 def _decode_batches(batches):
     for pdf in batches:
         frames = []
         for row in pdf.itertuples(index=False):
+            if row.codec != CODEC:
+                raise ValueError(f"unsupported block codec {row.codec!r}; only {CODEC!r} blocks decode")
             ts = decode_timestamps(bytes(row.ts_block)).view("datetime64[us]")
-            vals = VALUE_CODECS[getattr(row, "codec", "gorilla")][1](bytes(row.val_block))
+            vals = decode_values(bytes(row.val_block))
             frames.append(
                 pd.DataFrame(
                     {
@@ -104,5 +100,7 @@ def _decode_batches(batches):
 
 def decompress_blocks(blocks: DataFrame) -> DataFrame:
     """Gorilla blocks → points. ``mapInPandas`` streams Arrow batches of
-    whole blocks; no shuffle needed (blocks are self-contained)."""
+    whole blocks; no shuffle needed (blocks are self-contained).  A
+    block whose ``codec`` is not ``"gorilla"`` fails the job with a
+    ``ValueError``."""
     return blocks.mapInPandas(_decode_batches, schema=POINT_SCHEMA)

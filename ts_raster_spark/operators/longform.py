@@ -137,7 +137,3 @@ def to_long_panel(
         .withColumnRenamed("value_out", "value")
     )
 
-
-def to_long_panel_window(turns, channels=CHANNELS):
-    """Window-lag latency variant for inputs without dense turn_idx."""
-    return to_long_panel(turns, channels, dense_turn_idx=False)

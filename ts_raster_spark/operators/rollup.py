@@ -11,10 +11,10 @@ explicit ``bucket_start`` key).
 Scale design: the window pre-pass and the groupBy share one hash
 partitioning on the rollup keys → a single shuffle for the whole feature
 block. Strike/trend/entropy features ride the SAME exchange: their
-island/chunk/bin windows partition on supersets of the rollup keys
+helper windows partition on the rollup keys or supersets of them
 (Spark's subset rule), so they reduce to extra row columns + plain
-aggregates in the one groupBy — no join-backs (round 3; the previous
-4-pre-pass join shape cost ~11x on whole-series extraction).
+aggregates in the one groupBy, with no second aggregation level joined
+back to the groups.
 """
 
 from __future__ import annotations
@@ -28,13 +28,13 @@ from ts_raster_spark.functions import features as FT
 TIERS = {"minute": "minute", "hour": "hour", "day": "day"}
 
 # calculators that read no attach_group_stats helper column — a rollup
-# restricted to these needs no windowed pre-pass at all
+# restricted to these needs no windowed pre-pass at all (the quantiles
+# read only the attach_value_rank columns)
 HELPER_FREE_FEATURES = {
-    "turn_count", "mean", "maximum", "minimum", "sum_values", "median",
+    "turn_count", "mean", "maximum", "minimum", "sum_values",
     "variance", "standard_deviation", "abs_energy", "root_mean_square",
-    "mean_change", "quantile_q05", "quantile_q15", "quantile_q85",
-    "quantile_q95", "large_standard_deviation_r25", "variation_coefficient",
-    "benford_correlation",
+    "mean_change", "large_standard_deviation_r25", "variation_coefficient",
+    "benford_correlation", *FT.QUANTILES,
 }
 
 
@@ -61,45 +61,28 @@ def rollup_features(
 
     ``feature_names`` optionally restricts the output columns (the
     reference's ``parameters`` dict of requested calculators,
-    calculate.py:103-112).
+    calculate.py:103-112) to names of :func:`FT.default_feature_aggs`;
+    any other name raises ``ValueError``.
     """
     df, keys = bucketize(long_df, tier)
     aggs = FT.default_feature_aggs()
     if feature_names is not None:
-        aggs = {k: v for k, v in aggs.items() if k in set(feature_names)}
+        wanted = set(feature_names)
+        if unknown := sorted(wanted - aggs.keys()):
+            raise ValueError(f"unknown feature names {unknown}; want names of default_feature_aggs()")
+        aggs = {k: v for k, v in aggs.items() if k in wanted}
 
-    # Exact quantiles via a value-ordered rank window + plain sums
-    # (round 6).  The holistic percentile() aggregate is a
-    # TypedImperativeAggregate: its presence demotes the WHOLE rollup
-    # aggregation (40+ functions) from whole-stage-codegen HashAggregate
-    # to interpreted ObjectHashAggregate, and it buffers a per-group
-    # value->count map (an OOM hazard on mega-groups).  Instead: rank
-    # each row among its group's non-null values (one extra sort on the
-    # shared rollup-key exchange — no new shuffle), then each quantile
-    # is two conditional SUMs replicating Spark Percentile's exact
-    # interpolation arithmetic: pos = q*(n-1) 0-based, lower=floor,
-    # higher=ceil, result = lowerVal*(higher-pos) + higherVal*(pos-lower)
-    # (single-row value when higher==lower) — bit-identical to the
-    # previous percentile(value, array(...)) output.
-    #
-    # Attached FIRST, before the helper windows: the value sort then
-    # runs on the narrow 6-column frame and the turn-order sort carries
-    # only the two rank longs, instead of the value sort dragging all
-    # ~12 helper doubles through sorter memory (§2.3 "shuffle/sort fewer
-    # bytes").  Window outputs depend only on partition contents and
-    # each spec's own order, so attachment order cannot change any
-    # value: a tied row's _rnv can permute under a different input
-    # order, but every consumer selects the VALUE at a rank hit and
-    # tied rows share that value.  The final aggregate's input order
-    # returns to turn order — the pre-§3 order that rounds 1-5 shipped.
-    q_names = ["quantile_q05", "quantile_q15", "median", "quantile_q85", "quantile_q95"]
-    qs = {"quantile_q05": 0.05, "quantile_q15": 0.15, "median": 0.5,
-          "quantile_q85": 0.85, "quantile_q95": 0.95}
-    fused = [n for n in q_names if n in aggs]
-    if fused:
+    # The quantiles are rank-sums over the value-rank columns.  Attached
+    # FIRST, before the helper windows: the value sort then runs on the
+    # narrow input frame and the turn-order sort carries only the two
+    # rank longs, instead of the value sort dragging all ~12 helper
+    # doubles through sorter memory.  Window outputs depend only on
+    # partition contents and each spec's own order, so attachment order
+    # cannot change any value: a tied row's _rnv can permute under a
+    # different input order, but every consumer selects the VALUE at a
+    # rank hit and tied rows share that value.
+    if FT.QUANTILES.keys() & aggs.keys():
         df = FT.attach_value_rank(df, keys)
-        for n in fused:
-            aggs[n] = FT.rank_quantile_agg(qs[n])
 
     # Skip the windowed helper pre-pass (group stats, row numbers, lags —
     # a full sort per group) when every requested feature is closed-form.
@@ -115,15 +98,14 @@ def rollup_features(
         # cheap per-row projection (2 transcendentals/row, no shuffle)
         # instead of re-deriving the digit in 9 aggregate branches
         df = FT.attach_benford_digit(df)
-    # fused extras: window columns on superset partitionings + plain
+    # extras: window columns on the shared partitioning + plain
     # aggregates in the SAME groupBy — one exchange, no join-backs
-    # (replaced the 4-pre-pass join shape; ~6x on conv_features)
     if include_strikes:
         df = FT.attach_strike_cols(df, keys)
         aggs.update(FT.strike_aggs())
     if include_trend:
         df = FT.attach_trend_cols(df, keys, chunk_len=3)
-        aggs.update(FT.trend_agg(chunk_len=3, f_agg="max"))
+        aggs.update(FT.trend_agg(chunk_len=3))
     if include_entropy:
         df = FT.attach_entropy_cols(df, keys, bins=10)
         aggs.update(FT.entropy_agg(bins=10))

@@ -1171,20 +1171,20 @@ def q_kernel_features_cwt(spark, sf_dir):
 
 
 def q_compress_roundtrip(spark, sf_dir):
-    """Gorilla/DoD blocks, VALUE-CHECKED (round 4): the binary blocks
+    """Gorilla/DoD blocks, VALUE-CHECKED: the binary blocks
     themselves have no SQL analog, but the aggregates of the DECODED
     stream do — per-(conv_id, kind) n/sum/min/max of decoded values and
     first/last decoded timestamp (from the DoD stream).  The DuckDB twin
     recomputes every column from the raw long panel, so a corrupted
     encode/decode breaks the driver's value hash, not just a pytest.
-    Bit-exactness of the codecs themselves stays pytest+hypothesis-
-    proven (tests/test_compression.py, test_chimp.py)."""
+    Bit-exactness of the codec itself stays pytest-proven
+    (tests/test_compression.py)."""
     from ts_raster_spark.operators.compress import compress_blocks, decompress_blocks
 
     long_df = load_long(spark, sf_dir).where(F.col("kind").isin("text_len", "latency_s"))
     blocks = compress_blocks(long_df, block="day")
     # sums carry the surface-standard r4 contract (4-dp + sig-digit cap,
-    # functions/norm.py — round 5 tightened from an ad-hoc 2-dp round);
+    # functions/norm.py);
     # decode is bit-exact so only order-of-summation noise (~1e-7 abs at
     # these magnitudes) needs absorbing, far inside the 1e-4 quantum
     decoded = decompress_blocks(blocks).groupBy("conv_id", "kind").agg(
