@@ -18,3 +18,33 @@ def turns_small(spark):
     df = gen_turns(spark, n_convs=40, min_turns=1, max_turns=30, seed=7).cache()
     df.count()
     return df
+
+
+@pytest.fixture(scope="session")
+def irregular_turns(spark):
+    """Three conversations outside the dense, ordered ``turn_idx`` layout:
+    a retried turn (duplicate ``turn_idx=1``), a gap (0, 1, 3), and rows
+    created out of order."""
+    import datetime as dt
+
+    from ts_raster_spark.sources.turns import TURNS_SCHEMA
+
+    t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
+
+    def at(s):
+        return t0 + dt.timedelta(seconds=s)
+
+    rows = [
+        ("dup", 0, "user", "hello", None, at(0)),
+        ("dup", 1, "assistant", "first try", None, at(2)),
+        ("dup", 1, "assistant", "retry", "search", at(5)),
+        ("dup", 2, "user", "thanks", None, at(9)),
+        ("gap", 0, "user", "a", None, at(0)),
+        ("gap", 1, "assistant", "bb", "calc", at(10)),
+        ("gap", 3, "user", "ccc", None, at(30)),
+        ("ooo", 2, "assistant", "third", None, at(70)),
+        ("ooo", 0, "user", "first", None, at(0)),
+        ("ooo", 3, "tool", "fourth", "code", at(75)),
+        ("ooo", 1, "system", "second", None, at(40)),
+    ]
+    return spark.createDataFrame(rows, TURNS_SCHEMA)

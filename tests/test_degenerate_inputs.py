@@ -83,3 +83,30 @@ def test_null_text_turns(spark):
     assert len(tl) == 1 and tl.iloc[0]["value"] == 2.0
     # role/tool channels still cover both turns
     assert long_df.where("kind = 'role_user'").count() == 2
+
+
+def test_irregular_turn_idx_matches_lag_definition(spark, irregular_turns):
+    """Duplicate, gapped and out-of-order ``turn_idx``: every channel keeps
+    one row per input turn, and latency is the oracle's
+    ``ts - lag(ts) OVER (PARTITION BY conv_id ORDER BY turn_idx, ts)``."""
+    turns = irregular_turns.toPandas()
+    long_df = to_long_panel(irregular_turns).toPandas()
+    key = ["conv_id", "turn_idx", "ts"]
+    for kind in ("text_len", "is_tool", "role_user", "role_assistant"):
+        got = long_df[long_df.kind == kind]
+        assert len(got) == len(turns), kind
+        assert not got.duplicated(key).any(), kind
+        assert got.value.notna().all(), kind
+
+    ordered = turns.sort_values(["conv_id", "turn_idx", "ts"])
+    ordered["latency_s"] = ordered.groupby("conv_id").ts.diff().dt.total_seconds()
+    want = ordered.dropna(subset=["latency_s"])[key + ["latency_s"]]
+    got = long_df[long_df.kind == "latency_s"][key + ["value"]]
+    assert not got.duplicated(key).any()
+    merged = want.merge(got, on=key, how="outer", validate="one_to_one")
+    assert merged.value.notna().all() and merged.latency_s.notna().all(), merged
+    assert (merged.value == merged.latency_s).all(), merged
+    # the retried turn: 4 text_len turns, latencies 2 + 3 + 4
+    dup = long_df[long_df.conv_id == "dup"]
+    assert (dup.kind == "text_len").sum() == 4
+    assert dup[dup.kind == "latency_s"].value.sum() == 9.0

@@ -3,7 +3,6 @@ from __future__ import annotations
 import math
 
 import numpy as np
-import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -54,31 +53,3 @@ def test_kernel_matches_native_rollup(spark, turns_small):
             ):
                 continue
             assert float(a) == pytest.approx(float(b), rel=1e-9, abs=1e-9), (conv, c)
-
-
-def test_kernel_salted_partials_merge(spark, turns_small):
-    """Salted mega-conv path: algebraic features merged from salted
-    subgroups equal the unsalted result."""
-    long_df = to_long_panel(turns_small).where(F.col("kind") == "text_len")
-    salted = extract_features_kernel(long_df, tier=None, salt_buckets=4).toPandas()
-    merged = (
-        salted.groupby(["conv_id", "kind"])
-        .apply(
-            lambda g: pd.Series(
-                {
-                    "turn_count": g["turn_count"].sum(),
-                    "sum_values": g["sum_values"].sum(),
-                    "maximum": g["maximum"].max(),
-                    "minimum": g["minimum"].min(),
-                    "abs_energy": g["abs_energy"].sum(),
-                }
-            ),
-            include_groups=False,
-        )
-        .reset_index()
-    )
-    plain = extract_features_kernel(long_df, tier=None).toPandas()
-    for _, row in merged.iterrows():
-        ref = plain[(plain.conv_id == row.conv_id)].iloc[0]
-        for c in ["turn_count", "sum_values", "maximum", "minimum", "abs_energy"]:
-            assert float(row[c]) == pytest.approx(float(ref[c]), rel=1e-9), (row.conv_id, c)

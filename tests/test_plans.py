@@ -8,9 +8,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from ts_raster_spark.functions import features as FT
-from ts_raster_spark.operators.longform import to_long_panel
+from ts_raster_spark.operators.longform import to_long_panel, with_channels
 from ts_raster_spark.operators.mask import mask_df
-from ts_raster_spark.operators.rollup import bucketize
+from ts_raster_spark.operators.rollup import bucketize, rollup_simple_wide
 
 SF = "/root/testdata/sf0.001"
 
@@ -50,9 +50,32 @@ def test_rollup_single_exchange(spark, turns_small):
     stats = FT.attach_group_stats(df, keys)
     agg = stats.groupBy(*keys).agg(*[c.alias(n) for n, c in FT.core_aggs().items()])
     plan = _plan(agg)
-    # exchanges other than the AQE-inserted read side of the input joins:
+    # the latency window's conv_id partitioning already clusters the
+    # rollup keys, so the windows and the groupBy reuse its exchange
     n_exchanges = plan.count("Exchange hashpartitioning")
-    assert n_exchanges <= 2, f"expected <=2 hash exchanges (latency join + rollup keys), got {n_exchanges}:\n{plan[:2000]}"
+    assert n_exchanges <= 1, f"expected <=1 hash exchange (conv_id, shared by the latency window and the rollup), got {n_exchanges}:\n{plan[:2000]}"
+
+
+def test_wide_rollup_prunes_latency_window(spark, turns_small):
+    """A latency-free channel subset must not derive latency: Catalyst
+    prunes the lag Window, and there is no join to prune by hand."""
+    out = rollup_simple_wide(turns_small, "hour", channels=("text_len", "is_tool"))
+    out.collect()
+    plan = _plan(out)
+    assert "Join" not in plan, plan[:2000]
+    # the cached fixture's own plan (below InMemoryRelation) has a Window
+    above_cache = plan.split("InMemoryRelation")[0]
+    assert "Window" not in above_cache and "lag(" not in plan, above_cache
+
+
+def test_long_panel_latency_is_a_window(spark, turns_small):
+    """Latency is the lag window alone: no join in the channel plans, and
+    a latency-free long panel prunes the window too."""
+    for df in (with_channels(turns_small), to_long_panel(turns_small)):
+        plan = _plan(df)
+        assert "Join" not in plan and "lag(" in plan, plan[:2000]
+    plan = _plan(to_long_panel(turns_small, channels=("text_len",)))
+    assert "lag(" not in plan and "Exchange" not in plan, plan[:2000]
 
 
 def test_mask_join_broadcasts(spark, turns_small):

@@ -15,11 +15,9 @@ Why both this and the native-aggregate rollup exist:
   (``number_cwt_peaks``) and is the single-pass path when *all*
   features of a group are wanted at once.
 
-Skew: a single applyInPandas group must fit one task (SURVEY.md §4).
-``extract_features_kernel(salt_buckets=k)`` splits mega-conversations
-into per-time-bucket subgroups first; callers then algebraically merge
-(operators/cascade.py) or accept per-bucket rows — AQE skew-join
-handling cannot help inside grouped-map, so the salt *is* the design.
+Skew: a single applyInPandas group must fit one task (SURVEY.md §4),
+and AQE skew handling cannot split inside grouped-map. Passing a
+``tier`` bounds a group to one time bucket of a conversation.
 """
 
 from __future__ import annotations
@@ -56,30 +54,13 @@ def _feature_row(keys: list[str], key_vals, x: np.ndarray) -> dict:
     return row
 
 
-def extract_features_kernel(
-    long_df: DataFrame,
-    tier: str | None = None,
-    salt_buckets: int = 0,
-) -> DataFrame:
-    """Full per-(conv_id, kind[, bucket_start]) feature vectors.
-
-    ``salt_buckets > 0`` adds a deterministic time-derived salt to the
-    grouping key before the shuffle so one mega-conversation spreads
-    over ``salt_buckets`` tasks; the output then carries one row per
-    salted subgroup (callers merge algebraically where exactness
-    demands it).
-    """
+def extract_features_kernel(long_df: DataFrame, tier: str | None = None) -> DataFrame:
+    """Full per-(conv_id, kind[, bucket_start]) feature vectors."""
     keys = ["conv_id", "kind"]
     df = long_df
     if tier is not None:
         df = df.withColumn("bucket_start", F.date_trunc(tier, F.col("ts")))
         keys = keys + ["bucket_start"]
-    group_cols = list(keys)
-    if salt_buckets > 0:
-        df = df.withColumn(
-            "_salt", (F.unix_timestamp(F.col("ts").cast("timestamp_ltz")) % salt_buckets).cast("int")
-        )
-        group_cols = keys + ["_salt"]
 
     out_schema = _schema(keys)
 
@@ -89,4 +70,4 @@ def extract_features_kernel(
         key_vals = [pdf[k].iloc[0] for k in keys]
         return pd.DataFrame([_feature_row(keys, key_vals, x)])
 
-    return df.groupBy(*group_cols).applyInPandas(kernel, schema=out_schema)
+    return df.groupBy(*keys).applyInPandas(kernel, schema=out_schema)

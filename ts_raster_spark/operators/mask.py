@@ -3,8 +3,8 @@
 Reference semantics:
 
 - ``mask_df`` (tsraster/prep.py:367-447): keep long-panel rows whose
-  pixel_id is in the mask key set (mask == 1) → **left-semi join**,
-  broadcast when the key set is small.
+  pixel_id is in the mask key set (mask == 1) → broadcast **left-semi
+  join**.
 - ``unmask_df`` / ``unmask_from_mask`` (prep.py:450-521): re-expand a
   masked result onto the dense domain; absent rows get the ``-9999``
   sentinel → **left outer join + coalesce**.
@@ -20,21 +20,18 @@ from pyspark.sql import functions as F
 from ts_raster_spark.operators.gapfill import SENTINEL
 
 
-def mask_keys(mask: DataFrame, keep_col: str = "keep") -> DataFrame:
-    """mask raster → key set: rows where mask == 1 (prep.py:380-381)."""
-    return mask.where(F.col(keep_col) == 1).select("conv_id")
+def mask_keys(mask: DataFrame) -> DataFrame:
+    """mask raster → key set: rows where ``keep == 1`` (prep.py:380-381)."""
+    return mask.where(F.col("keep") == 1).select("conv_id")
 
 
-def mask_df(df: DataFrame, mask: DataFrame, keep_col: str = "keep", broadcast: bool = True) -> DataFrame:
+def mask_df(df: DataFrame, mask: DataFrame) -> DataFrame:
     """Left-semi filter of any conv-keyed frame by the mask key set.
 
-    ``broadcast=True`` ships the key set to every executor (the mask is
-    a small dim next to a 100 TB fact table); set False to let AQE pick.
+    The key set is broadcast to every executor: the mask is a small dim
+    next to a 100 TB fact table.
     """
-    keys = mask_keys(mask, keep_col)
-    if broadcast:
-        keys = F.broadcast(keys)
-    return df.join(keys, "conv_id", "left_semi")
+    return df.join(F.broadcast(mask_keys(mask)), "conv_id", "left_semi")
 
 
 def unmask_df(

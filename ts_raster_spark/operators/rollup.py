@@ -124,6 +124,8 @@ def rollup_simple_wide(turns: DataFrame, tier: str, channels: tuple[str, ...] | 
     reference-parity IR (and feeds the full feature rollup)."""
     from ts_raster_spark.operators.longform import CHANNELS, with_channels
 
+    if tier not in TIERS:
+        raise ValueError(f"unknown tier {tier!r}; want one of {sorted(TIERS)}")
     chans = list(channels or CHANNELS)
     wide = with_channels(turns).withColumn("bucket_start", F.date_trunc(TIERS[tier], F.col("ts")))
     aggs = []

@@ -19,7 +19,7 @@ from pyspark.sql.window import Window
 
 from ts_raster_spark.operators.cascade import cascade_up
 from ts_raster_spark.operators.gapfill import gapfill
-from ts_raster_spark.operators.longform import to_long_panel
+from ts_raster_spark.operators.longform import CHANNELS, to_long_panel
 from ts_raster_spark.operators.mask import mask_df, unmask_df
 from ts_raster_spark.operators.rollup import rollup_features, rollup_simple
 from ts_raster_spark.sources.turns import derive_turns_from_events
@@ -32,12 +32,10 @@ def load_turns(spark: SparkSession, sf_dir: str) -> DataFrame:
     return derive_turns_from_events(events)
 
 
-def load_long(spark: SparkSession, sf_dir: str, channels=None) -> DataFrame:
-    """``channels`` prunes the panel derivation (skips the latency
-    self-join when latency_s is unused — see longform.with_channels);
-    None keeps the full default channel set."""
-    if channels is None:
-        return to_long_panel(load_turns(spark, sf_dir))
+def load_long(spark: SparkSession, sf_dir: str, channels: tuple[str, ...] = CHANNELS) -> DataFrame:
+    """Long panel of the ``channels`` kinds; the others are pruned from
+    the derivation (the latency window too when latency_s is left out —
+    see longform.with_channels)."""
     return to_long_panel(load_turns(spark, sf_dir), channels=channels)
 
 

@@ -44,8 +44,10 @@ def get_spark(
         # this bound (guide §3.1; default 0 = off).  2x the 64 MiB AQE
         # advisory partition size: partitions AQE leaves big (skewed)
         # stay sort-merge, so the hash build is memory-bounded at any
-        # scale.  Round-6 A/B on the 4.4M-turn latency self-join:
-        # SMJ 3.40 s -> SHJ 3.11 s with no broadcast-path override.
+        # scale.  The shuffled equi-joins that remain (cohort self-join,
+        # dedup pair joins, unmask re-expansion) then skip both sides'
+        # sorts where they fit, without a per-join hint that would also
+        # override the small-input broadcast choice.
         .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "134217728")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
