@@ -1,6 +1,10 @@
 from __future__ import annotations
 
+import os
+import re
+
 import pytest
+from pyspark.sql import functions as F
 
 from ts_raster_spark.session import get_spark
 
@@ -9,6 +13,33 @@ from ts_raster_spark.session import get_spark
 def spark():
     s = get_spark(app_name="ts_raster_spark-tests", master="local[4]", shuffle_partitions=8)
     yield s
+
+
+@pytest.fixture(scope="session")
+def assert_one_bucket_scanned(spark):
+    """Check that a catalog point lookup prunes to the conversation's
+    bucket ``k`` (Spark's own ``pmod(xxhash64(conv_id), n_buckets)``):
+    the scan's PartitionFilters hold ``bucket_id = k`` and every file the
+    executed scan reads lies under ``bucket_id=k``.  The files come from
+    the scan node, not ``DataFrame.inputFiles()``, which lists every file
+    of a path-based table because Spark prunes its partitions only when
+    it plans the scan."""
+
+    def check(df, conv_id: str, n_buckets: int) -> None:
+        k = spark.range(1).select(
+            F.pmod(F.xxhash64(F.lit(conv_id)), F.lit(n_buckets)).cast("int")
+        ).first()[0]
+        plan = df._jdf.queryExecution().executedPlan()
+        text = plan.toString()
+        assert re.search(rf"PartitionFilters: \[[^\]]*\(bucket_id#\d+ = {k}\)[,\]]", text), text
+        leaves = plan.collectLeaves()
+        scans = [leaves.apply(i) for i in range(leaves.size())]
+        scans = [s for s in scans if s.getClass().getSimpleName() == "FileSourceScanExec"]
+        assert len(scans) == 1, text
+        files = [f.filePath().toString() for p in scans[0].inputRDDs().head().partitions() for f in p.files()]
+        assert files and {os.path.basename(os.path.dirname(f)) for f in files} == {f"bucket_id={k}"}, files
+
+    return check
 
 
 @pytest.fixture(scope="session")

@@ -2,10 +2,14 @@ from __future__ import annotations
 
 import json
 import os
+import uuid
 
+import pyarrow.dataset as ds
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
+from ts_raster_spark.jobs import RollupJobConfig, run_rollup_job
 from ts_raster_spark.operators.longform import to_long_panel
 from ts_raster_spark.operators.rollup import rollup_simple
 from ts_raster_spark.plans.checkpoint import load_manifest, read_result, run_checkpointed
@@ -66,7 +70,7 @@ def test_changed_input_recomputes_slice(spark, turns_small, tmp_path):
     assert summary["completed"] == 1 and summary["skipped"] == 1
 
 
-def test_catalog_bucket_layout_and_pruned_lookup(spark, turns_small, tmp_path):
+def test_catalog_bucket_layout_and_pruned_lookup(spark, turns_small, tmp_path, assert_one_bucket_scanned):
     cat = ParquetTierCatalog(str(tmp_path / "tiers"), n_buckets=8)
     hour = _transform(turns_small)
     cat.write(hour, "rollup_hour")
@@ -81,9 +85,7 @@ def test_catalog_bucket_layout_and_pruned_lookup(spark, turns_small, tmp_path):
     one = cat.read_conv(spark, "rollup_hour", some_conv)
     assert one.count() > 0
     assert one.select("conv_id").distinct().count() == 1
-    # partition filter prunes: plan mentions the bucket_id pushdown
-    plan = one._jdf.queryExecution().executedPlan().toString()
-    assert "bucket_id" in plan
+    assert_one_bucket_scanned(one, some_conv, 8)
 
 
 def test_catalog_idempotent_rewrite(spark, turns_small, tmp_path):
@@ -171,3 +173,112 @@ def test_slice_domain_mismatch_raises(spark, turns_small, tmp_path):
     )
     with pytest.raises(ValueError, match="outside the n_slices=2 layout"):
         run_checkpointed(spark, src_null, _transform, out, n_slices=2, slice_col="bucket_id")
+
+
+def _jobs_started(spark, fn):
+    """``fn()``'s result and the number of Spark jobs it started, counted
+    under a job group of its own."""
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _assert_same(got, ref):
+    """Same schema (names, types, nullability, order) and the same rows."""
+    assert got.schema == ref.schema
+    assert got.exceptAll(ref).isEmpty() and ref.exceptAll(got).isEmpty()
+
+
+TIER_TABLES = ("rollup_minute", "rollup_hour", "rollup_day", "rollup_minute_filled")
+
+
+@pytest.fixture(scope="module")
+def tier_job(spark, turns_small, tmp_path_factory):
+    """The documented tier job (locf gap-fill, 2 checkpoint slices)."""
+    root = tmp_path_factory.mktemp("tier_job")
+    counts = run_rollup_job(
+        spark, turns_small,
+        RollupJobConfig(out_root=str(root), gapfill_policy="locf", checkpoint_slices=2),
+    )
+    return ParquetTierCatalog(str(root)), counts
+
+
+def test_planning_reads_starts_no_job(spark, tier_job):
+    """Reads take their schema from the parquet footer and a lookup's
+    bucket id constant-folds, so building a read starts no Spark job and
+    a point lookup costs one: its collect."""
+    cat, _ = tier_job
+    _, n = _jobs_started(spark, lambda: cat.read(spark, "rollup_hour"))
+    assert n == 0
+    one, n = _jobs_started(spark, lambda: cat.read_conv(spark, "rollup_hour", "conv-000003"))
+    assert n == 0
+    _, n = _jobs_started(spark, lambda: read_result(spark, os.path.join(cat.root, "_ckpt_minute")))
+    assert n == 0
+    rows, n = _jobs_started(spark, one.collect)
+    assert n == 1 and rows
+
+
+def test_reads_match_spark_schema_inference(spark, tier_job):
+    cat, counts = tier_job
+    for table in TIER_TABLES:
+        _assert_same(cat.read(spark, table), spark.read.parquet(cat.path(table)).drop("bucket_id"))
+    ckpt = os.path.join(cat.root, "_ckpt_minute")
+    paths = [rec["path"] for rec in load_manifest(ckpt).values()]
+    _assert_same(read_result(spark, ckpt), spark.read.parquet(*paths))
+    assert counts["hour"] == cat.read(spark, "rollup_hour").count()
+
+
+def test_read_conv_matches_conv_filter(spark, tier_job):
+    cat, _ = tier_job
+    full = spark.read.parquet(cat.path("rollup_hour")).drop("bucket_id")
+    keys = ("conv_id", "kind", "bucket_start")
+    conv_ids = [r["conv_id"] for r in full.select("conv_id").distinct().collect()]
+    assert len(conv_ids) == 40
+    for conv_id in conv_ids + ["conv-absent"]:
+        got = cat.read_conv(spark, "rollup_hour", conv_id).orderBy(*keys).collect()
+        ref = full.where(F.col("conv_id") == conv_id).orderBy(*keys).collect()
+        assert got == ref, conv_id
+        assert bool(got) == (conv_id != "conv-absent")
+
+
+def test_read_conv_non_ascii(spark, tmp_path):
+    cat = ParquetTierCatalog(str(tmp_path / "tiers_utf8"), n_buckets=8)
+    ids = ["café", "会話-1", "conv-ß-ü", "plain"]
+    rows = [(c, i, float(i)) for c in ids for i in range(3)]
+    cat.write(spark.createDataFrame(rows, "conv_id string, turn_idx int, value double"), "t")
+    full = spark.read.parquet(cat.path("t")).drop("bucket_id")
+    for conv_id in ids + ["会話-absent"]:
+        got = sorted(cat.read_conv(spark, "t", conv_id).collect())
+        assert got == sorted(full.where(F.col("conv_id") == conv_id).collect())
+        assert len(got) == (0 if conv_id.endswith("absent") else 3)
+
+
+def test_read_result_with_empty_slices(spark, turns_small, tmp_path):
+    """More slices than conversations: some slice outputs hold no rows,
+    and the footer schema still matches Spark's inference."""
+    few = turns_small.where(F.col("conv_id") < "conv-000003")
+    out = str(tmp_path / "ckpt_sparse")
+    run_checkpointed(spark, few, _transform, out, n_slices=8)
+    paths = [rec["path"] for rec in load_manifest(out).values()]
+    assert any(ds.dataset(p, format="parquet").count_rows() == 0 for p in paths)
+    got, n = _jobs_started(spark, lambda: read_result(spark, out))
+    assert n == 0
+    _assert_same(got, spark.read.parquet(*paths))
+    ref = _transform(few)  # computed, so its schema keeps non-null fields
+    assert got.exceptAll(ref).isEmpty() and ref.exceptAll(got).isEmpty()
+
+
+def test_read_without_data_files_raises(spark, tmp_path):
+    """No footer to read: Spark's own inference runs and fails as before."""
+    cat = ParquetTierCatalog(str(tmp_path / "tiers_empty"))
+    os.makedirs(cat.path("only_success"))
+    open(os.path.join(cat.path("only_success"), "_SUCCESS"), "w").close()
+    with pytest.raises(AnalysisException, match="UNABLE_TO_INFER_SCHEMA"):
+        cat.read(spark, "only_success")
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        cat.read(spark, "missing")

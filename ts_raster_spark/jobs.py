@@ -68,22 +68,24 @@ def run_rollup_job(
         minute = read_result(spark, ckpt_dir)
     else:
         minute = to_minute(turns)
-    # one Spark action per tier: the write; lineage counts come from
-    # parquet footer metadata (no count job on the critical path)
+    # a tier's write is its only Spark action: re-reads take their schema
+    # and lineage counts their row totals from parquet footers, so
+    # neither starts a job
     cat.write(minute, "rollup_minute")
     counts["minute"] = cat.row_count("rollup_minute")
 
-    finer = cat.read(spark, "rollup_minute")
+    minute_tbl = cat.read(spark, "rollup_minute")
+    finer = minute_tbl
     for tier in ("hour", "day"):
         if tier not in cfg.tiers:
             continue
-        rolled = cascade_up(finer, tier)
-        cat.write(rolled, f"rollup_{tier}")
+        cat.write(cascade_up(finer, tier), f"rollup_{tier}")
         counts[tier] = cat.row_count(f"rollup_{tier}")
-        finer = cat.read(spark, f"rollup_{tier}")
+        if tier == "hour":  # the day tier cascades from the stored hour tier
+            finer = cat.read(spark, "rollup_hour")
 
     if cfg.gapfill_policy:
-        pts = cat.read(spark, "rollup_minute").selectExpr(
+        pts = minute_tbl.selectExpr(
             "conv_id", "kind", "bucket_start", "sum_values / turn_count AS value"
         )
         filled = gapfill(pts, "minute", cfg.gapfill_policy)

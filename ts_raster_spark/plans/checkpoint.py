@@ -37,6 +37,8 @@ from collections.abc import Callable
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ts_raster_spark.sources.catalog import read_parquet
+
 MANIFEST = "manifest.jsonl"
 
 
@@ -169,9 +171,11 @@ def run_checkpointed(
 def read_result(spark: SparkSession, out_dir: str, n_slices: int | None = None) -> DataFrame:
     """Read ONLY the current layout's manifest-listed completed slices —
     a slice=* glob would silently union stale directories left by a
-    previous run with a different n_slices (double-counting)."""
+    previous run with a different n_slices (double-counting). The schema
+    comes from a slice's parquet footer, so building the read starts no
+    Spark job."""
     done = load_manifest(out_dir, n_slices)
     if not done:
         raise FileNotFoundError(f"no completed slices recorded in {out_dir}/{MANIFEST}")
     paths = [rec["path"] for rec in done.values()]
-    return spark.read.parquet(*paths)
+    return read_parquet(spark, *paths)

@@ -14,14 +14,58 @@ changes.
 - writes use dynamic partition overwrite per bucket — re-running a
   job replaces exactly the buckets it produced (idempotent, the MERGE
   stand-in keyed on (conv_id, kind, bucket_start) at file granularity).
+- the schema Spark stores in a data file's footer stands in for Iceberg
+  table metadata: :func:`footer_schema` reads it on the driver, so
+  planning a tier read or a point lookup starts no Spark job (Spark's
+  own parquet schema inference runs one per read).
 """
 
 from __future__ import annotations
 
+import json
 import os
+from urllib.parse import urlparse
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def footer_schema(*paths: str) -> StructType | None:
+    """The Spark schema recorded in the footer of the first data file
+    under ``paths`` — the file Spark's non-merging schema inference
+    reads, parsed on the driver with pyarrow instead of in a Spark job.
+    None when the paths are not local, hold no data file, or the file
+    was not written by Spark; callers then let Spark infer the schema."""
+    import pyarrow.parquet as pq
+
+    for path in paths:
+        url = urlparse(path)
+        if url.scheme not in ("", "file"):
+            return None
+        for root, dirs, files in os.walk(url.path if url.scheme else path):
+            # Spark skips hidden and metadata entries (_SUCCESS, .crc)
+            dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+            for name in sorted(files):
+                if name.startswith(("_", ".")):
+                    continue
+                meta = pq.read_metadata(os.path.join(root, name)).metadata or {}
+                if SPARK_SCHEMA_KEY not in meta:
+                    return None
+                return StructType.fromJson(json.loads(meta[SPARK_SCHEMA_KEY]))
+    return None
+
+
+def read_parquet(spark: SparkSession, *paths: str) -> DataFrame:
+    """``spark.read.parquet(*paths)`` with the schema taken from the
+    footer when there is one, so building the DataFrame starts no job.
+    Hive partition columns (``bucket_id``) are still discovered from the
+    directory names."""
+    schema = footer_schema(*paths)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(*paths)
 
 
 def feature_names_dim(spark: SparkSession, wide_df: DataFrame, key_cols=("conv_id",), sep: str = "_") -> DataFrame:
@@ -53,10 +97,11 @@ class ParquetTierCatalog:
     def path(self, table: str) -> str:
         return os.path.join(self.root, table)
 
+    def bucket_of(self, conv_id: Column) -> Column:
+        return F.pmod(F.xxhash64(conv_id), F.lit(self.n_buckets)).cast("int")
+
     def with_bucket(self, df: DataFrame) -> DataFrame:
-        return df.withColumn(
-            "bucket_id", F.pmod(F.xxhash64("conv_id"), F.lit(self.n_buckets)).cast("int")
-        )
+        return df.withColumn("bucket_id", self.bucket_of(F.col("conv_id")))
 
     def write(self, df: DataFrame, table: str, mode: str = "overwrite", full: bool = False) -> None:
         """Write a tier table bucketed by conv_id.
@@ -90,7 +135,7 @@ class ParquetTierCatalog:
                 spark.conf.set(conf_key, prev)
 
     def read(self, spark: SparkSession, table: str) -> DataFrame:
-        return spark.read.parquet(self.path(table)).drop("bucket_id")
+        return read_parquet(spark, self.path(table)).drop("bucket_id")
 
     def row_count(self, table: str) -> int:
         """Row count from parquet footer metadata — zero Spark jobs and
@@ -115,10 +160,13 @@ class ParquetTierCatalog:
         return spark.table(f"tsrs_{table}")
 
     def read_conv(self, spark: SparkSession, table: str, conv_id: str) -> DataFrame:
-        """Bucket-pruned point lookup: only 1/n_buckets of files scanned
-        (the partition filter on bucket_id prunes at planning time)."""
-        df = spark.read.parquet(self.path(table))
-        bucket = df.sparkSession.range(1).select(
-            F.pmod(F.xxhash64(F.lit(conv_id)), F.lit(self.n_buckets)).cast("int").alias("b")
-        ).first()["b"]
-        return df.where((F.col("bucket_id") == bucket) & (F.col("conv_id") == conv_id)).drop("bucket_id")
+        """Bucket-pruned point lookup: one Spark job (the caller's action)
+        over the files of one bucket. The bucket transform of the literal
+        ``conv_id`` constant-folds into a literal partition filter
+        (``bucket_id = k``), so no job computes ``k`` and the scan reads
+        only that bucket's files."""
+        return (
+            read_parquet(spark, self.path(table))
+            .where((F.col("bucket_id") == self.bucket_of(F.lit(conv_id))) & (F.col("conv_id") == conv_id))
+            .drop("bucket_id")
+        )
