@@ -201,12 +201,11 @@ def test_dedup_keep_canonical(spark):
     )
     from ts_raster_spark.operators.dedup import dedup_keep_canonical
 
-    for deep in (False, True):
-        out = dedup_keep_canonical(docs, deep=deep).toPandas().set_index("doc_id")
-        assert "doc-a" in out.index and "doc-d" in out.index
-        assert "doc-b" not in out.index  # exact near-dup collapsed
-        assert int(out["n_dups"].sum()) == 4
-        assert int(out.loc["doc-d", "n_dups"]) == 1
+    out = dedup_keep_canonical(docs).toPandas().set_index("doc_id")
+    assert "doc-a" in out.index and "doc-d" in out.index
+    assert "doc-b" not in out.index  # exact near-dup collapsed
+    assert int(out["n_dups"].sum()) == 4
+    assert int(out.loc["doc-d", "n_dups"]) == 1
 
 
 def _union_find(n_nodes, edges):

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from ts_raster_spark.operators.kll import (
     _build_levels,
+    _compact,
     _merge_levels,
     kll_merge,
     kll_quantiles,
@@ -219,3 +220,90 @@ def test_spark_double_cascade_day_matches_local(spark, turns_small):
             assert lo <= target + b and hi >= target - b, (conv, day, col)
         checked += 1
     assert checked >= 10, "fixture spans too few (conv, day) groups"
+
+
+def _spark_items(sk):
+    """{(conv_id, bucket_start): sorted [(level, value)]} of a sketch."""
+    out = {}
+    for r in sk.collect():
+        out.setdefault((r["conv_id"], r["bucket_start"]), []).append(
+            (r["level"], r["value"])
+        )
+    return {g: sorted(v) for g, v in out.items()}
+
+
+def _level_items(levels):
+    return sorted((l, float(x)) for l, arr in enumerate(levels) for x in arr)
+
+
+def test_spark_build_matches_build_levels_small_k(spark):
+    """k=4 build over minute groups holding ≤ k values (3, 4: the native
+    explode), more than k (7: one compaction) and more than 2k (11, 20:
+    promotions cascade through several levels).  Each group's
+    (level, value) multiset equals ``_build_levels`` on its values; a
+    NULL value is not an item.  (The k=16 ``turns_small`` cascade tests
+    never reach the build's compaction branch: that fixture holds at
+    most 5 values per minute.)"""
+    import datetime as dt
+
+    k = 4
+    rng = np.random.RandomState(5)
+    t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
+    sizes = {"a": 3, "b": 4, "c": 7, "d": 11, "e": 20}
+    rows, want = [], {}
+    for conv, n in sizes.items():
+        # few distinct values, so stable-sort ties are exercised too
+        vals = rng.randint(0, 6, size=n).astype(np.float64)
+        rows += [(conv, "x", t0 + dt.timedelta(seconds=i), float(v)) for i, v in enumerate(vals)]
+        want[(conv, t0)] = _level_items(_build_levels(vals, k))
+    rows.append(("a", "x", t0, None))
+    df = spark.createDataFrame(rows, "conv_id string, kind string, ts timestamp, value double")
+    got = _spark_items(kll_sketch(df, "minute", k=k))
+    assert got == want
+    assert max(l for items in got.values() for l, _ in items) >= 2
+
+
+def test_spark_merge_matches_compact_replay_small_k(spark):
+    """k=4 merge of hand-built minute sketches into hour groups:
+
+    - ``p``: 3 items, ≤ k in total (native explode);
+    - ``q``: 7 items, above k in total but no level above k — passes
+      through unchanged;
+    - ``r``: 6 level-0 items — level 0 overflows;
+    - ``s``: 6 level-0 + 4 level-1 items — level 0's promotions make
+      level 1 overflow in turn.
+
+    Each hour group equals a ``_compact`` replay of its concatenated
+    levels."""
+    import datetime as dt
+
+    k = 4
+    h0 = dt.datetime(2024, 1, 1, 12, 0, 0)
+    groups = {
+        "p": [(0, 1.0), (0, 2.0), (1, 3.0)],
+        "q": [(0, 5.0), (0, 1.0), (0, 3.0), (1, 2.0), (1, 4.0), (2, 9.0), (2, 0.5)],
+        "r": [(0, 6.0), (0, 5.0), (0, 4.0), (0, 3.0), (0, 2.0), (0, 1.0)],
+        "s": [(0, float(v)) for v in (8, 3, 3, 7, 1, 2)]
+        + [(1, float(v)) for v in (4, 6, 0, 5)],
+    }
+    rows, want = [], {}
+    for conv, items in groups.items():
+        # spread each group's items over three minutes of the hour
+        rows += [
+            (conv, "x", h0 + dt.timedelta(minutes=i % 3), lvl, v)
+            for i, (lvl, v) in enumerate(items)
+        ]
+        n_levels = max(lvl for lvl, _ in items) + 1
+        levels = [
+            np.array([v for lvl, v in items if lvl == l], dtype=np.float64)
+            for l in range(n_levels)
+        ]
+        want[(conv, h0)] = _level_items(_compact(levels, k))
+    sk = spark.createDataFrame(
+        rows, "conv_id string, kind string, bucket_start timestamp, level int, value double"
+    )
+    got = _spark_items(kll_merge(sk, "hour", k=k))
+    assert got == want
+    assert got[("q", h0)] == sorted(groups["q"])  # pass-through
+    assert got[("s", h0)] != sorted(groups["s"])
+    assert max(l for l, _ in got[("s", h0)]) == 2

@@ -105,41 +105,3 @@ def test_set_ops_exact_when_small(spark):
     assert out["d_curr_only"] == 10.0
     assert out["jaccard"] == pytest.approx(0.25)
 
-
-def test_capped_build_bit_identical(spark):
-    """kmv_sketch_capped == kmv_sketch exactly (k-min closure: per
-    -partition truncation to k smallest loses nothing the global top-k
-    would keep), across partition layouts."""
-    from ts_raster_spark.operators.kmv import kmv_sketch_capped
-
-    df = spark.range(8000).select(
-        (F.col("id") % 3).cast("string").alias("grp"),
-        F.concat(F.lit("e-"), (F.col("id") * 7919) % 5000).alias("e"),
-    )
-    want = sorted(map(tuple, kmv_sketch(df, "e", ["grp"], k=32).collect()))
-    for parts in (1, 13):
-        got = sorted(
-            map(
-                tuple,
-                kmv_sketch_capped(
-                    df.repartition(parts), "e", ["grp"], k=32
-                ).collect(),
-            )
-        )
-        assert got == want
-
-
-def test_capped_partials_row_bound(spark):
-    """Pre-shuffle rows ≤ k · groups · partitions, and the kernel is
-    a MapInPandas stage over the JVM-computed md5 projection."""
-    from ts_raster_spark.operators.kmv import kmv_partials
-
-    parts = 8
-    df = spark.range(20_000).repartition(parts).select(
-        (F.col("id") % 2).cast("string").alias("grp"),
-        F.concat(F.lit("u-"), F.col("id")).alias("e"),
-    )
-    p = kmv_partials(df, "e", ["grp"], k=16)
-    assert p.count() <= 16 * 2 * parts
-    plan = p._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" in plan

@@ -23,7 +23,7 @@ from ts_raster_spark.operators.compress import compress_blocks
 from ts_raster_spark.operators.gapfill import gapfill
 from ts_raster_spark.operators.longform import to_long_panel
 from ts_raster_spark.operators.mask import mask_df
-from ts_raster_spark.operators.rollup import rollup_simple, rollup_simple_wide
+from ts_raster_spark.operators.rollup import rollup_simple_wide
 from ts_raster_spark.plans.checkpoint import run_checkpointed
 from ts_raster_spark.sources.catalog import ParquetTierCatalog
 
@@ -36,9 +36,6 @@ class RollupJobConfig:
     compress: bool = False
     n_buckets: int = 16
     checkpoint_slices: int = 0  # 0 = no checkpointing
-    # materialized partition column to slice checkpoints on (catalog
-    # bucket_id) — slices then PRUNE files instead of filtering scans
-    slice_col: str | None = None
     kinds: tuple[str, ...] = field(default=())  # () = all channels
 
 
@@ -61,10 +58,7 @@ def run_rollup_job(
         from ts_raster_spark.plans.checkpoint import read_result
 
         ckpt_dir = f"{cfg.out_root}/_ckpt_minute"
-        run_checkpointed(
-            spark, turns, to_minute, ckpt_dir,
-            n_slices=cfg.checkpoint_slices, slice_col=cfg.slice_col,
-        )
+        run_checkpointed(spark, turns, to_minute, ckpt_dir, n_slices=cfg.checkpoint_slices)
         minute = read_result(spark, ckpt_dir)
     else:
         minute = to_minute(turns)

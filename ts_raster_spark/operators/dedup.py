@@ -300,20 +300,17 @@ def dedup_keep_canonical(
     docs: DataFrame,
     k: int = 8,
     band_size: int = 2,
-    deep: bool = False,
 ) -> DataFrame:
     """The end-to-end near-dup dedup a training pipeline runs: MinHash-LSH
-    candidate pairs → connected components → keep exactly ONE document
-    (the component minimum) per near-dup cluster, plus every untouched
-    document. ``deep=True`` swaps in the large-star/small-star component
-    solver for graphs whose near-dup chains may be long.
+    candidate pairs → min-label connected components → keep exactly ONE
+    document (the component minimum) per near-dup cluster, plus every
+    untouched document.
 
     Output: the deduplicated corpus (all original columns) plus
     ``component`` and ``n_dups`` (cluster size the survivor represents).
     """
     pairs = minhash_lsh_pairs(docs, k=k, band_size=band_size)
-    solver = connected_components_star if deep else connected_components
-    comp = solver(pairs, all_nodes=docs.select(F.col("doc_id").alias("node")))
+    comp = connected_components(pairs, all_nodes=docs.select(F.col("doc_id").alias("node")))
     sizes = comp.groupBy("component").agg(F.count("*").cast("long").alias("n_dups"))
     keep = (
         comp.where(F.col("node") == F.col("component"))

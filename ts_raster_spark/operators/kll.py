@@ -25,12 +25,15 @@ the pre-randomization ancestor of KLL [Karnin-Lang-Liberty 2016]):
 - total weight is conserved exactly (odd leftovers stay at their
   level), so counts stay exact through any cascade depth.
 
-Spark shape: building/merging is a per-group Arrow kernel
-(``applyInPandas`` — compaction is inherently iterative), but the
-sketch itself is stored EXPLODED as narrow (keys, level, value) rows —
-≤ k·log₂(n/k) rows per group — and querying quantiles from it is pure
-window SQL (sort by value, cumulative weight walk), same discipline as
-the histogram sketch.
+Spark shape: a build is a merge of singleton level-0 items, so build
+and merge share one path: ``collect_list`` per group, a native explode
+for groups of ≤ k items (nothing to compact), and a scalar
+``pandas_udf`` running ``_compact`` over the gathered arrays of larger
+groups (compaction is inherently iterative).  The sketch is stored
+EXPLODED as narrow (keys, level, value) rows — ≤ k·log₂(n/k) rows per
+group — and querying quantiles from it is pure window SQL (sort by
+value, cumulative weight walk), same discipline as the histogram
+sketch.
 
 Reference scope note: ts-raster has no sketch surface; engine addition
 for the retention/rollup tier (same family as sketch.py / hll.py).
@@ -80,102 +83,19 @@ def _merge_levels(a: list[np.ndarray], b: list[np.ndarray], k: int) -> list[np.n
     return _compact(out, k)
 
 
-SKETCH_FIELDS = "level int, value double"
+def _recompact(items: DataFrame, keys: list[str], k: int) -> DataFrame:
+    """Compact (keys…, level, value) items into one sketch per group.
 
-
-def _levels_frame(levels: list[np.ndarray]) -> pd.DataFrame:
-    lv = (
-        np.concatenate([np.full(len(arr), i, dtype=np.int32) for i, arr in enumerate(levels)])
-        if levels
-        else np.empty(0, dtype=np.int32)
-    )
-    vals = np.concatenate(levels) if levels else np.empty(0, dtype=np.float64)
-    return pd.DataFrame({"level": lv, "value": vals})
-
-
-def kll_sketch(long_df: DataFrame, tier: str | None, k: int = 64) -> DataFrame:
-    """Build the sketch per (conv_id, kind[, bucket_start]): one output
-    row per retained (level, value) item — ≤ k·log₂(n/k)+k rows per
-    group.
-
-    SINGLE-PASS shape (round 5): one hash aggregate gathers each
-    group's values (map-side combined like any agg), a vectorized
-    Arrow batch kernel compacts per group (a bucket with ≤ k values IS
-    its own level-0 sketch — no compaction, just a relabel), and an
-    explode re-emits the narrow (keys, level, value) rows.  The
-    round-4 design instead ROUTED via a heavy-key probe + broadcast
-    anti/semi joins so light series could pass through as a pure
-    identity projection — zero shuffle, but the probe and each join
-    branch re-embedded (re-planned, re-scanned) the upstream
-    derivation, which dominates end-to-end when the input is a derived
-    long panel rather than a bare scan, and multiplicatively so under
-    a two-level cascade.  The single aggregate shuffles bytes the
-    downstream quantile/merge window would shuffle anyway (at fine
-    grains the sketch IS the data), so the trade is one derivation
-    scan for the whole pipeline."""
+    One aggregate gathers each group's items.  A group of ≤ k items
+    cannot overflow a level, so it IS its sketch and leaves through a
+    native explode — at fine tiers that is almost every bucket, so the
+    common case never crosses into Python.  Larger groups go through
+    the ``_compact`` kernel, which returns a group unchanged when no
+    single level is over capacity.  Both branches read the same
+    aggregation (the exchange is reused)."""
     from pyspark.sql.functions import pandas_udf
 
-    df, out_keys = bucketize(long_df, tier)
-    g = df.groupBy(*out_keys).agg(
-        F.collect_list(F.col("value").cast("double")).alias("_vals")
-    )
-
-    @pandas_udf("array<struct<level:int,value:double>>")
-    def _build(vs: pd.Series) -> pd.Series:
-        out = []
-        for v in vs:
-            arr = np.asarray(v, dtype=np.float64)
-            if len(arr) <= k:
-                out.append([{"level": 0, "value": float(x)} for x in arr])
-            else:
-                levels = _build_levels(arr, k)
-                out.append(
-                    [
-                        {"level": l, "value": float(x)}
-                        for l, a in enumerate(levels)
-                        for x in a
-                    ]
-                )
-        return pd.Series(out)
-
-    # Native fast path (round 6): a group with <= k values IS its own
-    # level-0 sketch — emit it with a pure-Catalyst explode and keep the
-    # Arrow kernel for over-capacity groups only.  At fine tiers almost
-    # every bucket is small, so the Python boundary disappears from the
-    # common case; both branches read the SAME aggregation (the exchange
-    # is reused), and the output multiset is identical to running the
-    # kernel on everything (the kernel's <= k branch is the same relabel).
-    small = (
-        g.where(F.size("_vals") <= k)
-        .select(*out_keys, F.explode("_vals").alias("value"))
-        .select(*out_keys, F.lit(0).cast("int").alias("level"), F.col("value").cast("double").alias("value"))
-    )
-    big = g.where(F.size("_vals") > k).select(
-        *out_keys, F.explode(_build("_vals")).alias("_it")
-    ).select(
-        *out_keys,
-        F.col("_it.level").cast("int").alias("level"),
-        F.col("_it.value").cast("double").alias("value"),
-    )
-    return small.unionByName(big)
-
-
-def kll_merge(sketch: DataFrame, coarser_tier: str, k: int = 64) -> DataFrame:
-    """Tier cascade: re-bucket ``bucket_start`` and re-compact the
-    concatenated items per coarser group — reads ≤ k·log₂(n/k) rows
-    per finer bucket instead of the raw data.  Same single-pass
-    aggregate + Arrow batch kernel + explode shape as ``kll_sketch``
-    (see there for why this replaced probe-and-join routing); the
-    kernel passes a coarse bucket through UNCHANGED when every level
-    is already within capacity (the common case), so merging is one
-    sketch-row shuffle and a relabel for all but busy/mega series."""
-    from pyspark.sql.functions import pandas_udf
-
-    keys = [c for c in sketch.columns if c not in ("level", "value")]
-    d = sketch.withColumn(
-        "bucket_start", F.date_trunc(coarser_tier, F.col("bucket_start"))
-    )
-    g = d.groupBy(*keys).agg(
+    g = items.groupBy(*keys).agg(
         F.collect_list(
             F.struct(
                 F.col("level").cast("int").alias("level"),
@@ -185,47 +105,55 @@ def kll_merge(sketch: DataFrame, coarser_tier: str, k: int = 64) -> DataFrame:
     )
 
     @pandas_udf("array<struct<level:int,value:double>>")
-    def _merge(its: pd.Series) -> pd.Series:
+    def _kernel(its: pd.Series) -> pd.Series:
         out = []
-        for items in its:
-            n = len(items)
-            lv = np.fromiter((it["level"] for it in items), dtype=np.int64, count=n)
-            if n == 0 or np.bincount(lv).max() <= k:
-                out.append(list(items))
+        for group in its:
+            n = len(group)
+            lv = np.fromiter((it["level"] for it in group), dtype=np.int64, count=n)
+            if np.bincount(lv).max() <= k:
+                out.append(list(group))
                 continue
-            vals = np.fromiter((it["value"] for it in items), dtype=np.float64, count=n)
-            levels = _compact(
-                [vals[lv == l] for l in range(int(lv.max()) + 1)], k
-            )
+            vals = np.fromiter((it["value"] for it in group), dtype=np.float64, count=n)
+            levels = _compact([vals[lv == l] for l in range(int(lv.max()) + 1)], k)
             out.append(
-                [
-                    {"level": l, "value": float(x)}
-                    for l, a in enumerate(levels)
-                    for x in a
-                ]
+                [{"level": l, "value": float(x)} for l, a in enumerate(levels) for x in a]
             )
         return pd.Series(out)
 
-    # Native fast path (round 6): <= k total items implies every level is
-    # within capacity, so the merged sketch is the concatenation itself —
-    # pure-Catalyst explode, no Python.  Only bigger groups (which may
-    # still pass through unchanged if no single level overflows) hit the
-    # Arrow kernel; both branches reuse the one aggregation exchange.
-    small = g.where(F.size("_its") <= k).select(
-        *keys, F.explode("_its").alias("_it")
-    ).select(
-        *keys,
-        F.col("_it.level").cast("int").alias("level"),
-        F.col("_it.value").cast("double").alias("value"),
+    small = g.where(F.size("_its") <= k).select(*keys, F.explode("_its").alias("_it"))
+    big = g.where(F.size("_its") > k).select(*keys, F.explode(_kernel("_its")).alias("_it"))
+    return small.unionByName(big).select(
+        *keys, F.col("_it.level").alias("level"), F.col("_it.value").alias("value")
     )
-    big = g.where(F.size("_its") > k).select(
-        *keys, F.explode(_merge("_its")).alias("_it")
-    ).select(
-        *keys,
-        F.col("_it.level").cast("int").alias("level"),
-        F.col("_it.value").cast("double").alias("value"),
+
+
+def kll_sketch(long_df: DataFrame, tier: str | None, k: int = 64) -> DataFrame:
+    """Build the sketch per (conv_id, kind[, bucket_start]): one output
+    row per retained (level, value) item — ≤ k·log₂(n/k)+k rows per
+    group.  A raw value is a level-0 item, so the build is the merge of
+    singleton sketches (``_recompact``).  NULL values are not items.
+
+    The aggregate shuffles bytes the downstream quantile/merge window
+    would shuffle anyway (at fine grains the sketch IS the data), and
+    it scans the upstream derivation once: routing light and heavy
+    series through separate joins would re-plan and re-scan the derived
+    long panel per branch."""
+    df, out_keys = bucketize(long_df, tier)
+    items = df.where(F.col("value").isNotNull()).select(
+        *out_keys, F.lit(0).alias("level"), F.col("value")
     )
-    return small.unionByName(big)
+    return _recompact(items, out_keys, k)
+
+
+def kll_merge(sketch: DataFrame, coarser_tier: str, k: int = 64) -> DataFrame:
+    """Tier cascade: re-bucket ``bucket_start`` and re-compact the
+    concatenated items per coarser group — reads ≤ k·log₂(n/k) rows
+    per finer bucket instead of the raw data."""
+    keys = [c for c in sketch.columns if c not in ("level", "value")]
+    d = sketch.withColumn(
+        "bucket_start", F.date_trunc(coarser_tier, F.col("bucket_start"))
+    )
+    return _recompact(d, keys, k)
 
 
 def kll_quantiles(
@@ -247,7 +175,7 @@ def kll_quantiles(
     # total weight rides the cumulative window's sort (explicit unbounded
     # frame, same (partition, order) spec -> one Window operator, one
     # sort); the sum of 2^level weights is exact integer arithmetic in
-    # double, so the value is order-independent (round 6)
+    # double, so the value is order-independent
     w_all = Window.partitionBy(*keys).orderBy("value", "level").rowsBetween(
         Window.unboundedPreceding, Window.unboundedFollowing
     )

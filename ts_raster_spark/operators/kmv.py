@@ -11,8 +11,10 @@ tiers compose across periods without rescanning raw (the 100 TB value:
 store k rows per bucket, answer "returning users", "churn", "overlap
 between any two periods" later from sketches alone).
 
-Build cost: one distinct (map-side-combined — the shuffle carries one
-row per distinct (group, entity), exactly like exact COUNT DISTINCT)
+Build = merge of singleton sketches (one md5 per row), so build and
+tier merge are one code path.  Its cost: one distinct (map-side-
+combined — the shuffle carries one row per distinct (group, entity),
+exactly like exact COUNT DISTINCT)
 plus a per-group sort-based top-k window (spillable, skew-safe). The
 build is NOT cheaper than one exact distinct — the win is downstream
 reuse and cross-period algebra on k-row summaries.
@@ -23,8 +25,6 @@ engine-added like operators/hll.py, kll.py, mg.py.
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -34,19 +34,14 @@ from ts_raster_spark.functions import kmvsql as K
 def kmv_sketch(
     df: DataFrame, entity: str, keys: list[str], k: int = 64
 ) -> DataFrame:
-    """k smallest distinct entity hashes per key group.
+    """k smallest distinct entity hashes per key group: the merge of
+    each row's singleton sketch {md5(entity)}.
 
     Output: (*keys, h) — at most k rows per group, lexicographically
     the smallest md5 hex strings. Deterministic across partitionings.
     """
-    d = df.select(
-        *keys, F.expr(K.md5_expr(entity)).alias("h")
-    ).distinct()
-    w = Window.partitionBy(*keys).orderBy("h")
-    return (
-        d.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k)
-        .drop("rnk")
+    return kmv_merge(
+        df.select(*keys, F.expr(K.md5_expr(entity)).alias("h")), keys, k
     )
 
 
@@ -60,66 +55,6 @@ def kmv_merge(sketches: DataFrame, keys: list[str], k: int = 64) -> DataFrame:
         .where(F.col("rnk") <= k)
         .drop("rnk")
     )
-
-
-def kmv_partials(
-    df: DataFrame, entity: str, keys: list[str], k: int = 64
-) -> DataFrame:
-    """Per-PARTITION k-min partials with bounded pre-shuffle rows.
-
-    ``kmv_sketch``'s build shuffles one row per distinct (group,
-    entity) — the same volume as an exact COUNT DISTINCT.  This path
-    caps it: the md5 is computed JVM-side (codegen), then an Arrow
-    ``mapInPandas`` kernel keeps only each partition's k smallest
-    unique hashes per group (np.unique merge + truncate per batch, so
-    memory is ~k strings per live group), and the shuffle moves
-    ≤ k·groups·partitions rows regardless of entity cardinality.
-
-    Unlike ``mg_partials`` there is NO error to track: by the k-min
-    closure property the merged result is bit-identical to the
-    uncapped sketch (pytest-asserted), so the capped path is exact,
-    deterministic, and safe anywhere the plain build is."""
-    sel = df.select(*keys, F.expr(K.md5_expr(entity)).alias("h"))
-    key_fields = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in sel.schema.fields
-        if f.name in keys
-    )
-    schema = f"{key_fields}, h string"
-    group_cols = list(keys)
-
-    def _partial(batches):
-        acc: dict = {}
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            for g, s in pdf.groupby(group_cols, sort=False)["h"]:
-                gk = g if isinstance(g, tuple) else (g,)
-                vals = s.values.astype(object)
-                cur = acc.get(gk)
-                merged = np.unique(
-                    np.concatenate([cur, vals]) if cur is not None else vals
-                )
-                acc[gk] = merged[:k]
-        if not acc:
-            return
-        frame = {
-            c: [g[i] for g in acc for _ in range(len(acc[g]))]
-            for i, c in enumerate(group_cols)
-        }
-        frame["h"] = np.concatenate(list(acc.values()))
-        yield pd.DataFrame(frame)
-
-    return sel.mapInPandas(_partial, schema=schema)
-
-
-def kmv_sketch_capped(
-    df: DataFrame, entity: str, keys: list[str], k: int = 64
-) -> DataFrame:
-    """``kmv_sketch`` with bounded pre-shuffle rows (see
-    :func:`kmv_partials`) — output is bit-identical to the plain
-    build; use for unbounded-cardinality entities at scale."""
-    return kmv_merge(kmv_partials(df, entity, keys, k), keys, k)
 
 
 def kmv_estimate(

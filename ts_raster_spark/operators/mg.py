@@ -29,10 +29,11 @@ partitionings:
   column (the total weight subtracted so far), so the gate can verify
   the bound IN-QUERY against exact counts, like sketch_kll_hour.
 
-Spark shape: per-SERIES ``applyInPandas`` kernels looping time buckets
-inside pandas (same Arrow-amortization discipline as kll.py /
-compress.py); the sketch is stored exploded as (keys, item, weight,
-err) rows, ≤ k per bucket.
+Spark shape: build and merge are pure Catalyst (aggregates plus the
+closed-form reduction as rank windows); only the capped path's
+per-partition partials cross into Python (``mapInPandas``).  The
+sketch is stored exploded as (keys, item, weight, err) rows, ≤ k per
+bucket.
 
 Reference scope note: ts-raster has no frequent-items surface; engine
 addition for the rollup/training-pipeline tier (task brief family).
@@ -100,13 +101,12 @@ def _reduce_sql(counts: DataFrame, group_keys: list[str], k: int, carried_err=No
         )
         .withColumn("_n_keep", F.sum(F.col("_keep").cast("int")).over(w_all))
     )
-    # Single pass (round 6): survivors and the per-group sentinel are
-    # DISJOINT row sets of the same windowed frame (_keep true implies
-    # _n_keep >= 1), so one filter + conditional projection replaces the
-    # union that planned (and executed) the window subtree twice.  Rows
-    # with a NULL item/weight (a merge group whose finer sketches were
-    # all sentinels) flow through as their group's sentinel, which lets
-    # _finish_merge feed the full errs-LEFT-JOIN-summed frame in one go.
+    # Survivors and the per-group sentinel are DISJOINT row sets of the
+    # same windowed frame (_keep true implies _n_keep >= 1), so one
+    # filter + conditional projection emits both without planning the
+    # window subtree twice.  Rows with a NULL item/weight (a merge group
+    # whose inputs were all sentinels) flow through as their group's
+    # sentinel, so _merge_counters feeds its LEFT-joined frame in one go.
     is_sent = (F.col("_rn") == 1) & (F.col("_n_keep") == 0)
     return d.where(F.col("_keep") | is_sent).select(
         *group_keys,
@@ -156,31 +156,24 @@ def mg_merge(sketch: DataFrame, coarser_tier: str, k: int = 8) -> DataFrame:
         d.groupBy(*group_keys, "bucket_start").agg(F.max("err").alias("_e"))
         .groupBy(*group_keys).agg(F.sum("_e").cast("long").alias("_err_in"))
     )
+    return _merge_counters(d, errs, group_keys, k).withColumnRenamed("_coarse", "bucket_start")
+
+
+def _merge_counters(
+    counters: DataFrame, carried: DataFrame, group_keys: list[str], k: int
+) -> DataFrame:
+    """Shared tail of every MG merge: sum ``counters``' weights per
+    (group, item), LEFT-join them onto ``carried`` — (group_keys,
+    _err_in), the error each group inherits from its inputs — and apply
+    the closed-form reduction with that error.  ``carried`` is the base
+    side, so a group whose inputs were all sentinels still emits its
+    err row and the bound survives any merge topology."""
     summed = (
-        d.where(F.col("item").isNotNull())
+        counters.where(F.col("item").isNotNull())
         .groupBy(*group_keys, "item")
         .agg(F.sum("weight").cast("long").alias("weight"))
     )
-    # errs is the base side (left join): a coarse group whose finer
-    # sketches were all sentinels must still emit its err row
-    joined = errs.join(summed, group_keys, "left")
-    out = _finish_merge(joined, group_keys, k)
-    if "_coarse" in out.columns:
-        out = out.withColumnRenamed("_coarse", "bucket_start")
-    return out
-
-
-def _finish_merge(joined: DataFrame, group_keys: list[str], k: int) -> DataFrame:
-    """Shared tail of every MG merge: ``joined`` holds (group_keys,
-    item nullable, weight, _err_in) — summed per-item weights left-joined
-    onto per-group carried error.  Applies the closed-form reduction with
-    the carried error and re-emits sentinel rows for groups whose inputs
-    were all sentinels, so the err bound survives any merge topology."""
-    # one pass (round 6): _reduce_sql now carries a NULL-item row (the
-    # groups whose inputs were all sentinels — exactly the rows the LEFT
-    # join left unmatched) through as the group's sentinel, so the
-    # separate has-real-items aggregation + union over a second scan of
-    # ``joined`` is gone
+    joined = carried.join(summed, group_keys, "left")
     return _reduce_sql(joined, group_keys, k, carried_err="_err_in")
 
 
@@ -299,11 +292,6 @@ def mg_sketch_capped(
     cap = int(partition_cap or 32 * k)
     partials = mg_partials(df, item_col, tier, keys=keys, partition_cap=cap)
     out_keys = [*keys, "bucket_start"]
+    # partitions are disjoint slices of one bucket: their errors add
     carried = partials.groupBy(*out_keys).agg(F.sum("err").cast("long").alias("_err_in"))
-    summed = (
-        partials.where(F.col("item").isNotNull())
-        .groupBy(*out_keys, "item")
-        .agg(F.sum("weight").cast("long").alias("weight"))
-    )
-    joined = carried.join(summed, out_keys, "left")
-    return _finish_merge(joined, out_keys, k)
+    return _merge_counters(partials, carried, out_keys, k)

@@ -730,26 +730,29 @@ def q_stream_stateful_counts(spark, sf_dir):
     return finalize(final)
 
 
-def q_sketch_kll_hour(spark, sf_dir):
-    """Deterministic KLL rank-sketch cascade (round 4, operators/kll.py):
-    minute-grain sketches merged to hour, q50/q95 read from the merged
-    sketch.  The estimates themselves are only reproducible by running
-    the compaction algorithm (not SQL), so the driver-checkable surface
-    is the CLAIM, verified in-query against raw: the estimate's rank
-    interval must sit within the sketch's closed-form worst-case rank
-    bound H·n/(2k) of the target rank, and the sketch's conserved weight
-    must equal the exact count.  The oracle recomputes n from raw and
-    states the booleans; estimate accuracy/determinism/merge-parity are
-    pytest-asserted (tests/test_kll.py)."""
+def _kll_rank_claim(spark, sf_dir, cascade):
+    """Deterministic KLL rank-sketch cascade (operators/kll.py):
+    minute-grain sketches merged through each tier of ``cascade``,
+    q50/q95 read from the coarsest sketch.  The estimates themselves
+    are only reproducible by running the compaction algorithm (not
+    SQL), so the oracle-checked surface is the CLAIM, verified
+    in-query against raw: the estimate's rank interval must sit within
+    the sketch's closed-form worst-case rank bound H·n/(2k) of the
+    target rank, and the sketch's conserved weight must equal the exact
+    count.  The oracle recomputes n from raw and states the booleans;
+    estimate accuracy/determinism/merge-parity are pytest-asserted
+    (tests/test_kll.py)."""
     from ts_raster_spark.operators.kll import kll_merge, kll_quantiles, kll_sketch
 
     k = 64
     long_df = load_long(spark, sf_dir, channels=("text_len",)).where(
         F.col("kind") == "text_len"
     )
-    sk = kll_merge(kll_sketch(long_df, "minute", k=k), "hour", k=k)
+    sk = kll_sketch(long_df, "minute", k=k)
+    for tier in cascade:
+        sk = kll_merge(sk, tier, k=k)
     est = kll_quantiles(sk, qs=(0.5, 0.95))
-    raw = long_df.withColumn("bucket_start", F.date_trunc("hour", F.col("ts")))
+    raw = long_df.withColumn("bucket_start", F.date_trunc(cascade[-1], F.col("ts")))
     joined = raw.join(est, ["conv_id", "kind", "bucket_start"])
     n = F.count("*")
     # worst-case rank bound of the deterministic compaction (kll.py):
@@ -773,128 +776,84 @@ def q_sketch_kll_hour(spark, sf_dir):
     return finalize(out)
 
 
+def _mg_claim(sk, src, item, tier, n_alias):
+    """The Misra-Gries GUARANTEE of summary ``sk`` (per ``tier`` bucket),
+    verified in-query against exact per-bucket counts of ``src``'s
+    ``item`` column: every retained counter satisfies true−err ≤ weight
+    ≤ true, and every item whose true count exceeds the bucket's err
+    bound is retained.  The summary itself is only reproducible by
+    running the algorithm, so these booleans (plus the distinct-item
+    count, ``n_alias``) are the oracle-checked surface; the oracle
+    restates them from raw."""
+    errs = sk.groupBy("bucket_start").agg(F.max("err").alias("_err"))
+    real = sk.where(F.col("item").isNotNull()).select(
+        "bucket_start", F.col("item").alias(item), "weight"
+    )
+    exact = (
+        src.where(F.col(item).isNotNull())
+        .groupBy(F.date_trunc(tier, F.col("ts")).alias("bucket_start"), item)
+        .agg(F.count("*").cast("long").alias("_cnt"))
+    )
+    j = exact.join(real, ["bucket_start", item], "left").join(errs, "bucket_start")
+    in_bounds = F.when(
+        F.col("weight").isNotNull(),
+        (F.col("weight") <= F.col("_cnt"))
+        & (F.col("weight") >= F.col("_cnt") - F.col("_err")),
+    ).otherwise(F.lit(True))
+    covered = F.when(
+        F.col("_cnt") > F.col("_err"), F.col("weight").isNotNull()
+    ).otherwise(F.lit(True))
+    out = j.groupBy("bucket_start").agg(
+        F.count("*").cast("long").alias(n_alias),
+        F.min(in_bounds.cast("int")).alias("bounds_ok"),
+        F.min(covered.cast("int")).alias("cover_ok"),
+    )
+    return finalize(out)
+
+
+def q_sketch_kll_hour(spark, sf_dir):
+    """KLL rank-sketch claim (``_kll_rank_claim``): minute sketches
+    merged to hour."""
+    return _kll_rank_claim(spark, sf_dir, ("hour",))
+
+
+def q_sketch_kll_day(spark, sf_dir):
+    """The DOUBLE cascade minute→hour→day of the KLL rank sketch — the
+    depth where compaction error actually accumulates (each tier merge
+    re-compacts over-capacity levels); same claim as sketch_kll_hour
+    against the exact day count."""
+    return _kll_rank_claim(spark, sf_dir, ("hour", "day"))
+
+
 def q_mg_top_tools_hour(spark, sf_dir):
-    """Misra-Gries heavy-hitters cascade (round 4, operators/mg.py):
-    minute-grain k=2 summaries of the tool column merged to hour.  Like
-    sketch_kll_hour, the summary itself is only reproducible by running
-    the algorithm, so the driver-checkable surface is the MG GUARANTEE,
-    verified in-query against exact per-bucket tool counts: every
-    retained counter satisfies true-err ≤ weight ≤ true, and every tool
-    whose true count exceeds the bucket's err bound is retained.  The
-    oracle recomputes the per-bucket distinct-tool count from raw and
-    states the booleans (k=2 over a 4-tool column forces real counter
+    """Misra-Gries heavy-hitters cascade (operators/mg.py): minute-grain
+    k=2 summaries of the tool column merged to hour, checked by
+    ``_mg_claim``.  k=2 over a 4-tool column forces real counter
     cancellation, so the bound is genuinely exercised; exact
-    top_tools_hour is the parity sibling)."""
+    top_tools_hour is the parity sibling."""
     from ts_raster_spark.operators.mg import mg_merge, mg_sketch
 
     k = 2
     t = load_turns(spark, sf_dir)
     sk = mg_merge(mg_sketch(t, "tool", "minute", k=k), "hour", k=k)
-    errs = sk.groupBy("bucket_start").agg(F.max("err").alias("_err"))
-    real = sk.where(F.col("item").isNotNull()).select(
-        "bucket_start", F.col("item").alias("tool"), "weight"
-    )
-    exact = (
-        t.where(F.col("tool").isNotNull())
-        .groupBy(F.date_trunc("hour", F.col("ts")).alias("bucket_start"), "tool")
-        .agg(F.count("*").cast("long").alias("_cnt"))
-    )
-    j = exact.join(real, ["bucket_start", "tool"], "left").join(errs, "bucket_start")
-    in_bounds = F.when(
-        F.col("weight").isNotNull(),
-        (F.col("weight") <= F.col("_cnt"))
-        & (F.col("weight") >= F.col("_cnt") - F.col("_err")),
-    ).otherwise(F.lit(True))
-    covered = F.when(
-        F.col("_cnt") > F.col("_err"), F.col("weight").isNotNull()
-    ).otherwise(F.lit(True))
-    out = j.groupBy("bucket_start").agg(
-        F.count("*").cast("long").alias("n_tools"),
-        F.min(in_bounds.cast("int")).alias("bounds_ok"),
-        F.min(covered.cast("int")).alias("cover_ok"),
-    )
-    return finalize(out)
-
-
-def q_sketch_kll_day(spark, sf_dir):
-    """Round 5: the DOUBLE cascade minute→hour→day of the deterministic
-    KLL rank sketch — the depth where compaction error actually
-    accumulates (each tier merge re-compacts over-capacity levels).
-    Same claim-style surface as sketch_kll_hour: the day-grain estimate
-    must sit inside the closed-form worst-case rank bound H·n/(2k) of
-    the target rank (computed from raw in-query) and the cascaded
-    sketch's conserved weight must equal the exact day count.  The
-    oracle recomputes n per day bucket and states the booleans."""
-    from ts_raster_spark.operators.kll import kll_merge, kll_quantiles, kll_sketch
-
-    k = 64
-    long_df = load_long(spark, sf_dir, channels=("text_len",)).where(
-        F.col("kind") == "text_len"
-    )
-    sk = kll_merge(kll_merge(kll_sketch(long_df, "minute", k=k), "hour", k=k), "day", k=k)
-    est = kll_quantiles(sk, qs=(0.5, 0.95))
-    raw = long_df.withColumn("bucket_start", F.date_trunc("day", F.col("ts")))
-    joined = raw.join(est, ["conv_id", "kind", "bucket_start"])
-    n = F.count("*")
-    h = F.greatest(F.lit(1.0), F.log2(F.greatest(n.cast("double") / k, F.lit(2.0))) + 1.0)
-    bound = h * n.cast("double") / (2.0 * k)
-
-    def _in_bound(est_col, q):
-        lo = F.sum((F.col("value") < F.col(est_col)).cast("long")).cast("double")
-        hi = F.sum((F.col("value") <= F.col(est_col)).cast("long")).cast("double")
-        target = F.lit(q) * n.cast("double")
-        return ((hi >= target - bound) & (lo <= target + bound)).cast("int")
-
-    out = joined.groupBy("conv_id", "kind", "bucket_start").agg(
-        n.cast("long").alias("n_raw"),
-        (F.max("total_weight") == n).cast("int").alias("count_ok"),
-        _in_bound("q50_kll", 0.5).alias("q50_in_bound"),
-        _in_bound("q95_kll", 0.95).alias("q95_in_bound"),
-    )
-    return finalize(out)
+    return _mg_claim(sk, t, "tool", "hour", "n_tools")
 
 
 def q_mg_top_tools_day(spark, sf_dir):
-    """Round 5: the DOUBLE Misra-Gries cascade minute→hour→day (k=2) —
-    two Agarwal-et-al merges, each adding tracked subtraction error, so
-    the day-grain err column carries the accumulated bound.  Claim
-    surface as in mg_top_tools_hour: every retained counter satisfies
-    true−err ≤ weight ≤ true and every tool whose exact day count
-    exceeds err is retained; the oracle restates the per-day
-    distinct-tool count and the booleans."""
+    """The DOUBLE Misra-Gries cascade minute→hour→day (k=2) — two
+    Agarwal-et-al merges, each adding tracked subtraction error, so the
+    day-grain err column carries the accumulated bound; same claim as
+    mg_top_tools_hour against exact day counts."""
     from ts_raster_spark.operators.mg import mg_merge, mg_sketch
 
     k = 2
     t = load_turns(spark, sf_dir)
     sk = mg_merge(mg_merge(mg_sketch(t, "tool", "minute", k=k), "hour", k=k), "day", k=k)
-    errs = sk.groupBy("bucket_start").agg(F.max("err").alias("_err"))
-    real = sk.where(F.col("item").isNotNull()).select(
-        "bucket_start", F.col("item").alias("tool"), "weight"
-    )
-    exact = (
-        t.where(F.col("tool").isNotNull())
-        .groupBy(F.date_trunc("day", F.col("ts")).alias("bucket_start"), "tool")
-        .agg(F.count("*").cast("long").alias("_cnt"))
-    )
-    j = exact.join(real, ["bucket_start", "tool"], "left").join(errs, "bucket_start")
-    in_bounds = F.when(
-        F.col("weight").isNotNull(),
-        (F.col("weight") <= F.col("_cnt"))
-        & (F.col("weight") >= F.col("_cnt") - F.col("_err")),
-    ).otherwise(F.lit(True))
-    covered = F.when(
-        F.col("_cnt") > F.col("_err"), F.col("weight").isNotNull()
-    ).otherwise(F.lit(True))
-    out = j.groupBy("bucket_start").agg(
-        F.count("*").cast("long").alias("n_tools"),
-        F.min(in_bounds.cast("int")).alias("bounds_ok"),
-        F.min(covered.cast("int")).alias("cover_ok"),
-    )
-    return finalize(out)
+    return _mg_claim(sk, t, "tool", "day", "n_tools")
 
 
 def q_sketch_merge_retention(spark, sf_dir):
-    """Round 5 (verdict item 8): the KLL sketch TIER composed with the
+    """The KLL sketch TIER composed with the
     late-data idempotent MERGE and the retention TTL — proof that
     sketch columns survive both tier-maintenance paths.
 
@@ -971,24 +930,10 @@ def q_sketch_merge_retention(spark, sf_dir):
     return finalize(out)
 
 
-def q_mg_ngrams_hour(spark, sf_dir):
-    """Round 5: the CAPPED-PARTIALS Misra-Gries path
-    (operators/mg.mg_sketch_capped → mg_partials) on a genuinely
-    unbounded-cardinality item column — text word-bigrams — the shape
-    the per-partition cap exists for (the pure-Catalyst build's
-    map-side dictionary is one row per distinct (bucket, item) per
-    partition, which for n-grams IS the shuffle).
-
-    The capped summary is partition-layout dependent, but its emitted
-    ERROR BOUND is exact for any layout, so the driver-checkable
-    surface is the claim (same contract as mg_top_tools_hour): every
-    retained bigram satisfies true−err ≤ weight ≤ true and every
-    bigram whose exact hour count exceeds err is retained; the oracle
-    restates the per-hour distinct-bigram count and the booleans."""
-    from ts_raster_spark.operators.mg import mg_sketch_capped
-
-    k = 8
-    t = load_turns(spark, sf_dir)
+def _bigrams(turns):
+    """(ts, ngram) rows: every adjacent pair of lower-cased alphanumeric
+    words in each turn's text, space-joined — an unbounded-cardinality
+    item column."""
     toks = F.filter(
         F.split(F.lower(F.col("text")), "[^a-z0-9]+"), lambda x: x != F.lit("")
     )
@@ -997,33 +942,21 @@ def q_mg_ngrams_hour(spark, sf_dir):
         "transform(sequence(0, size(_toks)-2), i -> concat(_toks[i], ' ', _toks[i+1])) "
         "ELSE array() END"
     )
-    t2 = (
-        t.withColumn("_toks", toks)
-        .select("ts", F.explode(grams).alias("ngram"))
-    )
-    sk = mg_sketch_capped(t2, "ngram", "hour", k=k)
-    errs = sk.groupBy("bucket_start").agg(F.max("err").alias("_err"))
-    real = sk.where(F.col("item").isNotNull()).select(
-        "bucket_start", F.col("item").alias("ngram"), "weight"
-    )
-    exact = t2.groupBy(
-        F.date_trunc("hour", F.col("ts")).alias("bucket_start"), "ngram"
-    ).agg(F.count("*").cast("long").alias("_cnt"))
-    j = exact.join(real, ["bucket_start", "ngram"], "left").join(errs, "bucket_start")
-    in_bounds = F.when(
-        F.col("weight").isNotNull(),
-        (F.col("weight") <= F.col("_cnt"))
-        & (F.col("weight") >= F.col("_cnt") - F.col("_err")),
-    ).otherwise(F.lit(True))
-    covered = F.when(
-        F.col("_cnt") > F.col("_err"), F.col("weight").isNotNull()
-    ).otherwise(F.lit(True))
-    out = j.groupBy("bucket_start").agg(
-        F.count("*").cast("long").alias("n_ngrams"),
-        F.min(in_bounds.cast("int")).alias("bounds_ok"),
-        F.min(covered.cast("int")).alias("cover_ok"),
-    )
-    return finalize(out)
+    return turns.withColumn("_toks", toks).select("ts", F.explode(grams).alias("ngram"))
+
+
+def q_mg_ngrams_hour(spark, sf_dir):
+    """The CAPPED-PARTIALS Misra-Gries path
+    (operators/mg.mg_sketch_capped → mg_partials) on text word-bigrams —
+    the shape the per-partition cap exists for (the pure-Catalyst
+    build's map-side dictionary is one row per distinct (bucket, item)
+    per partition, which for n-grams IS the shuffle).  The capped
+    summary is partition-layout dependent, but its emitted ERROR BOUND
+    is exact for any layout, so the surface is ``_mg_claim``."""
+    from ts_raster_spark.operators.mg import mg_sketch_capped
+
+    t2 = _bigrams(load_turns(spark, sf_dir))
+    return _mg_claim(mg_sketch_capped(t2, "ngram", "hour", k=8), t2, "ngram", "hour", "n_ngrams")
 
 
 def q_sketch_quantile_hour(spark, sf_dir):
@@ -1838,35 +1771,26 @@ def q_interval_join_bursts(spark, sf_dir):
     return finalize(out)
 
 
-def q_cms_ngram_counts(spark, sf_dir):
-    """Count-Min sketch point-frequency estimates (operators/cms.py)
-    over per-hour text word-bigrams — the unbounded-cardinality shape
-    the sketch exists for. Build is one map-side-combinable aggregate
-    capped at d*w cell rows per bucket per partition; probes are every
-    bigram with exact hourly count >= 2, joined back so the one-sided
-    guarantee (est >= exact) is visible in-query. All hashing is the
-    engine-neutral md5 arithmetic (functions/hllsql), so the ESTIMATES
-    replay bit-for-bit in DuckDB — an exact twin, not a claim."""
-    from ts_raster_spark.operators.cms import cms_build, cms_estimate
+def _cms_ngram_probes(spark, sf_dir, tier, min_cnt):
+    """Count-Min point-frequency estimates (operators/cms.py) over
+    per-``tier`` text word-bigrams.  Cells are built per hour (one
+    map-side-combinable aggregate capped at d*w cell rows per bucket
+    per partition) and merged cell-wise up to a coarser ``tier``.
+    Probes are every bigram with exact count >= ``min_cnt``, joined
+    back so the one-sided guarantee (est >= exact) is visible in-query.
+    All hashing is the engine-neutral md5 arithmetic (functions/hllsql),
+    so the ESTIMATES replay bit-for-bit in DuckDB — an exact twin, not
+    a claim."""
+    from ts_raster_spark.operators.cms import cms_build, cms_estimate, cms_merge
 
-    t = load_turns(spark, sf_dir)
-    toks = F.filter(
-        F.split(F.lower(F.col("text")), "[^a-z0-9]+"), lambda x: x != F.lit("")
-    )
-    grams = F.expr(
-        "CASE WHEN size(_toks) >= 2 THEN "
-        "transform(sequence(0, size(_toks)-2), i -> concat(_toks[i], ' ', _toks[i+1])) "
-        "ELSE array() END"
-    )
-    t2 = (
-        t.withColumn("_toks", toks)
-        .select("ts", F.explode(grams).alias("ngram"))
-    )
+    t2 = _bigrams(load_turns(spark, sf_dir))
     cells = cms_build(t2, "ngram", tier="hour")
+    if tier != "hour":
+        cells = cms_merge(cells, tier=tier)
     exact = t2.groupBy(
-        F.date_trunc("hour", F.col("ts")).alias("bucket_start"), "ngram"
+        F.date_trunc(tier, F.col("ts")).alias("bucket_start"), "ngram"
     ).agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-    probes = exact.where(F.col("cnt") >= 2)
+    probes = exact.where(F.col("cnt") >= min_cnt)
     est = cms_estimate(
         cells, probes.select("bucket_start", F.col("ngram").alias("item")),
         item_col="item",
@@ -1877,45 +1801,21 @@ def q_cms_ngram_counts(spark, sf_dir):
         .cast("int").alias("ok_lower"),
     )
     return finalize(out)
+
+
+def q_cms_ngram_counts(spark, sf_dir):
+    """Hour-grain CMS estimates, probes with exact count >= 2."""
+    return _cms_ngram_probes(spark, sf_dir, "hour", 2)
 
 
 def q_cms_ngram_counts_day(spark, sf_dir):
     """Day-grain CMS double path: HOUR cells merged to day via
-    cell-wise sum (operators/cms.py cms_merge), then estimated. The
-    DuckDB twin builds the day cells DIRECTLY from raw — equality
-    holds iff the mergeable-summaries closure holds, so the oracle
+    cell-wise sum (cms_merge), probes with exact count >= 3. The DuckDB
+    twin builds the day cells DIRECTLY from raw — equality holds iff
+    the mergeable-summaries closure holds, so the oracle
     cross-engine-verifies the merge itself (the same pattern as the
     KLL/MG day cascades)."""
-    from ts_raster_spark.operators.cms import cms_build, cms_estimate, cms_merge
-
-    t = load_turns(spark, sf_dir)
-    toks = F.filter(
-        F.split(F.lower(F.col("text")), "[^a-z0-9]+"), lambda x: x != F.lit("")
-    )
-    grams = F.expr(
-        "CASE WHEN size(_toks) >= 2 THEN "
-        "transform(sequence(0, size(_toks)-2), i -> concat(_toks[i], ' ', _toks[i+1])) "
-        "ELSE array() END"
-    )
-    t2 = (
-        t.withColumn("_toks", toks)
-        .select("ts", F.explode(grams).alias("ngram"))
-    )
-    cells = cms_merge(cms_build(t2, "ngram", tier="hour"), tier="day")
-    exact = t2.groupBy(
-        F.date_trunc("day", F.col("ts")).alias("bucket_start"), "ngram"
-    ).agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-    probes = exact.where(F.col("cnt") >= 3)
-    est = cms_estimate(
-        cells, probes.select("bucket_start", F.col("ngram").alias("item")),
-        item_col="item",
-    ).withColumnRenamed("item", "ngram")
-    out = probes.join(est, ["bucket_start", "ngram"]).select(
-        "bucket_start", "ngram", "cnt", "est",
-        F.when(F.col("est") >= F.col("cnt"), 1).otherwise(0)
-        .cast("int").alias("ok_lower"),
-    )
-    return finalize(out)
+    return _cms_ngram_probes(spark, sf_dir, "day", 3)
 
 
 def q_theil_sen_trend(spark, sf_dir):

@@ -103,10 +103,10 @@ class ParquetTierCatalog:
     def with_bucket(self, df: DataFrame) -> DataFrame:
         return df.withColumn("bucket_id", self.bucket_of(F.col("conv_id")))
 
-    def write(self, df: DataFrame, table: str, mode: str = "overwrite", full: bool = False) -> None:
+    def write(self, df: DataFrame, table: str, full: bool = False) -> None:
         """Write a tier table bucketed by conv_id.
 
-        ``mode='overwrite'`` with dynamic partition overwrite replaces
+        Overwrite with dynamic partition overwrite replaces
         only the buckets present in ``df`` — the idempotent-MERGE
         stand-in (a resumed job rewrites its own buckets byte-identically
         instead of double-appending). ``full=True`` switches to static
@@ -123,7 +123,7 @@ class ParquetTierCatalog:
                 self.with_bucket(df)
                 .repartition("bucket_id")
                 .sortWithinPartitions(*sort_cols)
-                .write.mode(mode)
+                .write.mode("overwrite")
                 .partitionBy("bucket_id")
                 .parquet(self.path(table))
             )
