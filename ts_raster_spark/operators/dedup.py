@@ -163,8 +163,12 @@ def connected_components(
     ``all_nodes`` (one ``node`` column) adds isolated nodes as their own
     singleton components. Output: (node, component).
     """
-    und = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).unionByName(
-        edges.select(F.col(dst).alias("u"), F.col(src).alias("v"))
+    # materialized once: every round joins it, and lazy edges (MinHash-LSH
+    # pairs) would otherwise be re-derived in every round
+    und = (
+        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+        .unionByName(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
+        .localCheckpoint()
     )
     nodes = und.select(F.col("u").alias("node")).distinct()
     if all_nodes is not None:

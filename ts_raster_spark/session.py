@@ -3,7 +3,12 @@
 Defaults chosen for the 100 TB design point but safe on local[N]:
 AQE on (runtime coalescing + skew-join splitting), UTC session time zone
 (timestamp parity with the DuckDB oracle and any downstream engine),
-Arrow enabled for the pandas/Arrow UDF kernels.
+Arrow enabled for the pandas/Arrow UDF kernels, and a generated-class
+cache (``spark.sql.codegen.cache.maxEntries``) of 1000 entries instead of
+Spark's 100.  Re-running the same plans (a feature batch after batch,
+a tier job per partition) compiles its classes once only if they all fit:
+the cache is an LRU, and an LRU smaller than a cyclic working set misses
+on every access.
 """
 
 from __future__ import annotations
@@ -61,6 +66,14 @@ def get_spark(
         .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # Static: fixed when the JVM's codegen cache is first built.  One
+        # features operation (hour, whole-conversation and extended
+        # features plus a codec round trip) cycles through about 123
+        # generated classes, so at Spark's 100 entries every re-run of
+        # the same plans recompiles ~90 of them (~1.5 s of Janino); a
+        # tier job cycles through 78.  1000 holds the larger working set
+        # 8 times over (tools/codegen_probe.py measures them).
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     if extra_conf:
         for k, v in extra_conf.items():
