@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -105,3 +106,112 @@ def test_decompress_rejects_unknown_codec(spark):
     assert [r["value"] for r in decompress_blocks(blocks("gorilla")).collect()] == [1.5, 2.5]
     with pytest.raises(Exception, match="unsupported block codec 'chimp'"):
         decompress_blocks(blocks("chimp")).collect()
+
+
+def _encode_in_process(pdf):
+    """The blocks compress_blocks must build, encoded series by series in
+    this process: one block per (conv_id, kind, day), points ordered by
+    (turn_idx, ts)."""
+    pdf = pdf.assign(day=pdf["ts"].dt.floor("D")).sort_values(["turn_idx", "ts"])
+    return {
+        (c, k, d, len(sub),
+         encode_timestamps(sub["ts"].to_numpy(dtype="datetime64[us]").view(np.int64)),
+         encode_values(sub["value"].to_numpy(dtype=np.float64)))
+        for (c, k, d), sub in pdf.groupby(["conv_id", "kind", "day"], sort=True)
+    }
+
+
+def test_sorted_runs_carry_over_batches():
+    """Runs cut from sorted batches of 7 rows: a run ending exactly on a
+    batch boundary, a one-row run, a run spanning three batches, an empty
+    batch, and the last run of the partition each come out whole."""
+    from ts_raster_spark.operators.kernels import _sorted_runs
+
+    lengths = {"a": 7, "b": 1, "c": 17, "d": 3}  # a: rows 0-6, c: rows 8-24
+    pdf = pd.DataFrame({
+        "k": [k for k, n in lengths.items() for _ in range(n)],
+        "i": [i for n in lengths.values() for i in range(n)],
+    })
+    batches = [pdf.iloc[s:s + 7] for s in range(0, len(pdf), 7)]
+    batches.insert(2, pdf.iloc[:0])
+    per_batch = list(_sorted_runs(iter(batches), ["k"]))
+    runs = [r for done in per_batch for r in done]
+    assert [(r["k"].iloc[0], r["i"].tolist()) for r in runs] == [
+        (k, list(range(n))) for k, n in lengths.items()
+    ]
+    assert [len(done) for done in per_batch] == [0, 2, 0, 1, 1]
+    assert list(_sorted_runs(iter([pdf.iloc[:0]]), ["k"])) == []
+
+
+@pytest.fixture
+def arrow_batches_of_seven(spark):
+    """Arrow batches of 7 rows and no partition coalescing, so series
+    cross batch boundaries and most shuffle partitions are empty."""
+    confs = {
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "7",
+        "spark.sql.adaptive.coalescePartitions.enabled": "false",
+    }
+    saved = {k: spark.conf.get(k) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    yield
+    for k, v in saved.items():
+        spark.conf.set(k, v)
+
+
+def test_compress_blocks_across_arrow_batches(spark, arrow_batches_of_seven):
+    """compress_blocks over 7-row Arrow batches is byte-identical to a
+    per-series in-process encode.  Conversation c0 sorts first in its
+    partition, so its series fall on fixed rows: a (7 rows) ends exactly
+    on the first batch boundary, b is one row, c (17 rows, crossing
+    midnight into a second day block) spans three batches, d ends the
+    conversation; c1 and c2 add runs elsewhere, and 3 conversations over
+    8 partitions leave at least 5 partitions empty."""
+    import datetime as dt
+
+    from ts_raster_spark.operators.compress import compress_blocks
+
+    rng = np.random.RandomState(11)
+    t0 = dt.datetime(2024, 1, 1, 23, 50)
+    rows = []
+    for conv, kinds in {"c0": {"a": 7, "b": 1, "c": 17, "d": 3}, "c1": {"a": 9}, "c2": {"x": 1}}.items():
+        for kind, n in kinds.items():
+            for i in range(n):
+                rows.append((conv, i, t0 + dt.timedelta(seconds=67 * i), kind, float(np.round(rng.normal(), 3))))
+    rng.shuffle(rows)
+    long_df = spark.createDataFrame(rows, "conv_id string, turn_idx int, ts timestamp, kind string, value double")
+
+    got = {
+        (r["conv_id"], r["kind"], pd.Timestamp(r["block_start"]), r["n"], bytes(r["ts_block"]), bytes(r["val_block"]))
+        for r in compress_blocks(long_df).collect()
+    }
+    assert got == _encode_in_process(pd.DataFrame(rows, columns=["conv_id", "turn_idx", "ts", "kind", "value"]))
+    assert len(got) == 7  # c splits into two day blocks
+
+
+def test_compress_blocks_plan_adds_no_exchange(spark, turns_small):
+    """The encode reuses the long panel's conv_id partitioning (the
+    latency window's): one MapInPandas over a sort, no new Exchange."""
+    from ts_raster_spark.operators.compress import compress_blocks
+    from ts_raster_spark.operators.longform import to_long_panel
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    long_df = to_long_panel(turns_small)
+    base, blocks = plan(long_df), plan(compress_blocks(long_df))
+    assert blocks.count("Exchange") == base.count("Exchange") >= 1, blocks
+    assert "MapInPandas" in blocks and "FlatMapGroupsInPandas" not in blocks, blocks
+
+
+def test_compress_blocks_rejects_null_ts(spark):
+    """A point without a timestamp belongs to no block: the encode fails
+    the job instead of dropping the point from its series."""
+    import datetime as dt
+
+    from ts_raster_spark.operators.compress import compress_blocks
+
+    rows = [("c", 0, dt.datetime(2024, 1, 1), "k", 1.0), ("c", 1, None, "k", 2.0)]
+    long_df = spark.createDataFrame(rows, "conv_id string, turn_idx int, ts timestamp, kind string, value double")
+    with pytest.raises(Exception, match="null ts in series 'c'/'k'"):
+        compress_blocks(long_df).collect()

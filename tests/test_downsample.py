@@ -69,12 +69,12 @@ def test_ema_plan_shape_no_mega(spark, turns_small):
     """When the eager mega-key probe comes back empty (the common case),
     ema returns the PURE closed-form plan: one ordered window over one
     hash exchange — no join, no broadcast, no empty
-    FlatMapGroupsInPandas stage, upstream scanned once."""
+    MapInPandas stage, upstream scanned once."""
     t = turns_small.withColumn("value", F.length("text").cast("double"))
     plan = ema(t, 0.3)._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange hashpartitioning") == 1, plan
     assert "BroadcastExchange" not in plan, plan
-    assert "FlatMapGroupsInPandas" not in plan, plan
+    assert "MapInPandas" not in plan, plan
 
 
 def test_ema_plan_shape_with_mega(spark, turns_small):
@@ -87,7 +87,7 @@ def test_ema_plan_shape_with_mega(spark, turns_small):
     plan = ema(t, 0.3, max_closed_form_n=2)._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange hashpartitioning") <= 2, plan
     assert "BroadcastExchange" in plan, plan
-    assert "FlatMapGroupsInPandas" in plan, plan
+    assert "MapInPandas" in plan, plan
     assert "Scan ExistingRDD" in plan or "LocalTableScan" in plan, plan
     # the count aggregate ran eagerly at plan-build time; it must NOT
     # appear inside the returned plan

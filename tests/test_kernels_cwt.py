@@ -7,7 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from ts_raster_spark.functions.cwt import number_cwt_peaks
-from ts_raster_spark.operators.kernels import extract_features_kernel
+from ts_raster_spark.operators.kernels import _feature_row, extract_features_kernel
 from ts_raster_spark.operators.longform import to_long_panel
 from ts_raster_spark.operators.rollup import rollup_features
 
@@ -53,3 +53,27 @@ def test_kernel_matches_native_rollup(spark, turns_small):
             ):
                 continue
             assert float(a) == pytest.approx(float(b), rel=1e-9, abs=1e-9), (conv, c)
+
+
+def test_kernel_computes_only_requested_features(spark, turns_small, monkeypatch):
+    """A feature list narrows the kernel's output to those columns, with
+    the values the full vector holds, and no other calculator runs."""
+    from ts_raster_spark.functions import oracle as ORC
+
+    long_df = to_long_panel(turns_small).where(F.col("kind") == "text_len")
+    wanted = ["turn_count", "abs_energy", "number_cwt_peaks_n12", "longest_strike_above_mean"]
+    full = extract_features_kernel(long_df).select("conv_id", "kind", *wanted)
+    assert sorted(full.collect()) == sorted(extract_features_kernel(long_df, features=wanted).collect())
+    assert extract_features_kernel(long_df, features=wanted).columns == ["conv_id", "kind", *wanted]
+
+    called = []
+
+    def recording(name, fn):
+        return lambda x: called.append(name) or fn(x)
+
+    monkeypatch.setattr(ORC, "ORACLES", {k: recording(k, v) for k, v in ORC.ORACLES.items()})
+    got = _feature_row(["conv_id"], ["c"], np.arange(5, dtype=float), wanted)
+    assert set(got) == {"conv_id", *wanted}
+    assert sorted(called) == sorted(f for f in wanted if f in ORC.ORACLES)
+    with pytest.raises(ValueError, match="unknown kernel features"):
+        extract_features_kernel(long_df, features=["mean", "no_such_feature"])

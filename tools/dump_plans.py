@@ -180,9 +180,10 @@ AUDITS = [
     (
         "lttb_downsample",
         Q.q_lttb_downsample,
-        "LTTB kernel: ONE Exchange hashpartitioning(conv_id) into "
-        "FlatMapGroupsInPandas (Arrow batches) — the applyInPandas "
-        "contract for inherently sequential per-series selection.",
+        "LTTB kernel: ONE Exchange hashpartitioning(conv_id), a Sort on "
+        "(conv_id, turn_idx, ts) and MapInPandas (Arrow batches cut into "
+        "per-conversation runs, one Python call per partition) for "
+        "inherently sequential per-series selection.",
     ),
     (
         "decontaminate_bloom",

@@ -7,9 +7,10 @@ same derivation chain single-node: DuckDB builds the long panel
 oracle uses), then pandas/NumPy computes the feature vector per
 conversation with the reference-parity calculators
 (functions/oracle.py) and functions/cwt.number_cwt_peaks. The Spark
-side reaches the same numbers through groupBy().applyInPandas — so a
-hash match proves the distributed plumbing (grouping, in-group
-ordering, Arrow batching, schema) delivers each series intact. The CWT
+side reaches the same numbers through the sorted-run kernel
+(operators/kernels.map_sorted_runs) — so a hash match proves the
+distributed plumbing (partitioning, in-series ordering, cutting Arrow
+batches into series, schema) delivers each series intact. The CWT
 algorithm itself is separately pinned to analytic signals in
 tests/test_kernels_cwt.py.
 

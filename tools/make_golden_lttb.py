@@ -7,8 +7,8 @@ builds the per-conversation (turn_idx, ts, text_len) series with the
 shared TURNS_CTE, NumPy runs operators/downsample.lttb_indices, and the
 selected rows are written one block per scale factor tagged with that
 SF's events row count.  A Spark/golden hash match proves the
-applyInPandas plumbing (grouping, in-group ordering, Arrow batching)
-delivers each series intact; the algorithm itself is pinned by
+sorted-run plumbing (partitioning, in-series ordering, cutting Arrow
+batches into series) delivers each series intact; the algorithm itself is pinned by
 tests/test_downsample.py.
 
 Usage: python tools/make_golden_lttb.py [sf_dir ...] [--out out_parquet]

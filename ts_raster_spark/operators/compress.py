@@ -1,4 +1,4 @@
-"""Compressed rollup blocks: grouped Arrow kernels around Gorilla/DoD.
+"""Compressed rollup blocks: Arrow kernels around Gorilla/DoD.
 
 The at-rest format for raw-resolution series under a retention tier:
 one row per (conv_id, kind, block_start) carrying
@@ -10,12 +10,20 @@ Gorilla XOR coded (compression/gorilla.py); ``codec`` is always
 ``"gorilla"``, and decoding rejects any other tag because blocks are
 read back from tables on disk.
 
-``compress_blocks`` is a ``groupBy(...).applyInPandas`` grouped-map
-Arrow kernel (one Arrow batch per group, vectorized sort + int64 view,
-loop only over in-block elements). ``decompress_blocks`` inverts it.
-Blocks default to day granularity so a mega-conversation still fits a
-task (the salting discussion in SURVEY.md §4 — a group must fit in one
-task's memory, so the block key includes the time bucket).
+``compress_blocks`` runs ``_encode_series`` on every sorted
+``(conv_id, kind)`` run of one ``mapInPandas`` per partition
+(operators/kernels.map_sorted_runs): the long panel arrives
+hash-partitioned by ``conv_id`` from the latency window, each partition
+is sorted by ``(conv_id, kind, turn_idx, ts)``, and its Arrow batches are
+cut into series.  A series therefore costs a slice of a batch, not a
+Python call of its own: the grouped-map shape paid a call per series,
+which took far longer than the Gorilla bit loop it wrapped.  For the
+same reason the per-series body works on NumPy arrays and returns plain
+row tuples (one frame per batch, not a pandas sort, groupby and frame
+per series).  ``decompress_blocks`` inverts it.  Blocks default to day
+granularity so the output rows stay bounded (SURVEY.md §4); a series
+must still fit in one task's memory, and a point without a timestamp
+fails the job rather than being dropped from its series.
 """
 
 from __future__ import annotations
@@ -31,6 +39,7 @@ from ts_raster_spark.compression.gorilla import (
     encode_timestamps,
     encode_values,
 )
+from ts_raster_spark.operators.kernels import map_sorted_runs
 
 CODEC = "gorilla"
 
@@ -42,38 +51,34 @@ BLOCK_SCHEMA = (
 POINT_SCHEMA = "conv_id string, kind string, ts timestamp, value double"
 
 
-def _encode_series(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Encode every time block of one (conv_id, kind) series in a single
-    kernel call — grouping at block granularity would pay the Arrow
-    per-group overhead (~ms) for every tiny block; per-series grouping
-    amortizes it ~30× while a block-keyed output still bounds the rows."""
-    pdf = pdf.sort_values(["turn_idx", "ts"]) if "turn_idx" in pdf.columns else pdf.sort_values("ts")
-    rows = []
-    for b, sub in pdf.groupby("block_start", sort=True):
-        ts_us = sub["ts"].to_numpy(dtype="datetime64[us]").view(np.int64)
-        vals = sub["value"].to_numpy(dtype=np.float64)
-        rows.append(
-            (
-                sub["conv_id"].iloc[0],
-                sub["kind"].iloc[0],
-                b,
-                len(sub),
-                CODEC,
-                encode_timestamps(ts_us),
-                encode_values(vals),
-            )
-        )
-    return pd.DataFrame(rows, columns=["conv_id", "kind", "block_start", "n", "codec", "ts_block", "val_block"])
+def _encode_series(pdf: pd.DataFrame) -> list[tuple]:
+    """The blocks of one (conv_id, kind) series as ``BLOCK_SCHEMA`` rows.
+    Rows arrive ordered by (turn_idx, ts); a stable sort on the block
+    start keeps that order inside each block."""
+    conv_id, kind = pdf["conv_id"].iat[0], pdf["kind"].iat[0]
+    day = pdf["block_start"].to_numpy(dtype="datetime64[us]")
+    if np.isnat(day).any():
+        raise ValueError(f"compress_blocks: null ts in series {conv_id!r}/{kind!r}")
+    pos = np.argsort(day, kind="stable")
+    day = day[pos]
+    ts_us = pdf["ts"].to_numpy(dtype="datetime64[us]").view(np.int64)[pos]
+    vals = pdf["value"].to_numpy(dtype=np.float64)[pos]
+    ends = np.append(np.flatnonzero(day[1:] != day[:-1]) + 1, len(day))
+    return [
+        (conv_id, kind, day[a], b - a, CODEC, encode_timestamps(ts_us[a:b]), encode_values(vals[a:b]))
+        for a, b in zip(np.append(0, ends[:-1]), ends)
+    ]
 
 
 def compress_blocks(long_df: DataFrame, block: str = "day") -> DataFrame:
     """long panel (conv_id, turn_idx, ts, kind, value) → Gorilla blocks.
 
-    One applyInPandas group per (conv_id, kind); a mega-conversation's
-    full channel must fit a task (~16 MB per 1M turns) — beyond that,
-    add a coarse time salt to the grouping keys (SURVEY.md §4)."""
+    One sorted run per (conv_id, kind); a mega-conversation's full
+    channel must fit a task (~16 MB per 1M turns) — beyond that, add a
+    coarse time salt to the keys (SURVEY.md §4)."""
     keyed = long_df.withColumn("block_start", F.date_trunc(block, F.col("ts")))
-    return keyed.groupBy("conv_id", "kind").applyInPandas(_encode_series, schema=BLOCK_SCHEMA)
+    order = [c for c in ("turn_idx", "ts") if c in long_df.columns]
+    return map_sorted_runs(keyed, ("conv_id", "kind"), order, _encode_series, BLOCK_SCHEMA)
 
 
 def _decode_batches(batches):

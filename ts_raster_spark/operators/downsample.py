@@ -7,11 +7,13 @@ shape — endpoints kept, each interior bucket contributes the point
 maximizing the triangle area with the previously chosen point and the
 next bucket's centroid.
 
-Spark shape: ``groupBy(conv_id).applyInPandas`` — the algorithm is
-inherently sequential per series (each selection depends on the
-previous), which is exactly the applyInPandas contract: Arrow-batched
-per-group NumPy, zero per-row Python.  At 100 TB this is one shuffle on
-conv_id and a linear scan per group; group size = one conversation.
+Spark shape: one sorted-run kernel (operators/kernels.map_sorted_runs)
+— the algorithm is inherently sequential per series (each selection
+depends on the previous), so each conversation's run of a partition
+sorted by (conv_id, turn_idx, ts) goes through per-series NumPy, zero
+per-row Python and one Python call per partition.  At 100 TB this is
+one shuffle on conv_id and a linear scan per series; a series is one
+conversation.
 
 Determinism across hosts: triangle areas are quantized to 10
 significant digits before argmax (same contract as functions/cwt) so
@@ -29,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from ts_raster_spark.operators.kernels import map_sorted_runs
 from ts_raster_spark.operators.longform import epoch_seconds
 
 
@@ -165,4 +168,4 @@ def lttb(
     prepped = df.withColumn("_eps", epoch_seconds(F.col("ts"))).select(
         *klist, "turn_idx", "ts", "_eps", F.col(y_col).cast("double").alias(y_col)
     )
-    return prepped.groupBy(*klist).applyInPandas(_one, schema=schema)
+    return map_sorted_runs(prepped, klist, ("turn_idx", "ts"), _one, schema)

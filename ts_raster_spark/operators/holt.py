@@ -16,9 +16,10 @@ state:
 Unlike ema, the two coupled states have no overflow-safe closed prefix
 form (the transition matrix has complex eigenvalues for most
 alpha/beta), so this is one of the engine's few genuinely iterative
-kernels: an O(n) Arrow-batched ``applyInPandas`` at SERIES granularity
-(one bounded conversation per group; millions of entities parallelize
-to the shuffle width, state never leaves a group).
+kernels: an O(n) Arrow kernel at SERIES granularity over sorted key
+runs (operators/kernels.map_sorted_runs: one conversation per run, one
+Python call per partition; millions of entities parallelize to the
+shuffle width, state never leaves a run).
 
 Cross-engine exactness: the recursion IS replayable in SQL via a
 recursive CTE (DuckDB twin in __spark_entry__) — both engines execute
@@ -36,6 +37,8 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StructField, StructType
+
+from ts_raster_spark.operators.kernels import map_sorted_runs
 
 
 def holt_smooth(
@@ -82,7 +85,7 @@ def holt_smooth(
         pdf["level"], pdf["trend"], pdf["fitted"] = lvl, trd, fit
         return pdf
 
-    return df.groupBy(*klist).applyInPandas(_holt_kernel, schema=out_schema)
+    return map_sorted_runs(df, klist, (order_col,), _holt_kernel, out_schema)
 
 
 def holt_oracle_sql(turns_cte: str, alpha: float = 0.3, beta: float = 0.1) -> str:

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ts_raster_spark.operators.kernels import map_sorted_runs
 from ts_raster_spark.operators.longform import epoch_seconds
 
 ORDER = ("turn_idx", "ts")
@@ -182,9 +183,10 @@ def ema(
       itself).
 
     - longer groups (mega-conversations): an O(n) streaming pandas-ewm
-      ``applyInPandas`` kernel — Arrow-batched, one group per call,
-      exact ``ewm(alpha, adjust=True).mean()`` semantics, finite for
-      any length.
+      kernel over sorted key runs (operators/kernels.map_sorted_runs) —
+      Arrow-batched, one Python call per partition, exact
+      ``ewm(alpha, adjust=True).mean()`` semantics, finite for any
+      length.
 
     Routing is a broadcast semi/anti join on the mega-group KEYS, not a
     count window: the per-key counts aggregate map-side-combines to one
@@ -196,7 +198,7 @@ def ema(
     it broadcasts anyway): when it is empty, the function returns the
     pure closed-form plan with NO join and NO kernel stage, so the
     common case plans/scans the upstream once instead of three times
-    and never schedules an empty FlatMapGroupsInPandas; when non-empty,
+    and never schedules an empty MapInPandas; when non-empty,
     the collected keys become a local relation so neither branch's plan
     re-embeds the counting subplan.
     DuckDB twin runs the identical closed-form arithmetic in the
@@ -249,5 +251,5 @@ def ema(
         return pdf
 
     long_rows = df.join(F.broadcast(mega_keys), klist, "left_semi")
-    long_out = long_rows.groupBy(*klist).applyInPandas(_ewm_kernel, schema=out_schema)
+    long_out = map_sorted_runs(long_rows, klist, order_cols, _ewm_kernel, out_schema)
     return short.unionByName(long_out)

@@ -447,31 +447,34 @@ def q_stream_dedup_exact(spark, sf_dir):
     copies co-located per key by a range repartition so every duplicate
     pair shares a micro-batch), drained through
     dropDuplicatesWithinWatermark, and the surviving rows must equal the
-    original table exactly — the oracle is the base turns projection."""
-    import hashlib
+    original table exactly — the oracle is the base turns projection.
+    Each call writes its doubled input to a directory of its own
+    (removed once the stream is drained into memory) and names its
+    memory table after it, so concurrent runs from one checkout cannot
+    collide."""
     import os as _os
+    import shutil
+    import tempfile
 
-    from ts_raster_spark.streaming.rollup_stream import (
-        run_to_memory,
-        stream_dedup_exact,
-        stream_turns,
-    )
+    from ts_raster_spark.streaming import rollup_stream as RS
 
     turns = load_turns(spark, sf_dir)
-    tag = hashlib.md5(f"dedup:{sf_dir}".encode()).hexdigest()[:8]
     root = _os.path.join(_os.path.dirname(_os.path.dirname(_os.path.abspath(__file__))), ".bench_tmp")
     _os.makedirs(root, exist_ok=True)
-    path = _os.path.join(root, f"tsrs_sdedup_in_{tag}")
+    prefix = "tsrs_sdedup_in_"
+    path = tempfile.mkdtemp(prefix=prefix, dir=root)
+    name = "tsrs_sdedup_mem_" + _os.path.basename(path)[len(prefix):]
     doubled = turns.select("conv_id", "turn_idx", "role", "text", "tool", "ts")
     doubled = doubled.unionByName(doubled)
-    (
-        doubled.repartitionByRange(8, "conv_id", "turn_idx")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-    deduped = stream_dedup_exact(stream_turns(spark, path))
-    name = f"tsrs_sdedup_mem_{tag}"
-    run_to_memory(deduped, name, "append")
+    try:
+        (
+            doubled.repartitionByRange(8, "conv_id", "turn_idx")
+            .write.mode("overwrite")
+            .parquet(path)
+        )
+        RS.run_to_memory(RS.stream_dedup_exact(RS.stream_turns(spark, path)), name, "append")
+    finally:
+        shutil.rmtree(path, ignore_errors=True)
     return finalize(spark.table(name))
 
 
@@ -1089,16 +1092,16 @@ def q_feature_names_dim(spark, sf_dir):
 
 
 def q_kernel_features_cwt(spark, sf_dir):
-    """Arrow grouped-map kernel path incl. number_cwt_peaks (rows-only
-    driver check: CWT has no SQL analog)."""
+    """Arrow sorted-run kernel path incl. number_cwt_peaks (golden-table
+    check: CWT has no SQL analog); the kernel computes only the seven
+    features kept."""
     from ts_raster_spark.operators.kernels import extract_features_kernel
 
     long_df = load_long(spark, sf_dir).where(F.col("kind") == "text_len")
-    out = extract_features_kernel(long_df, tier=None)
-    keep = ["conv_id", "kind", "turn_count", "mean", "abs_energy",
-            "number_cwt_peaks_n6", "number_cwt_peaks_n12",
-            "longest_strike_above_mean", "longest_strike_below_mean"]
-    return finalize(out.select(*keep))
+    features = ["turn_count", "mean", "abs_energy",
+                "number_cwt_peaks_n6", "number_cwt_peaks_n12",
+                "longest_strike_above_mean", "longest_strike_below_mean"]
+    return finalize(extract_features_kernel(long_df, tier=None, features=features))
 
 
 def q_compress_roundtrip(spark, sf_dir):
