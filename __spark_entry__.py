@@ -56,34 +56,12 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Dict ORDER is load-bearing: the driver's correctness artifact
-    records the first 50 entries only, so the first 50 must carry every
-    distinct operator surface. Rotation policy (round 3): entries with
-    TWO green driver rows (r1+r2) whose surface is attested by an
-    in-window sibling move to the tail, freeing slots so ops added this
-    round get their first driver attestation. The local gate
-    (tools/check_correctness.py) still runs the full dict at three SFs."""
+    """Every declared query, by name. The order matters: the driver's
+    correctness artifact records only the first 50 entries, so those
+    must span every operator surface; an entry may sit past 50 only if
+    an in-window sibling runs the same surface. The local gate
+    (tools/check_correctness.py) runs the whole dict."""
     return {
-        # ---- driver window (first 50) ------------------------------------
-        # Rotation policy (round 5): the 14 tail queries whose last
-        # driver rows were r1/r2 (stale vs the r3/r4 shared-code edits
-        # under them) cycle back through the window, together with
-        # ann_ivf (the only entry never driver-green — its recall-claim
-        # upgrade postdates its r1/r2 no_oracle rows) and the two new
-        # day-grain double-cascade sketch queries. Every r4-first-
-        # attested entry keeps its slot for a second green row; entries
-        # whose code changed this round stay (compress_roundtrip 4-dp
-        # contract, sketch_kll_hour total_weight rename, ema_turns
-        # routing, mg_top_tools_hour shared merge tail). 16 veterans
-        # with >=2 green rows and an in-window family sibling move to
-        # the tail (mapping in the tail comment). The local gate
-        # (tools/check_correctness.py) still runs the full dict at
-        # three SFs. Late-round swap: six round-5 additions (M4,
-        # Theil-Sen, CMS, interval join, funnel, JL projection) take
-        # the slots of six r4-green veterans so every new operator
-        # family gets a driver row this round (mapping at the demoted
-        # block in the tail).
-        # -- veterans kept (flagship / no in-window sibling) --
         "turns_derivation": Q.q_turns_derivation,
         "conv_features_ext": Q.q_conv_features_ext,
         "kernel_features_cwt": Q.q_kernel_features_cwt,
@@ -95,13 +73,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "pack_documents": Q.q_pack_documents,
         "curate_corpus": Q.q_curate_corpus,
         "late_data_merge_hour": Q.q_late_data_merge_hour,
-        # round-5 addition: sketch tier x late-MERGE x retention TTL
-        # composition (verdict item 8) — slot freed by demoting
-        # stream_rollup_minute (multi-green; three stream siblings stay
-        # in-window: stream_dedup_exact, stream_sliding_counts,
-        # stream_session_windows)
         "sketch_merge_retention": Q.q_sketch_merge_retention,
-        # -- round-4 first attestations: second green row --
         "sketch_kll_hour": Q.q_sketch_kll_hour,
         "mg_top_tools_hour": Q.q_mg_top_tools_hour,
         "dedup_keep_canonical": Q.q_dedup_keep_canonical,
@@ -115,9 +87,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "lttb_downsample": Q.q_lttb_downsample,
         "asof_tolerance": Q.q_asof_tolerance,
         "sliding_counts_hll": Q.q_sliding_counts_hll,
-        # -- round-5 late additions: first driver attestation (slots
-        # freed by demoting six r4-green veterans with in-window
-        # family siblings — mapping in the tail comment) --
         "m4_downsample": Q.q_m4_downsample,
         "theil_sen_trend": Q.q_theil_sen_trend,
         "cms_ngram_counts": Q.q_cms_ngram_counts,
@@ -127,7 +96,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "stream_sliding_counts": Q.q_stream_sliding_counts,
         "stream_session_windows": Q.q_stream_session_windows,
         "anomaly_turns": Q.q_anomaly_turns,
-        # -- round-5 re-attestations: last driver rows were r1/r2 --
         "ann_ivf": Q.q_ann_ivf,
         "moving_stats": Q.q_moving_stats,
         "sample_turns": Q.q_sample_turns,
@@ -142,27 +110,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "autocorr_lags": Q.q_autocorr_lags,
         "feature_names_dim": Q.q_feature_names_dim,
         "feature_relevance": Q.q_feature_relevance,
-        # -- round-5 additions: day-grain double cascades --
         "sketch_kll_day": Q.q_sketch_kll_day,
         "mg_top_tools_day": Q.q_mg_top_tools_day,
-        # ---- end of driver window (50) — attested-elsewhere tail ----
-        # mg_top_tools_day closes the window. Every tail entry has >=2
-        # green driver rows AND an in-window family sibling attesting
-        # the same surface: rollup_hour_full + conv_features (same
-        # 39-agg path -> rollup_minute_core, rollup_day_full,
-        # conv_features_ext), asof_join (-> asof_tolerance),
-        # stratified_sample (-> sample_turns), moving_quantiles (->
-        # moving_stats, moving_stats_time), feature_relevance_fdr (->
-        # feature_relevance), mask_rollup_hour (-> unmask_conv_counts),
-        # cascade_hour_from_minute (-> cascade_day_from_minute),
-        # gapfill_locf_hour (-> gapfill_sentinel_hour), decontaminate +
-        # dedup_minhash_lsh (-> dedup_keep_canonical, curate_corpus),
-        # chunk_documents (-> pack_documents), ann_signlsh (-> ann_ivf,
-        # dedup_embedding_cosine), tfidf_top_terms (-> repetition_stats,
-        # duplicate_lines), stream_stateful_counts (->
-        # stream_dedup_exact and the three other stream queries),
-        # sketch_quantile_hour (-> sketch_kll_hour/day), plus the
-        # r3/r4-demoted set documented in earlier rounds.
+        # ---- end of the driver window (first 50) ----
         "rollup_hour_full": Q.q_rollup_hour_full,
         "conv_features": Q.q_conv_features,
         "asof_join": Q.q_asof_join,
@@ -202,59 +152,18 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "export_wide_features": Q.q_export_wide_features,
         "session_windows": Q.q_session_windows,
         "stream_rollup_minute": Q.q_stream_rollup_minute,
-        # round-5 tail addition: capped-partials MG on high-cardinality
-        # bigrams — local-gate attested (claim oracle), awaiting window
-        # space; family sibling mg_top_tools_hour/day in-window
         "mg_ngrams_hour": Q.q_mg_ngrams_hour,
-        # round-5 tail addition: Bloom-pruned decontamination — result
-        # is row-identical to the exact path (no false negatives +
-        # exact confirm join), so the oracle is the exact SQL twin;
-        # in-window family sibling: curate_corpus (same decontaminate
-        # surface)
         "decontaminate_bloom": Q.q_decontaminate_bloom,
-        # round-5 tail addition: one-pass multi-grain marginals
-        # (GROUPING SETS / Expand) — in-window siblings cover each
-        # single grain (turn_count_hour, top_tools_hour)
         "rollup_grouping_sets": Q.q_rollup_grouping_sets,
-        # round-5 tail addition: KMV set-algebra sketch (exact twin via
-        # engine-neutral kmvsql expressions); in-window distinct-count
-        # siblings hll_users_hour / cohort_retention
         "kmv_retention_hour": Q.q_kmv_retention_hour,
-        # round-5 tail additions: monitoring layer over tier series —
-        # CUSUM drift (prefix-identity window SQL), hour-of-day
-        # climatology residuals, all-pairs tool correlation; in-window
-        # family siblings anomaly_turns / new_convs_hour /
-        # top_tools_hour
         "cusum_changepoints": Q.q_cusum_changepoints,
         "seasonal_anomaly_hour": Q.q_seasonal_anomaly_hour,
         "tool_corr_hour": Q.q_tool_corr_hour,
-        # round-5 tail additions: Mann-Kendall robust trend (exact
-        # integer S/Var; sibling conv_features' agg_linear_trend) and
-        # sketch-tier PSI distribution drift (sibling
-        # sketch_quantile_hour — same histogram bins)
         "mann_kendall_trend": Q.q_mann_kendall_trend,
         "psi_drift_day": Q.q_psi_drift_day,
-        # round-5 tail additions: lead-lag cross-correlation (sibling
-        # tool_corr_hour) and classical additive decomposition
-        # (siblings seasonal_anomaly_hour / moving_stats)
         "tool_leadlag_hour": Q.q_tool_leadlag_hour,
         "decompose_hourly": Q.q_decompose_hourly,
-        # round-5 tail addition: Holt forecasting kernel, EXACT twin
-        # via DuckDB recursive CTE (sibling ema_turns — same
-        # smoothing-family surface)
         "holt_smoothing": Q.q_holt_smoothing,
-        # -- demoted to the tail for the round-5 late additions: each
-        # is r4-driver-green with an in-window family sibling --
-        # cohort_retention / new_convs_hour -> hll_users_hour (distinct
-        # conv counting); ohlc_hour -> counter_rate_hour /
-        # state_durations / heartbeat_uptime (timeseries algebra);
-        # rollup_5min -> rollup_minute_core / moving_stats_time
-        # (bucketed rollups); top_tools_hour -> mg_top_tools_hour/day;
-        # sliding_counts -> sliding_counts_hll / stream_sliding_counts
-        # round-5 tail addition: CMS day cascade — Spark merges hour
-        # cells upward while the twin builds day cells from raw, so
-        # the value-hash equality proves the merge closure
-        # cross-engine (in-window sibling cms_ngram_counts)
         "cms_ngram_counts_day": Q.q_cms_ngram_counts_day,
         "cohort_retention": Q.q_cohort_retention,
         "new_convs_hour": Q.q_new_convs_hour,

@@ -13,7 +13,6 @@ from pyspark.sql import functions as F
 from ts_raster_spark.operators.bloom import (
     bloom_build,
     bloom_might_contain,
-    bloom_semi_join,
     decontaminate_ngrams_bloom,
 )
 
@@ -63,19 +62,6 @@ def test_determinism(spark, keys):
     a = bloom_build(keys, "k").collect()[0]["bloom_map"]
     b = bloom_build(keys.repartition(7), "k").collect()[0]["bloom_map"]
     assert a == b
-
-
-def test_semi_join_exact_equality(spark, keys):
-    large = spark.range(30_000).select(
-        F.when(F.col("id") % 3 == 0, F.concat(F.lit("key-"), F.col("id")))
-        .otherwise(F.concat(F.lit("miss-"), F.col("id")))
-        .alias("k")
-    )
-    got = sorted(r.k for r in bloom_semi_join(large, keys, "k").collect())
-    want = sorted(
-        r.k for r in large.join(keys.distinct(), "k", "left_semi").collect()
-    )
-    assert got == want and len(want) > 0
 
 
 def test_decontaminate_bloom_equals_exact(spark, docs):

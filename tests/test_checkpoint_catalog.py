@@ -115,30 +115,6 @@ def test_layout_change_does_not_double_count(spark, turns_small, tmp_path):
     assert set(load_manifest(out, n_slices=8).keys()) == set(range(8))
 
 
-def test_slice_col_prunes_partitions(spark, turns_small, tmp_path):
-    """With slice_col pointing at a materialized partition column, each
-    slice's scan carries a partition filter (file pruning at planning
-    time) and the checkpointed result equals the unsliced transform."""
-    cat = ParquetTierCatalog(str(tmp_path / "src"), n_buckets=4)
-    cat.write(turns_small, "turns")
-    src = spark.read.parquet(cat.path("turns"))  # keeps bucket_id
-
-    part = src.where(F.col("bucket_id").cast("int") == 2)
-    plan = part._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "bucket_id" in plan
-
-    out = str(tmp_path / "ckpt_pruned")
-    summary = run_checkpointed(
-        spark, src, _transform, out, n_slices=4, slice_col="bucket_id"
-    )
-    assert summary["completed"] == 4
-    got = read_result(spark, out).orderBy("conv_id", "kind", "bucket_start").toPandas()
-    ref = (
-        _transform(turns_small).orderBy("conv_id", "kind", "bucket_start").toPandas()
-    )
-    assert got.equals(ref)
-
-
 def test_read_result_ignores_stale_slices(spark, turns_small, tmp_path):
     """Resuming with a smaller n_slices must not union stale slice dirs
     from the previous layout (read_result reads manifest paths only)."""
@@ -155,24 +131,13 @@ def test_read_result_ignores_stale_slices(spark, turns_small, tmp_path):
 
 
 def test_slice_domain_mismatch_raises(spark, turns_small, tmp_path):
-    """A slice_col whose value domain exceeds range(n_slices) (layout
-    narrower than the catalog's buckets, or NULL slice values) must
-    refuse up front — silently skipping those rows would let read_result
-    return a partial dataset with no error."""
+    """n_slices < 1 leaves no slice to own any conversation: refuse up
+    front instead of returning an empty or partial result."""
     out = str(tmp_path / "ckpt_domain")
-    src = turns_small.withColumn(
-        "bucket_id", F.pmod(F.xxhash64("conv_id"), F.lit(8)).cast("int")
-    )
-    with pytest.raises(ValueError, match="outside the n_slices=4 layout"):
-        run_checkpointed(spark, src, _transform, out, n_slices=4, slice_col="bucket_id")
-
-    # NULL slice values refuse too
-    src_null = turns_small.withColumn(
-        "bucket_id",
-        F.when(F.col("turn_idx") == 0, F.lit(None).cast("int")).otherwise(F.lit(0)),
-    )
-    with pytest.raises(ValueError, match="outside the n_slices=2 layout"):
-        run_checkpointed(spark, src_null, _transform, out, n_slices=2, slice_col="bucket_id")
+    for n in (0, -1):
+        with pytest.raises(ValueError, match="n_slices must be >= 1"):
+            run_checkpointed(spark, turns_small, _transform, out, n_slices=n)
+    assert not os.path.exists(out)
 
 
 def _jobs_started(spark, fn):

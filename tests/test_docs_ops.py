@@ -80,88 +80,6 @@ def test_lang_id_mostly_right_on_latin(spark, docs):
     assert acc > 0.7, acc
 
 
-def test_multimodal_pipeline(spark):
-    from ts_raster_spark.operators.multimodal import (
-        extract_media_features,
-        frame_sample,
-        gen_media,
-    )
-
-    media = gen_media(spark, n=30)
-    feats = extract_media_features(media).toPandas()
-    assert len(feats) == 30
-    assert (feats["n_bytes"] > 0).all()
-    assert feats["sha256"].str.len().eq(64).all()
-    assert feats["mean_intensity"].between(0, 255).all()
-    # deterministic: second run identical
-    feats2 = extract_media_features(media).toPandas()
-    assert feats.sort_values("media_id").reset_index(drop=True).equals(
-        feats2.sort_values("media_id").reset_index(drop=True)
-    )
-
-    frames = frame_sample(media, every_s=5.0).toPandas()
-    assert (frames["frame_ts_s"] % 5.0 == 0).all()
-
-    with pytest.raises(Exception, match="NotImplementedError|codecs"):
-        extract_media_features(media, strict_decode=True).collect()
-
-
-def test_bmp_wav_codecs_roundtrip():
-    """The image/audio decode paths are REAL dependency-free codecs:
-    BMP (pure NumPy) and WAV (stdlib) roundtrip bit-exactly."""
-    import numpy as np
-
-    from ts_raster_spark.operators.multimodal import (
-        decode_bmp,
-        decode_wav,
-        encode_bmp,
-        encode_wav,
-    )
-
-    rng = np.random.RandomState(7)
-    px = rng.randint(0, 256, (33, 50)).astype(np.uint8)  # odd width: row padding
-    back = decode_bmp(encode_bmp(px))
-    assert back.shape == px.shape
-    assert np.array_equal(back, px.astype(np.float64))
-
-    samples = (rng.normal(0, 8000, 12345)).astype(np.int16)
-    got, rate = decode_wav(encode_wav(samples, rate=16000))
-    assert rate == 16000
-    assert np.array_equal(got, samples)
-
-
-def test_media_features_match_source_pixels(spark):
-    """mean_intensity for image rows equals the source array's
-    thumb-sampled mean — proves the Spark kernel decodes the actual
-    payload, not a fake."""
-    import numpy as np
-
-    from ts_raster_spark.operators.multimodal import (
-        decode_bmp,
-        extract_media_features,
-        gen_media,
-    )
-
-    media = gen_media(spark, n=12)
-    feats = (
-        extract_media_features(media)
-        .where("kind = 'image'")
-        .toPandas()
-        .set_index("media_id")
-    )
-    payloads = {
-        r["media_id"]: bytes(r["payload"])
-        for r in media.where("kind = 'image'").collect()
-    }
-    assert len(feats) > 0
-    for mid, payload in payloads.items():
-        px = decode_bmp(payload)
-        yi = np.linspace(0, px.shape[0] - 1, 8).astype(int)
-        xi = np.linspace(0, px.shape[1] - 1, 8).astype(int)
-        want = round(float(px[np.ix_(yi, xi)].mean()), 4)
-        assert feats.loc[mid, "mean_intensity"] == want
-
-
 def test_connected_components_chain_and_singletons(spark):
     """Min-label propagation converges on a chain (diameter > 1 forces
     multiple rounds) and carries isolated nodes as singletons."""
@@ -283,24 +201,6 @@ def test_components_star_matches_min_label_random(spark):
     }
     assert got_star == want
     assert got_min == want
-
-
-def test_video_decode_env_gate(monkeypatch):
-    """Video decode is env-gated: with no ffmpeg the strict path raises
-    the documented NotImplementedError; $TSRS_FFMPEG overrides the PATH
-    probe so a production image needs no code change."""
-    from ts_raster_spark.operators import multimodal as MM
-
-    monkeypatch.setenv("TSRS_FFMPEG", "/opt/custom/ffmpeg")
-    assert MM._ffmpeg_path() == "/opt/custom/ffmpeg"
-    monkeypatch.delenv("TSRS_FFMPEG")
-
-    if MM._ffmpeg_path() is None:
-        with pytest.raises(NotImplementedError, match="ffmpeg"):
-            MM._decode(b"\x00" * 64, "video/mp4", 8, 8, strict=True)
-    # non-strict always yields the deterministic fake frame
-    px = MM._decode(b"\x00" * 64, "video/mp4", 8, 8, strict=False)
-    assert px.shape == (8, 8)
 
 
 def test_repetition_stats_crafted(spark):

@@ -10,15 +10,25 @@ import pytest
 from pyspark.sql import functions as F
 
 from ts_raster_spark.operators.kll import (
-    _build_levels,
     _compact,
-    _merge_levels,
     kll_merge,
     kll_quantiles,
     kll_sketch,
 )
 
 K = 64
+
+
+def _build_levels(values: np.ndarray, k: int) -> list[np.ndarray]:
+    return _compact([np.asarray(values, dtype=np.float64)], k)
+
+
+def _merge_levels(a: list[np.ndarray], b: list[np.ndarray], k: int) -> list[np.ndarray]:
+    out = []
+    for l in range(max(len(a), len(b))):
+        xs = [lv[l] for lv in (a, b) if l < len(lv)]
+        out.append(np.concatenate(xs) if xs else np.empty(0, dtype=np.float64))
+    return _compact(out, k)
 
 
 def _items(levels):

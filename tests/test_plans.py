@@ -95,23 +95,6 @@ def test_whole_stage_codegen_covers_channels(spark, turns_small):
     assert "*(2) Generate stack" in plan or "* Generate" in plan.replace("*(1)", "*").replace("*(2)", "*"), plan[:1500]
 
 
-def test_bucketed_table_join_needs_no_exchange(spark, turns_small, tmp_path):
-    """Two bucketBy(conv_id) tables equi-joined on conv_id: the planner
-    must use the bucket spec — zero hash exchanges in the join plan."""
-    from ts_raster_spark.sources.catalog import ParquetTierCatalog
-
-    cat = ParquetTierCatalog(str(tmp_path / "bt"), n_buckets=4)
-    a = turns_small.groupBy("conv_id").agg(F.count("*").alias("n"))
-    b = turns_small.groupBy("conv_id").agg(F.max("turn_idx").alias("mx"))
-    cat.write_bucketed_table(a, "ta")
-    cat.write_bucketed_table(b, "tb")
-    j = cat.read_table(spark, "ta").join(cat.read_table(spark, "tb"), "conv_id")
-    j.collect()
-    plan = _plan(j)
-    assert plan.count("Exchange hashpartitioning") == 0, plan[:1500]
-    assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan or "BroadcastHashJoin" in plan
-
-
 def test_bucket_pruning_in_catalog(spark, turns_small, tmp_path, assert_one_bucket_scanned):
     from ts_raster_spark.sources.catalog import ParquetTierCatalog
 

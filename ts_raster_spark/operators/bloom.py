@@ -107,26 +107,6 @@ def bloom_might_contain(
     )
 
 
-def bloom_semi_join(
-    large: DataFrame,
-    small: DataFrame,
-    on: str,
-    m_bits: int = 1 << 20,
-    k_hashes: int = 5,
-) -> DataFrame:
-    """EXACT left-semi join of ``large`` with ``small`` on ``on``,
-    Bloom-pruned: only rows passing the broadcast bitmap reach the
-    exact confirm join, so the confirm's shuffle (or broadcast probe)
-    carries candidates, not the corpus. Result rows == plain
-    ``large.join(small, on, "left_semi")`` by the no-false-negative
-    property."""
-    bloom = bloom_build(small.select(on).distinct(), on, m_bits, k_hashes)
-    candidates = bloom_might_contain(
-        large, on, bloom, m_bits, k_hashes
-    ).where(F.col("bloom_might_contain")).drop("bloom_might_contain")
-    return candidates.join(small.select(on).distinct(), on, "left_semi")
-
-
 def decontaminate_ngrams_bloom(
     train: DataFrame,
     benchmark: DataFrame,

@@ -85,33 +85,3 @@ def cascade_up(finer: DataFrame, to_tier: str) -> DataFrame:
     return out.withColumn("mean", mean).withColumn(
         "variance", F.col("sum_squares") / F.col("turn_count") - mean * mean
     )
-
-
-def derive_algebraic_features(tier: DataFrame) -> DataFrame:
-    """Materialize every ALGEBRAIC_FROM_SUFFICIENT_STATS feature from a
-    sufficient-stats tier table (rollup_simple / cascade_up schema) —
-    the proof-by-construction that a coarser tier needs no raw rescan
-    for these columns. Column names match the full feature rollup."""
-    n = F.col("turn_count").cast("double")
-    s = F.col("sum_values")
-    s2 = F.col("sum_squares")
-    mean = s / n
-    var = s2 / n - mean * mean
-    std = F.sqrt(F.greatest(var, F.lit(0.0)))
-    keys = [c for c in ("conv_id", "kind", "bucket_start") if c in tier.columns]
-    return tier.select(
-        *keys,
-        F.col("turn_count").cast("long").alias("turn_count"),
-        mean.alias("mean"),
-        F.col("maximum").alias("maximum"),
-        F.col("minimum").alias("minimum"),
-        s.alias("sum_values"),
-        var.alias("variance"),
-        std.alias("standard_deviation"),
-        s2.alias("abs_energy"),
-        F.sqrt(s2 / n).alias("root_mean_square"),
-        F.when(mean != 0, std / mean).alias("variation_coefficient"),
-        (std > 0.25 * (F.col("maximum") - F.col("minimum"))).cast("long").alias(
-            "large_standard_deviation_r25"
-        ),
-    )

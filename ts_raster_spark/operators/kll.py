@@ -71,18 +71,6 @@ def _compact(levels: list[np.ndarray], k: int) -> list[np.ndarray]:
     return levels
 
 
-def _build_levels(values: np.ndarray, k: int) -> list[np.ndarray]:
-    return _compact([np.asarray(values, dtype=np.float64)], k)
-
-
-def _merge_levels(a: list[np.ndarray], b: list[np.ndarray], k: int) -> list[np.ndarray]:
-    out = []
-    for l in range(max(len(a), len(b))):
-        xs = [lv[l] for lv in (a, b) if l < len(lv)]
-        out.append(np.concatenate(xs) if xs else np.empty(0, dtype=np.float64))
-    return _compact(out, k)
-
-
 def _recompact(items: DataFrame, keys: list[str], k: int) -> DataFrame:
     """Compact (keys…, level, value) items into one sketch per group.
 

@@ -23,7 +23,12 @@ from pyspark.sql import functions as F
 from ts_raster_spark.operators.rollup import rollup_simple_wide
 from ts_raster_spark.sources.catalog import ParquetTierCatalog
 
-KEYS = ["conv_id", "kind", "bucket_start"]
+
+def upsert_convs(tier: DataFrame, recomputed: DataFrame, affected: DataFrame) -> DataFrame:
+    """The MERGE body: ``tier`` with the ``affected`` conversations'
+    rows replaced by ``recomputed`` (anti-join + union — the Iceberg
+    ``MERGE INTO`` stand-in)."""
+    return tier.join(F.broadcast(affected), "conv_id", "left_anti").unionByName(recomputed)
 
 
 def merge_late_turns(
@@ -57,11 +62,10 @@ def merge_late_turns(
     raw_affected = all_turns.join(F.broadcast(affected_convs), "conv_id", "left_semi")
     recomputed = rollup_simple_wide(raw_affected, tier, channels=kinds or None)
 
-    kept = existing.join(F.broadcast(affected_convs), "conv_id", "left_anti")
     # localCheckpoint truncates lineage so the table path can be
     # overwritten while it is also the read source (Iceberg MERGE does
     # this transactionally; the shim materializes first).
-    merged = kept.unionByName(recomputed).localCheckpoint()
+    merged = upsert_convs(existing, recomputed, affected_convs).localCheckpoint()
     cat.write(merged, tier_table)
     out = cat.read(spark, tier_table)
     return {

@@ -10,19 +10,12 @@ layout change can never double-count: slice outputs land in their own
 directories, the manifest line is written only after the write
 succeeds, and records from a different ``n_slices`` layout are ignored.
 
-Slicing is by conversation hash (``pmod(xxhash64(conv_id), n_slices)``)
-— the same transform as the catalog's bucket layout. Resume-cost
-design for 100 TB:
-
-- every slice's input fingerprint + row count comes from **one**
-  full-input aggregation pass (:func:`slice_lineage`), not a scan per
-  slice — a fully-done resume costs one scan total, not 2·n_slices;
-- when the input is a catalog-bucketed table, pass the materialized
-  partition column as ``slice_col`` (with ``n_slices`` = the catalog's
-  ``n_buckets``): the per-slice filter then hits the ``bucket_id=…``
-  partition directories and each slice READS only 1/n_slices of the
-  files instead of filtering full scans (partition pruning at planning
-  time — plan-asserted in tests).
+Slices use the catalog's bucket hash (``pmod(xxhash64(conv_id),
+n_slices)``, as ``ParquetTierCatalog.bucket_of``), so every slice value
+lies in ``range(n_slices)``. Every slice's input fingerprint + row count
+comes from **one** full-input aggregation pass (:func:`slice_lineage`),
+not a scan per slice — a fully-done resume costs one scan total, not
+2·n_slices.
 
 At cluster scale each slice is one spark-submit-able unit of retry.
 """
@@ -42,19 +35,15 @@ from ts_raster_spark.sources.catalog import read_parquet
 MANIFEST = "manifest.jsonl"
 
 
-def _slice_expr(n_slices: int, slice_col: str | None = None) -> Column:
-    if slice_col:
-        return F.col(slice_col).cast("int")
+def _slice_expr(n_slices: int) -> Column:
     return F.pmod(F.xxhash64("conv_id"), F.lit(n_slices)).cast("int")
 
 
-def slice_lineage(
-    df: DataFrame, n_slices: int, slice_col: str | None = None
-) -> dict[int, dict]:
+def slice_lineage(df: DataFrame, n_slices: int) -> dict[int, dict]:
     """All slices' input lineage (row count + key hash) in ONE pass —
     a groupBy on the slice key instead of a filtered scan per slice."""
     rows = (
-        df.groupBy(_slice_expr(n_slices, slice_col).alias("_slice"))
+        df.groupBy(_slice_expr(n_slices).alias("_slice"))
         .agg(
             F.count("*").alias("n"),
             F.coalesce(F.expr("bit_xor(xxhash64(conv_id, turn_idx))"), F.lit(0)).alias("h"),
@@ -62,7 +51,7 @@ def slice_lineage(
         .collect()
     )
     return {
-        (int(r["_slice"]) if r["_slice"] is not None else None): {
+        r["_slice"]: {
             "rows_in": r["n"],
             "fingerprint": f"n={r['n']},h={r['h']}",
         }
@@ -99,38 +88,23 @@ def run_checkpointed(
     out_dir: str,
     n_slices: int = 8,
     fail_after: int | None = None,
-    slice_col: str | None = None,
 ) -> dict:
     """Run ``transform`` over turns in ``n_slices`` conv-hash slices,
     checkpointing each to ``out_dir/slice=<i>`` with a manifest line.
 
     Re-invocation skips slices whose manifest records ``done`` with a
     matching input fingerprint (changed input → slice recomputed).
-    ``slice_col`` names a materialized partition column to slice on
-    (catalog ``bucket_id``) so each slice prunes to its own files.
     ``fail_after`` kills the job after that many fresh slices — the
     pytest crash-injection hook (SURVEY.md §5 test 6).
 
     Returns summary {completed, skipped, rows_out}.
     """
+    if n_slices < 1:
+        raise ValueError(f"n_slices must be >= 1, got {n_slices}")
     os.makedirs(out_dir, exist_ok=True)
     manifest_path = os.path.join(out_dir, MANIFEST)
     done = load_manifest(out_dir, n_slices)
-    lineage = slice_lineage(turns, n_slices, slice_col)
-    # slice_lineage already saw the FULL value domain — any slice value
-    # outside range(n_slices) (slice_col wider than the layout, or NULL)
-    # would otherwise silently never be processed and read_result would
-    # return a partial dataset with no error
-    bad = sorted(
-        (s for s in lineage if s is None or not 0 <= s < n_slices),
-        key=lambda s: (s is None, s),
-    )
-    if bad:
-        raise ValueError(
-            f"slice values {bad} fall outside the n_slices={n_slices} layout"
-            + (f" (slice_col={slice_col!r})" if slice_col else "")
-            + "; pass n_slices matching the column's value domain"
-        )
+    lineage = slice_lineage(turns, n_slices)
     completed, skipped, rows_out = 0, 0, 0
     fresh = 0
     for s in range(n_slices):
@@ -142,7 +116,7 @@ def run_checkpointed(
         if fail_after is not None and fresh >= fail_after:
             raise RuntimeError(f"injected failure before slice {s}")
         t0 = time.time()
-        part = turns.where(_slice_expr(n_slices, slice_col) == s)
+        part = turns.where(_slice_expr(n_slices) == s)
         out = transform(part)
         slice_path = os.path.join(out_dir, f"slice={s}")
         out.write.mode("overwrite").parquet(slice_path)

@@ -864,11 +864,10 @@ def q_sketch_merge_retention(spark, sf_dir):
     q_late_data_merge_hour); the minute-grain sketch tier is built from
     the on-time rows, the late rows are merged by recomputing exactly
     the affected conversations' sketches from raw+late and upserting
-    (anti-join + union — the Iceberg MERGE INTO stand-in,
-    operators/retention.merge_late_turns semantics), then retention
-    drops buckets older than 7 days before the tier's own horizon
-    (operators/retention.apply_retention contract: cutoff is a function
-    of the data, never wall clock).
+    (operators/retention.upsert_convs, the body of merge_late_turns),
+    then retention drops buckets older than 7 days before the tier's own
+    horizon (operators/retention.apply_retention contract: cutoff is a
+    function of the data, never wall clock).
 
     The sketch build is DETERMINISTIC (operators/kll.py), so the merged
     tier must equal a fresh build from ALL turns over the same window —
@@ -877,6 +876,7 @@ def q_sketch_merge_retention(spark, sf_dir):
     ``total_weight`` = the exact in-window raw count per hour, which
     the DuckDB oracle restates from raw."""
     from ts_raster_spark.operators.kll import kll_sketch
+    from ts_raster_spark.operators.retention import upsert_convs
 
     k = 64
     turns = load_turns(spark, sf_dir)
@@ -895,9 +895,7 @@ def q_sketch_merge_retention(spark, sf_dir):
         "minute",
         k=k,
     )
-    merged = sk_ontime.join(F.broadcast(affected), "conv_id", "left_anti").unionByName(
-        recomputed
-    )
+    merged = upsert_convs(sk_ontime, recomputed, affected)
 
     horizon = merged.agg(F.max("bucket_start").alias("_horizon"))
     cutoff = (F.col("_horizon") - F.expr("INTERVAL 7 DAYS")).alias("_cutoff")
@@ -1031,14 +1029,16 @@ def q_retention_ttl_hour(spark, sf_dir):
 
 
 def q_late_data_merge_hour(spark, sf_dir):
-    """Late-data idempotent MERGE (north rule, operators/retention.
-    merge_late_turns semantics inline): a deterministic 'late' subset of
-    turns is withheld, the hour tier is built from the on-time rows,
-    then the late rows are merged by recomputing exactly the affected
-    conversations' buckets and upserting them (anti-join + union — the
-    Iceberg MERGE INTO stand-in). The oracle recomputes the tier from
-    ALL turns: equality IS the proof that the merge converges to the
-    full recompute."""
+    """Late-data idempotent MERGE (north rule, the body of operators/
+    retention.merge_late_turns): a deterministic 'late' subset of turns
+    is withheld, the hour tier is built from the on-time rows, then the
+    late rows are merged by recomputing exactly the affected
+    conversations' buckets and upserting them
+    (operators/retention.upsert_convs). The oracle recomputes the tier
+    from ALL turns: equality IS the proof that the merge converges to
+    the full recompute."""
+    from ts_raster_spark.operators.retention import upsert_convs
+
     turns = load_turns(spark, sf_dir)
     is_late = (F.pmod(F.xxhash64("conv_id"), F.lit(7)) == 3) & (F.col("turn_idx") >= 4)
     ontime = turns.where(~is_late)
@@ -1054,8 +1054,7 @@ def q_late_data_merge_hour(spark, sf_dir):
         ).where(F.col("kind") == "text_len"),
         "hour",
     )
-    kept = tier_ontime.join(F.broadcast(affected), "conv_id", "left_anti")
-    return finalize(kept.unionByName(recomputed))
+    return finalize(upsert_convs(tier_ontime, recomputed, affected))
 
 
 def q_wide_to_long_panel(spark, sf_dir):

@@ -145,20 +145,6 @@ class ParquetTierCatalog:
 
         return ds.dataset(self.path(table), format="parquet", partitioning="hive").count_rows()
 
-    def write_bucketed_table(self, df: DataFrame, table: str, sort_cols: list[str] | None = None) -> None:
-        """Metastore-backed bucketed table (``bucketBy(n, conv_id)``):
-        unlike the path-based layout, Spark's planner KNOWS the bucket
-        spec, so equi-joins and aggregations on ``conv_id`` between two
-        such tables need NO exchange — the co-located-join half of the
-        Iceberg bucket story (plan-asserted in tests/test_plans.py)."""
-        w = df.write.mode("overwrite").bucketBy(self.n_buckets, "conv_id")
-        if sort_cols:
-            w = w.sortBy(*sort_cols)
-        w.option("path", self.path(table)).saveAsTable(f"tsrs_{table}")
-
-    def read_table(self, spark: SparkSession, table: str) -> DataFrame:
-        return spark.table(f"tsrs_{table}")
-
     def read_conv(self, spark: SparkSession, table: str, conv_id: str) -> DataFrame:
         """Bucket-pruned point lookup: one Spark job (the caller's action)
         over the files of one bucket. The bucket transform of the literal
