@@ -2,11 +2,12 @@ from __future__ import annotations
 
 import json
 import os
+import sys
 import uuid
 
 import pyarrow.dataset as ds
 import pytest
-from pyspark.errors import AnalysisException
+from pyspark.errors import AnalysisException, SparkRuntimeException
 from pyspark.sql import functions as F
 
 from ts_raster_spark.jobs import RollupJobConfig, run_rollup_job
@@ -153,10 +154,14 @@ def _jobs_started(spark, fn):
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def _assert_same_rows(got, ref):
+    assert got.exceptAll(ref).isEmpty() and ref.exceptAll(got).isEmpty()
+
+
 def _assert_same(got, ref):
     """Same schema (names, types, nullability, order) and the same rows."""
     assert got.schema == ref.schema
-    assert got.exceptAll(ref).isEmpty() and ref.exceptAll(got).isEmpty()
+    _assert_same_rows(got, ref)
 
 
 TIER_TABLES = ("rollup_minute", "rollup_hour", "rollup_day", "rollup_minute_filled")
@@ -247,3 +252,101 @@ def test_read_without_data_files_raises(spark, tmp_path):
         cat.read(spark, "only_success")
     with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
         cat.read(spark, "missing")
+
+
+def _manifest_lines(out):
+    with open(os.path.join(out, "manifest.jsonl")) as f:
+        return [json.loads(line) for line in f]
+
+
+def test_concurrent_slices_crash_and_resume(spark, turns_small, tmp_path):
+    """Eight slices on concurrent threads: a crash after three leaves
+    exactly three whole manifest lines, and a resume runs the other five
+    into the single-shot result."""
+    ref_dir = str(tmp_path / "ckpt_ref")
+    out = str(tmp_path / "ckpt_crash")
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)  # interleave the slice threads as finely as possible
+    try:
+        run_checkpointed(spark, turns_small, _transform, ref_dir, n_slices=8)
+        with pytest.raises(RuntimeError, match="injected failure"):
+            run_checkpointed(spark, turns_small, _transform, out, n_slices=8, fail_after=3)
+    finally:
+        sys.setswitchinterval(interval)
+    assert len(_manifest_lines(ref_dir)) == 8
+    lines = _manifest_lines(out)
+    assert len(lines) == 3 and len({r["slice_id"] for r in lines}) == 3
+
+    summary = run_checkpointed(spark, turns_small, _transform, out, n_slices=8)
+    assert summary["skipped"] == 3 and summary["completed"] == 5
+    assert sorted(r["slice_id"] for r in _manifest_lines(out)) == list(range(8))
+    keys = ("conv_id", "kind", "bucket_start")
+    ref = read_result(spark, ref_dir).orderBy(*keys).toPandas()
+    got = read_result(spark, out).orderBy(*keys).toPandas()
+    assert got.equals(ref)
+    assert summary["rows_out"] == len(ref)
+
+
+def test_failing_slice_raises_after_the_others_finish(spark, turns_small, tmp_path):
+    """A slice whose write fails raises its error from run_checkpointed;
+    the slices that finished keep valid manifest lines, and a resume
+    recomputes only the failed one."""
+    n_slices, bad = 4, "conv-000005"
+    bad_slice = spark.range(1).select(
+        F.pmod(F.xxhash64(F.lit(bad)), F.lit(n_slices)).cast("int")
+    ).first()[0]
+
+    def failing(part):
+        text = F.when(F.col("conv_id") == bad, F.raise_error(F.lit("slice boom"))).otherwise(F.col("text"))
+        return _transform(part.withColumn("text", text))
+
+    out = str(tmp_path / "ckpt_fail")
+    with pytest.raises(SparkRuntimeException, match="slice boom"):
+        run_checkpointed(spark, turns_small, failing, out, n_slices=n_slices)
+    lines = _manifest_lines(out)
+    assert sorted(r["slice_id"] for r in lines) == sorted(set(range(n_slices)) - {bad_slice})
+    summary = run_checkpointed(spark, turns_small, _transform, out, n_slices=n_slices)
+    assert summary["completed"] == 1 and summary["skipped"] == n_slices - 1
+
+
+OVERWRITE_MODE = "spark.sql.sources.partitionOverwriteMode"
+
+
+def test_dynamic_write_ignores_static_session_conf(spark, turns_small, tmp_path):
+    """A tier write replaces only the buckets it produces even when the
+    session's own overwrite mode is static."""
+    cat = ParquetTierCatalog(str(tmp_path / "tiers_mode"), n_buckets=8)
+    hour = _transform(turns_small)
+    cat.write(hour, "t")
+    before = sorted(os.listdir(cat.path("t")))
+    one = hour.where(F.col("conv_id") == "conv-000003")
+    spark.conf.set(OVERWRITE_MODE, "static")
+    try:
+        cat.write(one, "t")
+        assert spark.conf.get(OVERWRITE_MODE) == "static"
+    finally:
+        spark.conf.unset(OVERWRITE_MODE)
+    # the conversation's bucket now holds only its rows; every other bucket is kept
+    assert sorted(os.listdir(cat.path("t"))) == before
+    k = cat.bucket_of(F.lit("conv-000003"))
+    expected = hour.where(cat.bucket_of(F.col("conv_id")) != k).unionByName(one)
+    _assert_same_rows(cat.read(spark, "t"), expected)
+
+
+def test_full_write_leaves_session_conf_unchanged(spark, turns_small, tmp_path):
+    """``full=True`` truncates the table without touching the session's
+    overwrite mode, set or unset."""
+    cat = ParquetTierCatalog(str(tmp_path / "tiers_full"), n_buckets=8)
+    hour = _transform(turns_small)
+    one = hour.where(F.col("conv_id") == "conv-000003")
+    for mode in (None, "dynamic"):
+        cat.write(hour, "t")
+        if mode is not None:
+            spark.conf.set(OVERWRITE_MODE, mode)
+        try:
+            cat.write(one, "t", full=True)
+            assert spark.conf.get(OVERWRITE_MODE, None) == mode
+        finally:
+            spark.conf.unset(OVERWRITE_MODE)
+        assert cat.read(spark, "t").count() == one.count()
+        assert len([d for d in os.listdir(cat.path("t")) if d.startswith("bucket_id=")]) == 1

@@ -92,16 +92,50 @@ def test_cascade_day_mean_variance(spark, turns_small):
         assert row["variance"] == pytest.approx(np.var(sub), rel=1e-6, abs=1e-9)
 
 
+# Tier algebra of the flagship feature set: every feature the full rollup
+# emits is classified here, and the test below asserts the classification
+# is exhaustive so a new calculator cannot land unclassified.
+#
+# ALGEBRAIC_FROM_SUFFICIENT_STATS: exactly derivable from the cascade's
+# (count, sum, sum², min, max) — a coarser tier needs only the finer
+# tier's stats, never raw data.
+ALGEBRAIC_FROM_SUFFICIENT_STATS = frozenset({
+    "turn_count", "mean", "maximum", "minimum", "sum_values",
+    "variance", "standard_deviation", "abs_energy", "root_mean_square",
+    "variation_coefficient", "large_standard_deviation_r25",
+})
+# RECOMPUTE_FROM_FINEST: holistic (median/quantiles: rank-based),
+# order-sensitive (lags, locations, peaks, crossings, strikes, trend,
+# energy chunks, CWT), or mean-anchored (count above/below mean, ratio
+# beyond r·σ, binned entropy) — the cascade recomputes these from the
+# finest retained tier or raw, mirroring the holistic-quantile rule.
+# benford_correlation is *mergeable* via a 9-digit-count sketch (the
+# sketch-cascade pattern in operators/sketch.py) but the sufficient-stat
+# cascade does not carry those counts, so it recomputes too.
+RECOMPUTE_FROM_FINEST = frozenset({
+    "median", "quantile_q05", "quantile_q15", "quantile_q85", "quantile_q95",
+    "skewness", "kurtosis",  # algebraic only with sum³/sum⁴, not carried
+    "count_above_mean", "count_below_mean",
+    "ratio_beyond_r_sigma_r2", "ratio_beyond_r_sigma_r3",
+    "mean_change", "mean_abs_change", "mean_second_derivative_central",
+    "absolute_sum_of_changes", "cid_ce", "c3_lag1",
+    "time_reversal_asymmetry_lag1", "autocorrelation_lag1",
+    "last_location_of_maximum", "first_location_of_maximum",
+    "last_location_of_minimum", "first_location_of_minimum",
+    "number_peaks_n1", "number_peaks_n3", "number_crossing_0",
+    "benford_correlation", "energy_ratio_chunk0_of10",
+    "longest_strike_above_mean", "longest_strike_below_mean",
+    "agg_linear_trend_slope_max_chunk3", "binned_entropy_10",
+    "number_cwt_peaks_n6", "number_cwt_peaks_n12",
+})
+
+
 def test_tier_algebra_classification_is_exhaustive():
     """Every column the flagship rollup can emit (39 aggregate features
     + strike/trend/entropy extras + the kernel CWT peaks) must be
     classified as either cascaded-exact (sufficient statistics) or
     recompute-from-finest — a new calculator cannot land unclassified."""
     from ts_raster_spark.functions.features import default_feature_aggs
-    from ts_raster_spark.operators.cascade import (
-        ALGEBRAIC_FROM_SUFFICIENT_STATS,
-        RECOMPUTE_FROM_FINEST,
-    )
 
     emitted = set(default_feature_aggs()) | {
         "longest_strike_above_mean", "longest_strike_below_mean",

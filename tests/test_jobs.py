@@ -1,5 +1,8 @@
 from __future__ import annotations
 
+import uuid
+import warnings
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -53,3 +56,34 @@ def test_rollup_job_rerun_idempotent(spark, turns_small, tmp_path):
     c1 = run_rollup_job(spark, turns_small, cfg)
     c2 = run_rollup_job(spark, turns_small, cfg)  # resume: all slices skip
     assert c1 == c2
+
+
+def test_rollup_job_jobs_carry_caller_job_group(spark, turns_small, tmp_path):
+    """Every Spark job the tier job starts, on whichever driver thread,
+    carries the caller's job group, and wrapping the thread targets
+    warns about no tags."""
+    sc, st = spark.sparkContext, spark.sparkContext.statusTracker()
+
+    def marker() -> list[int]:
+        group = f"marker-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "marker")
+        spark.range(1).count()
+        return st.getJobIdsForGroup(group)
+
+    first = max(marker())
+    sc.setJobGroup("g", "tier job under a job group")
+    try:
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            run_rollup_job(
+                spark, turns_small,
+                RollupJobConfig(out_root=str(tmp_path / "tiers_group"), gapfill_policy="locf", checkpoint_slices=2),
+            )
+        last = min(marker())
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    in_group = set(st.getJobIdsForGroup("g"))
+    started = set(range(first + 1, last))
+    assert started and started <= in_group
+    assert not [w for w in caught if issubclass(w.category, UserWarning) and "Tags" in str(w.message)]

@@ -24,12 +24,15 @@ from __future__ import annotations
 
 import json
 import os
+import threading
 import time
 from collections.abc import Callable
+from functools import partial
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ts_raster_spark.session import run_concurrently
 from ts_raster_spark.sources.catalog import read_parquet
 
 MANIFEST = "manifest.jsonl"
@@ -94,52 +97,66 @@ def run_checkpointed(
 
     Re-invocation skips slices whose manifest records ``done`` with a
     matching input fingerprint (changed input → slice recomputed).
-    ``fail_after`` kills the job after that many fresh slices — the
-    pytest crash-injection hook (SURVEY.md §5 test 6).
+
+    The fresh slices run concurrently, one driver thread each, at most
+    ``defaultParallelism`` at a time (:func:`run_concurrently`): a
+    slice's few small jobs are mostly fixed cost (planning, scheduling,
+    commit), which one slice pays while another's tasks run. Slices
+    share nothing but the manifest, and each appends its line under a
+    lock after its own write succeeds, so a crash leaves exactly the
+    finished slices recorded. A failing slice does not stop the others;
+    its error is raised after they finish.
+
+    ``fail_after=k`` runs only the first ``k`` fresh slices and then
+    raises ``injected failure`` — the pytest crash-injection hook
+    (SURVEY.md §5 test 6).
 
     Returns summary {completed, skipped, rows_out}.
     """
+    import pyarrow.dataset as ds
+
     if n_slices < 1:
         raise ValueError(f"n_slices must be >= 1, got {n_slices}")
     os.makedirs(out_dir, exist_ok=True)
     manifest_path = os.path.join(out_dir, MANIFEST)
     done = load_manifest(out_dir, n_slices)
-    lineage = slice_lineage(turns, n_slices)
-    completed, skipped, rows_out = 0, 0, 0
-    fresh = 0
-    for s in range(n_slices):
-        info = lineage.get(s, {"rows_in": 0, "fingerprint": "n=0,h=0"})
+    found = slice_lineage(turns, n_slices)
+    lineage = {s: found.get(s, {"rows_in": 0, "fingerprint": "n=0,h=0"}) for s in range(n_slices)}
+    skipped, rows_out = 0, 0
+    fresh: list[int] = []
+    for s, info in lineage.items():
         if s in done and done[s]["input_fingerprint"] == info["fingerprint"]:
             skipped += 1
             rows_out += done[s]["rows_out"]
-            continue
-        if fail_after is not None and fresh >= fail_after:
-            raise RuntimeError(f"injected failure before slice {s}")
-        t0 = time.time()
-        part = turns.where(_slice_expr(n_slices) == s)
-        out = transform(part)
-        slice_path = os.path.join(out_dir, f"slice={s}")
-        out.write.mode("overwrite").parquet(slice_path)
-        # footer-metadata count — no Spark job, no data re-read
-        import pyarrow.dataset as ds
+        else:
+            fresh.append(s)
+    manifest_lock = threading.Lock()
 
+    def run_slice(s: int) -> int:
+        t0 = time.time()
+        slice_path = os.path.join(out_dir, f"slice={s}")
+        transform(turns.where(_slice_expr(n_slices) == s)).write.mode("overwrite").parquet(slice_path)
+        # footer-metadata count — no Spark job, no data re-read
         n_out = ds.dataset(slice_path, format="parquet").count_rows()
         rec = {
             "slice_id": s,
             "n_slices": n_slices,
             "status": "done",
-            "input_fingerprint": info["fingerprint"],
-            "rows_in": info["rows_in"],
+            "input_fingerprint": lineage[s]["fingerprint"],
+            "rows_in": lineage[s]["rows_in"],
             "rows_out": n_out,
             "wall_s": round(time.time() - t0, 3),
             "path": slice_path,
         }
-        with open(manifest_path, "a") as f:
+        with manifest_lock, open(manifest_path, "a") as f:
             f.write(json.dumps(rec) + "\n")
-        completed += 1
-        fresh += 1
-        rows_out += n_out
-    return {"completed": completed, "skipped": skipped, "rows_out": rows_out}
+        return n_out
+
+    todo = fresh if fail_after is None else fresh[:fail_after]
+    rows_out += sum(run_concurrently(spark, [partial(run_slice, s) for s in todo]))
+    if len(todo) < len(fresh):
+        raise RuntimeError(f"injected failure before slice {fresh[len(todo)]}")
+    return {"completed": len(todo), "skipped": skipped, "rows_out": rows_out}
 
 
 def read_result(spark: SparkSession, out_dir: str, n_slices: int | None = None) -> DataFrame:

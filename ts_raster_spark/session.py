@@ -14,7 +14,10 @@ on every access.
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import SparkSession
 
 
@@ -79,3 +82,23 @@ def get_spark(
         for k, v in extra_conf.items():
             b = b.config(k, v)
     return b.getOrCreate()
+
+
+def run_concurrently(spark: SparkSession, targets: list[Callable[[], object]]) -> list:
+    """Call each no-argument target on a driver thread, at most
+    ``defaultParallelism`` at a time, and return their results in order.
+
+    Each target is wrapped here, in the calling thread, with
+    ``inheritable_thread_target(spark)``: the caller's local properties
+    (job group, job description, scheduler pool) and session tags then
+    reach every Spark job a target starts. Each target gets its own copy
+    of those properties, so a target that changes one changes no other.
+    Every target runs to the end; the first failure in ``targets`` order
+    is then raised.
+    """
+    wrapped = [inheritable_thread_target(spark)(t) for t in targets]
+    if not wrapped:
+        return []
+    with ThreadPoolExecutor(max_workers=min(len(wrapped), spark.sparkContext.defaultParallelism)) as pool:
+        futures = [pool.submit(t) for t in wrapped]
+    return [f.result() for f in futures]

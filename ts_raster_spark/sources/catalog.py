@@ -113,26 +113,18 @@ class ParquetTierCatalog:
         overwrite (truncate-then-write) for operations that may empty a
         bucket entirely (retention TTL drops).
         """
-        spark = df.sparkSession
-        conf_key = "spark.sql.sources.partitionOverwriteMode"
-        prev = spark.conf.get(conf_key, None)
-        spark.conf.set(conf_key, "static" if full else "dynamic")
-        try:
-            sort_cols = [c for c in ("conv_id", "kind", "bucket_start") if c in df.columns]
-            (
-                self.with_bucket(df)
-                .repartition("bucket_id")
-                .sortWithinPartitions(*sort_cols)
-                .write.mode("overwrite")
-                .partitionBy("bucket_id")
-                .parquet(self.path(table))
-            )
-        finally:
-            # never leak the overwrite mode into the caller's session
-            if prev is None:
-                spark.conf.unset(conf_key)
-            else:
-                spark.conf.set(conf_key, prev)
+        sort_cols = [c for c in ("conv_id", "kind", "bucket_start") if c in df.columns]
+        (
+            self.with_bucket(df)
+            .repartition("bucket_id")
+            .sortWithinPartitions(*sort_cols)
+            .write.mode("overwrite")
+            # per write, not the session conf: concurrent writes on one
+            # session must not see each other's mode
+            .option("partitionOverwriteMode", "static" if full else "dynamic")
+            .partitionBy("bucket_id")
+            .parquet(self.path(table))
+        )
 
     def read(self, spark: SparkSession, table: str) -> DataFrame:
         return read_parquet(spark, self.path(table)).drop("bucket_id")
