@@ -144,13 +144,22 @@ def test_stream_dedup_exact_parity(spark, tmp_path):
     assert {(r["conv_id"], r["turn_idx"]) for r in got.collect()} == want
 
 
-def test_stream_dedup_query_calls_use_own_directories(spark, turns_small, monkeypatch):
-    """Two runs of the declared stream_dedup_exact query in one session
-    write their doubled input to distinct directories, remove them, and
-    both return the base turns projection (the query's oracle)."""
+@pytest.mark.parametrize(
+    "query",
+    [
+        "q_stream_dedup_exact",
+        "q_stream_stateful_counts",
+        "q_stream_rollup_minute",
+        "q_stream_sliding_counts",
+        "q_stream_session_windows",
+    ],
+)
+def test_stream_query_calls_use_own_directories(spark, turns_small, monkeypatch, query):
+    """Two runs of a declared streaming query in one session feed their
+    streams from distinct input directories, remove them, and return the
+    same rows (for stream_dedup_exact: the base turns projection, the
+    query's oracle)."""
     import os
-
-    from pyspark.sql import functions as F
 
     from ts_raster_spark import queries as Q
     from ts_raster_spark.streaming import rollup_stream as RS
@@ -164,10 +173,10 @@ def test_stream_dedup_query_calls_use_own_directories(spark, turns_small, monkey
 
     monkeypatch.setattr(RS, "stream_turns", recording_stream_turns)
     monkeypatch.setattr(Q, "load_turns", lambda spark_, sf_dir: turns_small)
-    want = Q.finalize(turns_small.select("conv_id", "turn_idx", "ts", F.md5("text").alias("content_md5")))
-    want = sorted(want.collect())
-    for _ in range(2):
-        got = Q.q_stream_dedup_exact(spark, "unused")
-        assert sorted(got.collect()) == want
+    first, second = (sorted(getattr(Q, query)(spark, "unused").collect()) for _ in range(2))
+    assert first and first == second
+    if query == "q_stream_dedup_exact":
+        want = Q.finalize(turns_small.select("conv_id", "turn_idx", "ts", F.md5("text").alias("content_md5")))
+        assert first == sorted(want.collect())
     assert len(paths) == 2 and paths[0] != paths[1], paths
     assert not any(os.path.exists(p) for p in paths), paths

@@ -17,7 +17,7 @@ the north rule.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ts_raster_spark.operators.rollup import rollup_simple_wide
@@ -75,6 +75,12 @@ def merge_late_turns(
     }
 
 
+def within_ttl(df: DataFrame, ttl: str, now: Column) -> DataFrame:
+    """The TTL rule: keep ``df``'s buckets with ``bucket_start >= now -
+    INTERVAL ttl`` (the cutoff bucket itself is kept)."""
+    return df.where(F.col("bucket_start") >= now - F.expr(f"INTERVAL {ttl}"))
+
+
 def apply_retention(
     spark: SparkSession,
     cat: ParquetTierCatalog,
@@ -82,17 +88,16 @@ def apply_retention(
     now: str,
 ) -> dict:
     """Enforce TTLs: for each tier table with a policy like '7 days',
-    drop buckets with ``bucket_start < now - ttl``; ``None`` keeps
-    everything. Returns rows dropped per tier."""
+    drop buckets with ``bucket_start < now - ttl`` (:func:`within_ttl`);
+    ``None`` keeps everything. Returns rows dropped per tier."""
     dropped: dict[str, int] = {}
     for table, ttl in policies.items():
         if ttl is None:
             dropped[table] = 0
             continue
         df = cat.read(spark, table)
-        cutoff = F.to_timestamp(F.lit(now)) - F.expr(f"INTERVAL {ttl}")
         before = df.count()
-        kept = df.where(F.col("bucket_start") >= cutoff).localCheckpoint()
+        kept = within_ttl(df, ttl, F.to_timestamp(F.lit(now))).localCheckpoint()
         cat.write(kept, table, full=True)
         dropped[table] = before - cat.read(spark, table).count()
     return dropped

@@ -12,6 +12,10 @@ Normalization contract (applies identically in the oracle SQL):
 
 from __future__ import annotations
 
+import os
+import shutil
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -22,9 +26,14 @@ from ts_raster_spark.operators.gapfill import gapfill
 from ts_raster_spark.operators.longform import CHANNELS, to_long_panel
 from ts_raster_spark.operators.mask import mask_df, unmask_df
 from ts_raster_spark.operators.rollup import rollup_features, rollup_simple
-from ts_raster_spark.sources.turns import derive_turns_from_events
+from ts_raster_spark.sources.turns import TURNS_SCHEMA, derive_turns_from_events
+from ts_raster_spark.streaming import rollup_stream as RS
 
 from ts_raster_spark.functions.norm import ROUND_N, r4  # noqa: E402
+
+# Scratch for the streaming queries' file-source input, kept inside the
+# checkout (see _drain_stream).
+_SCRATCH = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".bench_tmp")
 
 
 def load_turns(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -37,6 +46,33 @@ def load_long(spark: SparkSession, sf_dir: str, channels: tuple[str, ...] = CHAN
     the derivation (the latency window too when latency_s is left out —
     see longform.with_channels)."""
     return to_long_panel(load_turns(spark, sf_dir), channels=channels)
+
+
+def _turn_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The turns table's own columns: the rows a turns stream reads."""
+    return load_turns(spark, sf_dir).select(*TURNS_SCHEMA.fieldNames())
+
+
+def _drain_stream(spark: SparkSession, inp: DataFrame, build, output_mode: str) -> DataFrame:
+    """Run ``build`` over a file-source stream of ``inp`` and return the
+    drained result table.
+
+    ``inp`` is written to a fresh directory under the checkout's
+    ``.bench_tmp/``; ``build(RS.stream_turns(spark, path))`` is drained
+    into a memory table named after that directory (availableNow, so the
+    table is complete when this returns), and the directory is removed
+    afterwards. A per-call copy means two runs from one checkout never
+    overwrite or list each other's input files, and no scratch outlives
+    the call."""
+    os.makedirs(_SCRATCH, exist_ok=True)
+    path = tempfile.mkdtemp(prefix="tsrs_stream_", dir=_SCRATCH)
+    name = os.path.basename(path)
+    try:
+        inp.write.mode("overwrite").parquet(path)
+        RS.run_to_memory(build(RS.stream_turns(spark, path)), name, output_mode)
+    finally:
+        shutil.rmtree(path, ignore_errors=True)
+    return spark.table(name)
 
 
 def finalize(df: DataFrame, ts_fmt: str = "yyyy-MM-dd HH:mm:ss") -> DataFrame:
@@ -59,12 +95,7 @@ def finalize(df: DataFrame, ts_fmt: str = "yyyy-MM-dd HH:mm:ss") -> DataFrame:
 
 def q_turns_derivation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The derived turns table itself — per-turn text equality evidence."""
-    return finalize(
-        load_turns(spark, sf_dir).select(
-            "conv_id", "turn_idx", "role", "text", "tool", "ts"
-        ),
-        ts_fmt="yyyy-MM-dd HH:mm:ss.SSSSSS",
-    )
+    return finalize(_turn_rows(spark, sf_dir), ts_fmt="yyyy-MM-dd HH:mm:ss.SSSSSS")
 
 
 def q_long_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -76,9 +107,6 @@ def q_long_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- §2.5: tiered feature rollups -----------------------------------------
-
-_FULL_FEATURES = None  # all of default_feature_aggs
-
 
 def _rollup(spark, sf_dir, tier, kinds=None, strikes=False, trend=False, entropy=False):
     long_df = load_long(spark, sf_dir)
@@ -202,26 +230,23 @@ def q_cascade_day_from_minute(spark, sf_dir):
 
 # --- gap-fill --------------------------------------------------------------
 
-def _hour_points(spark, sf_dir):
+def _gapfill_hour(spark, sf_dir, policy):
     long_df = load_long(spark, sf_dir).where(F.col("kind") == "text_len")
-    return rollup_simple(
-        long_df, "hour", aggs={"value": F.avg("value")}
-    )
+    points = rollup_simple(long_df, "hour", aggs={"value": F.avg("value")})
+    out = gapfill(points, "hour", policy)
+    return finalize(out.select("conv_id", "kind", "bucket_start", "value", F.col("_observed").cast("int").alias("observed")))
 
 
 def q_gapfill_locf_hour(spark, sf_dir):
-    out = gapfill(_hour_points(spark, sf_dir), "hour", "locf")
-    return finalize(out.select("conv_id", "kind", "bucket_start", "value", F.col("_observed").cast("int").alias("observed")))
+    return _gapfill_hour(spark, sf_dir, "locf")
 
 
 def q_gapfill_linear_hour(spark, sf_dir):
-    out = gapfill(_hour_points(spark, sf_dir), "hour", "linear")
-    return finalize(out.select("conv_id", "kind", "bucket_start", "value", F.col("_observed").cast("int").alias("observed")))
+    return _gapfill_hour(spark, sf_dir, "linear")
 
 
 def q_gapfill_sentinel_hour(spark, sf_dir):
-    out = gapfill(_hour_points(spark, sf_dir), "hour", "sentinel")
-    return finalize(out.select("conv_id", "kind", "bucket_start", "value", F.col("_observed").cast("int").alias("observed")))
+    return _gapfill_hour(spark, sf_dir, "sentinel")
 
 
 # --- documents / embeddings: training-data pipeline ops ---------------------
@@ -447,35 +472,10 @@ def q_stream_dedup_exact(spark, sf_dir):
     copies co-located per key by a range repartition so every duplicate
     pair shares a micro-batch), drained through
     dropDuplicatesWithinWatermark, and the surviving rows must equal the
-    original table exactly — the oracle is the base turns projection.
-    Each call writes its doubled input to a directory of its own
-    (removed once the stream is drained into memory) and names its
-    memory table after it, so concurrent runs from one checkout cannot
-    collide."""
-    import os as _os
-    import shutil
-    import tempfile
-
-    from ts_raster_spark.streaming import rollup_stream as RS
-
-    turns = load_turns(spark, sf_dir)
-    root = _os.path.join(_os.path.dirname(_os.path.dirname(_os.path.abspath(__file__))), ".bench_tmp")
-    _os.makedirs(root, exist_ok=True)
-    prefix = "tsrs_sdedup_in_"
-    path = tempfile.mkdtemp(prefix=prefix, dir=root)
-    name = "tsrs_sdedup_mem_" + _os.path.basename(path)[len(prefix):]
-    doubled = turns.select("conv_id", "turn_idx", "role", "text", "tool", "ts")
-    doubled = doubled.unionByName(doubled)
-    try:
-        (
-            doubled.repartitionByRange(8, "conv_id", "turn_idx")
-            .write.mode("overwrite")
-            .parquet(path)
-        )
-        RS.run_to_memory(RS.stream_dedup_exact(RS.stream_turns(spark, path)), name, "append")
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
-    return finalize(spark.table(name))
+    original table exactly — the oracle is the base turns projection."""
+    turns = _turn_rows(spark, sf_dir)
+    doubled = turns.unionByName(turns).repartitionByRange(8, "conv_id", "turn_idx")
+    return finalize(_drain_stream(spark, doubled, RS.stream_dedup_exact, "append"))
 
 
 def q_curate_corpus(spark, sf_dir):
@@ -697,38 +697,16 @@ def q_stream_stateful_counts(spark, sf_dir):
     the stateful kernel itself sorts each key's rows within the
     micro-batch, which is all the per-key order it needs. The oracle is
     the batch SQL for the same final state."""
-    import hashlib
-    import os as _os
-
-    from ts_raster_spark.streaming.rollup_stream import (
-        run_to_memory,
-        stateful_turn_counter,
-        stream_turns,
-    )
-
-    turns = load_turns(spark, sf_dir)
-    tag = hashlib.md5(f"state:{sf_dir}".encode()).hexdigest()[:8]
-    root = _os.path.join(_os.path.dirname(_os.path.dirname(_os.path.abspath(__file__))), ".bench_tmp")
-    _os.makedirs(root, exist_ok=True)
-    path = _os.path.join(root, f"tsrs_state_in_{tag}")
-    (
-        turns.select("conv_id", "turn_idx", "role", "text", "tool", "ts")
+    inp = (
+        _turn_rows(spark, sf_dir)
         .repartitionByRange(8, "conv_id")
         .sortWithinPartitions("conv_id", "turn_idx")
-        .write.mode("overwrite")
-        .parquet(path)
     )
-    counted = stateful_turn_counter(stream_turns(spark, path))
-    name = f"tsrs_state_mem_{tag}"
-    run_to_memory(counted, name, "update")
+    counted = _drain_stream(spark, inp, RS.stateful_turn_counter, "update")
     # n_turns is monotone per conv, so the final state row is max(n_turns)
-    final = (
-        spark.table(name)
-        .groupBy("conv_id")
-        .agg(
-            F.max("n_turns").cast("long").alias("n_turns"),
-            F.expr("max_by(last_latency_s, n_turns)").alias("last_latency_s"),
-        )
+    final = counted.groupBy("conv_id").agg(
+        F.max("n_turns").cast("long").alias("n_turns"),
+        F.expr("max_by(last_latency_s, n_turns)").alias("last_latency_s"),
     )
     return finalize(final)
 
@@ -876,7 +854,7 @@ def q_sketch_merge_retention(spark, sf_dir):
     ``total_weight`` = the exact in-window raw count per hour, which
     the DuckDB oracle restates from raw."""
     from ts_raster_spark.operators.kll import kll_sketch
-    from ts_raster_spark.operators.retention import upsert_convs
+    from ts_raster_spark.operators.retention import upsert_convs, within_ttl
 
     k = 64
     turns = load_turns(spark, sf_dir)
@@ -897,20 +875,13 @@ def q_sketch_merge_retention(spark, sf_dir):
     )
     merged = upsert_convs(sk_ontime, recomputed, affected)
 
-    horizon = merged.agg(F.max("bucket_start").alias("_horizon"))
-    cutoff = (F.col("_horizon") - F.expr("INTERVAL 7 DAYS")).alias("_cutoff")
-    retained = (
-        merged.crossJoin(F.broadcast(horizon.select(cutoff)))
-        .where(F.col("bucket_start") >= F.col("_cutoff"))
-        .drop("_cutoff")
-    )
+    horizon = F.broadcast(merged.agg(F.max("bucket_start").alias("_horizon")))
 
-    fresh = kll_sketch(to_long_panel(turns, channels=("text_len",)), "minute", k=k)
-    fresh_ret = (
-        fresh.crossJoin(F.broadcast(horizon.select(cutoff)))
-        .where(F.col("bucket_start") >= F.col("_cutoff"))
-        .drop("_cutoff")
-    )
+    def retain(tier):
+        return within_ttl(tier.crossJoin(horizon), "7 days", F.col("_horizon")).drop("_horizon")
+
+    retained = retain(merged)
+    fresh_ret = retain(kll_sketch(to_long_panel(turns, channels=("text_len",)), "minute", k=k))
 
     cols = ["conv_id", "kind", "bucket_start", "level", "value"]
     a = retained.groupBy(*cols).agg(F.count("*").alias("_ca"))
@@ -987,29 +958,10 @@ def q_stream_rollup_minute(spark, sf_dir):
     (complete mode), and the final table is returned. The oracle is the
     equivalent BATCH rollup — equality proves stream/batch parity of
     the windowed aggregate (streaming/rollup_stream.py)."""
-    import os as _os
-
-    from ts_raster_spark.streaming.rollup_stream import (
-        run_to_memory,
-        stream_rollup,
-        stream_turns,
+    rolled = _drain_stream(
+        spark, _turn_rows(spark, sf_dir), lambda s: RS.stream_rollup(s, tier="minute"), "complete"
     )
-
-    import hashlib
-
-    turns = load_turns(spark, sf_dir)
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]  # stable across runs
-    # keep scratch inside the repo (sandbox contract: no writes outside)
-    root = _os.path.join(_os.path.dirname(_os.path.dirname(_os.path.abspath(__file__))), ".bench_tmp")
-    _os.makedirs(root, exist_ok=True)
-    path = _os.path.join(root, f"tsrs_stream_in_{tag}")
-    turns.select("conv_id", "turn_idx", "role", "text", "tool", "ts").write.mode(
-        "overwrite"
-    ).parquet(path)
-    rolled = stream_rollup(stream_turns(spark, path), tier="minute")
-    name = f"tsrs_stream_mem_{tag}"
-    run_to_memory(rolled, name, "complete")
-    return finalize(spark.table(name))
+    return finalize(rolled)
 
 
 def q_retention_ttl_hour(spark, sf_dir):
@@ -1017,14 +969,12 @@ def q_retention_ttl_hour(spark, sf_dir):
     than 7 days before the panel's own horizon (max bucket_start) are
     dropped. The cutoff is a deterministic function of the data, never
     of wall clock — the operators/retention.apply_retention contract."""
+    from ts_raster_spark.operators.retention import within_ttl
+
     long_df = load_long(spark, sf_dir).where(F.col("kind") == "text_len")
     hour = rollup_simple(long_df, "hour")
     horizon = hour.agg(F.max("bucket_start").alias("_horizon"))
-    kept = (
-        hour.crossJoin(F.broadcast(horizon))
-        .where(F.col("bucket_start") >= F.col("_horizon") - F.expr("INTERVAL 7 DAYS"))
-        .drop("_horizon")
-    )
+    kept = within_ttl(hour.crossJoin(F.broadcast(horizon)), "7 days", F.col("_horizon")).drop("_horizon")
     return finalize(kept)
 
 
@@ -1530,27 +1480,7 @@ def q_stream_sliding_counts(spark, sf_dir):
     sliding window agg → memory sink, availableNow): stream/batch parity
     for OVERLAPPING windows — the tumbling stream query can't attest the
     hop path."""
-    import hashlib
-    import os as _os
-
-    from ts_raster_spark.streaming.rollup_stream import (
-        run_to_memory,
-        stream_sliding,
-        stream_turns,
-    )
-
-    turns = load_turns(spark, sf_dir)
-    tag = hashlib.md5((sf_dir + "slide").encode()).hexdigest()[:8]
-    root = _os.path.join(_os.path.dirname(_os.path.dirname(_os.path.abspath(__file__))), ".bench_tmp")
-    _os.makedirs(root, exist_ok=True)
-    path = _os.path.join(root, f"tsrs_slide_in_{tag}")
-    turns.select("conv_id", "turn_idx", "role", "text", "tool", "ts").write.mode(
-        "overwrite"
-    ).parquet(path)
-    rolled = stream_sliding(stream_turns(spark, path))
-    name = f"tsrs_slide_mem_{tag}"
-    run_to_memory(rolled, name, "complete")
-    return finalize(spark.table(name))
+    return finalize(_drain_stream(spark, _turn_rows(spark, sf_dir), RS.stream_sliding, "complete"))
 
 
 def q_stream_session_windows(spark, sf_dir):
@@ -1561,31 +1491,14 @@ def q_stream_session_windows(spark, sf_dir):
     micro-batch). Oracle = batch gaps-and-islands sessions over the same
     turns — equality proves the custom stateful path agrees with batch
     semantics exactly."""
-    import hashlib
-    import os as _os
-
-    from ts_raster_spark.streaming.rollup_stream import (
-        run_to_memory,
-        stateful_session_windows,
-        stream_turns,
-    )
-
-    turns = load_turns(spark, sf_dir)
     flush = spark.sql(
         "SELECT '~flush' AS conv_id, 0 AS turn_idx, 'system' AS role, "
         "'' AS text, CAST(NULL AS STRING) AS tool, "
         "timestamp'2099-01-01 00:00:00' AS ts"
     )
-    inp = turns.select("conv_id", "turn_idx", "role", "text", "tool", "ts").unionByName(flush)
-    tag = hashlib.md5((sf_dir + "sess").encode()).hexdigest()[:8]
-    root = _os.path.join(_os.path.dirname(_os.path.dirname(_os.path.abspath(__file__))), ".bench_tmp")
-    _os.makedirs(root, exist_ok=True)
-    path = _os.path.join(root, f"tsrs_sess_in_{tag}")
-    inp.write.mode("overwrite").parquet(path)
-    sessions = stateful_session_windows(stream_turns(spark, path))
-    name = f"tsrs_sess_mem_{tag}"
-    run_to_memory(sessions, name, "append")
-    out = spark.table(name).where(F.col("conv_id") != "~flush")
+    inp = _turn_rows(spark, sf_dir).unionByName(flush)
+    sessions = _drain_stream(spark, inp, RS.stateful_session_windows, "append")
+    out = sessions.where(F.col("conv_id") != "~flush")
     return finalize(out, ts_fmt="yyyy-MM-dd HH:mm:ss.SSSSSS")
 
 

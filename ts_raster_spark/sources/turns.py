@@ -19,7 +19,7 @@ Two deterministic providers:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
@@ -38,11 +38,6 @@ TURNS_SCHEMA = T.StructType(
 TABLE_NAMES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
 ).split()
-
-
-def load_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None) -> dict[str, DataFrame]:
-    """Load the sandbox parquet tables as DataFrames (column-pruned scans)."""
-    return {n: spark.read.parquet(f"{sf_dir}/{n}.parquet") for n in (names or TABLE_NAMES)}
 
 
 # The event_type → (role, tool) mapping. Purely arithmetic/CASE logic so
