@@ -75,9 +75,9 @@ def main():
     state_durations(turns).orderBy("conv_id", "state").show(3)
     heartbeat_uptime(turns).orderBy("conv_id").show(3)
     t2 = turns.withColumn("value", F.length("text").cast("double"))
-    ohlc(t2, "value", "hour").orderBy("conv_id", "bucket_start").show(3)
+    ohlc(t2).orderBy("conv_id", "bucket_start").show(3)
     ema(t2, alpha=0.3).select("conv_id", "turn_idx", "ema").show(3)
-    lttb(t2.withColumn("text_len", F.col("value")), n_out=10, y_col="text_len").show(3)
+    lttb(t2.withColumn("text_len", F.col("value")), n_out=10).show(3)
 
     print("== 6. compressed blocks are queryable")
     from ts_raster_spark.operators.compress import decompress_blocks

@@ -5,7 +5,7 @@ import datetime as dt
 import pytest
 from pyspark.sql import functions as F
 
-from ts_raster_spark.operators.asof import asof_join_backward, session_windows
+from ts_raster_spark.operators.asof import asof_join, session_windows
 
 
 def _ts(s):
@@ -37,7 +37,7 @@ def frames(spark):
 
 def test_asof_backward_semantics(frames):
     left, right = frames
-    out = asof_join_backward(left, right, "conv_id", "ts", "bucket_start", ["v"]).toPandas()
+    out = asof_join(left, right, "conv_id", "ts", "bucket_start", ["v"], "backward").toPandas()
     got = {(r.conv_id, r.turn_idx): r.v for r in out.itertuples()}
     assert got[("A", 0)] == 1.0          # strictly-before match
     assert got[("A", 1)] == 2.0          # tie: at-or-before includes equal ts
@@ -48,7 +48,7 @@ def test_asof_backward_semantics(frames):
 
 def test_asof_preserves_left_rows(frames):
     left, right = frames
-    out = asof_join_backward(left, right, "conv_id", "ts", "bucket_start", ["v"])
+    out = asof_join(left, right, "conv_id", "ts", "bucket_start", ["v"], "backward")
     assert out.count() == left.count()
     assert set(out.columns) == {"conv_id", "turn_idx", "ts", "v"}
 
@@ -61,13 +61,13 @@ def test_session_windows_gap_semantics(spark):
         ("C", 3, _ts("2024-01-01 11:29:59")),  # 29:59 gap -> same session
     ]
     t = spark.createDataFrame(rows, "conv_id string, turn_idx int, ts timestamp")
-    out = session_windows(t, gap="30 minutes").orderBy("session_start").toPandas()
+    out = session_windows(t).orderBy("session_start").toPandas()
     assert list(out["n_turns"]) == [2, 2]
     assert out.iloc[0]["session_end"] == _ts("2024-01-01 10:40:00")  # last + gap
 
 
 def test_session_windows_cover_all_turns(spark, turns_small):
-    s = session_windows(turns_small, gap="30 minutes")
+    s = session_windows(turns_small)
     assert s.agg(F.sum("n_turns")).first()[0] == turns_small.count()
     # sessions within a conversation must not overlap
     from pyspark.sql.window import Window

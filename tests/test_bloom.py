@@ -70,7 +70,7 @@ def test_decontaminate_bloom_equals_exact(spark, docs):
     train = docs.where(F.col("doc_id") % 20 != 0)
     bench = docs.where(F.col("doc_id") % 20 == 0)
     exact = decontaminate_ngrams(train, bench, n=4, threshold=0.1)
-    bloomed = decontaminate_ngrams_bloom(train, bench, n=4, threshold=0.1)
+    bloomed = decontaminate_ngrams_bloom(train, bench, n=4)
     a = sorted(map(tuple, exact.collect()))
     b = sorted(map(tuple, bloomed.collect()))
     assert a == b and len(a) > 0

@@ -65,7 +65,7 @@ def test_spark_block_roundtrip(spark, turns_small):
     from ts_raster_spark.operators.longform import to_long_panel
 
     long_df = to_long_panel(turns_small).where(F.col("kind").isin("text_len", "latency_s"))
-    blocks = compress_blocks(long_df, block="day")
+    blocks = compress_blocks(long_df)
     back = decompress_blocks(blocks)
 
     a = (

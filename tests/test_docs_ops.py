@@ -53,7 +53,7 @@ def test_simhash_similar_docs_close(spark, docs):
 def test_ann_bruteforce_sane(spark, emb):
     from ts_raster_spark.operators.similarity import cosine_topk_bruteforce
 
-    out = cosine_topk_bruteforce(emb, [0, 1, 2], k=5).toPandas()
+    out = cosine_topk_bruteforce(emb, [0, 1, 2]).toPandas()
     assert set(out["query_id"]) == {0, 1, 2}
     for q in (0, 1, 2):
         sub = out[out.query_id == q].sort_values("rank")
@@ -163,7 +163,7 @@ def test_components_star_deep_path_graph(spark):
     edges = spark.createDataFrame(path_edges, "doc_a long, doc_b long")
 
     with _pt.raises(RuntimeError, match="did not converge"):
-        connected_components(edges, max_iter=25)
+        connected_components(edges)
 
     got = {
         r["node"]: r["component"]
@@ -236,7 +236,7 @@ def test_duplicate_lines_accounting(spark):
         ],
         "doc_id long, text string",
     )
-    out = duplicate_lines(docs, min_chars=10).collect()
+    out = duplicate_lines(docs).collect()
     assert len(out) == 1
     row = out[0]
     assert row["n_docs"] == 2 and row["n_occurrences"] == 3
@@ -370,7 +370,7 @@ def test_pack_documents_budget(spark):
         (4, "one two", "s2"),         # separate shard restarts at 0
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string, source string")
-    got = {r["doc_id"]: r for r in pack_documents(docs, budget=8, shard_col="source").collect()}
+    got = {r["doc_id"]: r for r in pack_documents(docs, budget=8).collect()}
     assert (got[1]["pack_id"], got[1]["offset_in_pack"]) == (0, 0)
     assert (got[2]["pack_id"], got[2]["offset_in_pack"]) == (0, 5)
     assert (got[3]["pack_id"], got[3]["offset_in_pack"]) == (1, 0)

@@ -35,7 +35,7 @@ def test_lttb_keeps_spike():
 def test_lttb_spark_matches_local(spark, turns_small):
     t = turns_small.withColumn("text_len", F.length("text").cast("double"))
     got = (
-        lttb(t, n_out=8, y_col="text_len")
+        lttb(t, n_out=8)
         .orderBy("conv_id", "turn_idx")
         .toPandas()
     )

@@ -91,7 +91,7 @@ def test_merge_equals_direct(spark):
         for i in range(2000)
     ]
     df = spark.createDataFrame(rows, "conv_id string, ts timestamp")
-    out = hll_distinct_over_tiers(df, entity="conv_id", fine="minute", coarse="hour").collect()
+    out = hll_distinct_over_tiers(df, entity="conv_id").collect()
     assert len(out) == 1
     r = out[0]
     assert r["hll_estimate"] == r["hll_from_fine"]

@@ -10,7 +10,7 @@ def test_ivf_recall_vs_bruteforce(spark):
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet").cache()
     qids = list(range(10))
-    exact = cosine_topk_bruteforce(emb, qids, k=5).toPandas()
+    exact = cosine_topk_bruteforce(emb, qids).toPandas()
     approx = ivf_topk(emb, qids, k=5, n_cells=8, nprobe=4).toPandas()
 
     recalls = []

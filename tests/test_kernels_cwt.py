@@ -37,7 +37,7 @@ def test_cwt_deterministic():
 
 def test_kernel_matches_native_rollup(spark, turns_small):
     long_df = to_long_panel(turns_small).where(F.col("kind") == "text_len")
-    kern = extract_features_kernel(long_df, tier=None).toPandas().set_index("conv_id")
+    kern = extract_features_kernel(long_df).toPandas().set_index("conv_id")
     native = (
         rollup_features(long_df, tier=None, include_strikes=True, include_trend=True)
         .toPandas()

@@ -129,7 +129,7 @@ def test_spark_cascade_matches_local(spark, turns_small):
     sk_min = kll_sketch(t, "minute", k=16)
     sk_hr = kll_merge(sk_min, "hour", k=16)
     got = (
-        kll_quantiles(sk_hr, qs=(0.5, 0.95))
+        kll_quantiles(sk_hr)
         .orderBy("conv_id", "bucket_start")
         .toPandas()
     )
@@ -179,7 +179,7 @@ def test_spark_double_cascade_day_matches_local(spark, turns_small):
     )
     sk_day = kll_merge(kll_merge(kll_sketch(t, "minute", k=k), "hour", k=k), "day", k=k)
     got = (
-        kll_quantiles(sk_day, qs=(0.5, 0.95))
+        kll_quantiles(sk_day)
         .orderBy("conv_id", "bucket_start")
         .toPandas()
     )

@@ -12,7 +12,30 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from ts_raster_spark.operators.mg import _mg_from_counts, mg_merge, mg_sketch
+from ts_raster_spark.operators.mg import mg_merge, mg_sketch
+
+
+def _mg_from_counts(items: np.ndarray, counts: np.ndarray, k: int):
+    """Deterministic MG summary from exact (item, count) pairs — the
+    local reference for the engine's closed-form reduction.
+
+    Feeding exact counts count-major (desc), item-asc through MG is
+    equivalent to: keep the k largest (count, item) pairs, subtract the
+    weight that must be decremented so at most k counters survive.
+    Closed form: survivors = top-k by (count desc, item asc); err = the
+    (k+1)-th largest count (0 if fewer than k+1 items), each survivor's
+    weight = max(count - err, 0) dropped if 0.  This matches running
+    textbook MG on the count-major canonical stream and is what the
+    engine's merge reduction (``mg._reduce_sql``) also produces.
+    """
+    if len(items) <= k:
+        return items, counts.astype(np.int64), 0
+    order = np.lexsort((items, -counts))
+    items, counts = items[order], counts[order]
+    err = int(counts[k])
+    keep_items, keep_counts = items[:k], counts[:k] - err
+    pos = keep_counts > 0
+    return keep_items[pos], keep_counts[pos].astype(np.int64), err
 
 
 def _summary(values, k):

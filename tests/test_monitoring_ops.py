@@ -51,7 +51,7 @@ def cusum_input(spark):
 
 def test_cusum_matches_sequential_recursion(cusum_input):
     got = (
-        cusum(cusum_input, "value", ("conv_id",), "turn_idx", k=0.5, h=4.0)
+        cusum(cusum_input, "value", ("conv_id",), "turn_idx")
         .toPandas()
         .sort_values(["conv_id", "turn_idx"])
     )
@@ -71,7 +71,7 @@ def test_cusum_matches_sequential_recursion(cusum_input):
 
 def test_cusum_shift_detected_and_clamped(cusum_input):
     got = (
-        cusum(cusum_input, "value", ("conv_id",), "turn_idx", k=0.5, h=4.0)
+        cusum(cusum_input, "value", ("conv_id",), "turn_idx")
         .toPandas()
     )
     # scores are never negative (the max(0, .) clamp)
@@ -96,7 +96,7 @@ def test_seasonal_baseline_profile(spark):
                  float(100 + 10 * hh + (d % 3)))
             )
     df = spark.createDataFrame(rows, "bucket_start timestamp, v double")
-    got = seasonal_baseline(df, "bucket_start", "v", period="hod").toPandas()
+    got = seasonal_baseline(df, "v", period="hod").toPandas()
     pdf = pd.DataFrame(rows, columns=["bucket_start", "v"])
     pdf["pkey"] = pd.to_datetime(pdf["bucket_start"]).dt.hour
     prof = pdf.groupby("pkey")["v"].agg(["mean", lambda s: s.std(ddof=0)])
@@ -123,7 +123,7 @@ def test_seasonal_dow_matches_duckdb_convention(spark):
         "bucket_start timestamp, v double",
     )
     got = (
-        seasonal_baseline(df, "bucket_start", "v", period="dow")
+        seasonal_baseline(df, "v", period="dow")
         .select("bucket_start", "pkey").toPandas().sort_values("bucket_start")
     )
     assert got["pkey"].tolist() == [0, 1]
@@ -165,7 +165,7 @@ def test_pairwise_corr_min_buckets(spark):
         [(0, "a", 1.0), (1, "a", 2.0), (0, "b", 1.0), (1, "b", 3.0), (5, "c", 9.0)],
         "t int, series string, v double",
     )
-    got = pairwise_corr(df, "t", "series", "v", min_buckets=2).toPandas()
+    got = pairwise_corr(df, "t", "series", "v").toPandas()
     # c co-observed with nothing: only the (a, b) pair survives
     assert got[["series_a", "series_b"]].values.tolist() == [["a", "b"]]
 
@@ -187,8 +187,7 @@ def test_cross_corr_detects_lead(spark):
             rows.append((ts, "b", float(rng.normal(0, 1))))
     df = spark.createDataFrame(rows, "bucket_start timestamp, series string, v double")
     got = (
-        cross_corr_lags(df, "bucket_start", "series", "v",
-                        lags=(-2, -1, 0, 1, 2), step_seconds=3600)
+        cross_corr_lags(df, "bucket_start", "series", "v")
         .toPandas()
         .set_index("lag")
     )
@@ -216,7 +215,7 @@ def test_classical_decompose_reconstructs_and_recovers_season(spark):
         rows.append((ts, float(round(v, 4))))
     df = spark.createDataFrame(rows, "bucket_start timestamp, v double")
     got = (
-        classical_decompose(df, "bucket_start", "v", period="hod", half_window=12)
+        classical_decompose(df, "v")
         .toPandas()
         .sort_values("bucket_start")
         .reset_index(drop=True)

@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 from ts_raster_spark.functions import features as FT
 from ts_raster_spark.operators.longform import to_long_panel, with_channels
 from ts_raster_spark.operators.mask import mask_df
-from ts_raster_spark.operators.rollup import bucketize, rollup_simple_wide
+from ts_raster_spark.operators.rollup import bucketize, rollup_features, rollup_simple_wide
 
 SF = "/root/testdata/sf0.001"
 
@@ -54,6 +54,21 @@ def test_rollup_single_exchange(spark, turns_small):
     # rollup keys, so the windows and the groupBy reuse its exchange
     n_exchanges = plan.count("Exchange hashpartitioning")
     assert n_exchanges <= 1, f"expected <=1 hash exchange (conv_id, shared by the latency window and the rollup), got {n_exchanges}:\n{plan[:2000]}"
+
+
+def test_helper_free_rollup_prunes_helper_windows(spark, turns_small):
+    """rollup_features attaches the value-rank, group-stat and Benford
+    helpers to every request and leaves the pruning to Catalyst: a
+    helper-free request (q_mask_rollup_hour's four features) plans as many
+    Window nodes as a plain groupBy of the same aggregates over the same
+    input, while a request that reads a helper plans more."""
+    names = ["turn_count", "mean", "maximum", "minimum"]
+    long_df = to_long_panel(turns_small).where(F.col("kind") == "text_len")
+    df, keys = bucketize(long_df, "hour")
+    aggs = FT.default_feature_aggs()
+    plain = _plan(df.groupBy(*keys).agg(*[aggs[n].alias(n) for n in names])).count("Window")
+    assert _plan(rollup_features(long_df, tier="hour", feature_names=names)).count("Window") == plain
+    assert _plan(rollup_features(long_df, tier="hour", include_strikes=True)).count("Window") > plain
 
 
 def test_wide_rollup_prunes_latency_window(spark, turns_small):

@@ -24,7 +24,7 @@ def test_projection_matches_numpy(spark):
     rows = [(int(i), [float(x) for x in v]) for i, v in enumerate(vecs)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     got = (
-        random_projection(df, d=64, k=16)
+        random_projection(df)
         .orderBy("vec_id")
         .toPandas()[[f"p{j}" for j in range(16)]]
         .to_numpy()

@@ -39,7 +39,7 @@ def test_blocked_near_dup_recall_vs_exact(spark, neardup_emb):
     blocked = {
         (r["vec_a"], r["vec_b"])
         for r in cosine_near_dup_blocked(
-            neardup_emb, threshold=0.95, n_planes=8, n_bands=4
+            neardup_emb, threshold=0.95, n_bands=4
         ).collect()
     }
     assert len(exact) >= 50  # the construction really makes near-dups

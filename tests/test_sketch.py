@@ -33,7 +33,7 @@ def test_sketch_quantile_error_bounded_by_bin_width(spark, turns_small):
     rng = value_range(long_df)
     sk = histogram_sketch(long_df, None, rng, BINS)
     approx = (
-        sketch_quantiles(sk, rng, qs=(0.5, 0.95), bins=BINS)
+        sketch_quantiles(sk, rng, bins=BINS)
         .toPandas()
         .set_index("conv_id")
     )
@@ -68,6 +68,6 @@ def test_sketch_constant_kind_collapses_to_lo(spark, turns_small):
     )
     rng = value_range(long_df)
     sk = histogram_sketch(long_df, None, rng, BINS)
-    out = sketch_quantiles(sk, rng, qs=(0.5, 0.95), bins=BINS).toPandas()
+    out = sketch_quantiles(sk, rng, bins=BINS).toPandas()
     assert (out["q50_sketch"] == 7.0).all()
     assert (out["q95_sketch"] == 7.0).all()

@@ -45,7 +45,7 @@ def test_pearson_p_value_monte_carlo():
 
 def test_bh_procedure():
     ps = {"a": 0.001, "b": 0.012, "c": 0.04, "d": 0.6, "e": float("nan")}
-    rel = benjamini_hochberg(ps, fdr_level=0.05)
+    rel = benjamini_hochberg(ps)
     assert rel["a"] and rel["b"]
     assert not rel["d"] and not rel["e"]
 

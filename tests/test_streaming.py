@@ -156,9 +156,9 @@ def test_stream_dedup_exact_parity(spark, tmp_path):
 )
 def test_stream_query_calls_use_own_directories(spark, turns_small, monkeypatch, query):
     """Two runs of a declared streaming query in one session feed their
-    streams from distinct input directories, remove them, and return the
-    same rows (for stream_dedup_exact: the base turns projection, the
-    query's oracle)."""
+    streams from distinct input directories, remove them, leave no
+    ``tsrs_stream_*`` table in the session, and return the same rows (for
+    stream_dedup_exact: the base turns projection, the query's oracle)."""
     import os
 
     from ts_raster_spark import queries as Q
@@ -180,3 +180,5 @@ def test_stream_query_calls_use_own_directories(spark, turns_small, monkeypatch,
         assert first == sorted(want.collect())
     assert len(paths) == 2 and paths[0] != paths[1], paths
     assert not any(os.path.exists(p) for p in paths), paths
+    left = [t.name for t in spark.catalog.listTables() if t.name.startswith("tsrs_stream_")]
+    assert not left, left

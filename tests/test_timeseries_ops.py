@@ -38,7 +38,7 @@ def toy(spark):
 
 
 def test_ohlc(toy):
-    out = {r["conv_id"]: r for r in ohlc(toy, "value", "hour").collect()}
+    out = {r["conv_id"]: r for r in ohlc(toy).collect()}
     a = out["a"]
     assert (a["open"], a["high"], a["low"], a["close"], a["n_points"]) == (5.0, 12.0, 3.0, 9.0, 4)
     b = out["b"]
@@ -48,7 +48,7 @@ def test_ohlc(toy):
 def test_counter_rollup_counts_resets(spark, toy):
     # use the value column directly as the counter: 5 -> 12 (+7),
     # 12 -> 3 (reset, +3), 3 -> 9 (+6) => increase 16, 1 reset
-    out = counter_rollup(toy.withColumn("counter", F.col("value")), "counter", "hour").collect()
+    out = counter_rollup(toy.withColumn("counter", F.col("value"))).collect()
     a = next(r for r in out if r["conv_id"] == "a")
     assert a["increase"] == pytest.approx(16.0)
     assert a["num_resets"] == 1
@@ -69,7 +69,7 @@ def test_counter_bucket_boundary_is_hard_cut(spark):
     df = spark.createDataFrame(
         rows, "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp, value double"
     ).withColumn("counter", F.col("value"))
-    out = {r["bucket_start"].hour: r for r in counter_rollup(df, "counter", "hour").collect()}
+    out = {r["bucket_start"].hour: r for r in counter_rollup(df).collect()}
     assert out[10]["increase"] == pytest.approx(4.0)
     assert out[11]["increase"] == 0.0  # no in-bucket pair
     assert out[11]["n_points"] == 1
@@ -98,7 +98,7 @@ def test_state_durations(toy):
 
 
 def test_heartbeat_uptime(toy):
-    out = {r["conv_id"]: r for r in heartbeat_uptime(toy, tolerance_s=60.0).collect()}
+    out = {r["conv_id"]: r for r in heartbeat_uptime(toy).collect()}
     a = out["a"]
     # gaps: 60 (live), 1740 (gap), 900 (gap); uptime = 60+60+60 + trailing 60
     assert a["uptime_s"] == pytest.approx(240.0)
@@ -113,7 +113,7 @@ def test_heartbeat_uptime(toy):
 def test_counter_rollup_single_exchange(spark, toy):
     """lag windows + groupBy share the conv_id hash partitioning."""
     plan = (
-        counter_rollup(with_synthetic_counter(toy), "counter", "hour")
+        counter_rollup(with_synthetic_counter(toy))
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert plan.count("Exchange") == 1, plan

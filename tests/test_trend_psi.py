@@ -100,7 +100,7 @@ def test_psi_drift_matches_numpy(spark):
     rng_df = value_range(df)
     sk = histogram_sketch(df, "day", rng_df, bins=64)
     got = (
-        psi_drift(sk, bins=64, eps=0.5)
+        psi_drift(sk, bins=64)
         .toPandas()
         .sort_values("bucket_start")
         .reset_index(drop=True)

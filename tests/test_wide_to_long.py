@@ -27,7 +27,7 @@ def test_wide_to_long_roundtrips_combine_periods(spark, turns_small):
         for label, df in halves.items()
     }
     wide = combine_periods(frames, ["conv_id"])
-    long = wide_to_long(wide, keys=["conv_id"], sep="_")
+    long = wide_to_long(wide, keys=["conv_id"])
 
     assert set(long.columns) == {"conv_id", "period", "turn_count", "mean_text_len"}
     n_convs = wide.count()

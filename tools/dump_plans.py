@@ -268,8 +268,7 @@ AUDITS = [
         Q.q_decompose_hourly,
         "Classical decomposition (round 5): raw turns reduce to hourly "
         "buckets BEFORE any window; the single-partition centered-MA "
-        "window runs over the tiny tier series only (pass entity_cols "
-        "to parallelize per entity at scale — operator docstring).",
+        "window runs over the tiny tier series only.",
     ),
     (
         "m4_downsample",

@@ -38,7 +38,6 @@ def gen_turns(
     max_turns: int = 60,
     seed: int = 42,
     mega_conv_turns: int = 0,
-    partitions: int | None = None,
 ) -> DataFrame:
     """Generate the F1 turns table.
 
@@ -48,7 +47,7 @@ def gen_turns(
     start + cumulative seeded gaps; text = f(conv_id, turn_idx).
     """
     s = F.lit(seed)
-    convs = spark.range(n_convs, numPartitions=partitions).select(
+    convs = spark.range(n_convs).select(
         F.col("id").alias("conv_no"),
         (
             F.lit(min_turns)

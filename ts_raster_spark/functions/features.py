@@ -82,11 +82,12 @@ def attach_group_stats(df: DataFrame, keys: list[str], lags=(1, 2)) -> DataFrame
     return out
 
 
-def peaks_aggs(ns=PEAK_NS) -> dict[str, Column]:
-    """tsfresh number_peaks(n): count of interior points strictly above
-    all neighbours within distance n. Requires ``attach_group_stats``."""
+def peaks_aggs() -> dict[str, Column]:
+    """tsfresh number_peaks(n) for each n in ``PEAK_NS``: count of
+    interior points strictly above all neighbours within distance n.
+    Requires ``attach_group_stats``."""
     out = {}
-    for n in ns:
+    for n in PEAK_NS:
         is_peak = (
             (F.col(RN) > n)
             & (F.col(RN) <= F.col("_nrows") - n)
@@ -268,10 +269,10 @@ def change_aggs() -> dict[str, Column]:
     }
 
 
-def ratio_beyond_r_sigma_aggs(rs=(2.0, 3.0)) -> dict[str, Column]:
-    """mean(|x - mu| > r * sigma_pop) — examples nb group_1."""
+def ratio_beyond_r_sigma_aggs() -> dict[str, Column]:
+    """mean(|x - mu| > r * sigma_pop) for r in 2, 3 — examples nb group_1."""
     out = {}
-    for r in rs:
+    for r in (2.0, 3.0):
         flag = (F.abs(F.col(V) - F.col(MU)) > F.lit(float(r)) * F.col(SIG)).cast("double")
         out[f"ratio_beyond_r_sigma_r{int(r)}"] = F.avg(flag)
     return out
@@ -353,13 +354,13 @@ def benford_agg() -> dict[str, Column]:
     }
 
 
-def energy_ratio_agg(num_segments: int = 10, segment_focus: int = 0) -> dict[str, Column]:
-    """tsfresh energy_ratio_by_chunks: Σx² of the focus chunk over total
-    Σx², chunks per np.array_split (first n%s chunks one element
-    longer). Requires ``attach_group_stats`` (RN, _nrows)."""
+def energy_ratio_agg() -> dict[str, Column]:
+    """tsfresh energy_ratio_by_chunks(num_segments=10, segment_focus=0):
+    Σx² of the focus chunk over total Σx², chunks per np.array_split
+    (first n%s chunks one element longer). Requires
+    ``attach_group_stats`` (RN, _nrows)."""
     n = F.col("_nrows")
-    s = num_segments
-    f = segment_focus
+    s, f = 10, 0
     k = F.floor(n / s)
     m = n % s
     lo = f * k + F.least(F.lit(f).cast("long"), m)
@@ -392,8 +393,8 @@ def location_aggs() -> dict[str, Column]:
     }
 
 
-def large_standard_deviation_aggs(rs=(0.25,)) -> dict[str, Column]:
-    """sigma_pop > r * (max - min) — examples/calculateFeatures.ipynb.
+def large_standard_deviation_aggs() -> dict[str, Column]:
+    """sigma_pop > r * (max - min) for r = 0.25 — examples/calculateFeatures.ipynb.
 
     The comparison goes through a SCALE-RELATIVE quantized difference:
     ``round((sigma - r*range) / greatest(sigma, r*range), 9) > 0``
@@ -406,7 +407,7 @@ def large_standard_deviation_aggs(rs=(0.25,)) -> dict[str, Column]:
     inequalities rounded to 0) and |x|~1e6 (dust survived).  Mirrored
     textually in the DuckDB twin."""
     out = {}
-    for r in rs:
+    for r in (0.25,):
         sigma = F.stddev_pop(V)
         bound = F.lit(float(r)) * (F.max(V) - F.min(V))
         scale = F.greatest(sigma, bound)
@@ -487,12 +488,17 @@ def strike_aggs() -> dict[str, Column]:
     }
 
 
-def attach_entropy_cols(df: DataFrame, keys: list[str], bins: int = 10) -> DataFrame:
-    """Equal-width histogram bin id as a row column: a pure projection,
-    so no per-(keys, bin) count window and no sort.  ``entropy_agg``
-    folds the fixed-width histogram with ``bins`` conditional sums in
-    the main codegen aggregate.  Requires ``attach_group_stats``
-    (VMAX/VMIN/_nrows)."""
+ENTROPY_BINS = 10
+TREND_CHUNK_LEN = 3
+
+
+def attach_entropy_cols(df: DataFrame) -> DataFrame:
+    """Equal-width histogram bin id (``ENTROPY_BINS`` bins) as a row
+    column: a pure projection, so no per-(keys, bin) count window and no
+    sort.  ``entropy_agg`` folds the fixed-width histogram with one
+    conditional sum per bin in the main codegen aggregate.  Requires
+    ``attach_group_stats`` (VMAX/VMIN/_nrows)."""
+    bins = ENTROPY_BINS
     width = (F.col(VMAX) - F.col(VMIN)) / bins
     bin_id = F.when(
         F.col(VMAX) > F.col(VMIN),
@@ -501,10 +507,11 @@ def attach_entropy_cols(df: DataFrame, keys: list[str], bins: int = 10) -> DataF
     return df.withColumn("_bin", bin_id)
 
 
-def entropy_agg(bins: int = 10) -> dict[str, Column]:
-    """Shannon entropy of the histogram from ``bins`` conditional count
-    sums (p_b = c_b / n, term −p_b·ln(p_b) per non-empty bin) — plain
-    codegen aggregates, no per-bin window."""
+def entropy_agg() -> dict[str, Column]:
+    """Shannon entropy of the histogram from ``ENTROPY_BINS`` conditional
+    count sums (p_b = c_b / n, term −p_b·ln(p_b) per non-empty bin) —
+    plain codegen aggregates, no per-bin window."""
+    bins = ENTROPY_BINS
     n = F.max(F.col("_nrows")).cast("double")
     terms = None
     for b in range(bins):
@@ -515,9 +522,10 @@ def entropy_agg(bins: int = 10) -> dict[str, Column]:
     return {f"binned_entropy_{bins}": -terms}
 
 
-def attach_trend_cols(df: DataFrame, keys: list[str], chunk_len: int = 3) -> DataFrame:
+def attach_trend_cols(df: DataFrame, keys: list[str]) -> DataFrame:
     """Chunk id, chunk aggregate (max) and first-of-chunk flag as row
-    columns. Requires ``attach_group_stats`` (RN).
+    columns, ``TREND_CHUNK_LEN`` rows a chunk. Requires
+    ``attach_group_stats`` (RN).
 
     A chunk's rows are consecutive in the (keys, ORDER_COLS) sort, so
     the chunk max seen from its FIRST row is a forward row frame
@@ -525,6 +533,7 @@ def attach_trend_cols(df: DataFrame, keys: list[str], chunk_len: int = 3) -> Dat
     uses: no per-(keys, chunk) window partition, no extra sort.
     Non-first rows get the max of the wrong frame, which is fine:
     ``trend_agg`` only reads ``_chunk_agg`` where ``_chunk_first``."""
+    chunk_len = TREND_CHUNK_LEN
     wo_fwd = (
         Window.partitionBy(*keys)
         .orderBy(*[F.col(c) for c in ORDER_COLS])
@@ -536,11 +545,12 @@ def attach_trend_cols(df: DataFrame, keys: list[str], chunk_len: int = 3) -> Dat
     return out.withColumn("_chunk_first", ((F.col(RN) - 1) % chunk_len == 0).cast("int"))
 
 
-def trend_agg(chunk_len: int = 3) -> dict[str, Column]:
-    """tsfresh agg_linear_trend(attr='slope', chunk_len, f_agg='max'):
-    OLS slope of the chunk max on the chunk index over the
+def trend_agg() -> dict[str, Column]:
+    """tsfresh agg_linear_trend(attr='slope', chunk_len=TREND_CHUNK_LEN,
+    f_agg='max'): OLS slope of the chunk max on the chunk index over the
     first-of-chunk rows — regr_slope semantics (NULL for <2 chunks) from
     null-safe conditional sums."""
+    chunk_len = TREND_CHUNK_LEN
     first = F.col("_chunk_first") == 1
     x = F.when(first, F.col("_chunk").cast("double"))
     y = F.when(first, F.col("_chunk_agg"))

@@ -152,10 +152,11 @@ def count_aggs() -> dict[str, Column]:
     }
 
 
-def mean_n_absolute_max_agg(n_maxima: int = 3) -> dict[str, Column]:
-    """Mean of the ``n_maxima`` largest |x|; NULL when len <= n_maxima
+def mean_n_absolute_max_agg() -> dict[str, Column]:
+    """Mean of the ``n_maxima`` = 3 largest |x|; NULL when len <= n_maxima
     (tsfresh contract).  Uses the |x|-descending row number ``_rnabs``
     (ties broken arbitrarily — the top-n MEAN is tie-invariant)."""
+    n_maxima = 3
     return {
         f"mean_n_absolute_max_{n_maxima}": F.when(
             _n() > n_maxima,
@@ -164,11 +165,13 @@ def mean_n_absolute_max_agg(n_maxima: int = 3) -> dict[str, Column]:
     }
 
 
-def symmetry_looking_agg(r: float = 0.25) -> dict[str, Column]:
-    """|mean - median| < r * (max - min), as 0/1.  Same SCALE-RELATIVE
-    quantized-difference boundary contract as large_standard_deviation
-    (strict comparisons on exactly-equal sides must not split across
-    engines' aggregation dust, at any value magnitude)."""
+def symmetry_looking_agg() -> dict[str, Column]:
+    """|mean - median| < r * (max - min) for r = 0.25, as 0/1.  Same
+    SCALE-RELATIVE quantized-difference boundary contract as
+    large_standard_deviation (strict comparisons on exactly-equal sides
+    must not split across engines' aggregation dust, at any value
+    magnitude)."""
+    r = 0.25
     name = f"symmetry_looking_r{str(r).replace('0.', '')}"
     bound = F.lit(float(r)) * (F.max(V) - F.min(V))
     dev = F.abs(F.avg(F.col(V)) - rank_quantile_agg(0.5))
@@ -181,10 +184,11 @@ def symmetry_looking_agg(r: float = 0.25) -> dict[str, Column]:
     }
 
 
-def index_mass_quantile_agg(q: float = 0.5) -> dict[str, Column]:
-    """Relative index where the cumulative |x| mass first reaches q of
-    the total: (argmax(cumsum(|x|)/sum(|x|) >= q) + 1) / n.  NULL when
-    sum(|x|) == 0 (tsfresh NaN)."""
+def index_mass_quantile_agg() -> dict[str, Column]:
+    """Relative index where the cumulative |x| mass first reaches q = 0.5
+    of the total: (argmax(cumsum(|x|)/sum(|x|) >= q) + 1) / n.  NULL
+    when sum(|x|) == 0 (tsfresh NaN)."""
+    q = 0.5
     name = f"index_mass_quantile_q{str(q).replace('0.', '')}"
     hit = F.when(F.col(CUMABS) >= F.lit(float(q)) * F.col(TOTABS), F.col(RN))
     return {
@@ -192,12 +196,13 @@ def index_mass_quantile_agg(q: float = 0.5) -> dict[str, Column]:
     }
 
 
-def fft_coefficient_aggs(k: int = 1) -> dict[str, Column]:
-    """Single rfft coefficient X_k = sum_t x_t * exp(-2*pi*i*k*(t-1)/N)
-    as four native sums (real / imag / abs / angle-in-degrees).  The
-    per-row angle uses RN and the group length from the shared window.
-    NULL when N < 2*k is NOT required — rfft exposes bin k whenever
-    k <= N//2, so the guard is N >= 2k."""
+def fft_coefficient_aggs() -> dict[str, Column]:
+    """Single rfft coefficient X_k = sum_t x_t * exp(-2*pi*i*k*(t-1)/N),
+    k = 1, as four native sums (real / imag / abs / angle-in-degrees).
+    The per-row angle uses RN and the group length from the shared
+    window.  NULL when N < 2*k is NOT required — rfft exposes bin k
+    whenever k <= N//2, so the guard is N >= 2k."""
+    k = 1
     theta = 2.0 * 3.141592653589793 * k * (F.col(RN) - 1).cast("double") / F.col("_nrows")
     re = F.sum(F.col(V) * F.cos(theta))
     im = -F.sum(F.col(V) * F.sin(theta))
@@ -221,10 +226,9 @@ def fft_coefficient_aggs(k: int = 1) -> dict[str, Column]:
     }
 
 
-def change_quantiles_agg(
-    ql: float = CHANGE_QL, qh: float = CHANGE_QH
-) -> dict[str, Column]:
-    """tsfresh change_quantiles(ql, qh, isabs=True, f_agg='mean'): mean
+def change_quantiles_agg() -> dict[str, Column]:
+    """tsfresh change_quantiles(CHANGE_QL, CHANGE_QH, isabs=True,
+    f_agg='mean'): mean
     |diff| over consecutive pairs whose BOTH endpoints lie inside the
     closed corridor [quantile(ql), quantile(qh)]; 0 when the corridor is
     degenerate or selects no pair.  Helper columns ``_ql``/``_qh`` carry
@@ -235,9 +239,9 @@ def change_quantiles_agg(
     sel = F.when(l1.isNotNull() & inside & prev_inside, F.abs(v - l1))
     name = (
         "change_quantiles_ql"
-        + str(ql).replace("0.", "")
+        + str(CHANGE_QL).replace("0.", "")
         + "_qh"
-        + str(qh).replace("0.", "")
+        + str(CHANGE_QH).replace("0.", "")
         + "_abs_mean"
     )
     return {
@@ -308,7 +312,7 @@ def ext_feature_aggs() -> dict[str, Column]:
     aggs.update(mean_n_absolute_max_agg())
     aggs.update(symmetry_looking_agg())
     aggs.update(index_mass_quantile_agg())
-    aggs.update(fft_coefficient_aggs(1))
+    aggs.update(fft_coefficient_aggs())
     aggs.update(change_quantiles_agg())
     aggs.update(partial_autocorrelation_agg())
     aggs.update(linear_trend_aggs())

@@ -12,8 +12,9 @@ from __future__ import annotations
 import math
 
 
-def _betacf(a: float, b: float, x: float, max_iter: int = 200, eps: float = 3e-14) -> float:
-    """Continued fraction for the incomplete beta (modified Lentz)."""
+def _betacf(a: float, b: float, x: float) -> float:
+    """Continued fraction for the incomplete beta (modified Lentz): at
+    most 200 terms, stopping once a term changes the product by < 3e-14."""
     qab, qap, qam = a + b, a + 1.0, a - 1.0
     c = 1.0
     d = 1.0 - qab * x / qap
@@ -21,7 +22,7 @@ def _betacf(a: float, b: float, x: float, max_iter: int = 200, eps: float = 3e-1
         d = 1e-300
     d = 1.0 / d
     h = d
-    for m in range(1, max_iter + 1):
+    for m in range(1, 201):
         m2 = 2 * m
         aa = m * (b - m) * x / ((qam + m2) * (a + m2))
         d = 1.0 + aa * d
@@ -42,7 +43,7 @@ def _betacf(a: float, b: float, x: float, max_iter: int = 200, eps: float = 3e-1
         d = 1.0 / d
         delta = d * c
         h *= delta
-        if abs(delta - 1.0) < eps:
+        if abs(delta - 1.0) < 3e-14:
             break
     return h
 
@@ -81,9 +82,9 @@ def pearson_p_value(r: float, n: int) -> float:
     return t_sf_two_sided(t, n - 2)
 
 
-def benjamini_hochberg(p_values: dict[str, float], fdr_level: float = 0.05) -> dict[str, bool]:
-    """BH step-up procedure (the tsfresh default FDR control,
-    fdr_level=0.05). NaN p-values are never relevant."""
+def benjamini_hochberg(p_values: dict[str, float]) -> dict[str, bool]:
+    """BH step-up procedure at FDR level 0.05 (the tsfresh default FDR
+    control). NaN p-values are never relevant."""
     valid = [(k, p) for k, p in p_values.items() if p == p]
     # ties broken by key so the decision is engine-reproducible (the
     # DuckDB twin orders BY p_value, feature)
@@ -91,7 +92,7 @@ def benjamini_hochberg(p_values: dict[str, float], fdr_level: float = 0.05) -> d
     m = len(valid)
     cutoff_rank = 0
     for i, (_, p) in enumerate(valid, start=1):
-        if p <= fdr_level * i / m:
+        if p <= 0.05 * i / m:
             cutoff_rank = i
     relevant = {k: (i <= cutoff_rank) for i, (k, _) in enumerate(valid, start=1)}
     return {k: relevant.get(k, False) for k in p_values}

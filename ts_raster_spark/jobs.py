@@ -118,7 +118,7 @@ def run_rollup_job(
             long_df = to_long_panel(turns)
             if cfg.kinds:
                 long_df = long_df.where(long_df.kind.isin(*cfg.kinds))
-            blocks = compress_blocks(long_df, block="day")
+            blocks = compress_blocks(long_df)
             cat.write(blocks.withColumnRenamed("block_start", "bucket_start"), "raw_blocks")
 
         tables["raw_blocks"] = "raw_blocks"

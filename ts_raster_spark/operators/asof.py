@@ -1,8 +1,9 @@
 """As-of join + session windows — time-series operators Spark lacks as
 built-in joins, composed from DataFrame primitives.
 
-- :func:`asof_join_backward` — for every left row, the most recent right
-  row at-or-before its timestamp within the same key (the operator
+- :func:`asof_join` — for every left row, the most recent right row
+  at-or-before its timestamp within the same key (``"backward"``), or
+  the earliest at-or-after it (``"forward"``) (the operator
   implicit in the reference's locf gap-fill, SURVEY.md §2.4). Built as
   union → ordered window `last(ignorenulls)` → filter: one shuffle on
   the key, no range-explode, no per-row Python. (DuckDB's native
@@ -83,8 +84,8 @@ def asof_join(
     # ONE struct pick (match ts + all value cols together), not one pick
     # per column: per-column last/first(ignorenulls) would skip a NULL
     # value in the matched row and fetch that column from a FARTHER row
-    # while the tolerance gate still judged the nearer row's timestamp
-    # (round-3 advisor). merge_asof attaches the matched row wholesale,
+    # while the tolerance gate still judged the nearer row's timestamp.
+    # merge_asof attaches the matched row wholesale,
     # NULLs included — so the whole right row travels as one nullable
     # struct (NULL on left rows; a struct of NULLs is non-NULL, hence
     # the explicit _side guard).
@@ -108,18 +109,6 @@ def asof_join(
         *[F.col(f"_row.{c}").alias(c) for c in left.columns],
         *[F.col(f"_r_{c}").alias(c) for c in value_cols],
     )
-
-
-def asof_join_backward(
-    left: DataFrame,
-    right: DataFrame,
-    key: str,
-    left_ts: str,
-    right_ts: str,
-    value_cols: list[str],
-) -> DataFrame:
-    """Backward as-of join (see :func:`asof_join`)."""
-    return asof_join(left, right, key, left_ts, right_ts, value_cols, "backward")
 
 
 def time_weighted_avg_hour(long_df: DataFrame) -> DataFrame:
@@ -159,13 +148,13 @@ def time_weighted_avg_hour(long_df: DataFrame) -> DataFrame:
     )
 
 
-def session_windows(turns: DataFrame, gap: str = "30 minutes") -> DataFrame:
-    """Per-conversation activity sessions: turns closer than ``gap``
+def session_windows(turns: DataFrame) -> DataFrame:
+    """Per-conversation activity sessions: turns closer than 30 minutes
     merge into one session (native merging session aggregation).
 
     Output: (conv_id, session_start, session_end, n_turns)."""
     return (
-        turns.groupBy("conv_id", F.session_window("ts", gap).alias("w"))
+        turns.groupBy("conv_id", F.session_window("ts", "30 minutes").alias("w"))
         .agg(F.count("*").cast("long").alias("n_turns"))
         .select(
             "conv_id",

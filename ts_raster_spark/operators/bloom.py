@@ -86,9 +86,9 @@ def bloom_might_contain(
     bloom: DataFrame,
     m_bits: int = 1 << 20,
     k_hashes: int = 5,
-    out_col: str = "bloom_might_contain",
 ) -> DataFrame:
-    """Add boolean ``out_col``: true iff ``col`` may be in the built set.
+    """Add boolean ``bloom_might_contain``: true iff ``col`` may be in
+    the built set.
 
     No false negatives (a built key always tests true). The bitmap
     joins in as a broadcast 1-row relation; the probe side gains no
@@ -102,7 +102,7 @@ def bloom_might_contain(
             f"(coalesce(element_at(bloom_map, {block}), 0L) & {mask}) != 0L"
         )
     probe = df.crossJoin(F.broadcast(bloom))
-    return probe.withColumn(out_col, F.expr(" AND ".join(tests))).drop(
+    return probe.withColumn("bloom_might_contain", F.expr(" AND ".join(tests))).drop(
         "bloom_map"
     )
 
@@ -111,11 +111,9 @@ def decontaminate_ngrams_bloom(
     train: DataFrame,
     benchmark: DataFrame,
     n: int = 5,
-    threshold: float = 0.1,
-    m_bits: int = 1 << 20,
-    k_hashes: int = 5,
 ) -> DataFrame:
-    """Benchmark decontamination with a Bloom-pruned overlap probe.
+    """Benchmark decontamination with a Bloom-pruned overlap probe; a
+    document is contaminated at an overlap fraction >= 0.1.
 
     Identical output to :func:`~ts_raster_spark.operators.dedup.
     decontaminate_ngrams` (same columns, same rows — the bitmap only
@@ -133,9 +131,9 @@ def decontaminate_ngrams_bloom(
     sizes = tr.groupBy("doc_id").agg(
         F.count("*").cast("long").alias("n_ngrams")
     )
-    bloom = bloom_build(bench, "ngram", m_bits, k_hashes)
+    bloom = bloom_build(bench, "ngram")
     candidates = (
-        bloom_might_contain(tr, "ngram", bloom, m_bits, k_hashes)
+        bloom_might_contain(tr, "ngram", bloom)
         .where(F.col("bloom_might_contain"))
         .drop("bloom_might_contain")
     )
@@ -153,5 +151,5 @@ def decontaminate_ngrams_bloom(
         "n_ngrams",
         "n_overlap",
         r4(frac).alias("overlap_frac"),
-        (frac >= threshold).cast("int").alias("contaminated"),
+        (frac >= 0.1).cast("int").alias("contaminated"),
     )

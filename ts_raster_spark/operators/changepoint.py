@@ -44,24 +44,22 @@ def cusum(
     value_col: str = "value",
     entity_cols: Sequence[str] = ("conv_id",),
     order_col: str = "turn_idx",
-    k: float = 0.5,
-    h: float = 4.0,
 ) -> DataFrame:
     """Two-sided CUSUM scores + alarm flags per entity.
 
     Returns one row per input row: entity cols, ``order_col``,
     ``cusum_pos`` / ``cusum_neg`` (the clamped one-sided statistics),
-    and ``alarm_pos`` / ``alarm_neg`` (int 0/1, S/sigma > h).  The
+    and ``alarm_pos`` / ``alarm_neg`` (int 0/1, S/sigma > h = 4).  The
     in-control target is the per-entity mean and the slack is
-    ``k * sigma_pop`` (self-tuned; pass a pre-centred column and k=0
-    for an external target).  Entities with sigma == 0 (constant
-    series) never alarm and carry all-zero scores.
+    ``k * sigma_pop`` with k = 0.5 (self-tuned).  Entities with
+    sigma == 0 (constant series) never alarm and carry all-zero scores.
     """
+    k, h = 0.5, 4.0
     ecols = [F.col(c) for c in entity_cols]
     # whole-partition mu/sigma share the running windows' (partition,
     # order) spec via an explicit unbounded frame — one Window operator,
     # one sort, instead of a keys-only sort plus a keys+order sort
-    # (round 6; values are order-independent whole-partition aggregates)
+    # (values are order-independent whole-partition aggregates)
     w_all = (
         Window.partitionBy(*ecols)
         .orderBy(order_col)

@@ -49,8 +49,9 @@ def chunk_documents(docs: DataFrame, chunk_tokens: int = 64, overlap: int = 16) 
     )
 
 
-def pack_documents(docs: DataFrame, budget: int = 512, shard_col: str = "source") -> DataFrame:
-    """Assign each document to a training pack: within a shard, in
+def pack_documents(docs: DataFrame, budget: int = 512) -> DataFrame:
+    """Assign each document to a training pack: within a shard (its
+    ``source``), in
     doc_id order, pack_id = floor(tokens-before-this-doc / budget) and
     offset_in_pack = tokens-before mod budget. Documents may straddle a
     budget boundary (they are split downstream by chunk_documents);
@@ -60,7 +61,7 @@ def pack_documents(docs: DataFrame, budget: int = 512, shard_col: str = "source"
     Output: (shard, doc_id, n_tokens, pack_id, offset_in_pack).
     """
     t = docs.select(
-        F.col(shard_col).alias("shard"),
+        F.col("source").alias("shard"),
         "doc_id",
         F.size(F.expr(TOKEN_WORDS)).cast("long").alias("n_tokens"),
     )

@@ -49,8 +49,8 @@ def _pos_expr(md5_col: str, w: int) -> str:
     When ``w`` is a power of two (the default 256), ``x % w`` depends
     only on the low ``log2(w)`` bits of x, i.e. the LAST
     ``ceil(log2(w)/4)`` of the 8 hex nibbles — for w=256 that is 2
-    nibble parses per row instead of 8 (round 6; the value is identical
-    because 16^k divides the dropped terms).  Non-power-of-two widths
+    nibble parses per row instead of 8 (the value is identical because
+    16^k divides the dropped terms).  Non-power-of-two widths
     fall back to the full 32-bit unpacking.
     """
     if w > 1 and (w & (w - 1)) == 0 and w <= (1 << 32):
@@ -85,11 +85,11 @@ def cms_build(
     df: DataFrame,
     item_col: str,
     tier: str = "hour",
-    ts_col: str = "ts",
     d: int = D,
     w: int = W,
 ) -> DataFrame:
-    """Build per-bucket CMS cells: (bucket_start, row, pos, c).
+    """Build per-bucket CMS cells: (bucket_start, row, pos, c), bucketed
+    on ``ts``.
 
     One generator explode (d rows per item occurrence) + one hash
     aggregate; partial aggregation caps the shuffle at d*w rows per
@@ -98,7 +98,7 @@ def cms_build(
     rows per bucket.
     """
     base = df.select(
-        F.date_trunc(tier, F.col(ts_col)).alias("bucket_start"),
+        F.date_trunc(tier, F.col("ts")).alias("bucket_start"),
         F.col(item_col).cast("string").alias("_item"),
     ).where(F.col("_item").isNotNull())
     return (
@@ -124,7 +124,6 @@ def cms_merge(cells: DataFrame, tier: str = "day") -> DataFrame:
 def cms_estimate(
     cells: DataFrame,
     probes: DataFrame,
-    item_col: str = "item",
     d: int = D,
     w: int = W,
 ) -> DataFrame:
@@ -136,13 +135,13 @@ def cms_estimate(
     exact + eps*N with probability 1 - e^-d over the hash draw.
     """
     p = _with_pos(
-        probes.select("bucket_start", F.col(item_col).cast("string").alias("_item")),
+        probes.select("bucket_start", F.col("item").cast("string").alias("_item")),
         "_item",
         d,
         w,
     )
     return (
         p.join(cells, ["bucket_start", "row", "pos"], "left")
-        .groupBy("bucket_start", F.col("_item").alias(item_col))
+        .groupBy("bucket_start", F.col("_item").alias("item"))
         .agg(F.min(F.coalesce(F.col("c"), F.lit(0))).alias("est"))
     )

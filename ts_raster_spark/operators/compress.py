@@ -70,13 +70,14 @@ def _encode_series(pdf: pd.DataFrame) -> list[tuple]:
     ]
 
 
-def compress_blocks(long_df: DataFrame, block: str = "day") -> DataFrame:
-    """long panel (conv_id, turn_idx, ts, kind, value) → Gorilla blocks.
+def compress_blocks(long_df: DataFrame) -> DataFrame:
+    """long panel (conv_id, turn_idx, ts, kind, value) → Gorilla blocks,
+    one per (conv_id, kind, day).
 
     One sorted run per (conv_id, kind); a mega-conversation's full
     channel must fit a task (~16 MB per 1M turns) — beyond that, add a
     coarse time salt to the keys (SURVEY.md §4)."""
-    keyed = long_df.withColumn("block_start", F.date_trunc(block, F.col("ts")))
+    keyed = long_df.withColumn("block_start", F.date_trunc("day", F.col("ts")))
     order = [c for c in ("turn_idx", "ts") if c in long_df.columns]
     return map_sorted_runs(keyed, ("conv_id", "kind"), order, _encode_series, BLOCK_SCHEMA)
 

@@ -29,7 +29,6 @@ def pairwise_corr(
     time_col: str,
     series_col: str,
     value_col: str,
-    min_buckets: int = 2,
 ) -> DataFrame:
     """Pearson correlation for every unordered series pair.
 
@@ -38,8 +37,7 @@ def pairwise_corr(
     gapfill operator for dense-zero semantics).  Returns one row per
     pair ``series_a < series_b``: ``corr`` (sample Pearson, null when a
     side is constant), ``n_buckets`` co-observed.  Pairs co-observed in
-    fewer than ``min_buckets`` buckets are dropped (corr undefined /
-    meaningless).
+    fewer than 2 buckets are dropped (corr undefined / meaningless).
     """
     a = df.select(
         F.col(time_col).alias("_t"),
@@ -69,7 +67,7 @@ def pairwise_corr(
             F.sum(F.col("_va") * F.col("_va")).alias("_saa"),
             F.sum(F.col("_vb") * F.col("_vb")).alias("_sbb"),
         )
-        .where(F.col("n_buckets") >= int(min_buckets))
+        .where(F.col("n_buckets") >= 2)
     )
     n = F.col("n_buckets").cast("double")
     cov = n * F.col("_sab") - F.col("_sa") * F.col("_sb")
@@ -88,16 +86,14 @@ def cross_corr_lags(
     time_col: str,
     series_col: str,
     value_col: str,
-    lags=(-2, -1, 0, 1, 2),
-    step_seconds: int = 3600,
-    min_buckets: int = 2,
 ) -> DataFrame:
     """Lead-lag cross-correlation: Pearson(A_t, B_{t + lag*step}) for
-    every unordered pair and every lag — "does search activity lead
-    browser activity by an hour".  lag > 0 means series_a LEADS
-    series_b by that many steps; negative lags cover the reverse, so
-    ``series_a < series_b`` with a symmetric lag set spans all ordered
-    relationships.
+    every unordered pair and every lag in -2..2, step = 1 hour — "does
+    search activity lead browser activity by an hour".  lag > 0 means
+    series_a LEADS series_b by that many steps; negative lags cover the
+    reverse, so ``series_a < series_b`` with the symmetric lag set spans
+    all ordered relationships.  Pairs co-observed at a lag in fewer
+    than 2 buckets are dropped, as in :func:`pairwise_corr`.
 
     Scale shape: the lag set explodes onto the (tiny, post-rollup)
     left side, alignment stays an EQUI-join on the shifted epoch key
@@ -111,7 +107,7 @@ def cross_corr_lags(
         epoch_seconds(F.col(time_col)).alias("_ta"),
         F.col(series_col).alias("series_a"),
         F.col(value_col).cast("double").alias("_va"),
-    ).withColumn("lag", F.explode(F.array(*[F.lit(int(k)) for k in lags])))
+    ).withColumn("lag", F.explode(F.array(*[F.lit(k) for k in (-2, -1, 0, 1, 2)])))
     b = df.select(
         epoch_seconds(F.col(time_col)).alias("_tb"),
         F.col(series_col).alias("series_b"),
@@ -120,7 +116,7 @@ def cross_corr_lags(
     agg = (
         a.join(
             b,
-            (F.col("_tb") == F.col("_ta") + F.col("lag") * F.lit(float(step_seconds)))
+            (F.col("_tb") == F.col("_ta") + F.col("lag") * F.lit(3600.0))
             & (F.col("series_a") < F.col("series_b")),
         )
         .groupBy("series_a", "series_b", "lag")
@@ -132,7 +128,7 @@ def cross_corr_lags(
             F.sum(F.col("_va") * F.col("_va")).alias("_saa"),
             F.sum(F.col("_vb") * F.col("_vb")).alias("_sbb"),
         )
-        .where(F.col("n_buckets") >= int(min_buckets))
+        .where(F.col("n_buckets") >= 2)
     )
     n = F.col("n_buckets").cast("double")
     cov = n * F.col("_sab") - F.col("_sa") * F.col("_sb")

@@ -2,8 +2,8 @@
 pipeline runs over a raw document corpus, built entirely from the
 already-attested primitive ops:
 
-1. quality gate      — textstats.quality_score >= min_quality
-2. decontamination   — dedup.decontaminate_ngrams overlap < threshold
+1. quality gate      — textstats.quality_score >= 0.5
+2. decontamination   — dedup.decontaminate_ngrams 4-gram overlap < 0.1
 3. exact dedup       — keep the md5(text) canonical (min doc_id)
 4. near-dup dedup    — dedup_keep_canonical survivor set (MinHash-LSH →
                        connected components → component-min doc)
@@ -28,16 +28,14 @@ from pyspark.sql import functions as F
 def curate_corpus(
     docs: DataFrame,
     benchmark: DataFrame,
-    min_quality: float = 0.5,
-    contamination_n: int = 4,
-    contamination_threshold: float = 0.1,
-    minhash_k: int = 8,
-    band_size: int = 2,
 ) -> DataFrame:
     """Verdict table: (doc_id, verdict) where verdict ∈ {'kept',
     'low_quality', 'contaminated', 'exact_dup', 'near_dup'} — first
     failing stage wins. ``benchmark`` is the held-out eval set used for
-    decontamination (never part of the output corpus)."""
+    decontamination (never part of the output corpus).  A document is
+    low quality below a 0.5 quality score and contaminated by 4-gram
+    overlap (:func:`decontaminate_ngrams`); near duplicates come from
+    :func:`dedup_keep_canonical`'s MinHash-LSH defaults."""
     from ts_raster_spark.operators.dedup import (
         dedup_keep_canonical,
         decontaminate_ngrams,
@@ -46,15 +44,15 @@ def curate_corpus(
     from ts_raster_spark.operators.textstats import quality_score
 
     qual = quality_score(docs).select(
-        "doc_id", (F.col("quality") >= min_quality).alias("_q_ok")
+        "doc_id", (F.col("quality") >= 0.5).alias("_q_ok")
     )
-    cont = decontaminate_ngrams(
-        docs, benchmark, n=contamination_n, threshold=contamination_threshold
-    ).select("doc_id", (F.col("contaminated") == 1).alias("_cont"))
+    cont = decontaminate_ngrams(docs, benchmark, n=4).select(
+        "doc_id", (F.col("contaminated") == 1).alias("_cont")
+    )
     exact_canon = exact_dedup(docs).select(
         F.col("canonical_doc_id").alias("doc_id"), F.lit(True).alias("_exact_keep")
     )
-    near_keep = dedup_keep_canonical(docs, k=minhash_k, band_size=band_size).select(
+    near_keep = dedup_keep_canonical(docs).select(
         "doc_id", F.lit(True).alias("_near_keep")
     )
     out = (

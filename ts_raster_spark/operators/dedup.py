@@ -18,7 +18,7 @@ replay it bit-for-bit:
 Scale notes: the shingle join shuffles on the shingle key — high
 cardinality, naturally balanced; stop-shingle skew (a shingle shared by
 thousands of docs) is bounded by dropping shingles with document
-frequency above ``max_df`` (standard practice). LSH band join groups by
+frequency above 1000 (standard practice). LSH band join groups by
 band key — the whole point is that buckets are small.
 """
 
@@ -59,20 +59,19 @@ def doc_shingles(docs: DataFrame) -> DataFrame:
     )
 
 
-def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.2, max_df: int | None = 1000) -> DataFrame:
+def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.2) -> DataFrame:
     """Exact Jaccard over 3-gram shingle sets for every pair sharing ≥1
     shingle. Output: (doc_a, doc_b, jaccard) with doc_a < doc_b.
 
-    ``max_df`` bounds the self-join: a stop-shingle shared by d docs
-    creates a d² join bucket, so shingles with document frequency above
-    the cap are dropped on BOTH sides (they carry no near-dup signal —
-    at J ≥ 0.2 true near-dups share many rarer shingles too). The cap is
-    ON by default; pass None only for exact-small-corpus parity runs.
+    A document-frequency cap of 1000 bounds the self-join: a
+    stop-shingle shared by d docs creates a d² join bucket, so shingles
+    in more than 1000 documents are dropped on BOTH sides (they carry no
+    near-dup signal — at J ≥ 0.2 true near-dups share many rarer
+    shingles too).
     """
     sh = doc_shingles(docs)
-    if max_df:
-        keep = sh.groupBy("shingle").count().where(F.col("count") <= max_df).select("shingle")
-        sh = sh.join(keep, "shingle")
+    keep = sh.groupBy("shingle").count().where(F.col("count") <= 1000).select("shingle")
+    sh = sh.join(keep, "shingle")
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
     a = sh.alias("a")
     b = sh.alias("b")
@@ -110,8 +109,8 @@ def minhash_lsh_pairs(docs: DataFrame, k: int = 8, band_size: int = 2) -> DataFr
     sig = minhash_signatures(docs, k)
     n_bands = k // band_size
     # one generator explode instead of an n_bands-way union of selects:
-    # the union shape re-planned (and re-executed the final aggregation
-    # of) the signature subtree once per band — round 6
+    # the union shape re-plans (and re-executes the final aggregation
+    # of) the signature subtree once per band
     band_structs = F.array(
         *[
             F.struct(
@@ -141,9 +140,6 @@ def minhash_lsh_pairs(docs: DataFrame, k: int = 8, band_size: int = 2) -> DataFr
 def connected_components(
     edges: DataFrame,
     all_nodes: DataFrame | None = None,
-    src: str = "doc_a",
-    dst: str = "doc_b",
-    max_iter: int = 25,
 ) -> DataFrame:
     """Connected components over near-dup pair edges: min-label
     propagation to a fixpoint — the cluster step that turns pairwise
@@ -156,18 +152,19 @@ def connected_components(
     (near-dup clusters are shallow — a handful); every round is one
     shuffle on the node key and the plan is cut per round with
     ``localCheckpoint`` so lineage cannot grow exponentially. Raises if
-    the diameter exceeds ``max_iter`` — non-converged labelings must
-    never be consumed as correct. For web-graph diameters use
+    the diameter exceeds 25 rounds — non-converged labelings must never
+    be consumed as correct. For web-graph diameters use
     :func:`connected_components_star` (O(log n) rounds).
 
-    ``all_nodes`` (one ``node`` column) adds isolated nodes as their own
-    singleton components. Output: (node, component).
+    ``edges`` holds one pair per row in ``doc_a``/``doc_b``; ``all_nodes``
+    (one ``node`` column) adds isolated nodes as their own singleton
+    components. Output: (node, component).
     """
     # materialized once: every round joins it, and lazy edges (MinHash-LSH
     # pairs) would otherwise be re-derived in every round
     und = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .unionByName(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
+        edges.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
+        .unionByName(edges.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v")))
         .localCheckpoint()
     )
     nodes = und.select(F.col("u").alias("node")).distinct()
@@ -175,7 +172,7 @@ def connected_components(
         nodes = nodes.unionByName(all_nodes.select("node")).distinct()
     labels = nodes.select("node", F.col("node").alias("comp")).localCheckpoint()
     converged = False
-    for _ in range(max_iter):
+    for _ in range(25):
         nb_min = (
             und.join(labels, und["v"] == labels["node"])
             .groupBy("u")
@@ -200,9 +197,9 @@ def connected_components(
             break
     if not converged:
         raise RuntimeError(
-            f"connected_components did not converge in {max_iter} min-label "
-            f"rounds (component diameter exceeds max_iter); use "
-            f"connected_components_star for high-diameter graphs"
+            "connected_components did not converge in 25 min-label "
+            "rounds (component diameter exceeds 25); use "
+            "connected_components_star for high-diameter graphs"
         )
     return labels.select(F.col("node"), F.col("comp").alias("component"))
 
@@ -213,7 +210,7 @@ def _large_star(e: DataFrame) -> DataFrame:
     edge list (u, v); output edges always point child → smaller parent."""
     both = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
     mins = both.groupBy("u").agg(F.min("v").alias("_mn"))
-    # no .distinct() here (round 6): the consumer is _small_star, whose
+    # no .distinct() here: the consumer is _small_star, whose
     # min-aggregation is duplicate-insensitive and whose own terminal
     # .distinct() dedupes the round output — the intermediate dedup was
     # one avoidable exchange per round (duplicate multiplicity within a
@@ -242,8 +239,6 @@ def _small_star(e: DataFrame) -> DataFrame:
 def connected_components_star(
     edges: DataFrame,
     all_nodes: DataFrame | None = None,
-    src: str = "doc_a",
-    dst: str = "doc_b",
     max_rounds: int = 50,
 ) -> DataFrame:
     """Connected components via alternating large-star / small-star
@@ -261,8 +256,8 @@ def connected_components_star(
     """
     e = (
         edges.select(
-            F.greatest(F.col(src), F.col(dst)).alias("u"),
-            F.least(F.col(src), F.col(dst)).alias("v"),
+            F.greatest(F.col("doc_a"), F.col("doc_b")).alias("u"),
+            F.least(F.col("doc_a"), F.col("doc_b")).alias("v"),
         )
         .where(F.col("u") != F.col("v"))
         .distinct()
@@ -300,20 +295,16 @@ def connected_components_star(
     )
 
 
-def dedup_keep_canonical(
-    docs: DataFrame,
-    k: int = 8,
-    band_size: int = 2,
-) -> DataFrame:
+def dedup_keep_canonical(docs: DataFrame) -> DataFrame:
     """The end-to-end near-dup dedup a training pipeline runs: MinHash-LSH
-    candidate pairs → min-label connected components → keep exactly ONE
-    document (the component minimum) per near-dup cluster, plus every
-    untouched document.
+    candidate pairs (:func:`minhash_lsh_pairs`' defaults) → min-label
+    connected components → keep exactly ONE document (the component
+    minimum) per near-dup cluster, plus every untouched document.
 
     Output: the deduplicated corpus (all original columns) plus
     ``component`` and ``n_dups`` (cluster size the survivor represents).
     """
-    pairs = minhash_lsh_pairs(docs, k=k, band_size=band_size)
+    pairs = minhash_lsh_pairs(docs)
     comp = connected_components(pairs, all_nodes=docs.select(F.col("doc_id").alias("node")))
     sizes = comp.groupBy("component").agg(F.count("*").cast("long").alias("n_dups"))
     keep = (

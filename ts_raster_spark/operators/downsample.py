@@ -50,8 +50,8 @@ def lttb_indices(x: np.ndarray, y: np.ndarray, n_out: int) -> np.ndarray:
         lo, hi = edges[b], edges[b + 1]
         # canonical LTTB (Steinarsson 2013 / TimescaleDB): the next-bucket
         # centroid range is HALF-OPEN [edges[b+1], edges[b+2]); only the
-        # final bucket's successor is the end point itself (round-4 fix —
-        # the old `edges[b+2] + 1` leaked the following bucket's first
+        # final bucket's successor is the end point itself (a closed
+        # `edges[b+2] + 1` end would leak the following bucket's first
         # candidate into the centroid)
         nlo, nhi = edges[b + 1], (edges[b + 2] if b + 2 < len(edges) else n)
         # centroid of the NEXT bucket (last bucket's successor is the end point)
@@ -78,9 +78,8 @@ def m4(
     df: DataFrame,
     width: int = 8,
     y_col: str = "text_len",
-    keys: tuple[str, ...] = ("conv_id",),
 ) -> DataFrame:
-    """M4 visualization downsample per series (Jugel et al., VLDB 2014;
+    """M4 visualization downsample per conversation (Jugel et al., VLDB 2014;
     the error-free line-rendering aggregation shipped by TimescaleDB
     as ``minmax``-style pixel queries).
 
@@ -93,24 +92,23 @@ def m4(
 
     Spark shape vs LTTB: where LTTB is inherently sequential (Arrow
     kernel), M4 is PURE window SQL — two stacked windows, zero Python:
-      1. ``partitionBy(keys)``:  span (min/max epoch-µs) → bucket id
+      1. ``partitionBy(conv_id)``:  span (min/max epoch-µs) → bucket id
          (integer µs arithmetic, exact in double < 2^53, so the bucket
          boundary is bit-identical in DuckDB);
-      2. ``partitionBy(keys, bucket)``: the four extremes → filter.
+      2. ``partitionBy(conv_id, bucket)``: the four extremes → filter.
     At 100 TB that is two hash exchanges, the second on the FINER
-    (keys, bucket) key — i.e. skew-friendlier than the per-series
+    (conv_id, bucket) key — i.e. skew-friendlier than the per-series
     shuffle the kernel path needs.  Output rows: ≤ 4·width distinct
     extreme VALUES per series; under keep-all-ties SET semantics the
     row count itself is unbounded when many rows tie an extreme (e.g. a
-    constant series keeps every row in a bucket) — r5 advisor.
+    constant series keeps every row in a bucket).
 
     Reference parity: the reference plots full-resolution series
     (example notebooks); M4/LTTB are the tier-store downsamples that
     make that rendering feasible at scale.
     """
-    klist = list(keys)
-    w_span = Window.partitionBy(*klist)
-    w_bucket = Window.partitionBy(*klist, "bucket")
+    w_span = Window.partitionBy("conv_id")
+    w_bucket = Window.partitionBy("conv_id", "bucket")
     e = F.unix_micros(F.col("ts").cast("timestamp_ltz"))
     lo, hi = F.min("_e").over(w_span), F.max("_e").over(w_span)
     bucket = F.when(
@@ -121,7 +119,7 @@ def m4(
         ),
     ).otherwise(F.lit(0).cast("long"))
     prepped = (
-        df.select(*klist, "turn_idx", "ts", F.col(y_col).cast("double").alias(y_col))
+        df.select("conv_id", "turn_idx", "ts", F.col(y_col).cast("double").alias(y_col))
         .withColumn("_e", e)
         .withColumn("bucket", bucket)
     )
@@ -134,38 +132,34 @@ def m4(
     return (
         prepped.withColumn("_keep", keep)
         .where(F.col("_keep"))
-        .select(*klist, F.col("bucket").cast("int").alias("bucket"), "turn_idx", "ts", y_col)
+        .select("conv_id", F.col("bucket").cast("int").alias("bucket"), "turn_idx", "ts", y_col)
     )
 
 
-def lttb(
-    df: DataFrame,
-    n_out: int = 20,
-    y_col: str = "text_len",
-    keys: tuple[str, ...] = ("conv_id",),
-) -> DataFrame:
-    """Downsample each conversation's (ts, y) series to ``n_out`` points.
+def lttb(df: DataFrame, n_out: int = 20) -> DataFrame:
+    """Downsample each conversation's (ts, text_len) series to ``n_out``
+    points.
 
-    Input needs columns: keys + turn_idx, ts, ``y_col``.  Output:
-    keys + turn_idx, ts, y (the selected rows, originals untouched).
+    Input needs columns: conv_id, turn_idx, ts, text_len.  Output:
+    conv_id, turn_idx, ts, text_len (the selected rows, originals
+    untouched).
     """
-    key_fields = [f for f in df.schema.fields if f.name in keys]
+    key_fields = [f for f in df.schema.fields if f.name == "conv_id"]
     schema = T.StructType(
         [*key_fields,
          T.StructField("turn_idx", T.IntegerType()),
          T.StructField("ts", [f for f in df.schema.fields if f.name == "ts"][0].dataType),
-         T.StructField(y_col, T.DoubleType())]
+         T.StructField("text_len", T.DoubleType())]
     )
-    klist = list(keys)
 
     def _one(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(["turn_idx", "ts"], kind="mergesort").reset_index(drop=True)
         x = pdf["_eps"].to_numpy(dtype=np.float64)
-        y = pdf[y_col].to_numpy(dtype=np.float64)
+        y = pdf["text_len"].to_numpy(dtype=np.float64)
         idx = lttb_indices(x, y, n_out)
-        return pdf.iloc[idx][klist + ["turn_idx", "ts", y_col]]
+        return pdf.iloc[idx][["conv_id", "turn_idx", "ts", "text_len"]]
 
     prepped = df.withColumn("_eps", epoch_seconds(F.col("ts"))).select(
-        *klist, "turn_idx", "ts", "_eps", F.col(y_col).cast("double").alias(y_col)
+        "conv_id", "turn_idx", "ts", "_eps", F.col("text_len").cast("double").alias("text_len")
     )
-    return map_sorted_runs(prepped, klist, ("turn_idx", "ts"), _one, schema)
+    return map_sorted_runs(prepped, ["conv_id"], ("turn_idx", "ts"), _one, schema)

@@ -29,20 +29,18 @@ from pyspark.sql import functions as F
 def funnel_times(
     df: DataFrame,
     steps: Sequence[tuple[str, Column]],
-    entity_cols: Sequence[str] = ("conv_id",),
-    ts_col: str = "ts",
 ) -> DataFrame:
-    """Per-entity first-completion timestamps ``t_1 .. t_k``.
+    """Per-conversation first-completion timestamps ``t_1 .. t_k``.
 
     ``t_1`` = min ts where step-1 predicate holds; ``t_i`` = min ts
     strictly after ``t_{i-1}`` where step-i holds (NULL once a step is
     never reached — and every later step is then NULL by construction).
-    Returns one row per entity that completed step 1.
+    Returns one row per conv_id that completed step 1.
     """
-    ecols = list(entity_cols)
+    ecols = ["conv_id"]
     name0, cond0 = steps[0]
     out = df.groupBy(*ecols).agg(
-        F.min(F.when(cond0, F.col(ts_col))).alias("t_1")
+        F.min(F.when(cond0, F.col("ts"))).alias("t_1")
     ).where(F.col("t_1").isNotNull())
     for i, (name, cond) in enumerate(steps[1:], start=2):
         prev = f"t_{i - 1}"
@@ -51,7 +49,7 @@ def funnel_times(
             .groupBy(*ecols)
             .agg(
                 F.min(
-                    F.when(cond & (F.col(ts_col) > F.col(prev)), F.col(ts_col))
+                    F.when(cond & (F.col("ts") > F.col(prev)), F.col("ts"))
                 ).alias(f"t_{i}")
             )
         )
@@ -62,10 +60,9 @@ def funnel_times(
 def funnel_summary(
     times: DataFrame,
     step_names: Sequence[str],
-    entity_cols: Sequence[str] = ("conv_id",),
 ) -> DataFrame:
     """Per-step conversion table: ``step`` (1-based), ``name``,
-    ``n_converted`` entities reaching it, and the exact median seconds
+    ``n_converted`` conversations reaching it, and the exact median seconds
     from step-1 completion (NULL for step 1 itself and for empty
     steps).  One aggregate over the (tiny) per-entity times table.
     """

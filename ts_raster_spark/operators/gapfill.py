@@ -29,22 +29,22 @@ _SECONDS = {"minute": 60, "hour": 3600, "day": 86400}
 SENTINEL = -9999.0  # reference missing-value contract, calculate.py:66
 
 
-def scaffold(points: DataFrame, tier: str, value_col: str = "value") -> DataFrame:
+def scaffold(points: DataFrame, tier: str) -> DataFrame:
     """Dense per-(conv_id, kind) bucket grid spanning each series' extent.
 
-    Input: rollup points ``(conv_id, kind, bucket_start, <value_col>)``.
-    Output: one row per grid bucket with ``<value_col>`` null where no
+    Input: rollup points ``(conv_id, kind, bucket_start, value)``.
+    Output: one row per grid bucket with ``value`` null where no
     observation landed (plus ``_observed`` flag).
 
-    Shape (round 6): each observed point emits itself plus every missing
-    bucket since the previous observed point (lag window + sequence
-    explode) — ONE exchange on (conv_id, kind) and zero joins.  The
-    previous spans-groupBy + dense-grid LEFT JOIN shape planned the
-    ``points`` subtree twice (spans branch + join branch) and shuffled
-    three times; the output row multiset is identical: consecutive-pair
-    gap generation covers exactly the min..max span, observed buckets
-    keep their row (non-key columns null on gap rows, ``_observed``
-    false there and for observed-but-null values, as before).
+    Shape: each observed point emits itself plus every missing bucket
+    since the previous observed point (lag window + sequence explode) —
+    ONE exchange on (conv_id, kind) and zero joins.  A spans-groupBy +
+    dense-grid LEFT JOIN would plan the ``points`` subtree twice (spans
+    branch + join branch) and shuffle three times for the same output
+    row multiset: consecutive-pair gap generation covers exactly the
+    min..max span, observed buckets keep their row (non-key columns null
+    on gap rows, ``_observed`` false there and for observed-but-null
+    values).
     """
     step = _SECONDS[tier]
     w = Window.partitionBy("conv_id", "kind").orderBy("bucket_start")
@@ -71,27 +71,25 @@ def scaffold(points: DataFrame, tier: str, value_col: str = "value") -> DataFram
         "kind",
         F.col("_b").alias("bucket_start"),
         *[F.when(is_obs_row, F.col(c)).alias(c) for c in other],
-        (is_obs_row & F.col(value_col).isNotNull()).alias("_observed"),
+        (is_obs_row & F.col("value").isNotNull()).alias("_observed"),
     )
 
 
-def fill_locf(dense: DataFrame, value_col: str = "value") -> DataFrame:
+def fill_locf(dense: DataFrame) -> DataFrame:
     w = (
         Window.partitionBy("conv_id", "kind")
         .orderBy("bucket_start")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    return dense.withColumn(
-        value_col, F.last(F.col(value_col), ignorenulls=True).over(w)
-    )
+    return dense.withColumn("value", F.last(F.col("value"), ignorenulls=True).over(w))
 
 
-def fill_sentinel(dense: DataFrame, value_col: str = "value") -> DataFrame:
+def fill_sentinel(dense: DataFrame) -> DataFrame:
     """Reference-parity fill: missing buckets become -9999 (prep.py:502)."""
-    return dense.withColumn(value_col, F.coalesce(F.col(value_col), F.lit(SENTINEL)))
+    return dense.withColumn("value", F.coalesce(F.col("value"), F.lit(SENTINEL)))
 
 
-def fill_linear(dense: DataFrame, value_col: str = "value") -> DataFrame:
+def fill_linear(dense: DataFrame) -> DataFrame:
     """Linear interpolation between bracketing observed buckets.
 
     For a gap bucket at time t with previous observed (t0, v0) and next
@@ -112,7 +110,7 @@ def fill_linear(dense: DataFrame, value_col: str = "value") -> DataFrame:
     )
     from ts_raster_spark.operators.longform import epoch_seconds
 
-    v = F.col(value_col)
+    v = F.col("value")
     t = epoch_seconds(F.col("bucket_start"))
     obs_t = F.when(v.isNotNull(), t)
     d = (
@@ -130,16 +128,13 @@ def fill_linear(dense: DataFrame, value_col: str = "value") -> DataFrame:
         .when(F.col("_nv").isNull(), F.col("_pv"))
         .otherwise(interp)
     )
-    return d.withColumn(value_col, filled).drop("_pv", "_pt", "_nv", "_nt")
+    return d.withColumn("value", filled).drop("_pv", "_pt", "_nv", "_nt")
 
 
-def gapfill(
-    points: DataFrame, tier: str, policy: str = "locf", value_col: str = "value"
-) -> DataFrame:
+def gapfill(points: DataFrame, tier: str, policy: str = "locf") -> DataFrame:
     fills = {"locf": fill_locf, "linear": fill_linear, "sentinel": fill_sentinel}
     if policy not in fills:
         raise ValueError(f"unknown gap-fill policy {policy!r}; want one of {sorted(fills)}")
     if tier not in _SECONDS:
         raise ValueError(f"unknown tier {tier!r}; want one of {sorted(_SECONDS)}")
-    dense = scaffold(points, tier, value_col)
-    return fills[policy](dense, value_col)
+    return fills[policy](scaffold(points, tier))

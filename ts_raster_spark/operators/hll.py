@@ -67,25 +67,23 @@ def hll_estimate(registers: DataFrame, keys: list[str], out_col: str = "hll_esti
     return agg.select(*keys, r4(est).alias(out_col))
 
 
-def hll_distinct_over_tiers(
-    turns: DataFrame, entity: str = "conv_id", fine: str = "minute", coarse: str = "hour"
-) -> DataFrame:
-    """Per-``coarse``-bucket distinct count three ways: exact, HLL
-    direct from raw, and HLL merged up from the ``fine`` tier's register
-    table. Direct and merged are equal BY ALGEBRA (max is associative);
-    emitting both lets the correctness gate attest the merge path
-    against an oracle that computes the register math once.
+def hll_distinct_over_tiers(turns: DataFrame, entity: str = "conv_id") -> DataFrame:
+    """Per-hour distinct count three ways: exact, HLL direct from raw,
+    and HLL merged up from the minute tier's register table. Direct and
+    merged are equal BY ALGEBRA (max is associative); emitting both lets
+    the correctness gate attest the merge path against an oracle that
+    computes the register math once.
 
     Output: (bucket_start, n_exact, hll_estimate, hll_from_fine).
     """
-    coarse_b = F.date_trunc(coarse, F.col("ts")).alias("bucket_start")
+    coarse_b = F.date_trunc("hour", F.col("ts")).alias("bucket_start")
     exact = turns.select(coarse_b, entity).groupBy("bucket_start").agg(
         F.countDistinct(entity).cast("long").alias("n_exact")
     )
     fine_regs = hll_registers(
         turns.select(
-            F.date_trunc(fine, F.col("ts")).alias("fine_bucket"),
-            F.date_trunc(coarse, F.col("ts")).alias("bucket_start"),
+            F.date_trunc("minute", F.col("ts")).alias("fine_bucket"),
+            F.date_trunc("hour", F.col("ts")).alias("bucket_start"),
             entity,
         ),
         entity,
@@ -94,13 +92,13 @@ def hll_distinct_over_tiers(
     # The direct coarse register table IS the max-merge of the fine one
     # (max over (fine, coarse, bucket) then over coarse == max over
     # coarse — associativity), so one md5/register pass serves both
-    # columns (round 6; previously direct re-scanned raw and re-hashed).
+    # columns instead of a second scan and hash of raw for the direct one.
     # The DuckDB twin still computes the register math independently, so
     # the cross-engine attestation is unchanged.
     merged = hll_estimate(hll_merge(fine_regs, ["bucket_start"]), ["bucket_start"])
     # both output columns are the same value by the algebra above, so
     # compute the estimate once and alias it — planning two identical
-    # estimate subtrees cost an extra aggregation pass (round 6)
+    # estimate subtrees would cost an extra aggregation pass
     return (
         exact.join(merged, "bucket_start")
         .withColumn("hll_from_fine", F.col("hll_estimate"))

@@ -31,31 +31,22 @@ same reason: the pre-folded literal 0.7 is NOT the double ``1 - 0.3``.
 
 from __future__ import annotations
 
-from typing import Sequence
-
 import numpy as np
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StructField, StructType
 
 from ts_raster_spark.operators.kernels import map_sorted_runs
 
 
-def holt_smooth(
-    df: DataFrame,
-    value_col: str = "value",
-    entity_cols: Sequence[str] = ("conv_id",),
-    order_col: str = "turn_idx",
-    alpha: float = 0.3,
-    beta: float = 0.1,
-) -> DataFrame:
-    """Per-entity Holt smoothing: adds ``level``, ``trend`` and
-    ``fitted`` (one-step-ahead forecast; ``fitted_0 = l_0``) to every
-    input row.  h-step forecasts beyond the series are
+def holt_smooth(df: DataFrame) -> DataFrame:
+    """Per-conversation Holt smoothing of ``value`` in ``turn_idx``
+    order with alpha = 0.3, beta = 0.1 (the defaults of
+    :func:`holt_oracle_sql`): adds ``level``, ``trend`` and ``fitted``
+    (one-step-ahead forecast; ``fitted_0 = l_0``) to every input row.
+    h-step forecasts beyond the series are
     ``last(level) + h * last(trend)`` — compose at the query layer.
     """
-    a, g = float(alpha), float(beta)
-    klist = list(entity_cols)
+    a, g = 0.3, 0.1
     in_cols = list(df.columns)
     out_schema = StructType(
         list(df.schema.fields)
@@ -67,8 +58,8 @@ def holt_smooth(
     )
 
     def _holt_kernel(pdf):
-        pdf = pdf.sort_values(order_col, kind="mergesort")[in_cols].copy()
-        x = pdf[value_col].to_numpy(dtype=np.float64)
+        pdf = pdf.sort_values("turn_idx", kind="mergesort")[in_cols].copy()
+        x = pdf["value"].to_numpy(dtype=np.float64)
         n = len(x)
         lvl = np.empty(n)
         trd = np.empty(n)
@@ -85,7 +76,7 @@ def holt_smooth(
         pdf["level"], pdf["trend"], pdf["fitted"] = lvl, trd, fit
         return pdf
 
-    return map_sorted_runs(df, klist, (order_col,), _holt_kernel, out_schema)
+    return map_sorted_runs(df, ["conv_id"], ("turn_idx",), _holt_kernel, out_schema)
 
 
 def holt_oracle_sql(turns_cte: str, alpha: float = 0.3, beta: float = 0.1) -> str:

@@ -31,14 +31,11 @@ US = 1_000_000
 def interval_join(
     points: DataFrame,
     intervals: DataFrame,
-    ts_col: str = "ts",
-    start_col: str = "start",
-    end_col: str = "end",
     bucket_seconds: int = 3600,
     how: str = "inner",
 ) -> DataFrame:
-    """Join each point row to every interval row with
-    ``start <= ts < end`` (half-open).
+    """Join each point row (column ``ts``) to every interval row
+    (columns ``start``, ``end``) with ``start <= ts < end`` (half-open).
 
     Returns points columns + the intervals columns.  ``how='left'``
     keeps unmatched points with NULL interval columns.  Pick
@@ -47,17 +44,17 @@ def interval_join(
     are points_in_bucket x intervals_overlapping_bucket.
     """
     step = bucket_seconds * US
-    p_b = (F.unix_micros(F.col(ts_col).cast("timestamp_ltz")) / step).cast("long")
-    s_us = F.unix_micros(F.col(start_col).cast("timestamp_ltz"))
-    e_us = F.unix_micros(F.col(end_col).cast("timestamp_ltz"))
+    p_b = (F.unix_micros(F.col("ts").cast("timestamp_ltz")) / step).cast("long")
+    s_us = F.unix_micros(F.col("start").cast("timestamp_ltz"))
+    e_us = F.unix_micros(F.col("end").cast("timestamp_ltz"))
     # last overlapped bucket: floor((end - 1µs) / step) — end exclusive
     buckets = F.sequence(
         (s_us / step).cast("long"), ((e_us - 1) / step).cast("long")
     )
-    iv = intervals.where(F.col(end_col) > F.col(start_col)).withColumn(
+    iv = intervals.where(F.col("end") > F.col("start")).withColumn(
         "_b", F.explode(buckets)
     )
     pt = points.withColumn("_b", p_b)
-    cond = [pt["_b"] == iv["_b"], pt[ts_col] >= iv[start_col], pt[ts_col] < iv[end_col]]
+    cond = [pt["_b"] == iv["_b"], pt["ts"] >= iv["start"], pt["ts"] < iv["end"]]
     joined = pt.join(iv, cond, how)
     return joined.drop(iv["_b"]).drop(pt["_b"])

@@ -23,8 +23,7 @@ Why both this and the native-aggregate rollup exist:
 
 Skew: a run must fit one task, and all runs of one conversation share
 its task (SURVEY.md §4); AQE skew handling cannot split a partition of a
-``mapInPandas``. Passing a ``tier`` bounds a run to one time bucket of a
-conversation.
+``mapInPandas``.
 """
 
 from __future__ import annotations
@@ -34,7 +33,6 @@ from typing import Callable, Iterator, Sequence
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from ts_raster_spark.functions import oracle as ORC
@@ -121,9 +119,8 @@ def map_sorted_runs(
     )
 
 
-def _schema(keys: list[str], features: Sequence[str]) -> str:
-    key_types = {"conv_id": "string", "kind": "string", "bucket_start": "timestamp"}
-    cols = [f"{k} {key_types[k]}" for k in keys]
+def _schema(features: Sequence[str]) -> str:
+    cols = ["conv_id string", "kind string"]
     for f in features:
         cols.append(f"{f} long" if f in ("turn_count",) else f"{f} double")
     return ", ".join(cols)
@@ -144,18 +141,14 @@ def _feature_row(keys: list[str], key_vals, x: np.ndarray, features: Sequence[st
 
 
 def extract_features_kernel(
-    long_df: DataFrame, tier: str | None = None, features: Sequence[str] = tuple(KERNEL_FEATURES)
+    long_df: DataFrame, features: Sequence[str] = tuple(KERNEL_FEATURES)
 ) -> DataFrame:
-    """Per-(conv_id, kind[, bucket_start]) feature vectors holding the
-    ``features`` columns (any of ``KERNEL_FEATURES``) only."""
+    """Per-(conv_id, kind) feature vectors over the whole series, holding
+    the ``features`` columns (any of ``KERNEL_FEATURES``) only."""
     unknown = [f for f in features if f not in KERNEL_FEATURES]
     if unknown:
         raise ValueError(f"unknown kernel features {unknown}")
     keys = ["conv_id", "kind"]
-    df = long_df
-    if tier is not None:
-        df = df.withColumn("bucket_start", F.date_trunc(tier, F.col("ts")))
-        keys = keys + ["bucket_start"]
 
     def kernel(pdf: pd.DataFrame) -> list[tuple]:
         pdf = pdf.sort_values(["turn_idx", "ts"])
@@ -163,4 +156,4 @@ def extract_features_kernel(
         key_vals = [pdf[k].iloc[0] for k in keys]
         return [tuple(_feature_row(keys, key_vals, x, features).values())]
 
-    return map_sorted_runs(df, keys, ("turn_idx", "ts"), kernel, _schema(keys, features))
+    return map_sorted_runs(long_df, keys, ("turn_idx", "ts"), kernel, _schema(features))

@@ -144,16 +144,15 @@ def kll_merge(sketch: DataFrame, coarser_tier: str, k: int = 64) -> DataFrame:
     return _recompact(d, keys, k)
 
 
-def kll_quantiles(
-    sketch: DataFrame, qs: tuple[float, ...] = (0.5, 0.95), count_col: str = "total_weight"
-) -> DataFrame:
-    """Rank-quantile estimates from a sketch — pure window SQL: items
+def kll_quantiles(sketch: DataFrame) -> DataFrame:
+    """Median and p95 estimates (``q50_kll``, ``q95_kll``) from a
+    sketch — pure window SQL: items
     sorted by value, cumulative weight walk, first item whose cumulative
     weight reaches q·total (weight of a level-l item is 2^l). Ties on
     value break by level so the walk is a total order (deterministic
     across engines/hosts).  The conserved total weight (exactly the
     number of raw values the sketch summarizes — compaction never drops
-    weight) is emitted under the neutral ``count_col`` name; callers
+    weight) is emitted under the neutral ``total_weight`` name; callers
     alias domain names (e.g. turn_count) at the query layer."""
     keys = [c for c in sketch.columns if c not in ("level", "value")]
     wgt = F.pow(F.lit(2.0), F.col("level"))
@@ -173,10 +172,10 @@ def kll_quantiles(
         .withColumn("_tot", F.sum("_w").over(w_all))
     )
     aggs = []
-    for q in qs:
+    for q in (0.5, 0.95):
         target = F.lit(float(q)) * F.col("_tot")
         hit = (F.col("_cum") - F.col("_w") < target) & (target <= F.col("_cum"))
         name = f"q{int(round(q * 100)):02d}_kll"
         aggs.append(F.min(F.when(hit, F.col("value"))).alias(name))
-    aggs.append(F.max("_tot").cast("long").alias(count_col))
+    aggs.append(F.max("_tot").cast("long").alias("total_weight"))
     return d.groupBy(*keys).agg(*aggs)

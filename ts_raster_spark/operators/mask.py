@@ -39,13 +39,12 @@ def unmask_df(
     domain: DataFrame,
     on: list[str],
     value_cols: list[str],
-    fill: float = SENTINEL,
 ) -> DataFrame:
     """Re-expand ``result`` onto ``domain`` (all key tuples), filling
-    missing value columns with ``fill`` (prep.py:477's ``-9999``)."""
+    missing value columns with ``SENTINEL`` (prep.py:477's ``-9999``)."""
     out = domain.select(*on).distinct().join(result, on, "left")
     for c in value_cols:
-        out = out.withColumn(c, F.coalesce(F.col(c), F.lit(fill)))
+        out = out.withColumn(c, F.coalesce(F.col(c), F.lit(SENTINEL)))
     return out
 
 

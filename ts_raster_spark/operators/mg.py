@@ -47,28 +47,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _mg_from_counts(items: np.ndarray, counts: np.ndarray, k: int):
-    """Deterministic MG summary from exact (item, count) pairs.
-
-    Feeding exact counts count-major (desc), item-asc through MG is
-    equivalent to: keep the k largest (count, item) pairs, subtract the
-    weight that must be decremented so at most k counters survive.
-    Closed form: survivors = top-k by (count desc, item asc); err = the
-    (k+1)-th largest count (0 if fewer than k+1 items), each survivor's
-    weight = max(count - err, 0) dropped if 0.  This matches running
-    textbook MG on the count-major canonical stream and is what the
-    merge reduction below also produces — one rule everywhere.
-    """
-    if len(items) <= k:
-        return items, counts.astype(np.int64), 0
-    order = np.lexsort((items, -counts))
-    items, counts = items[order], counts[order]
-    err = int(counts[k])
-    keep_items, keep_counts = items[:k], counts[:k] - err
-    pos = keep_counts > 0
-    return keep_items[pos], keep_counts[pos].astype(np.int64), err
-
-
 MG_FIELDS = "item string, weight long, err long"
 
 
@@ -118,13 +96,10 @@ def _reduce_sql(counts: DataFrame, group_keys: list[str], k: int, carried_err=No
     )
 
 
-def mg_sketch(
-    df: DataFrame, item_col: str, tier: str, k: int = 8,
-    keys: tuple[str, ...] = (),
-) -> DataFrame:
-    """Build the per-bucket MG summary: ≤ k rows per (*keys,
-    bucket_start), each (item, weight, err) with weight ≥ true_count -
-    err and every item of true count > err retained.
+def mg_sketch(df: DataFrame, item_col: str, tier: str, k: int = 8) -> DataFrame:
+    """Build the per-bucket MG summary: ≤ k rows per bucket_start, each
+    (item, weight, err) with weight ≥ true_count - err and every item of
+    true count > err retained.
 
     Pure Catalyst: exact per-(bucket, item) counts via a map-side-
     combined hash aggregate (the shuffle carries one row per distinct
@@ -135,7 +110,7 @@ def mg_sketch(
     d = df.withColumn("bucket_start", F.date_trunc(tier, F.col("ts"))).where(
         F.col(item_col).isNotNull()
     )
-    out_keys = [*keys, "bucket_start"]
+    out_keys = ["bucket_start"]
     counts = d.groupBy(*out_keys, F.col(item_col).alias("item")).agg(
         F.count("*").cast("long").alias("weight")
     )
@@ -180,7 +155,7 @@ def _merge_counters(
 def _compact_counters(d: dict, cap: int) -> tuple[dict, int]:
     """Closed-form MG reduction on a python counter dict: rank by
     (weight desc, item asc), subtract the (cap+1)-th weight, drop
-    non-positive.  Same rule as ``_mg_from_counts`` / ``_reduce_sql``."""
+    non-positive.  Same rule as ``_reduce_sql``."""
     if len(d) <= cap:
         return d, 0
     ranked = sorted(d.items(), key=lambda kv: (-kv[1], kv[0]))
@@ -189,10 +164,7 @@ def _compact_counters(d: dict, cap: int) -> tuple[dict, int]:
     return kept, err
 
 
-def mg_partials(
-    df: DataFrame, item_col: str, tier: str, keys: tuple[str, ...] = (),
-    partition_cap: int = 256,
-) -> DataFrame:
+def mg_partials(df: DataFrame, item_col: str, tier: str, partition_cap: int = 256) -> DataFrame:
     """Per-PARTITION MG partial summaries with bounded pre-shuffle rows.
 
     The pure-Catalyst build (``mg_sketch``) relies on map-side partial
@@ -201,8 +173,8 @@ def mg_partials(
     but for unbounded-cardinality items (URLs, n-grams) that dictionary
     IS the shuffle.  This path caps it: an Arrow ``mapInPandas`` kernel
     folds each partition's (group, item) counts through an MG counter
-    set capped at ``partition_cap`` counters per (*keys, bucket_start)
-    group, compacting after every batch, and emits
+    set capped at ``partition_cap`` counters per bucket_start group,
+    compacting after every batch, and emits
 
     - ≤ ``partition_cap`` (item, weight, err=0) rows per group per
       partition, plus
@@ -224,15 +196,12 @@ def mg_partials(
     d = df.withColumn("bucket_start", F.date_trunc(tier, F.col("ts"))).where(
         F.col(item_col).isNotNull()
     )
-    klist = list(keys)
-    sel = d.select(*klist, "bucket_start", F.col(item_col).cast("string").alias("item"))
+    sel = d.select("bucket_start", F.col(item_col).cast("string").alias("item"))
     key_fields = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in sel.schema.fields
-        if f.name in (*klist, "bucket_start")
+        f"{f.name} {f.dataType.simpleString()}" for f in sel.schema.fields if f.name == "bucket_start"
     )
     schema = f"{key_fields}, {MG_FIELDS}"
-    group_cols = [*klist, "bucket_start"]
+    group_cols = ["bucket_start"]
     cap = int(partition_cap)
 
     def _partial(batches):
@@ -277,8 +246,7 @@ def mg_partials(
 
 
 def mg_sketch_capped(
-    df: DataFrame, item_col: str, tier: str, k: int = 8,
-    keys: tuple[str, ...] = (), partition_cap: int | None = None,
+    df: DataFrame, item_col: str, tier: str, k: int = 8, partition_cap: int | None = None
 ) -> DataFrame:
     """``mg_sketch`` with BOUNDED pre-shuffle rows for unbounded-
     cardinality item columns: per-partition capped MG partials
@@ -290,8 +258,8 @@ def mg_sketch_capped(
     err retained); the summary itself is partition-layout dependent, so
     the deterministic ``mg_sketch`` remains the gate-oracle path."""
     cap = int(partition_cap or 32 * k)
-    partials = mg_partials(df, item_col, tier, keys=keys, partition_cap=cap)
-    out_keys = [*keys, "bucket_start"]
+    partials = mg_partials(df, item_col, tier, partition_cap=cap)
+    out_keys = ["bucket_start"]
     # partitions are disjoint slices of one bucket: their errors add
     carried = partials.groupBy(*out_keys).agg(F.sum("err").cast("long").alias("_err_in"))
     return _merge_counters(partials, carried, out_keys, k)

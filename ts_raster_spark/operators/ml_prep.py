@@ -4,7 +4,6 @@ Reference analogs (tsraster):
 - ``sample.py:26-160``  random point sampling        → :func:`hash_sample`
 - ``model.py:59-76``    seeded train/test split      → :func:`hash_split`
 - ``model.py:50-53``    MinMax scaling               → :func:`minmax_scale`
-- ``model.py:15-47``    yX assembly (inner join)     → :func:`assemble_xy`
 - ``calculate.py:366-423`` checkRelevance (per-feature tests + FDR)
                         → :func:`feature_relevance` (native ``corr`` per
                           feature + |r| ranking; the tsfresh FDR
@@ -37,9 +36,10 @@ def frac_hex(fraction: float) -> str:
     return format(min(int(fraction * 16**8), 16**8 - 1), "08x")
 
 
-def hash_bucket(df: DataFrame, cols: list[str], out: str = "_h8") -> DataFrame:
+def hash_bucket(df: DataFrame, cols: list[str]) -> DataFrame:
+    """Add ``_h8``: the first 8 hex digits of md5 over ``cols``."""
     key = F.concat_ws("|", *[F.col(c).cast("string") for c in cols])
-    return df.withColumn(out, F.substring(F.md5(key), 1, 8))
+    return df.withColumn("_h8", F.substring(F.md5(key), 1, 8))
 
 
 def hash_sample(df: DataFrame, cols: list[str], fraction: float) -> DataFrame:
@@ -48,19 +48,19 @@ def hash_sample(df: DataFrame, cols: list[str], fraction: float) -> DataFrame:
     return hash_bucket(df, cols).where(F.col("_h8") < frac_hex(fraction)).drop("_h8")
 
 
-def hash_split(df: DataFrame, cols: list[str], test_frac: float = 0.33) -> DataFrame:
+def hash_split(df: DataFrame, cols: list[str]) -> DataFrame:
     """Train/test label column (model.py:64's 0.67/0.33 contract)."""
     return (
         hash_bucket(df, cols)
         .withColumn(
             "split",
-            F.when(F.col("_h8") < frac_hex(test_frac), F.lit("test")).otherwise(F.lit("train")),
+            F.when(F.col("_h8") < frac_hex(0.33), F.lit("test")).otherwise(F.lit("train")),
         )
         .drop("_h8")
     )
 
 
-def minmax_scale(df: DataFrame, value_cols: list[str], keys: list[str] | None = None) -> DataFrame:
+def minmax_scale(df: DataFrame, value_cols: list[str]) -> DataFrame:
     """(x - min) / (max - min) over the whole frame (model.py:50-53).
     Computed via a single global agg broadcast back — no window, no
     per-row shuffle at scale."""
@@ -79,14 +79,9 @@ def minmax_scale(df: DataFrame, value_cols: list[str], keys: list[str] | None = 
     return out.drop(*drop)
 
 
-def assemble_xy(features: DataFrame, target: DataFrame, on: str = "conv_id") -> DataFrame:
-    """Inner-join features with the label frame (model.py:32-35)."""
-    return features.join(target, on, "inner")
-
-
-def feature_relevance(xy: DataFrame, target_col: str, feature_cols: list[str], top_n: int | None = None) -> DataFrame:
-    """Per-feature Pearson correlation with the target, ranked by |r|
-    (the checkRelevance analog: one cheap native agg pass computes every
+def feature_relevance(xy: DataFrame, target_col: str, feature_cols: list[str]) -> DataFrame:
+    """Per-feature Pearson correlation with the target and its |r|, with
+    ``relevant`` set at |r| >= 0.1 (the checkRelevance analog: one cheap native agg pass computes every
     feature's statistic — no per-feature job)."""
     # ANSI-safe Pearson r: Spark 4's corr() raises DIVIDE_BY_ZERO on a
     # constant column; try_divide yields NULL there (DuckDB corr parity).
@@ -103,7 +98,7 @@ def feature_relevance(xy: DataFrame, target_col: str, feature_cols: list[str], t
         + ", ".join(f"'{c}', {c}" for c in feature_cols)
         + ") AS (feature, pearson_r)"
     )
-    out = (
+    return (
         stacked.withColumn("abs_r", F.abs(F.col("pearson_r")))
         .withColumn(
             "relevant",
@@ -112,17 +107,12 @@ def feature_relevance(xy: DataFrame, target_col: str, feature_cols: list[str], t
         .select("feature", r4(F.col("pearson_r")).alias("pearson_r"),
                 r4(F.col("abs_r")).alias("abs_r"), "relevant")
     )
-    if top_n:
-        out = out.orderBy(F.col("abs_r").desc()).limit(top_n)
-    return out
 
 
-def feature_relevance_fdr(
-    xy: DataFrame, target_col: str, feature_cols: list[str], fdr_level: float = 0.05
-) -> DataFrame:
+def feature_relevance_fdr(xy: DataFrame, target_col: str, feature_cols: list[str]) -> DataFrame:
     """Full checkRelevance parity (calculate.py:366-423): per-feature
-    Pearson test p-values + Benjamini-Hochberg FDR at ``fdr_level``
-    (tsfresh's default 0.05). One distributed agg pass computes every
+    Pearson test p-values + Benjamini-Hochberg FDR at level 0.05
+    (tsfresh's default). One distributed agg pass computes every
     correlation; the O(#features) p-value/FDR step runs driver-side."""
     from ts_raster_spark.functions.stats import benjamini_hochberg, pearson_p_value
 
@@ -138,7 +128,7 @@ def feature_relevance_fdr(
     row = xy.agg(*aggs).first()
     rs = {c: (row[c] if row[c] is not None else float("nan")) for c in feature_cols}
     ps = {c: pearson_p_value(r, n) for c, r in rs.items()}
-    rel = benjamini_hochberg(ps, fdr_level)
+    rel = benjamini_hochberg(ps)
     out = [
         (c, float(rs[c]), float(ps[c]), bool(rel[c]))
         for c in feature_cols
@@ -148,13 +138,13 @@ def feature_relevance_fdr(
     )
 
 
-def wide_to_long(df: DataFrame, keys: list[str], sep: str = "_") -> DataFrame:
+def wide_to_long(df: DataFrame, keys: list[str]) -> DataFrame:
     """Melt a period-suffixed wide table back to a long panel — the
     inverse of :func:`combine_periods` and the analog of the reference's
     ``wide_to_long_target_features`` (tsraster/prep.py:663-695,
-    ``pd.wide_to_long`` with stubnames stripped of ``sep + suffix``).
+    ``pd.wide_to_long`` with stubnames stripped of ``"_" + suffix``).
 
-    Every non-key column must be named ``{stub}{sep}{period}``; output is
+    Every non-key column must be named ``{stub}_{period}``; output is
     one row per (keys, period) with one column per stub (NULL where that
     stub has no column for the period, mirroring pandas NaN fill).
 
@@ -168,9 +158,9 @@ def wide_to_long(df: DataFrame, keys: list[str], sep: str = "_") -> DataFrame:
     for c in df.columns:
         if c in keys:
             continue
-        stub, _, period = c.rpartition(sep)
+        stub, _, period = c.rpartition("_")
         if not stub:
-            raise ValueError(f"column {c!r} has no {sep!r}-suffixed period")
+            raise ValueError(f"column {c!r} has no '_'-suffixed period")
         if stub not in stubs:
             stubs.append(stub)
         if period not in periods:

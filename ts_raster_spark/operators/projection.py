@@ -61,20 +61,16 @@ def _sum_expr(vec_sql: str, signs_row: list[int], one_indexed: bool) -> str:
     return " + ".join(terms)
 
 
-def random_projection(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    d: int = 64,
-    k: int = 16,
-    seed: str = "jl",
-    prefix: str = "p",
-) -> DataFrame:
-    """Append ``k`` projected coordinates ``{prefix}0..{prefix}{k-1}``
-    (unscaled ±1 sums; downstream cosine/LSH is scale-invariant, and
-    callers needing the isometry multiply by 1/sqrt(k))."""
-    signs = jl_signs(d, k, seed)
+def random_projection(df: DataFrame) -> DataFrame:
+    """Append the k = 16 projected coordinates ``p0..p15`` of the d = 64
+    ``embedding`` column, signs seeded ``"jl"`` (the defaults of
+    :func:`projection_sql`): unscaled ±1 sums; downstream cosine/LSH is
+    scale-invariant, and callers needing the isometry multiply by
+    1/sqrt(k)."""
+    d, k = 64, 16
+    signs = jl_signs(d, k)
     cols = [
-        F.expr(_sum_expr(vec_col, signs[j], one_indexed=False)).alias(f"{prefix}{j}")
+        F.expr(_sum_expr("embedding", signs[j], one_indexed=False)).alias(f"p{j}")
         for j in range(k)
     ]
     return df.select("*", *cols)

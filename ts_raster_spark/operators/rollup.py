@@ -27,16 +27,6 @@ from ts_raster_spark.functions import features as FT
 
 TIERS = {"minute": "minute", "hour": "hour", "day": "day"}
 
-# calculators that read no attach_group_stats helper column — a rollup
-# restricted to these needs no windowed pre-pass at all (the quantiles
-# read only the attach_value_rank columns)
-HELPER_FREE_FEATURES = {
-    "turn_count", "mean", "maximum", "minimum", "sum_values",
-    "variance", "standard_deviation", "abs_energy", "root_mean_square",
-    "mean_change", "large_standard_deviation_r25", "variation_coefficient",
-    "benford_correlation", *FT.QUANTILES,
-}
-
 
 def bucketize(long_df: DataFrame, tier: str | None) -> tuple[DataFrame, list[str]]:
     """Add ``bucket_start`` for the tier; return (df, rollup keys)."""
@@ -72,43 +62,37 @@ def rollup_features(
             raise ValueError(f"unknown feature names {unknown}; want names of default_feature_aggs()")
         aggs = {k: v for k, v in aggs.items() if k in wanted}
 
-    # The quantiles are rank-sums over the value-rank columns.  Attached
-    # FIRST, before the helper windows: the value sort then runs on the
-    # narrow input frame and the turn-order sort carries only the two
-    # rank longs, instead of the value sort dragging all ~12 helper
-    # doubles through sorter memory.  Window outputs depend only on
-    # partition contents and each spec's own order, so attachment order
-    # cannot change any value: a tied row's _rnv can permute under a
-    # different input order, but every consumer selects the VALUE at a
-    # rank hit and tied rows share that value.
-    if FT.QUANTILES.keys() & aggs.keys():
-        df = FT.attach_value_rank(df, keys)
-
-    # Skip the windowed helper pre-pass (group stats, row numbers, lags —
-    # a full sort per group) when every requested feature is closed-form.
-    needs_helpers = (
-        include_strikes
-        or include_trend
-        or include_entropy
-        or any(k not in HELPER_FREE_FEATURES for k in aggs)
-    )
-    if needs_helpers:
-        df = FT.attach_group_stats(df, keys)
-    if "benford_correlation" in aggs:
-        # cheap per-row projection (2 transcendentals/row, no shuffle)
-        # instead of re-deriving the digit in 9 aggregate branches
-        df = FT.attach_benford_digit(df)
+    # The value-rank, group-stat and Benford columns are attached for
+    # every request; Catalyst prunes the windows and projections that no
+    # requested aggregate reads, so a helper-free request plans as a
+    # plain groupBy.  The quantiles are rank-sums over the value-rank
+    # columns.  Attached FIRST, before the helper windows: the value sort
+    # then runs on the narrow input frame and the turn-order sort carries
+    # only the two rank longs, instead of the value sort dragging all ~12
+    # helper doubles through sorter memory.  Window outputs depend only
+    # on partition contents and each spec's own order, so attachment
+    # order cannot change any value: a tied row's _rnv can permute under
+    # a different input order, but every consumer selects the VALUE at a
+    # rank hit and tied rows share that value.  The Benford digit is a
+    # cheap per-row projection (2 transcendentals/row, no shuffle)
+    # instead of re-deriving the digit in 9 aggregate branches.
+    df = FT.attach_value_rank(df, keys)
+    df = FT.attach_group_stats(df, keys)
+    df = FT.attach_benford_digit(df)
     # extras: window columns on the shared partitioning + plain
-    # aggregates in the SAME groupBy — one exchange, no join-backs
+    # aggregates in the SAME groupBy — one exchange, no join-backs.  They
+    # are off by default and attached only when requested: a frame is
+    # re-optimized on every action, and pruning unread extras cost each
+    # action of a default hour-tier request ~50 ms of planning.
     if include_strikes:
         df = FT.attach_strike_cols(df, keys)
         aggs.update(FT.strike_aggs())
     if include_trend:
-        df = FT.attach_trend_cols(df, keys, chunk_len=3)
-        aggs.update(FT.trend_agg(chunk_len=3))
+        df = FT.attach_trend_cols(df, keys)
+        aggs.update(FT.trend_agg())
     if include_entropy:
-        df = FT.attach_entropy_cols(df, keys, bins=10)
-        aggs.update(FT.entropy_agg(bins=10))
+        df = FT.attach_entropy_cols(df)
+        aggs.update(FT.entropy_agg())
 
     return df.groupBy(*keys).agg(*[c.alias(n) for n, c in aggs.items()])
 

@@ -32,24 +32,18 @@ def period_key(ts_col: str, period: str) -> F.Column:
     raise ValueError(f"unknown period {period!r} (want 'hod' or 'dow')")
 
 
-def seasonal_baseline(
-    df: DataFrame,
-    ts_col: str = "bucket_start",
-    value_col: str = "n_turns",
-    period: str = "hod",
-    entity_cols: tuple = (),
-) -> DataFrame:
-    """Attach the seasonal profile and residual z-score to each row.
+def seasonal_baseline(df: DataFrame, value_col: str = "n_turns", period: str = "hod") -> DataFrame:
+    """Attach the seasonal profile and residual z-score to each row of a
+    ``bucket_start``-keyed series.
 
     Output adds: ``pkey`` (the period key), ``season_mean`` /
     ``season_sig`` (profile across all rows sharing the key, population
     sigma), ``resid`` (value - mean) and ``resid_z`` (null when the
-    profile is degenerate, sigma == 0).  ``entity_cols`` scopes the
-    profile per entity (e.g. per tool) instead of globally.
+    profile is degenerate, sigma == 0).
     """
-    pk = period_key(ts_col, period).alias("pkey")
+    pk = period_key("bucket_start", period).alias("pkey")
     base = df.select(*df.columns, pk)
-    w = Window.partitionBy(*[F.col(c) for c in entity_cols], F.col("pkey"))
+    w = Window.partitionBy(F.col("pkey"))
     x = F.col(value_col).cast("double")
     mean = F.avg(x).over(w)
     sig = F.stddev_pop(x).over(w)
@@ -64,44 +58,31 @@ def seasonal_baseline(
     )
 
 
-def classical_decompose(
-    df: DataFrame,
-    ts_col: str = "bucket_start",
-    value_col: str = "n_turns",
-    period: str = "hod",
-    half_window: int = 12,
-    entity_cols: tuple = (),
-) -> DataFrame:
-    """Classical additive decomposition: value = trend + seasonal + resid.
+def classical_decompose(df: DataFrame, value_col: str = "n_turns") -> DataFrame:
+    """Classical additive decomposition of a ``bucket_start``-keyed
+    series: value = trend + seasonal + resid.
 
-    trend    = centered moving average over ``2*half_window + 1``
-               buckets (partial at series edges — both engines average
-               the available frame, so the twin mirrors exactly);
-    seasonal = per-period-key mean of the detrended series, centered by
+    trend    = centered moving average over 25 buckets (12 either side;
+               partial at series edges — both engines average the
+               available frame, so the twin mirrors exactly);
+    seasonal = per-hour-of-day mean of the detrended series, centered by
                the row-weighted grand mean so components sum back to
                the input (on balanced panels this equals the textbook
                distinct-key centering);
     resid    = value - trend - seasonal.
 
-    Designed for TIER series (hundreds-thousands of buckets per
-    entity): with no ``entity_cols`` the moving average runs in a
-    single window partition — fine for one corpus-level series, pass
-    entity keys to parallelize per entity at scale.
+    Designed for one corpus-level TIER series (hundreds-thousands of
+    buckets): the moving average runs in a single window partition.
     """
-    pk = period_key(ts_col, period).alias("pkey")
+    pk = period_key("bucket_start", "hod").alias("pkey")
     base = df.select(*df.columns, pk)
-    ecols = [F.col(c) for c in entity_cols]
     x = F.col(value_col).cast("double")
-    w_ma = (
-        Window.partitionBy(*ecols)
-        .orderBy(ts_col)
-        .rowsBetween(-half_window, half_window)
-    )
+    w_ma = Window.orderBy("bucket_start").rowsBetween(-12, 12)
     d = base.withColumn("trend", F.avg(x).over(w_ma)).withColumn(
         "_detr", x - F.col("trend")
     )
-    w_pk = Window.partitionBy(*ecols, F.col("pkey"))
-    w_all = Window.partitionBy(*ecols)
+    w_pk = Window.partitionBy(F.col("pkey"))
+    w_all = Window.partitionBy()
     d = d.withColumn(
         "seasonal",
         F.avg("_detr").over(w_pk) - F.avg("_detr").over(w_all),

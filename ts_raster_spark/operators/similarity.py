@@ -33,8 +33,8 @@ def _with_cosine(pairs: DataFrame) -> DataFrame:
     )
 
 
-def cosine_topk_bruteforce(emb: DataFrame, query_ids: list[int], k: int = 5) -> DataFrame:
-    """Exact top-k cosine neighbors for each query vector."""
+def cosine_topk_bruteforce(emb: DataFrame, query_ids: list[int]) -> DataFrame:
+    """Exact top-5 cosine neighbors for each query vector."""
     q = emb.where(F.col("vec_id").isin(query_ids)).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("a")
     )
@@ -44,26 +44,24 @@ def cosine_topk_bruteforce(emb: DataFrame, query_ids: list[int], k: int = 5) -> 
     w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= 5)
         .select("query_id", "neighbor_id", "cosine", F.col("rank").cast("int").alias("rank"))
     )
 
 
-def sign_bucket(emb: DataFrame, n_planes: int = 8) -> DataFrame:
-    """Bucket id from the sign bits of the first n_planes coordinates."""
+def sign_bucket(emb: DataFrame) -> DataFrame:
+    """Bucket id from the sign bits of the first 8 coordinates."""
     expr = " + ".join(
         f"CASE WHEN cast(element_at(embedding, {i + 1}) as double) >= 0 THEN {2**i} ELSE 0 END"
-        for i in range(n_planes)
+        for i in range(8)
     )
     return emb.withColumn("bucket", F.expr(expr).cast("int"))
 
 
-def cosine_near_dup_blocked(
-    emb: DataFrame, threshold: float = 0.95, n_planes: int = 8, n_bands: int = 2
-) -> DataFrame:
+def cosine_near_dup_blocked(emb: DataFrame, threshold: float = 0.95, n_bands: int = 2) -> DataFrame:
     """Embedding-cosine near-duplicate pairs via sign-LSH blocking — the
     production default. Vectors are bucketed by the sign pattern of
-    ``n_planes`` coordinates, ``n_bands`` times over disjoint coordinate
+    n_planes = 8 coordinates, ``n_bands`` times over disjoint coordinate
     sets (band b uses coordinates b·n_planes..(b+1)·n_planes−1); a pair
     is a candidate iff it collides in ANY band. Exact cosine + threshold
     runs only within buckets, so the join is O(Σ bucket²), never O(n²).
@@ -73,6 +71,7 @@ def cosine_near_dup_blocked(
     pytest-asserted (tests). Deterministic axis-aligned planes keep it
     SQL-reproducible; swap seeded Gaussians in for production variety.
     """
+    n_planes = 8
     bands = []
     for b in range(n_bands):
         expr = " + ".join(
@@ -123,15 +122,16 @@ def cosine_near_dup_pairs(emb: DataFrame, threshold: float = 0.95) -> DataFrame:
     )
 
 
-def kmeans_ivf(emb: DataFrame, n_cells: int = 16, seed: int = 42, max_iter: int = 10):
-    """IVF coarse quantizer: pyspark.ml KMeans over the vectors; returns
+def kmeans_ivf(emb: DataFrame, n_cells: int = 16):
+    """IVF coarse quantizer: pyspark.ml KMeans (seed 42, at most 10
+    iterations) over the vectors; returns
     (model, assignments DataFrame with a ``cell`` column). The ANN scale
     path: search only the query's nearest ``nprobe`` cells."""
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
     data = emb.withColumn("fv", array_to_vector(F.col("embedding").cast("array<double>")))
-    model = KMeans(k=n_cells, seed=seed, maxIter=max_iter, featuresCol="fv").fit(data)
+    model = KMeans(k=n_cells, seed=42, maxIter=10, featuresCol="fv").fit(data)
     assigned = model.transform(data).withColumnRenamed("prediction", "cell").drop("fv")
     return model, assigned
 
@@ -173,10 +173,10 @@ def ivf_topk(
     )
 
 
-def signlsh_topk(emb: DataFrame, query_ids: list[int], k: int = 3, n_planes: int = 8) -> DataFrame:
+def signlsh_topk(emb: DataFrame, query_ids: list[int], k: int = 3) -> DataFrame:
     """Approximate top-k: candidates restricted to the query's sign-LSH
-    bucket (then exact cosine within the bucket)."""
-    b = sign_bucket(emb, n_planes)
+    bucket (:func:`sign_bucket`; then exact cosine within the bucket)."""
+    b = sign_bucket(emb)
     q = b.where(F.col("vec_id").isin(query_ids)).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("a"), "bucket"
     )

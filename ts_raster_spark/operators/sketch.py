@@ -69,10 +69,9 @@ def merge_sketch(sketch: DataFrame, coarser_tier: str) -> DataFrame:
     )
 
 
-def sketch_quantiles(
-    sketch: DataFrame, rng: DataFrame, qs: tuple[float, ...] = (0.5, 0.95), bins: int = 64
-) -> DataFrame:
-    """Approximate quantiles from a histogram sketch.
+def sketch_quantiles(sketch: DataFrame, rng: DataFrame, bins: int = 64) -> DataFrame:
+    """Approximate median and p95 (``q50_sketch``, ``q95_sketch``) from a
+    histogram sketch.
 
     Deterministic rule (mirrored in the DuckDB oracle): with bins in
     ascending order, target = q·total; the selected bin is the first
@@ -93,7 +92,7 @@ def sketch_quantiles(
     )
     width = (F.col("_hi") - F.col("_lo")) / bins
     aggs = []
-    for q in qs:
+    for q in (0.5, 0.95):
         target = F.lit(float(q)) * F.col("_tot")
         hit = (F.col("_cum") - F.col("n") < target) & (target <= F.col("_cum"))
         est = F.when(
@@ -107,9 +106,7 @@ def sketch_quantiles(
     return d.groupBy(*keys).agg(*aggs)
 
 
-def psi_drift(
-    sketch: DataFrame, bins: int = 64, eps: float = 0.5
-) -> DataFrame:
+def psi_drift(sketch: DataFrame, bins: int = 64) -> DataFrame:
     """Population Stability Index between consecutive buckets, straight
     from histogram-sketch bins — the distribution-shift monitor for
     training-data pipelines ("did yesterday's feature distribution move"),
@@ -150,7 +147,7 @@ def psi_drift(
         .withColumn("_tot_prev", F.sum("n_prev").over(w_day))
         .where(F.col("_tot_prev").isNotNull())
     )
-    e = F.lit(float(eps))
+    e = F.lit(0.5)
     denom = e * bins
     p = (F.col("n") + e) / (F.col("_tot") + denom)
     q = (F.col("n_prev") + e) / (F.col("_tot_prev") + denom)

@@ -41,15 +41,15 @@ def lang_scores(docs: DataFrame) -> DataFrame:
     return out.drop("_low")
 
 
-def lang_id(docs: DataFrame, min_score: float = 1.0) -> DataFrame:
-    """Best-scoring language, 'unknown' when no marker reaches min_score."""
+def lang_id(docs: DataFrame) -> DataFrame:
+    """Best-scoring language, 'unknown' when no marker scores 1.0."""
     s = lang_scores(docs)
     langs = list(LANG_MARKERS)
     best_score = F.greatest(*[F.col(f"score_{lg}") for lg in langs])
     pred = F.lit("unknown")
     for lg in reversed(langs):  # earlier langs win ties -> apply last
         pred = F.when(F.col(f"score_{lg}") == best_score, F.lit(lg)).otherwise(pred)
-    pred = F.when(best_score >= min_score, pred).otherwise(F.lit("unknown"))
+    pred = F.when(best_score >= 1.0, pred).otherwise(F.lit("unknown"))
     return s.select("doc_id", pred.alias("lang_pred"), r4(best_score).alias("lang_score"))
 
 
@@ -75,14 +75,14 @@ def token_stats(docs: DataFrame) -> DataFrame:
     )
 
 
-def tfidf_top_terms(docs: DataFrame, k: int = 3) -> DataFrame:
-    """Per-document top-k terms by tf·idf (idf = ln(N/df), raw tf) —
+def tfidf_top_terms(docs: DataFrame) -> DataFrame:
+    """Per-document top-3 terms by tf·idf (idf = ln(N/df), raw tf) —
     the classic corpus-statistics op a training-data pipeline uses for
     keyword/topic probes.
 
     Shape: tokens explode → (doc, term) counts → term document
     frequencies (one aggregation, shuffled on term — high cardinality,
-    naturally balanced) → broadcast the tiny corpus size → window top-k
+    naturally balanced) → broadcast the tiny corpus size → window top-3
     per doc with deterministic ties (score desc, term asc). No UDF.
     Output: (doc_id, term, tf, score, rank).
     """
@@ -103,7 +103,7 @@ def tfidf_top_terms(docs: DataFrame, k: int = 3) -> DataFrame:
     w = Window.partitionBy("doc_id").orderBy(F.col("score").desc(), F.col("term"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= 3)
         .select("doc_id", "term", "tf", r4(F.col("score")).alias("score"),
                 F.col("rank").cast("int").alias("rank"))
     )
@@ -202,10 +202,10 @@ def repetition_stats(docs: DataFrame) -> DataFrame:
     )
 
 
-def duplicate_lines(docs: DataFrame, min_chars: int = 10, min_occurrences: int = 2) -> DataFrame:
+def duplicate_lines(docs: DataFrame) -> DataFrame:
     """Corpus-level duplicated-line index (the CCNet/C4 line-dedup
-    primitive, public): every trimmed line of ≥ ``min_chars`` chars that
-    appears ≥ ``min_occurrences`` times across the corpus, with its
+    primitive, public): every trimmed line of ≥ 10 chars that appears
+    ≥ 2 times across the corpus, with its
     document reach and a canonical owner. A pipeline joins this back to
     strip boilerplate lines before training.
 
@@ -216,7 +216,7 @@ def duplicate_lines(docs: DataFrame, min_chars: int = 10, min_occurrences: int =
     """
     lines = docs.select(
         "doc_id", F.explode(F.expr(LINES)).alias("line")
-    ).where(F.length("line") >= min_chars)
+    ).where(F.length("line") >= 10)
     return (
         lines.select("doc_id", F.md5("line").alias("line_md5"), F.length("line").alias("line_len"))
         .groupBy("line_md5")
@@ -226,7 +226,7 @@ def duplicate_lines(docs: DataFrame, min_chars: int = 10, min_occurrences: int =
             F.count("*").cast("long").alias("n_occurrences"),
             F.min("doc_id").alias("canonical_doc_id"),
         )
-        .where(F.col("n_occurrences") >= min_occurrences)
+        .where(F.col("n_occurrences") >= 2)
     )
 
 

@@ -31,22 +31,18 @@ def _wo(*keys: str):
     return Window.partitionBy(*keys).orderBy(*[F.col(c) for c in ORDER])
 
 
-def ohlc(
-    df: DataFrame,
-    value_col: str = "value",
-    tier: str = "hour",
-    keys: tuple[str, ...] = ("conv_id",),
-) -> DataFrame:
-    """Open/high/low/close per (keys, bucket): the canonical gauge
-    downsample.  open/close via min_by/max_by on turn_idx (unique within
-    a conversation) — one pure hash aggregate, no window needed."""
-    b = F.date_trunc(tier, F.col("ts")).alias("bucket_start")
-    v = F.col(value_col)
-    return df.groupBy(*keys, b).agg(
-        F.expr(f"min_by({value_col}, turn_idx)").alias("open"),
+def ohlc(df: DataFrame) -> DataFrame:
+    """Open/high/low/close of ``value`` per (conv_id, hour bucket): the
+    canonical gauge downsample.  open/close via min_by/max_by on
+    turn_idx (unique within a conversation) — one pure hash aggregate,
+    no window needed."""
+    b = F.date_trunc("hour", F.col("ts")).alias("bucket_start")
+    v = F.col("value")
+    return df.groupBy("conv_id", b).agg(
+        F.expr("min_by(value, turn_idx)").alias("open"),
         F.max(v).alias("high"),
         F.min(v).alias("low"),
-        F.expr(f"max_by({value_col}, turn_idx)").alias("close"),
+        F.expr("max_by(value, turn_idx)").alias("close"),
         F.count(v).cast("long").alias("n_points"),
     )
 
@@ -62,12 +58,9 @@ def with_synthetic_counter(df: DataFrame, modulus: int = 50_000) -> DataFrame:
     return df.withColumn("counter", (cum % modulus).cast("double"))
 
 
-def counter_rollup(
-    df: DataFrame,
-    counter_col: str = "counter",
-    tier: str = "hour",
-) -> DataFrame:
-    """TimescaleDB ``counter_agg`` semantics per (conv_id, bucket):
+def counter_rollup(df: DataFrame) -> DataFrame:
+    """TimescaleDB ``counter_agg`` semantics of ``counter`` per (conv_id,
+    hour bucket):
 
     - ``increase``: sum over consecutive same-bucket pairs of
       (v - prev) when v >= prev else v (a reset contributes the new
@@ -81,9 +74,9 @@ def counter_rollup(
     conv_id; bucket membership of the pair is decided by comparing the
     two rows' bucket labels — no join.
     """
-    v = F.col(counter_col)
+    v = F.col("counter")
     w = _wo("conv_id")
-    b = F.date_trunc(tier, F.col("ts"))
+    b = F.date_trunc("hour", F.col("ts"))
     d = (
         df.withColumn("_bucket", b)
         .withColumn("_prev", F.lag(v).over(w))
@@ -96,16 +89,16 @@ def counter_rollup(
     out = d.groupBy("conv_id", F.col("_bucket").alias("bucket_start")).agg(
         F.coalesce(F.sum(delta), F.lit(0.0)).alias("increase"),
         F.sum((same & (v < F.col("_prev"))).cast("long")).alias("num_resets"),
-        F.expr(f"min_by({counter_col}, turn_idx)").alias("first_reading"),
-        F.expr(f"max_by({counter_col}, turn_idx)").alias("last_reading"),
+        F.expr("min_by(counter, turn_idx)").alias("first_reading"),
+        F.expr("max_by(counter, turn_idx)").alias("last_reading"),
         (F.coalesce(F.sum(delta), F.lit(0.0)) / F.when(span > 0, span)).alias("rate_per_s"),
         F.count("*").cast("long").alias("n_points"),
     )
     return out
 
 
-def state_durations(df: DataFrame, state_col: str = "role") -> DataFrame:
-    """Time-in-state per (conv_id, state): each turn holds its state
+def state_durations(df: DataFrame) -> DataFrame:
+    """Time-in-state per (conv_id, state = role): each turn holds its state
     until the next turn's timestamp (the last turn holds for 0 s —
     no information past the series end).  TimescaleDB ``state_agg``
     analog.  One lead window on conv_id, one groupBy starting with
@@ -113,16 +106,16 @@ def state_durations(df: DataFrame, state_col: str = "role") -> DataFrame:
     eps = epoch_seconds(F.col("ts"))
     nxt = F.lead(eps).over(_wo("conv_id"))
     d = df.withColumn("_dur", F.coalesce(nxt - eps, F.lit(0.0)))
-    return d.groupBy("conv_id", F.col(state_col).alias("state")).agg(
+    return d.groupBy("conv_id", F.col("role").alias("state")).agg(
         F.count("*").cast("long").alias("n_turns"),
         F.sum("_dur").alias("total_s"),
         F.max("_dur").alias("longest_s"),
     )
 
 
-def heartbeat_uptime(df: DataFrame, tolerance_s: float = 60.0) -> DataFrame:
+def heartbeat_uptime(df: DataFrame) -> DataFrame:
     """Liveness from heartbeats (every turn is a heartbeat): the
-    conversation is "live" for ``tolerance_s`` after each turn, so
+    conversation is "live" for tol = 60 s after each turn, so
     uptime = sum(min(gap, tol)) over consecutive pairs + tol for the
     trailing beat; covered span = last - first + tol.  TimescaleDB
     ``heartbeat_agg`` analog (live_time / dead_time / interpolated
@@ -130,7 +123,7 @@ def heartbeat_uptime(df: DataFrame, tolerance_s: float = 60.0) -> DataFrame:
     eps = epoch_seconds(F.col("ts"))
     gap = eps - F.lag(eps).over(_wo("conv_id"))
     d = df.withColumn("_gap", gap).withColumn("_eps", eps)
-    tol = F.lit(float(tolerance_s))
+    tol = F.lit(60.0)
     # least() SKIPS nulls (least(NULL, tol) == tol), so the first beat's
     # NULL gap must be masked out explicitly or every conversation gains
     # a phantom tolerance window
@@ -153,13 +146,10 @@ def heartbeat_uptime(df: DataFrame, tolerance_s: float = 60.0) -> DataFrame:
 def ema(
     df: DataFrame,
     alpha: float = 0.3,
-    value_col: str = "value",
-    keys: tuple[str, ...] = ("conv_id",),
-    out_col: str = "ema",
     max_closed_form_n: int = 1000,
 ) -> DataFrame:
-    """Exponential moving average (pandas ``ewm(alpha).mean()``,
-    adjust=True semantics).  Two physical paths, routed per GROUP by
+    """Exponential moving average of ``value`` per conversation, added as
+    ``ema`` (pandas ``ewm(alpha).mean()``, adjust=True semantics).  Two physical paths, routed per GROUP by
     series length so the result is always finite:
 
     - groups with ≤ ``max_closed_form_n`` rows (the overwhelming
@@ -208,7 +198,7 @@ def ema(
     import math
 
     a = float(alpha)
-    klist = list(keys)
+    klist = ["conv_id"]
     # overflow-safe closed-form length: (1-a)^(-t) < e^700 < DBL_MAX
     if a >= 1.0 - 1e-12:
         safe_n = 1
@@ -223,31 +213,31 @@ def ema(
         .collect()
     )
     # short path: closed form, pure Catalyst
-    w = _wo(*keys)
+    w = _wo("conv_id")
     t = (F.row_number().over(w) - 1).cast("double")
-    scaled = F.col(value_col) * F.pow(F.lit(1.0 - a), -t)
+    scaled = F.col("value") * F.pow(F.lit(1.0 - a), -t)
     csum = F.sum(scaled).over(w.rowsBetween(Window.unboundedPreceding, 0))
     num = csum * F.pow(F.lit(1.0 - a), t)
     den = (1.0 - F.pow(F.lit(1.0 - a), t + 1.0)) / a
     if not mega_rows:
         # common case: every group fits the closed form — one scan, one
         # ordered window, zero joins, zero Python
-        return df.withColumn(out_col, num / den)
+        return df.withColumn("ema", num / den)
     mega_keys = df.sparkSession.createDataFrame(mega_rows, schema=df.select(*klist).schema)
-    short = df.join(F.broadcast(mega_keys), klist, "left_anti").withColumn(out_col, num / den)
+    short = df.join(F.broadcast(mega_keys), klist, "left_anti").withColumn("ema", num / den)
     # long path: streaming pandas ewm kernel (adjust=True recursion:
     # num_t = x_t + (1-a)*num_{t-1}; den_t = 1 + (1-a)*den_{t-1})
     import pandas as pd  # noqa: F401  (baked in; Arrow batch transfer)
     from pyspark.sql.types import DoubleType, StructField, StructType
 
-    out_schema = StructType(list(df.schema.fields) + [StructField(out_col, DoubleType())])
+    out_schema = StructType(list(df.schema.fields) + [StructField("ema", DoubleType())])
     order_cols = [c for c in ORDER if c in df.columns] or klist
     in_cols = list(df.columns)
 
     def _ewm_kernel(pdf):
         pdf = pdf.sort_values(order_cols, kind="mergesort")
         pdf = pdf[in_cols].copy()
-        pdf[out_col] = pdf[value_col].ewm(alpha=a, adjust=True).mean()
+        pdf["ema"] = pdf["value"].ewm(alpha=a, adjust=True).mean()
         return pdf
 
     long_rows = df.join(F.broadcast(mega_keys), klist, "left_semi")

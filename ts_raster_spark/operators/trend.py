@@ -26,19 +26,12 @@ an exact oracle, not a claim.
 
 from __future__ import annotations
 
-from typing import Sequence
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def theil_sen(
-    df: DataFrame,
-    value_col: str = "value",
-    entity_cols: Sequence[str] = ("conv_id",),
-    order_col: str = "turn_idx",
-) -> DataFrame:
-    """Per-entity Theil-Sen robust slope (Theil 1950, Sen 1968) — the
+def theil_sen(df: DataFrame) -> DataFrame:
+    """Per-conversation Theil-Sen robust slope of ``value`` on ``turn_idx`` (Theil 1950, Sen 1968) — the
     magnitude companion to :func:`mann_kendall` (which gives direction/
     significance): slope = median over ordered pairs of
     ``(v_j - v_i) / (x_j - x_i)``, intercept = median of
@@ -54,19 +47,19 @@ def theil_sen(
     slope multiset — and hence the median — replays bit-identically in
     the DuckDB twin (exact oracle).
 
-    Returns one row per entity: ``n``, ``slope``, ``intercept`` (both
+    Returns one row per conv_id: ``n``, ``slope``, ``intercept`` (both
     NULL for singleton series, where no pair exists).
 
-    Precondition: ``order_col`` must be unique per entity (the engine's
+    Precondition: ``turn_idx`` must be unique per conversation (the engine's
     panels guarantee dense per-conversation ``turn_idx``).  Rows sharing
     an order value form no pair (the strict ``_i < _j`` filter runs
     before the division, so no Inf/NaN can arise) — their slopes are
     silently absent from the median, which is almost never what a
-    caller wants; dedupe or re-index such inputs first (r5 advisor).
+    caller wants; dedupe or re-index such inputs first.
     """
-    ecols = list(entity_cols)
-    a = df.select(*ecols, F.col(order_col).alias("_i"), F.col(value_col).alias("_va"))
-    b = df.select(*ecols, F.col(order_col).alias("_j"), F.col(value_col).alias("_vb"))
+    ecols = ["conv_id"]
+    a = df.select(*ecols, F.col("turn_idx").alias("_i"), F.col("value").alias("_va"))
+    b = df.select(*ecols, F.col("turn_idx").alias("_j"), F.col("value").alias("_vb"))
     slopes = (
         a.join(b, ecols)
         .where(F.col("_i") < F.col("_j"))
@@ -83,7 +76,7 @@ def theil_sen(
         .groupBy(*ecols)
         .agg(
             F.expr(
-                f"percentile({value_col} - slope * CAST({order_col} AS DOUBLE), 0.5)"
+                "percentile(value - slope * CAST(turn_idx AS DOUBLE), 0.5)"
             ).alias("intercept")
         )
     )
@@ -94,24 +87,19 @@ def theil_sen(
     )
 
 
-def mann_kendall(
-    df: DataFrame,
-    value_col: str = "value",
-    entity_cols: Sequence[str] = ("conv_id",),
-    order_col: str = "turn_idx",
-    alpha_z: float = 1.96,
-) -> DataFrame:
-    """Per-entity Mann-Kendall test.
+def mann_kendall(df: DataFrame) -> DataFrame:
+    """Per-conversation Mann-Kendall test of ``value`` in ``turn_idx``
+    order.
 
-    Returns one row per entity: ``n`` points, ``s_stat`` (exact),
+    Returns one row per conv_id: ``n`` points, ``s_stat`` (exact),
     ``var_s`` (tie-corrected), ``z`` (null when Var == 0: n < 2 or all
     values tied) and ``trend`` in {'increasing','decreasing',
-    'no_trend'} at the ``alpha_z`` two-sided level (boundary quantized
+    'no_trend'} at the two-sided 5% level (|z| > 1.96) (boundary quantized
     at 9 dp — z is dimensionless, the q_anomaly_turns contract).
     """
-    ecols = list(entity_cols)
-    a = df.select(*ecols, F.col(order_col).alias("_i"), F.col(value_col).alias("_va"))
-    b = df.select(*ecols, F.col(order_col).alias("_j"), F.col(value_col).alias("_vb"))
+    ecols = ["conv_id"]
+    a = df.select(*ecols, F.col("turn_idx").alias("_i"), F.col("value").alias("_va"))
+    b = df.select(*ecols, F.col("turn_idx").alias("_j"), F.col("value").alias("_vb"))
     pairs = (
         a.join(b, ecols)
         .where(F.col("_i") < F.col("_j"))
@@ -123,7 +111,7 @@ def mann_kendall(
     counts = df.groupBy(*ecols).agg(F.count(F.lit(1)).cast("long").alias("n"))
     # tie correction: for each group of t equal values, t(t-1)(2t+5)
     ties = (
-        df.groupBy(*ecols, F.col(value_col).alias("_v"))
+        df.groupBy(*ecols, F.col("value").alias("_v"))
         .agg(F.count(F.lit(1)).cast("long").alias("_t"))
         .groupBy(*ecols)
         .agg(
@@ -148,7 +136,7 @@ def mann_kendall(
         (s - F.signum(s)).cast("double") / F.sqrt(F.col("var_s")),
     )
     out = joined.withColumn("z", z)
-    sig = F.round(F.abs(F.col("z")) - F.lit(float(alpha_z)), 9) > 0
+    sig = F.round(F.abs(F.col("z")) - F.lit(1.96), 9) > 0
     trend = (
         F.when(F.col("z").isNull(), F.lit("no_trend"))
         .when(sig & (F.col("z") > 0), F.lit("increasing"))

@@ -159,13 +159,13 @@ def run_checkpointed(
     return {"completed": len(todo), "skipped": skipped, "rows_out": rows_out}
 
 
-def read_result(spark: SparkSession, out_dir: str, n_slices: int | None = None) -> DataFrame:
-    """Read ONLY the current layout's manifest-listed completed slices —
-    a slice=* glob would silently union stale directories left by a
-    previous run with a different n_slices (double-counting). The schema
+def read_result(spark: SparkSession, out_dir: str) -> DataFrame:
+    """Read ONLY the most recent run's layout's manifest-listed completed
+    slices — a slice=* glob would silently union stale directories left
+    by a previous run with a different n_slices (double-counting). The schema
     comes from a slice's parquet footer, so building the read starts no
     Spark job."""
-    done = load_manifest(out_dir, n_slices)
+    done = load_manifest(out_dir)
     if not done:
         raise FileNotFoundError(f"no completed slices recorded in {out_dir}/{MANIFEST}")
     paths = [rec["path"] for rec in done.values()]

@@ -60,19 +60,21 @@ def _drain_stream(spark: SparkSession, inp: DataFrame, build, output_mode: str) 
     ``inp`` is written to a fresh directory under the checkout's
     ``.bench_tmp/``; ``build(RS.stream_turns(spark, path))`` is drained
     into a memory table named after that directory (availableNow, so the
-    table is complete when this returns), and the directory is removed
-    afterwards. A per-call copy means two runs from one checkout never
-    overwrite or list each other's input files, and no scratch outlives
-    the call."""
+    table is complete when this returns). The table is materialized with
+    ``localCheckpoint`` and its temp view dropped, and the directory is
+    removed afterwards. A per-call copy means two runs from one checkout
+    never overwrite or list each other's input files, and neither
+    scratch nor a session view outlives the call."""
     os.makedirs(_SCRATCH, exist_ok=True)
     path = tempfile.mkdtemp(prefix="tsrs_stream_", dir=_SCRATCH)
     name = os.path.basename(path)
     try:
         inp.write.mode("overwrite").parquet(path)
         RS.run_to_memory(build(RS.stream_turns(spark, path)), name, output_mode)
+        return spark.table(name).localCheckpoint()
     finally:
+        spark.catalog.dropTempView(name)
         shutil.rmtree(path, ignore_errors=True)
-    return spark.table(name)
 
 
 def finalize(df: DataFrame, ts_fmt: str = "yyyy-MM-dd HH:mm:ss") -> DataFrame:
@@ -302,7 +304,7 @@ def q_dedup_simhash(spark, sf_dir):
 def q_ann_topk_cosine(spark, sf_dir):
     from ts_raster_spark.operators.similarity import cosine_topk_bruteforce
 
-    return cosine_topk_bruteforce(_emb(spark, sf_dir), ANN_QUERY_IDS, k=5)
+    return cosine_topk_bruteforce(_emb(spark, sf_dir), ANN_QUERY_IDS)
 
 
 def q_ann_signlsh(spark, sf_dir):
@@ -328,8 +330,8 @@ def q_dedup_embedding_cosine_blocked(spark, sf_dir):
 
 
 def q_ann_ivf(spark, sf_dir):
-    """IVF (k-means cells, nprobe=8 of 16) approximate top-k,
-    driver-checkable (round 4): k-means iterations are not
+    """IVF (k-means cells, nprobe=8 of 16) approximate top-k, checkable
+    against an oracle through its recall claim: k-means iterations are not
     SQL-reproducible, so the raw neighbor rows cannot be value-hashed —
     but the QUALITY CLAIM can.  The query computes recall@5 per query
     vs an in-query brute-force top-5 over the same vectors and emits
@@ -346,7 +348,7 @@ def q_ann_ivf(spark, sf_dir):
 
     emb = _emb(spark, sf_dir)
     ivf = ivf_topk(emb, ANN_QUERY_IDS, k=5, nprobe=8).select("query_id", "neighbor_id")
-    brute = cosine_topk_bruteforce(emb, ANN_QUERY_IDS, k=5).select("query_id", "neighbor_id")
+    brute = cosine_topk_bruteforce(emb, ANN_QUERY_IDS).select("query_id", "neighbor_id")
     hits = brute.join(ivf, ["query_id", "neighbor_id"], "left_semi")
     per_q = (
         brute.select("query_id").distinct()
@@ -381,7 +383,7 @@ def q_quality_score(spark, sf_dir):
 def q_tfidf_top_terms(spark, sf_dir):
     from ts_raster_spark.operators.textstats import tfidf_top_terms
 
-    return tfidf_top_terms(_docs(spark, sf_dir), k=3)
+    return tfidf_top_terms(_docs(spark, sf_dir))
 
 
 def q_fingerprint(spark, sf_dir):
@@ -395,7 +397,7 @@ def q_dedup_keep_canonical(spark, sf_dir):
     the component-min doc + singletons, with cluster-size accounting."""
     from ts_raster_spark.operators.dedup import dedup_keep_canonical
 
-    out = dedup_keep_canonical(_docs(spark, sf_dir), k=8, band_size=2)
+    out = dedup_keep_canonical(_docs(spark, sf_dir))
     return out.select("doc_id", "source", "n_chars", "component", "n_dups")
 
 
@@ -419,7 +421,7 @@ def q_duplicate_lines(spark, sf_dir):
     shifted = docs.where(F.col("doc_id") % 7 == 0).withColumn(
         "doc_id", F.col("doc_id") + F.lit(1000000)
     )
-    return duplicate_lines(docs.unionByName(shifted), min_chars=10)
+    return duplicate_lines(docs.unionByName(shifted))
 
 
 def q_decontaminate(spark, sf_dir):
@@ -446,7 +448,7 @@ def q_decontaminate_bloom(spark, sf_dir):
     docs = _docs(spark, sf_dir)
     train = docs.where(F.col("doc_id") % 20 != 0)
     bench = docs.where(F.col("doc_id") % 20 == 0)
-    return decontaminate_ngrams_bloom(train, bench, n=4, threshold=0.1)
+    return decontaminate_ngrams_bloom(train, bench, n=4)
 
 
 def q_chunk_documents(spark, sf_dir):
@@ -463,7 +465,7 @@ def q_pack_documents(spark, sf_dir):
     shard, so no global single-task stage exists at scale."""
     from ts_raster_spark.operators.chunking import pack_documents
 
-    return pack_documents(_docs(spark, sf_dir), budget=512, shard_col="source")
+    return pack_documents(_docs(spark, sf_dir), budget=512)
 
 
 def q_stream_dedup_exact(spark, sf_dir):
@@ -488,8 +490,7 @@ def q_curate_corpus(spark, sf_dir):
 
     docs = _docs(spark, sf_dir)
     bench = docs.where(F.col("doc_id") % 20 == 0)
-    return curate_corpus(docs, bench, min_quality=0.5, contamination_n=4,
-                         contamination_threshold=0.1)
+    return curate_corpus(docs, bench)
 
 
 def q_hll_users_hour(spark, sf_dir):
@@ -502,7 +503,7 @@ def q_hll_users_hour(spark, sf_dir):
     from ts_raster_spark.operators.hll import hll_distinct_over_tiers
 
     t = load_turns(spark, sf_dir)
-    return finalize(hll_distinct_over_tiers(t, entity="conv_id", fine="minute", coarse="hour"))
+    return finalize(hll_distinct_over_tiers(t, entity="conv_id"))
 
 
 def q_kmv_retention_hour(spark, sf_dir):
@@ -554,7 +555,7 @@ def q_train_test_split(spark, sf_dir):
     from ts_raster_spark.operators.ml_prep import hash_split
 
     ids = load_turns(spark, sf_dir).select("conv_id").distinct()
-    return hash_split(ids, ["conv_id"], test_frac=0.33)
+    return hash_split(ids, ["conv_id"])
 
 
 def _conv_features_xy(spark, sf_dir):
@@ -635,7 +636,7 @@ def q_asof_join(spark, sf_dir):
     """As-of backward join: each turn picks up the latest hour-bucket
     mean text_len at-or-before its timestamp (DuckDB native ASOF JOIN is
     the oracle)."""
-    from ts_raster_spark.operators.asof import asof_join_backward
+    from ts_raster_spark.operators.asof import asof_join
 
     t = load_turns(spark, sf_dir).select("conv_id", "turn_idx", "ts")
     pts = rollup_simple(
@@ -643,8 +644,8 @@ def q_asof_join(spark, sf_dir):
         "hour",
         aggs={"bucket_mean": F.avg("value")},
     ).select("conv_id", "bucket_start", r4(F.col("bucket_mean")).alias("bucket_mean"))
-    out = asof_join_backward(t, pts, key="conv_id", left_ts="ts", right_ts="bucket_start",
-                             value_cols=["bucket_mean"])
+    out = asof_join(t, pts, key="conv_id", left_ts="ts", right_ts="bucket_start",
+                    value_cols=["bucket_mean"], direction="backward")
     return finalize(out.select("conv_id", "turn_idx", "ts", "bucket_mean"),
                     ts_fmt="yyyy-MM-dd HH:mm:ss.SSSSSS")
 
@@ -661,7 +662,7 @@ def q_session_windows(spark, sf_dir):
     """Native merging session windows (30 min inactivity gap)."""
     from ts_raster_spark.operators.asof import session_windows
 
-    out = session_windows(load_turns(spark, sf_dir), gap="30 minutes")
+    out = session_windows(load_turns(spark, sf_dir))
     return finalize(out, ts_fmt="yyyy-MM-dd HH:mm:ss.SSSSSS")
 
 
@@ -732,7 +733,7 @@ def _kll_rank_claim(spark, sf_dir, cascade):
     sk = kll_sketch(long_df, "minute", k=k)
     for tier in cascade:
         sk = kll_merge(sk, tier, k=k)
-    est = kll_quantiles(sk, qs=(0.5, 0.95))
+    est = kll_quantiles(sk)
     raw = long_df.withColumn("bucket_start", F.date_trunc(cascade[-1], F.col("ts")))
     joined = raw.join(est, ["conv_id", "kind", "bucket_start"])
     n = F.count("*")
@@ -948,7 +949,7 @@ def q_sketch_quantile_hour(spark, sf_dir):
     rng = value_range(long_df)
     minute = histogram_sketch(long_df, "minute", rng, bins=64)
     hour = merge_sketch(minute, "hour")
-    return finalize(sketch_quantiles(hour, rng, qs=(0.5, 0.95), bins=64))
+    return finalize(sketch_quantiles(hour, rng, bins=64))
 
 
 def q_stream_rollup_minute(spark, sf_dir):
@@ -1013,7 +1014,7 @@ def q_wide_to_long_panel(spark, sf_dir):
     from ts_raster_spark.operators.ml_prep import wide_to_long
 
     wide = q_combine_periods(spark, sf_dir)
-    return wide_to_long(wide, keys=["conv_id"], sep="_")
+    return wide_to_long(wide, keys=["conv_id"])
 
 
 def q_autocorr_lags(spark, sf_dir):
@@ -1050,7 +1051,7 @@ def q_kernel_features_cwt(spark, sf_dir):
     features = ["turn_count", "mean", "abs_energy",
                 "number_cwt_peaks_n6", "number_cwt_peaks_n12",
                 "longest_strike_above_mean", "longest_strike_below_mean"]
-    return finalize(extract_features_kernel(long_df, tier=None, features=features))
+    return finalize(extract_features_kernel(long_df, features=features))
 
 
 def q_compress_roundtrip(spark, sf_dir):
@@ -1065,7 +1066,7 @@ def q_compress_roundtrip(spark, sf_dir):
     from ts_raster_spark.operators.compress import compress_blocks, decompress_blocks
 
     long_df = load_long(spark, sf_dir).where(F.col("kind").isin("text_len", "latency_s"))
-    blocks = compress_blocks(long_df, block="day")
+    blocks = compress_blocks(long_df)
     # sums carry the surface-standard r4 contract (4-dp + sig-digit cap,
     # functions/norm.py);
     # decode is bit-exact so only order-of-summation noise (~1e-7 abs at
@@ -1237,7 +1238,7 @@ def q_balanced_panel_check(spark, sf_dir):
     )
 
 
-# --- §2.5 extended tsfresh dictionary (round 3, features_ext.py) ----------
+# --- §2.5 extended tsfresh dictionary (features_ext.py) --------------------
 
 def q_conv_features_ext(spark, sf_dir):
     """Whole-series extraction of the EXTENDED tsfresh dictionary
@@ -1259,7 +1260,7 @@ def q_ohlc_hour(spark, sf_dir):
     """Gauge OHLC downsample per (conv, hour) on the value channel."""
     from ts_raster_spark.operators.timeseries import ohlc
 
-    return finalize(ohlc(load_turns(spark, sf_dir), "value", "hour"))
+    return finalize(ohlc(load_turns(spark, sf_dir)))
 
 
 def q_counter_rate_hour(spark, sf_dir):
@@ -1290,7 +1291,7 @@ def q_ema_turns(spark, sf_dir):
     adjust=True semantics) of the value channel per conversation."""
     from ts_raster_spark.operators.timeseries import ema
 
-    t = ema(load_turns(spark, sf_dir), alpha=0.3, value_col="value")
+    t = ema(load_turns(spark, sf_dir), alpha=0.3)
     return finalize(t.select("conv_id", "turn_idx", "ema"))
 
 
@@ -1301,7 +1302,7 @@ def q_lttb_downsample(spark, sf_dir):
     from ts_raster_spark.operators.downsample import lttb
 
     t = load_turns(spark, sf_dir).withColumn("text_len", F.length("text").cast("double"))
-    out = lttb(t, n_out=20, y_col="text_len")
+    out = lttb(t, n_out=20)
     return finalize(out, ts_fmt="yyyy-MM-dd HH:mm:ss.SSSSSS")
 
 
@@ -1445,7 +1446,7 @@ def q_sliding_counts(spark, sf_dir):
 
 
 def q_sliding_counts_hll(spark, sf_dir):
-    """Scale path for hopping-window distinct counts (round 4): exact
+    """Scale path for hopping-window distinct counts: exact
     ``count_distinct`` over 1-hour/15-min hopping windows shuffles every
     distinct (window, conv_id) pair FOUR times — the distinct-pair
     shuffle the HLL register table (operators/hll.py) exists to avoid.
@@ -1532,10 +1533,7 @@ def q_cusum_changepoints(spark, sf_dir):
     from ts_raster_spark.operators.changepoint import cusum
 
     t = load_turns(spark, sf_dir)
-    return finalize(
-        cusum(t, value_col="value", entity_cols=("conv_id",),
-              order_col="turn_idx", k=0.5, h=4.0)
-    )
+    return finalize(cusum(t))
 
 
 def q_seasonal_anomaly_hour(spark, sf_dir):
@@ -1550,7 +1548,7 @@ def q_seasonal_anomaly_hour(spark, sf_dir):
         t.groupBy(F.date_trunc("hour", F.col("ts")).alias("bucket_start"))
         .agg(F.count(F.lit(1)).cast("long").alias("n_turns"))
     )
-    out = seasonal_baseline(hourly, "bucket_start", "n_turns", period="hod")
+    out = seasonal_baseline(hourly, "n_turns", period="hod")
     return finalize(
         out.select(
             "bucket_start",
@@ -1581,7 +1579,7 @@ def q_tool_corr_hour(spark, sf_dir):
         )
         .agg(F.count(F.lit(1)).cast("double").alias("n"))
     )
-    out = pairwise_corr(tool_hourly, "bucket_start", "tool", "n", min_buckets=2)
+    out = pairwise_corr(tool_hourly, "bucket_start", "tool", "n")
     return finalize(
         out.select(
             "series_a", "series_b",
@@ -1600,10 +1598,7 @@ def q_mann_kendall_trend(spark, sf_dir):
     from ts_raster_spark.operators.trend import mann_kendall
 
     t = load_turns(spark, sf_dir)
-    return finalize(
-        mann_kendall(t, value_col="value", entity_cols=("conv_id",),
-                     order_col="turn_idx", alpha_z=1.96)
-    )
+    return finalize(mann_kendall(t))
 
 
 def q_embedding_project(spark, sf_dir):
@@ -1616,7 +1611,7 @@ def q_embedding_project(spark, sf_dir):
     from ts_raster_spark.operators.projection import random_projection
 
     emb = _emb(spark, sf_dir)
-    out = random_projection(emb, vec_col="embedding", d=64, k=16)
+    out = random_projection(emb)
     return finalize(out.select("vec_id", *[f"p{j}" for j in range(16)]))
 
 
@@ -1634,7 +1629,7 @@ def q_funnel_tools(spark, sf_dir):
         ("code", F.col("tool") == "code"),
         ("browser", F.col("tool") == "browser"),
     ]
-    times = funnel_times(t, steps, entity_cols=("conv_id",))
+    times = funnel_times(t, steps)
     return finalize(funnel_summary(times, [n for n, _ in steps]))
 
 
@@ -1707,8 +1702,7 @@ def _cms_ngram_probes(spark, sf_dir, tier, min_cnt):
     ).agg(F.count(F.lit(1)).cast("long").alias("cnt"))
     probes = exact.where(F.col("cnt") >= min_cnt)
     est = cms_estimate(
-        cells, probes.select("bucket_start", F.col("ngram").alias("item")),
-        item_col="item",
+        cells, probes.select("bucket_start", F.col("ngram").alias("item"))
     ).withColumnRenamed("item", "ngram")
     out = probes.join(est, ["bucket_start", "ngram"]).select(
         "bucket_start", "ngram", "cnt", "est",
@@ -1742,10 +1736,7 @@ def q_theil_sen_trend(spark, sf_dir):
     from ts_raster_spark.operators.trend import theil_sen
 
     t = load_turns(spark, sf_dir)
-    return finalize(
-        theil_sen(t, value_col="value", entity_cols=("conv_id",),
-                  order_col="turn_idx")
-    )
+    return finalize(theil_sen(t))
 
 
 def q_psi_drift_day(spark, sf_dir):
@@ -1759,7 +1750,7 @@ def q_psi_drift_day(spark, sf_dir):
     long_df = load_long(spark, sf_dir, channels=("text_len", "latency_s"))
     rng = value_range(long_df)
     sk = histogram_sketch(long_df, "day", rng, bins=64)
-    out = psi_drift(sk, bins=64, eps=0.5)
+    out = psi_drift(sk, bins=64)
     return finalize(out.select("kind", "bucket_start", "psi", "n_curr", "n_prev"))
 
 
@@ -1780,10 +1771,7 @@ def q_tool_leadlag_hour(spark, sf_dir):
         )
         .agg(F.count(F.lit(1)).cast("double").alias("n"))
     )
-    out = cross_corr_lags(
-        tool_hourly, "bucket_start", "tool", "n",
-        lags=(-2, -1, 0, 1, 2), step_seconds=3600, min_buckets=2,
-    )
+    out = cross_corr_lags(tool_hourly, "bucket_start", "tool", "n")
     return finalize(
         out.select(
             "series_a", "series_b", "lag",
@@ -1806,8 +1794,7 @@ def q_decompose_hourly(spark, sf_dir):
         t.groupBy(F.date_trunc("hour", F.col("ts")).alias("bucket_start"))
         .agg(F.count(F.lit(1)).cast("long").alias("n_turns"))
     )
-    out = classical_decompose(hourly, "bucket_start", "n_turns",
-                              period="hod", half_window=12)
+    out = classical_decompose(hourly, "n_turns")
     return finalize(
         out.select("bucket_start", "n_turns", "trend", "seasonal", "resid")
     )
@@ -1823,6 +1810,5 @@ def q_holt_smoothing(spark, sf_dir):
     from ts_raster_spark.operators.holt import holt_smooth
 
     t = load_turns(spark, sf_dir)
-    out = holt_smooth(t, value_col="value", entity_cols=("conv_id",),
-                      order_col="turn_idx", alpha=0.3, beta=0.1)
+    out = holt_smooth(t)
     return finalize(out.select("conv_id", "turn_idx", "level", "trend", "fitted"))

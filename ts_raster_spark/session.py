@@ -63,8 +63,8 @@ def get_spark(
         # manageable while preserving parallelism.
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         # zstd output: ~30% smaller tier files than snappy at equal
-        # write+read wall time on this box (round-6 A/B: minute tier
-        # 119 MB snappy vs 84 MB zstd, 4.8 s vs 4.6 s write, read flat)
+        # write+read wall time (A/B on a minute tier: 119 MB snappy vs
+        # 84 MB zstd, 4.8 s vs 4.6 s write, read flat)
         # — guide §6; at 100 TB smaller files are strictly better.
         .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))

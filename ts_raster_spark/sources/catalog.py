@@ -68,8 +68,9 @@ def read_parquet(spark: SparkSession, *paths: str) -> DataFrame:
     return reader.parquet(*paths)
 
 
-def feature_names_dim(spark: SparkSession, wide_df: DataFrame, key_cols=("conv_id",), sep: str = "_") -> DataFrame:
-    """Band→feature lookup dim for a wide export (reference
+def feature_names_dim(spark: SparkSession, wide_df: DataFrame) -> DataFrame:
+    """Band→feature lookup dim for a ``conv_id``-keyed wide export
+    whose columns are named ``{kind}_{feature}`` (reference
     tsraster/calculate.py:139-144 writes the tsfresh feature-name list
     alongside the banded tiff). One row per non-key column:
     (position, column_name, kind, feature) — position is the 1-based
@@ -79,10 +80,10 @@ def feature_names_dim(spark: SparkSession, wide_df: DataFrame, key_cols=("conv_i
     rows = []
     pos = 0
     for c in wide_df.columns:
-        if c in key_cols:
+        if c == "conv_id":
             continue
         pos += 1
-        kind, _, feat = c.rpartition(sep)
+        kind, _, feat = c.rpartition("_")
         rows.append((pos, c, kind, feat))
     return spark.createDataFrame(
         rows, "position int, column_name string, kind string, feature string"

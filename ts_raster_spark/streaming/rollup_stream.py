@@ -114,10 +114,10 @@ def stateful_turn_counter(turns_stream: DataFrame) -> DataFrame:
     )
 
 
-def stream_dedup_exact(turns_stream: DataFrame, watermark: str = "720 hours") -> DataFrame:
+def stream_dedup_exact(turns_stream: DataFrame) -> DataFrame:
     """At-least-once-source dedup: duplicate deliveries of the same turn
-    (same conv_id/turn_idx/content hash) arriving within the watermark
-    are dropped via ``dropDuplicatesWithinWatermark`` — the bounded-state
+    (same conv_id/turn_idx/content hash) arriving within the 720-hour
+    watermark are dropped via ``dropDuplicatesWithinWatermark`` — the bounded-state
     streaming dedup (state for a key is evicted once the watermark
     passes it, unlike plain dropDuplicates whose state grows forever).
     The 100 TB story: dedup state is capped by the watermark horizon,
@@ -127,7 +127,7 @@ def stream_dedup_exact(turns_stream: DataFrame, watermark: str = "720 hours") ->
         "turn_idx",
         F.col("ts").cast("timestamp").alias("ts"),
         F.md5("text").alias("content_md5"),
-    ).withWatermark("ts", watermark)
+    ).withWatermark("ts", "720 hours")
     return keyed.dropDuplicatesWithinWatermark(["conv_id", "turn_idx", "content_md5"])
 
 
@@ -144,20 +144,16 @@ def run_to_memory(sdf: DataFrame, query_name: str, output_mode: str) -> None:
     q.awaitTermination()
 
 
-def stream_sliding(
-    turns_stream: DataFrame,
-    duration: str = "1 hour",
-    slide: str = "15 minutes",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Hopping-window continuous aggregate: each turn contributes to
-    duration/slide overlapping windows (Structured Streaming's native
-    sliding ``window(ts, duration, slide)``). COUNT(DISTINCT) is not
+def stream_sliding(turns_stream: DataFrame) -> DataFrame:
+    """Hopping-window continuous aggregate under a 2-hour watermark: each
+    turn contributes to the 4 overlapping 1-hour windows that start every
+    15 minutes (Structured Streaming's native sliding
+    ``window(ts, "1 hour", "15 minutes")``). COUNT(DISTINCT) is not
     available in streaming aggregations, so the hop rollup carries
     count/mean/sum only — the batch twin proves parity."""
     return (
-        turns_stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", duration, slide).alias("w"))
+        turns_stream.withWatermark("ts", "2 hours")
+        .groupBy(F.window("ts", "1 hour", "15 minutes").alias("w"))
         .agg(
             F.count("*").cast("long").alias("n_turns"),
             F.avg(F.length("text").cast("double")).alias("mean_text_len"),
@@ -220,15 +216,16 @@ def _session_fn(
         yield _emit(closed)
 
 
-def stateful_session_windows(turns_stream: DataFrame, watermark: str = "1 second") -> DataFrame:
+def stateful_session_windows(turns_stream: DataFrame) -> DataFrame:
     """Streaming session windows via applyInPandasWithState +
     EventTimeTimeout (the custom stateful operator the built-in
     ``session_window`` aggregation generalizes from). Emits one row per
     CLOSED session; open sessions flush when the final watermark passes
-    them (Spark's no-data micro-batch fires the pending timeouts)."""
+    them under the 1-second watermark (Spark's no-data micro-batch fires
+    the pending timeouts)."""
     return (
         turns_stream.select("conv_id", "turn_idx", "ts")
-        .withWatermark("ts", watermark)
+        .withWatermark("ts", "1 second")
         .groupBy("conv_id")
         .applyInPandasWithState(
             _session_fn,
