@@ -243,6 +243,25 @@ def test_read_result_with_empty_slices(spark, turns_small, tmp_path):
     assert got.exceptAll(ref).isEmpty() and ref.exceptAll(got).isEmpty()
 
 
+def test_read_result_in_slice_order(spark, turns_small, tmp_path, monkeypatch):
+    """Concurrent slices append their manifest lines in completion order;
+    read_result still reads slice 0 first."""
+    from ts_raster_spark.plans import checkpoint
+
+    out = str(tmp_path / "ckpt_order")
+    run_checkpointed(spark, turns_small, _transform, out, n_slices=2)
+    manifest = os.path.join(out, "manifest.jsonl")
+    with open(manifest) as f:
+        lines = sorted(f, key=lambda line: -json.loads(line)["slice_id"])
+    with open(manifest, "w") as f:
+        f.writelines(lines)
+    assert [json.loads(line)["slice_id"] for line in lines] == [1, 0]
+    read = []
+    monkeypatch.setattr(checkpoint, "read_parquet", lambda spark, *paths: read.extend(paths))
+    read_result(spark, out)
+    assert [os.path.basename(p) for p in read] == ["slice=0", "slice=1"]
+
+
 def test_read_without_data_files_raises(spark, tmp_path):
     """No footer to read: Spark's own inference runs and fails as before."""
     cat = ParquetTierCatalog(str(tmp_path / "tiers_empty"))

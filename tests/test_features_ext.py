@@ -7,26 +7,27 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from ts_raster_spark.functions.features_ext import rollup_ext_features
 
 
 def np_ext_features(x: np.ndarray) -> dict[str, float]:
-    """Reference formulas straight from the tsfresh definitions."""
+    """Reference formulas straight from the tsfresh definitions.  A NaN
+    stands for a null value: the duplicate/reoccurrence family groups
+    nulls as one value and its extrema and sums skip them."""
     n = len(x)
     out: dict[str, float] = {}
-    vals, counts = np.unique(x, return_counts=True)
+    vals, counts = np.unique(x, return_counts=True, equal_nan=True)
     reoc = vals[counts > 1]
     out["has_duplicate"] = float(n != len(vals))
-    out["has_duplicate_max"] = float(np.sum(x == x.max()) > 1)
-    out["has_duplicate_min"] = float(np.sum(x == x.min()) > 1)
+    out["has_duplicate_max"] = float(np.sum(x == np.nanmax(x)) > 1)
+    out["has_duplicate_min"] = float(np.sum(x == np.nanmin(x)) > 1)
     out["percentage_of_reoccurring_datapoints_to_all_datapoints"] = (
         float(np.sum(counts[counts > 1])) / n
     )
     out["percentage_of_reoccurring_values_to_all_values"] = len(reoc) / len(vals)
-    out["sum_of_reoccurring_values"] = float(reoc.sum())
-    out["sum_of_reoccurring_data_points"] = float((reoc * counts[counts > 1]).sum())
+    out["sum_of_reoccurring_values"] = float(np.nansum(reoc))
+    out["sum_of_reoccurring_data_points"] = float(np.nansum(reoc * counts[counts > 1]))
     out["value_count_0"] = float(np.sum(x == 0))
     out["range_count_m1_1"] = float(np.sum((x >= -1) & (x < 1)))
     out["mean_n_absolute_max_3"] = (
@@ -108,15 +109,28 @@ SERIES = {
     "single": np.array([4.0]),
     "trendy": np.arange(20, dtype=float) * 1.5 + 2.0,
     "noisy": np.random.RandomState(3).normal(scale=5.0, size=37).round(2),
+    # -0.0 and 0.0 are one value
+    "signed_zero_ties": np.array([0.0, -0.0, 1.5, -0.0, 2.0, 1.5, 0.0, -3.0]),
 }
+
+# NaN = null; only the duplicate/reoccurrence family is compared, the one
+# family whose result depends on how equal values are grouped
+NULL_SERIES = {"zero_ties_nulls": np.array([0.0, np.nan, -0.0, 1.5, np.nan, 1.5, 0.0, 2.0, -0.0])}
+DUPLICATE_FEATURES = (
+    "has_duplicate", "has_duplicate_max", "has_duplicate_min",
+    "percentage_of_reoccurring_datapoints_to_all_datapoints",
+    "percentage_of_reoccurring_values_to_all_values",
+    "sum_of_reoccurring_values", "sum_of_reoccurring_data_points",
+)
 
 
 @pytest.fixture(scope="module")
 def ext_result(spark):
     rows = []
-    for name, arr in SERIES.items():
+    for name, arr in {**SERIES, **NULL_SERIES}.items():
         for i, v in enumerate(arr):
-            rows.append((name, "chan", i, (pd.Timestamp("2024-01-01") + pd.Timedelta(seconds=i)).to_pydatetime(), float(v)))
+            value = None if np.isnan(v) else float(v)
+            rows.append((name, "chan", i, (pd.Timestamp("2024-01-01") + pd.Timedelta(seconds=i)).to_pydatetime(), value))
     df = spark.createDataFrame(rows, "conv_id string, kind string, turn_idx int, ts timestamp, value double")
     out = rollup_ext_features(df, ["conv_id", "kind"]).toPandas()
     return out.set_index("conv_id")
@@ -136,23 +150,21 @@ def test_ext_features_match_numpy(ext_result, name):
             assert g == pytest.approx(expect, rel=1e-9, abs=1e-9), f"{name}.{feat}"
 
 
-def test_spark_and_duck_ext_names_agree():
+@pytest.mark.parametrize("name", list(NULL_SERIES))
+def test_duplicate_features_group_nulls(ext_result, name):
+    got = ext_result.loc[name]
+    want = np_ext_features(NULL_SERIES[name])
+    for feat in DUPLICATE_FEATURES:
+        assert got[feat] == pytest.approx(want[feat], rel=1e-9, abs=1e-9), f"{name}.{feat}"
+
+
+def test_spark_and_duck_ext_names_agree(spark):
     """queries() column names == oracle column names (the driver hash
     sorts by name, so a drift here is a silent mismatch)."""
-    from ts_raster_spark.functions.features_ext import ext_feature_aggs
+    from ts_raster_spark.functions.features import feature_registry
     from ts_raster_spark.sql.duck_features_ext import EXT_EXPRS
 
-    assert set(ext_feature_aggs()) == set(EXT_EXPRS)
-
-
-def test_ext_plan_single_exchange(spark, turns_small):
-    """All ext helper windows + the groupBy share ONE hash partitioning
-    on the rollup keys: exactly one Exchange over the input side."""
-    from ts_raster_spark.operators.longform import to_long_panel
-
-    long_df = to_long_panel(turns_small).where(F.col("kind") == "text_len")
-    plan = rollup_ext_features(long_df, ["conv_id", "kind"])._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Exchange") <= 2, plan  # input derivation + one rollup-key exchange
+    assert set(feature_registry(["ext"])) == set(EXT_EXPRS)
 
 
 def test_ext_features_randomized_batch(spark):
@@ -229,9 +241,8 @@ def test_boundary_contract_scale_relative(spark):
     pdf = pd.DataFrame(rows, columns=["g", "value"])
     df = spark.createDataFrame(pdf)
 
-    # round 6: symmetry's median is a rank-sum aggregate — attach the
-    # value-rank helper columns it reads (rollup_ext_features does this
-    # via attach_ext_stats)
+    # symmetry's median is a rank-sum aggregate over the value-rank
+    # helper columns (the registry attaches them in rollup_ext_features)
     from ts_raster_spark.functions.features import attach_value_rank
 
     df = attach_value_rank(df, ["g"])

@@ -130,16 +130,14 @@ RECOMPUTE_FROM_FINEST = frozenset({
 })
 
 
-def test_tier_algebra_classification_is_exhaustive():
+def test_tier_algebra_classification_is_exhaustive(spark):
     """Every column the flagship rollup can emit (39 aggregate features
     + strike/trend/entropy extras + the kernel CWT peaks) must be
     classified as either cascaded-exact (sufficient statistics) or
     recompute-from-finest — a new calculator cannot land unclassified."""
-    from ts_raster_spark.functions.features import default_feature_aggs
+    from ts_raster_spark.functions.features import feature_registry
 
-    emitted = set(default_feature_aggs()) | {
-        "longest_strike_above_mean", "longest_strike_below_mean",
-        "agg_linear_trend_slope_max_chunk3", "binned_entropy_10",
+    emitted = set(feature_registry(["default", "strikes", "trend", "entropy"])) | {
         "number_cwt_peaks_n6", "number_cwt_peaks_n12",
     }
     classified = ALGEBRAIC_FROM_SUFFICIENT_STATS | RECOMPUTE_FROM_FINEST

@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from ts_raster_spark.functions import features as FT
+from ts_raster_spark.functions.features_ext import rollup_ext_features
 from ts_raster_spark.operators.longform import to_long_panel, with_channels
 from ts_raster_spark.operators.mask import mask_df
 from ts_raster_spark.operators.rollup import bucketize, rollup_features, rollup_simple_wide
@@ -57,18 +58,51 @@ def test_rollup_single_exchange(spark, turns_small):
 
 
 def test_helper_free_rollup_prunes_helper_windows(spark, turns_small):
-    """rollup_features attaches the value-rank, group-stat and Benford
-    helpers to every request and leaves the pruning to Catalyst: a
+    """rollup_features attaches only the helpers its names read: a
     helper-free request (q_mask_rollup_hour's four features) plans as many
     Window nodes as a plain groupBy of the same aggregates over the same
     input, while a request that reads a helper plans more."""
     names = ["turn_count", "mean", "maximum", "minimum"]
     long_df = to_long_panel(turns_small).where(F.col("kind") == "text_len")
     df, keys = bucketize(long_df, "hour")
-    aggs = FT.default_feature_aggs()
-    plain = _plan(df.groupBy(*keys).agg(*[aggs[n].alias(n) for n in names])).count("Window")
+    aggs = FT.feature_registry(["default"])
+    plain = _plan(df.groupBy(*keys).agg(*[aggs[n][0].alias(n) for n in names])).count("Window")
     assert _plan(rollup_features(long_df, tier="hour", feature_names=names)).count("Window") == plain
     assert _plan(rollup_features(long_df, tier="hour", include_strikes=True)).count("Window") > plain
+
+
+# (Window, Sort) ceilings of the perfbench feature frames over
+# to_long_panel: one Sort per helper sort family plus the latency window's
+FRAME_SHAPES = {
+    "hour": (lambda long_df: rollup_features(long_df, tier="hour"), 3, 3),
+    "conv": (
+        lambda long_df: rollup_features(
+            long_df, tier=None, include_strikes=True, include_trend=True, include_entropy=True
+        ),
+        4,
+        3,
+    ),
+    "ext": (lambda long_df: rollup_ext_features(long_df, ["conv_id", "kind"]), 5, 4),
+}
+
+
+@pytest.mark.parametrize("frame", list(FRAME_SHAPES))
+def test_feature_frame_plan_shape(spark, turns_small, frame):
+    """Each sort family of the helper registry sorts once, and every
+    helper window and the groupBy share one rollup-key exchange: the
+    latency window's conv_id partitioning, which clusters the rollup
+    keys."""
+    import re
+
+    query, max_windows, max_sorts = FRAME_SHAPES[frame]
+    # the cached fixture's own plan prints below InMemoryRelation
+    plan = _plan(query(to_long_panel(turns_small))).split("InMemoryRelation")[0]
+
+    def nodes(name):
+        return len(re.findall(rf"^[\s:+-]*\*?(?:\(\d+\) )?{name} \[", plan, re.M))
+
+    assert nodes("Window") <= max_windows and nodes("Sort") <= max_sorts, plan
+    assert plan.count("Exchange hashpartitioning(conv_id") == 1 and plan.count("Exchange") == 1, plan
 
 
 def test_wide_rollup_prunes_latency_window(spark, turns_small):

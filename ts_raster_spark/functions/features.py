@@ -18,74 +18,238 @@ Numeric contracts that matter for rolled-up point equality:
   window-attached group mean (numerically stable two-pass).
 - ``median``/``quantile(q)`` are exact linear-interpolation quantiles,
   bit-identical to ``percentile`` (not ``percentile_approx``), computed
-  as rank-sums: :func:`attach_value_rank` ranks each row's value and
+  as rank-sums: the ``value_rank`` helper ranks each row's value and
   two conditional sums per quantile pick and weight the interpolation
   neighbours (:func:`rank_quantile_agg`).
 - ``autocorrelation(lag)`` uses the tsfresh estimator: global mean and
   population variance, divisor ``(n - lag) * var_pop``.
 
-Row-level prerequisite columns (group mean/std/extrema, lag, row number)
-are attached by :func:`attach_group_stats` with windows partitioned on
-the rollup keys, so the window shuffle is the *only* shuffle — the
-subsequent groupBy reuses the same hash partitioning.
+Row-level helper columns (group mean/std/extrema, lags, row numbers,
+value ranks, ...) come from one registry, :data:`HELPERS`, and every
+calculator names the helpers it reads in :func:`feature_registry` (the
+reference's ``fc_parameters`` dict, calculate.py:103-112, with the
+helpers as data).  :func:`feature_rollup` attaches exactly the closure
+of the helpers a request reads, each once, one sort family at a time.
+Every helper window partitions on the rollup keys (or a superset), so
+the window shuffle is the *only* shuffle — the groupBy reuses the same
+hash partitioning.
 """
 
 from __future__ import annotations
+
+from itertools import groupby
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 V = "value"
-# Names of helper columns attached by attach_group_stats.
 MU, SIG, VMAX, VMIN, RN, LAG1, LAG2 = "_mu", "_sigma", "_vmax", "_vmin", "_rn", "_lag1", "_lag2"
+RNV, NV, BDIGIT = "_rnv", "_nv", "_bdigit"
+VCNT, VFIRST, CUMABS, TOTABS, RNABS, QL, QH = (
+    "_vcnt", "_vfirst", "_cumabs", "_totabs", "_rnabs", "_ql", "_qh"
+)
 
 ORDER_COLS = ("turn_idx", "ts")
-
-
 PEAK_NS = (1, 3)
+CHANGE_QL, CHANGE_QH = 0.25, 0.75
+ENTROPY_BINS = 10
+TREND_CHUNK_LEN = 3
+
+UNBOUNDED = (Window.unboundedPreceding, Window.unboundedFollowing)
+RUNNING = (Window.unboundedPreceding, Window.currentRow)
+
+
+# --- helper columns ------------------------------------------------------
+# Each builder returns the columns of one helper for the rollup ``keys``.
+# All windows of one sort family share one (partition, order) spec, so
+# the family sorts once: whole-partition aggregates use an explicit
+# unbounded frame on the ordered spec instead of an unordered spec,
+# which would need a sort of its own.
+
+def _turn_order(keys: list[str]) -> Window:
+    return Window.partitionBy(*keys).orderBy(*[F.col(c) for c in ORDER_COLS])
+
+
+def _value_order(keys: list[str]) -> Window:
+    return Window.partitionBy(*keys).orderBy(F.col(V).asc())
+
+
+def _group_stats(keys: list[str], lags) -> dict[str, Column]:
+    """Group mean/std/extrema/length, row number, ``_lag{n}`` for
+    ``lags`` (1 and 2 always) and the neighbourhood maxima of
+    number_peaks(n): a strict peak is above every neighbour within
+    distance n on BOTH sides."""
+    wo = _turn_order(keys)
+    wf = wo.rowsBetween(*UNBOUNDED)
+    cols = {
+        MU: F.avg(V).over(wf),
+        SIG: F.stddev_pop(V).over(wf),
+        VMAX: F.max(V).over(wf),
+        VMIN: F.min(V).over(wf),
+        "_nrows": F.count(V).over(wf),
+        RN: F.row_number().over(wo),
+    }
+    cols.update({f"_lag{lag}": F.lag(V, lag).over(wo) for lag in sorted(set(lags) | {1, 2})})
+    for n in PEAK_NS:
+        cols[f"_maxp{n}"] = F.max(V).over(wo.rowsBetween(-n, -1))
+        cols[f"_maxf{n}"] = F.max(V).over(wo.rowsBetween(1, n))
+    return cols
+
+
+def _abs_mass(keys: list[str]) -> dict[str, Column]:
+    """Running and total |x| in series order (index_mass_quantile)."""
+    wo = _turn_order(keys)
+    return {
+        CUMABS: F.sum(F.abs(F.col(V))).over(wo.rowsBetween(*RUNNING)),
+        TOTABS: F.sum(F.abs(F.col(V))).over(wo.rowsBetween(*UNBOUNDED)),
+    }
+
+
+def _strikes(keys: list[str]) -> dict[str, Column]:
+    """The running above/below-mean strike length ending at each row:
+    ``RN - RN(last break at or before the row)``, a running max on the
+    series order, where a break is any row not above (below) the mean.
+    It is 0 on a break row, and its maximum over an island is the
+    island length, so the longest strike is its group max."""
+    wo_cum = _turn_order(keys).rowsBetween(*RUNNING)
+    cols = {}
+    for suffix, flag in (("a", F.col(V) > F.col(MU)), ("b", F.col(V) < F.col(MU))):
+        last_break = F.max(F.when(F.coalesce(flag.cast("int"), F.lit(0)) == 0, F.col(RN))).over(wo_cum)
+        cols[f"_run{suffix}"] = F.col(RN) - F.coalesce(last_break, F.lit(0))
+    return cols
+
+
+def _trend(keys: list[str]) -> dict[str, Column]:
+    """The max of the ``TREND_CHUNK_LEN`` rows starting at each row.  A
+    chunk's rows are consecutive in series order, so seen from the
+    chunk's FIRST row this forward row frame is the chunk max: no
+    per-(keys, chunk) partition, no extra sort.  Other rows get the max
+    of the wrong frame, which ``trend_agg`` never reads."""
+    return {"_chunk_agg": F.max(V).over(_turn_order(keys).rowsBetween(Window.currentRow, TREND_CHUNK_LEN - 1))}
+
+
+def _value_rank(keys: list[str]) -> dict[str, Column]:
+    """``_rnv`` (rank among the group's non-null values in ascending
+    value order) and ``_nv`` (non-null count), behind the exact rank-sum
+    quantiles.  count() skips nulls, so a null row shares its
+    predecessor's rank and contributes nothing to the conditional sums."""
+    w = _value_order(keys)
+    return {RNV: F.count(V).over(w.rowsBetween(*RUNNING)), NV: F.count(V).over(w.rowsBetween(*UNBOUNDED))}
+
+
+def _value_count(keys: list[str]) -> dict[str, Column]:
+    """Per-value multiplicity ``_vcnt`` (the row's RANGE peers in value
+    order) and the first-occurrence flag ``_vfirst`` (first row, or a
+    value not equal to its predecessor's).  Equal values are adjacent in
+    value order and both the peer test and ``<=>`` treat -0.0 = 0.0,
+    NaN = NaN and null = null as one value.  The flag lets every
+    DISTINCT-flavored feature be a plain sum (sum(_vfirst) ==
+    count(DISTINCT value), counting null), keeping Spark off the
+    expand/gid distinct-aggregate rewrite (an extra exchange and a 3x
+    row expand)."""
+    w = _value_order(keys)
+    return {
+        VCNT: F.count("*").over(w.rangeBetween(Window.currentRow, Window.currentRow)),
+        VFIRST: (F.row_number().over(w) == 1) | ~F.lag(V).over(w).eqNullSafe(F.col(V)),
+    }
+
+
+def _corridor(keys: list[str]) -> dict[str, Column]:
+    """change_quantiles' corridor bounds as exact rank-sum windows: a
+    percentile() window would buffer a per-group value map."""
+    return {QL: rank_quantile_window(CHANGE_QL, keys), QH: rank_quantile_window(CHANGE_QH, keys)}
+
+
+def _abs_rank(keys: list[str]) -> dict[str, Column]:
+    """Row number in |x|-descending order (mean_n_absolute_max)."""
+    order = [F.col(c) for c in ORDER_COLS]
+    return {RNABS: F.row_number().over(Window.partitionBy(*keys).orderBy(F.abs(F.col(V)).desc(), *order))}
+
+
+def _benford(keys: list[str]) -> dict[str, Column]:
+    """Leading decimal digit of |value| (0 for zero), projected once per
+    row: 2 transcendentals a row instead of 2 x 9 conditional aggregate
+    branches.  floor(|x| / 10^floor(log10|x|)) agrees with tsfresh's
+    string-scientific extraction except within 1 ulp below a power of
+    ten."""
+    absv = F.abs(F.col(V))
+    digit = F.when(absv == 0, F.lit(0)).otherwise(
+        F.floor(absv / F.pow(F.lit(10.0), F.floor(F.log10(absv)))).cast("int")
+    )
+    return {BDIGIT: digit}
+
+
+def _entropy(keys: list[str]) -> dict[str, Column]:
+    """Equal-width histogram bin id (``ENTROPY_BINS`` bins): a
+    projection, so no per-(keys, bin) count window and no sort."""
+    bins = ENTROPY_BINS
+    width = (F.col(VMAX) - F.col(VMIN)) / bins
+    return {
+        "_bin": F.when(
+            F.col(VMAX) > F.col(VMIN),
+            F.least(F.floor((F.col(V) - F.col(VMIN)) / width), F.lit(bins - 1)),
+        ).otherwise(F.lit(0))
+    }
+
+
+# helper -> (sort family, columns(keys), helpers its columns read)
+HELPERS = {
+    "value_rank": ("value", _value_rank, ()),
+    "value_count": ("value", _value_count, ()),
+    "corridor": ("value", _corridor, ("value_rank",)),
+    "group_stats": ("turn", lambda keys: _group_stats(keys, (1, 2)), ()),
+    "abs_mass": ("turn", _abs_mass, ()),
+    "strikes": ("turn", _strikes, ("group_stats",)),
+    "trend": ("turn", _trend, ()),
+    "abs_rank": ("abs", _abs_rank, ()),
+    "benford": ("row", _benford, ()),
+    "entropy": ("row", _entropy, ("group_stats",)),
+}
+
+# Attach order.  The value family first: its sort then runs on the
+# narrow input instead of dragging the ~12 series-order doubles through
+# sorter memory.  "row" helpers are projections with no sort.  The last
+# sort fixes the order in which the aggregates sum their rows (series
+# order, or |x| order when abs_rank is attached), so reordering the
+# families can move results in the last bits.  Window outputs depend
+# only on partition contents and each spec's own order: a tied row's
+# _rnv can permute under a different input order, but every consumer
+# selects the VALUE at a rank hit and tied rows share it.
+FAMILIES = ("value", "turn", "abs", "row")
+
+
+def attach_helpers(df: DataFrame, keys: list[str], helpers) -> DataFrame:
+    """Attach the closure of ``helpers`` (names of :data:`HELPERS`), each
+    once: one ``withColumns`` per family, or one per dependency layer
+    inside it where a window reads another window's output."""
+    def closure(hs) -> set[str]:
+        return set(hs).union(*(closure(HELPERS[h][2]) for h in hs))
+
+    def slot(h: str) -> tuple[int, int]:
+        fam, _, needs = HELPERS[h]
+        return FAMILIES.index(fam), max((slot(n)[1] + 1 for n in needs if HELPERS[n][0] == fam), default=0)
+
+    need = closure(helpers)
+    for _, batch in groupby(sorted((h for h in HELPERS if h in need), key=slot), key=slot):
+        df = df.withColumns({c: col for h in batch for c, col in HELPERS[h][1](keys).items()})
+    return df
 
 
 def attach_group_stats(df: DataFrame, keys: list[str], lags=(1, 2)) -> DataFrame:
-    """Attach per-group stats + ordered lag/row-number as row columns.
+    """The ``group_stats`` helper with ``_lag{n}`` for ``lags`` as well
+    (:func:`autocorrelation_agg` at lags beyond 2)."""
+    return df.withColumns(_group_stats(keys, lags))
 
-    One hash-partitioning on ``keys`` serves every window here and the
-    downstream groupBy — verified single-Exchange in the physical plan.
-    ``lags`` controls which ``_lag{n}`` columns are attached (extra lags
-    feed :func:`autocorrelation_agg` at those lags; all windows share the
-    same partitioning so extra lags add no exchange).
-    """
-    wo = Window.partitionBy(*keys).orderBy(*[F.col(c) for c in ORDER_COLS])
-    # Whole-partition stats use the SAME (partition, order) spec as the
-    # ordered columns, with an explicit unbounded-unbounded frame: the
-    # aggregate value is identical (whole partition), and every window
-    # here collapses into ONE Window operator over ONE sort.  An
-    # unordered spec would need its own sort by keys before the sort by
-    # keys+order.
-    wf = wo.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    out = (
-        df.withColumn(MU, F.avg(V).over(wf))
-        .withColumn(SIG, F.stddev_pop(V).over(wf))
-        .withColumn(VMAX, F.max(V).over(wf))
-        .withColumn(VMIN, F.min(V).over(wf))
-        .withColumn("_nrows", F.count(V).over(wf))
-        .withColumn(RN, F.row_number().over(wo))
-    )
-    for lag in sorted(set(lags) | {1, 2}):
-        out = out.withColumn(f"_lag{lag}", F.lag(V, lag).over(wo))
-    # neighbourhood maxima for number_peaks(n): strict peak needs x >
-    # every neighbour within distance n on BOTH sides (interior only)
-    for n in PEAK_NS:
-        out = out.withColumn(
-            f"_maxp{n}", F.max(V).over(wo.rowsBetween(-n, -1))
-        ).withColumn(f"_maxf{n}", F.max(V).over(wo.rowsBetween(1, n)))
-    return out
+
+def attach_value_rank(df: DataFrame, keys: list[str]) -> DataFrame:
+    """The ``value_rank`` helper (``_rnv``, ``_nv``)."""
+    return df.withColumns(_value_rank(keys))
 
 
 def peaks_aggs() -> dict[str, Column]:
     """tsfresh number_peaks(n) for each n in ``PEAK_NS``: count of
-    interior points strictly above all neighbours within distance n.
-    Requires ``attach_group_stats``."""
+    interior points strictly above all neighbours within distance n."""
     out = {}
     for n in PEAK_NS:
         is_peak = (
@@ -102,29 +266,12 @@ def _n() -> Column:
     return F.count(F.col(V))
 
 
-RNV, NV = "_rnv", "_nv"
-
-
-def attach_value_rank(df: DataFrame, keys: list[str]) -> DataFrame:
-    """Attach ``_rnv`` (rank among the group's non-null values in
-    ascending value order) and ``_nv`` (non-null count) — the helper
-    columns behind the exact rank-sum quantiles.  count()
-    skips nulls, so a null row shares its predecessor's rank and its
-    null value contributes nothing to the conditional sums."""
-    w_v = Window.partitionBy(*keys).orderBy(F.col(V).asc())
-    return df.withColumn(
-        RNV, F.count(V).over(w_v.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    ).withColumn(
-        NV, F.count(V).over(w_v.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing))
-    )
-
-
 def _rank_quantile_terms(q: float) -> tuple[Column, Column]:
     """The two conditional per-row terms whose group-sums reproduce
     Spark Percentile's interpolation arithmetic exactly: pos = q*(n-1)
     0-based, lower = floor(pos), higher = ceil(pos), result =
     lowerVal*(higher-pos) + higherVal*(pos-lower), single-row value
-    when higher == lower.  Requires :func:`attach_value_rank`."""
+    when higher == lower."""
     v = F.col(V)
     pos = F.lit(float(q)) * (F.col(NV) - F.lit(1)).cast("double")
     lower = F.floor(pos)
@@ -144,28 +291,21 @@ def rank_quantile_agg(q: float) -> Column:
     bit-identical to ``percentile(value, q)``.  The holistic percentile()
     aggregate would demote every co-grouped aggregate to interpreted
     ObjectHashAggregate and buffer a per-group value map (an OOM hazard
-    on mega-groups).  Requires :func:`attach_value_rank`."""
+    on mega-groups)."""
     term_low, term_high = _rank_quantile_terms(q)
     return F.sum(term_low) + F.coalesce(F.sum(term_high), F.lit(0.0))
 
 
 def rank_quantile_window(q: float, keys: list[str]) -> Column:
     """Per-row group-quantile column (window form of
-    :func:`rank_quantile_agg`), riding the same ascending-value sort as
-    :func:`attach_value_rank`."""
-    wvf = (
-        Window.partitionBy(*keys)
-        .orderBy(F.col(V).asc())
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    )
+    :func:`rank_quantile_agg`) on the value family's sort."""
+    wvf = _value_order(keys).rowsBetween(*UNBOUNDED)
     term_low, term_high = _rank_quantile_terms(q)
     return F.sum(term_low).over(wvf) + F.coalesce(F.sum(term_high).over(wvf), F.lit(0.0))
 
 
 def core_aggs() -> dict[str, Column]:
-    """Closed-form aggregates.  ``count_above_mean``/``count_below_mean``
-    read the group mean ``_mu`` (``attach_group_stats``); the rest need
-    no helper column."""
+    """Closed-form aggregates that read no helper column."""
     v = F.col(V)
     return {
         "turn_count": _n().cast("long"),
@@ -181,12 +321,19 @@ def core_aggs() -> dict[str, Column]:
             _n() > 1,
             (F.expr(f"max_by({V}, turn_idx)") - F.expr(f"min_by({V}, turn_idx)")) / (_n() - 1),
         ),
-        "count_above_mean": F.sum((F.col(V) > F.col(MU)).cast("long")),
-        "count_below_mean": F.sum((F.col(V) < F.col(MU)).cast("long")),
         # tsfresh variation_coefficient: σ_pop / mean, NaN-as-NULL on zero mean
         "variation_coefficient": F.when(
             F.avg(F.col(V)) != 0, F.stddev_pop(V) / F.avg(F.col(V))
         ),
+    }
+
+
+def mean_count_aggs() -> dict[str, Column]:
+    """tsfresh count_above_mean / count_below_mean against the group
+    mean ``_mu``."""
+    return {
+        "count_above_mean": F.sum((F.col(V) > F.col(MU)).cast("long")),
+        "count_below_mean": F.sum((F.col(V) < F.col(MU)).cast("long")),
     }
 
 
@@ -199,14 +346,13 @@ QUANTILES = {
 
 def quantile_aggs(qs: dict[str, float] = QUANTILES) -> dict[str, Column]:
     """tsfresh ``median``/``quantile(q)`` as rank-sums, one column per
-    ``name -> q`` entry (README.md:112; tests/calculateFeatures.py:16).
-    Requires :func:`attach_value_rank`."""
+    ``name -> q`` entry (README.md:112; tests/calculateFeatures.py:16)."""
     return {name: rank_quantile_agg(q) for name, q in qs.items()}
 
 
 def moment_aggs() -> dict[str, Column]:
     """Bias-corrected skewness / kurtosis (pandas ``skew()``/``kurt()``
-    semantics, the formulas tsfresh inherits). Requires ``attach_group_stats``.
+    semantics, the formulas tsfresh inherits).
 
     G1 = g1 * sqrt(n(n-1)) / (n-2),          n > 2, m2 > 0
     G2 = ((n+1)*g2 + 6) * (n-1)/((n-2)(n-3)), n > 3, m2 > 0
@@ -233,7 +379,7 @@ def moment_aggs() -> dict[str, Column]:
 
 
 def change_aggs() -> dict[str, Column]:
-    """Lag-based calculators. Requires ``attach_group_stats`` (LAG1)."""
+    """Lag-based calculators."""
     diff = F.col(V) - F.col(LAG1)
     # tsfresh mean_second_derivative_central: mean of (x_i - 2x_{i-1} + x_{i-2})/2
     sec = F.when(
@@ -283,8 +429,7 @@ def autocorrelation_agg(lag: int = 1) -> dict[str, Column]:
 
     With ``_lag{lag}`` attached, each row t>lag contributes
     (x_t-mu)(x_{t-lag}-mu) — an index shift that leaves the sum identical.
-    Requires ``attach_group_stats(..., lags=(..., lag))`` for lag > 2
-    (lags 1 and 2 are always attached).
+    A lag beyond 2 needs ``attach_group_stats(..., lags=(..., lag))``.
     """
     lag_col = F.col(f"_lag{lag}")
     n = _n().cast("double")
@@ -296,25 +441,6 @@ def autocorrelation_agg(lag: int = 1) -> dict[str, Column]:
     return {
         f"autocorrelation_lag{lag}": F.when((_n() > lag) & (F.max(var) > 0), num / denom)
     }
-
-
-BDIGIT = "_bdigit"
-
-
-def attach_benford_digit(df: DataFrame) -> DataFrame:
-    """Project the leading decimal digit of |value| ONCE per row (column
-    ``_bdigit``; 0 for zero values). A plain projection — no window, no
-    shuffle. The digit is via floor(|x| / 10^floor(log10|x|)), which
-    agrees with tsfresh's string-scientific extraction except on values
-    within 1 ulp below a power of ten. Computing it here instead of
-    inside :func:`benford_agg` keeps the two transcendentals (log10,
-    pow) at 2 per row rather than 2 × 9 conditional aggregate branches
-    on the hot rollup path."""
-    absv = F.abs(F.col(V))
-    digit = F.when(absv == 0, F.lit(0)).otherwise(
-        F.floor(absv / F.pow(F.lit(10.0), F.floor(F.log10(absv)))).cast("int")
-    )
-    return df.withColumn(BDIGIT, digit)
 
 
 def benford_agg() -> dict[str, Column]:
@@ -329,7 +455,6 @@ def benford_agg() -> dict[str, Column]:
     change the value, and the closed form below uses the RAW counts c_d
     (the n cancels):
         r = (Σ p_d c_d − p̄ Σc) / (σ_p · sqrt(Σ c_d² − (Σc)²/9)).
-    Requires :func:`attach_benford_digit` (``_bdigit`` column).
     """
     import math
 
@@ -357,8 +482,7 @@ def benford_agg() -> dict[str, Column]:
 def energy_ratio_agg() -> dict[str, Column]:
     """tsfresh energy_ratio_by_chunks(num_segments=10, segment_focus=0):
     Σx² of the focus chunk over total Σx², chunks per np.array_split
-    (first n%s chunks one element longer). Requires
-    ``attach_group_stats`` (RN, _nrows)."""
+    (first n%s chunks one element longer)."""
     n = F.col("_nrows")
     s, f = 10, 0
     k = F.floor(n / s)
@@ -418,93 +542,11 @@ def large_standard_deviation_aggs() -> dict[str, Column]:
     return out
 
 
-def default_feature_aggs() -> dict[str, Column]:
-    """The full native aggregate map (column name -> aggregate Column).
-
-    The order is the output column order, which ``feature_names_dim``
-    band positions follow: ``median`` sits after ``sum_values`` and the
-    other quantiles follow the core block."""
-    quantiles = quantile_aggs()
-    aggs: dict[str, Column] = {}
-    for name, agg in core_aggs().items():
-        aggs[name] = agg
-        if name == "sum_values":
-            aggs["median"] = quantiles.pop("median")
-    aggs.update(quantiles)
-    aggs.update(moment_aggs())
-    aggs.update(ratio_beyond_r_sigma_aggs())
-    aggs.update(large_standard_deviation_aggs())
-    aggs.update(benford_agg())
-    aggs.update(change_aggs())
-    aggs.update(autocorrelation_agg(1))
-    aggs.update(location_aggs())
-    aggs.update(peaks_aggs())
-    aggs.update(energy_ratio_agg())
-    return aggs
-
-
-# --- strikes / entropy / chunked trend as window columns + plain -------
-# aggregates.  Every helper window here partitions on the rollup keys
-# (or a superset), so the subset rule keeps them all on the ONE
-# rollup-key exchange and they fold into the main groupBy: no extra
-# aggregation level and no join back to the per-group rows.
-
-def attach_strike_cols(df: DataFrame, keys: list[str]) -> DataFrame:
-    """Per-row running strike length for the above/below-mean flags.
-
-    The run length ending at row t is ``RN(t) - RN(last break at or
-    before t)`` (break = any row whose flag is not 1): a running max on
-    the SAME (keys, ORDER_COLS) window spec every other helper uses, so
-    both flags fuse into the one existing Window operator and sort.
-    ``strike_aggs`` takes the max over flag rows, and the maximum
-    running length over an island equals the island length.  Requires
-    ``attach_group_stats`` (MU, RN)."""
-    wo_cum = (
-        Window.partitionBy(*keys)
-        .orderBy(*[F.col(c) for c in ORDER_COLS])
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    out = df
-    for suffix, above in (("a", True), ("b", False)):
-        flag = (F.col(V) > F.col(MU)) if above else (F.col(V) < F.col(MU))
-        out = out.withColumn(f"_flg{suffix}", flag.cast("int"))
-        last_break = F.max(
-            F.when(F.coalesce(F.col(f"_flg{suffix}"), F.lit(0)) == 0, F.col(RN))
-        ).over(wo_cum)
-        out = out.withColumn(
-            f"_run{suffix}", F.col(RN) - F.coalesce(last_break, F.lit(0))
-        )
-    return out
-
-
 def strike_aggs() -> dict[str, Column]:
     return {
-        "longest_strike_above_mean": F.coalesce(
-            F.max(F.when(F.col("_flga") == 1, F.col("_runa"))), F.lit(0)
-        ).cast("long"),
-        "longest_strike_below_mean": F.coalesce(
-            F.max(F.when(F.col("_flgb") == 1, F.col("_runb"))), F.lit(0)
-        ).cast("long"),
+        "longest_strike_above_mean": F.max(F.col("_runa")).cast("long"),
+        "longest_strike_below_mean": F.max(F.col("_runb")).cast("long"),
     }
-
-
-ENTROPY_BINS = 10
-TREND_CHUNK_LEN = 3
-
-
-def attach_entropy_cols(df: DataFrame) -> DataFrame:
-    """Equal-width histogram bin id (``ENTROPY_BINS`` bins) as a row
-    column: a pure projection, so no per-(keys, bin) count window and no
-    sort.  ``entropy_agg`` folds the fixed-width histogram with one
-    conditional sum per bin in the main codegen aggregate.  Requires
-    ``attach_group_stats`` (VMAX/VMIN/_nrows)."""
-    bins = ENTROPY_BINS
-    width = (F.col(VMAX) - F.col(VMIN)) / bins
-    bin_id = F.when(
-        F.col(VMAX) > F.col(VMIN),
-        F.least(F.floor((F.col(V) - F.col(VMIN)) / width), F.lit(bins - 1)),
-    ).otherwise(F.lit(0))
-    return df.withColumn("_bin", bin_id)
 
 
 def entropy_agg() -> dict[str, Column]:
@@ -522,39 +564,16 @@ def entropy_agg() -> dict[str, Column]:
     return {f"binned_entropy_{bins}": -terms}
 
 
-def attach_trend_cols(df: DataFrame, keys: list[str]) -> DataFrame:
-    """Chunk id, chunk aggregate (max) and first-of-chunk flag as row
-    columns, ``TREND_CHUNK_LEN`` rows a chunk. Requires
-    ``attach_group_stats`` (RN).
-
-    A chunk's rows are consecutive in the (keys, ORDER_COLS) sort, so
-    the chunk max seen from its FIRST row is a forward row frame
-    (0 .. chunk_len-1) on the ordered spec every other helper already
-    uses: no per-(keys, chunk) window partition, no extra sort.
-    Non-first rows get the max of the wrong frame, which is fine:
-    ``trend_agg`` only reads ``_chunk_agg`` where ``_chunk_first``."""
-    chunk_len = TREND_CHUNK_LEN
-    wo_fwd = (
-        Window.partitionBy(*keys)
-        .orderBy(*[F.col(c) for c in ORDER_COLS])
-        .rowsBetween(Window.currentRow, chunk_len - 1)
-    )
-    chunk = F.floor((F.col(RN) - 1) / chunk_len)
-    out = df.withColumn("_chunk", chunk.cast("long"))
-    out = out.withColumn("_chunk_agg", F.max(V).over(wo_fwd))
-    return out.withColumn("_chunk_first", ((F.col(RN) - 1) % chunk_len == 0).cast("int"))
-
-
 def trend_agg() -> dict[str, Column]:
     """tsfresh agg_linear_trend(attr='slope', chunk_len=TREND_CHUNK_LEN,
     f_agg='max'): OLS slope of the chunk max on the chunk index over the
     first-of-chunk rows — regr_slope semantics (NULL for <2 chunks) from
     null-safe conditional sums."""
     chunk_len = TREND_CHUNK_LEN
-    first = F.col("_chunk_first") == 1
-    x = F.when(first, F.col("_chunk").cast("double"))
+    first = (F.col(RN) - 1) % chunk_len == 0
+    x = F.when(first, F.floor((F.col(RN) - 1) / chunk_len).cast("double"))
     y = F.when(first, F.col("_chunk_agg"))
-    n = F.sum(F.col("_chunk_first")).cast("double")
+    n = F.sum(first.cast("int")).cast("double")
     sx, sy = F.sum(x), F.sum(y)
     sxx, sxy = F.sum(x * x), F.sum(x * y)
     denom = n * sxx - sx * sx
@@ -562,3 +581,62 @@ def trend_agg() -> dict[str, Column]:
         f"agg_linear_trend_slope_max_chunk{chunk_len}": (n * sxy - sx * sy)
         / F.when(F.abs(denom) > 0, denom)
     }
+
+
+# --- the registry --------------------------------------------------------
+
+def feature_registry(sets) -> dict[str, tuple[Column, tuple[str, ...]]]:
+    """Feature name -> (aggregate, helpers it reads) for the name
+    ``sets``, in output column order: tsfresh's ``fc_parameters`` dict
+    (calculate.py:103-112) with each calculator's helper columns as
+    data.  ``default`` is the reference's exercised set,
+    ``strikes``/``trend``/``entropy`` the optional extras and ``ext`` the
+    extended set of :mod:`features_ext`."""
+    from ts_raster_spark.functions import features_ext as X  # X imports this module
+
+    stats = ("group_stats",)
+    table = {
+        "default": (
+            (core_aggs, ()),
+            (quantile_aggs, ("value_rank",)),
+            (mean_count_aggs, stats),
+            (moment_aggs, stats),
+            (ratio_beyond_r_sigma_aggs, stats),
+            (large_standard_deviation_aggs, ()),
+            (benford_agg, ("benford",)),
+            (change_aggs, stats),
+            (lambda: autocorrelation_agg(1), stats),
+            (location_aggs, stats),
+            (peaks_aggs, stats),
+            (energy_ratio_agg, stats),
+        ),
+        "strikes": ((strike_aggs, ("strikes",)),),
+        "trend": ((trend_agg, ("trend", "group_stats")),),
+        "entropy": ((entropy_agg, ("entropy",)),),
+        "ext": (
+            (X.duplicate_aggs, ("value_count", "group_stats")),
+            (X.count_aggs, ()),
+            (X.mean_n_absolute_max_agg, ("abs_rank",)),
+            (X.symmetry_looking_agg, ("value_rank",)),
+            (X.index_mass_quantile_agg, ("abs_mass", "group_stats")),
+            (X.fft_coefficient_aggs, stats),
+            (X.change_quantiles_agg, ("corridor", "group_stats")),
+            (X.partial_autocorrelation_agg, stats),
+            (X.linear_trend_aggs, stats),
+            (lambda: quantile_aggs({"quantile_q25": 0.25, "quantile_q75": 0.75}), ("value_rank",)),
+        ),
+    }
+    return {name: (agg, helpers) for s in sets for build, helpers in table[s] for name, agg in build().items()}
+
+
+def feature_rollup(df: DataFrame, keys: list[str], sets, names) -> DataFrame:
+    """The one feature request path: one groupBy on ``keys`` of every
+    calculator in the name ``sets`` (only ``names`` of them, unless None)
+    over exactly the helpers those calculators read."""
+    reg = feature_registry(sets)
+    if names is not None:
+        if unknown := sorted(set(names) - reg.keys()):
+            raise ValueError(f"unknown feature names {unknown}; want names of the sets {list(sets)}")
+        reg = {n: v for n, v in reg.items() if n in set(names)}
+    df = attach_helpers(df, keys, {h for _, helpers in reg.values() for h in helpers})
+    return df.groupBy(*keys).agg(*[agg.alias(n) for n, (agg, _) in reg.items()])

@@ -11,14 +11,18 @@ full OLS linear-trend attributes — still with ZERO Python in the hot
 path.
 
 Scale design: every calculator is a closed-form aggregate over row-level
-helper columns.  :func:`attach_ext_stats` adds the extra helpers
-(per-value multiplicity, |x| cumulative/total sums, |x| rank, corridor
-quantiles) using windows whose partition keys all CONTAIN the rollup
-keys — Spark's ``HashPartitioning(keys)`` satisfies
-``ClusteredDistribution(keys + extras)``, so the single rollup-key
-exchange from :func:`features.attach_group_stats` serves every window
-here too (extra sorts, no extra shuffles; plan-asserted in
-tests/test_plans.py).
+helper columns, and the ``ext`` name set of
+:func:`features.feature_registry` names the helpers each one reads.
+:func:`rollup_ext_features` requests that set through
+:func:`features.feature_rollup`, the path the flagship rollup takes
+too: each helper is attached once, one sort family at a time.  Every
+helper window partitions on the rollup keys, so after the one rollup-key
+exchange the request sorts three times: value order (per-value
+multiplicity, first-occurrence flag, value rank, corridor quantiles),
+series order (group stats, |x| running sums) and |x|-descending order
+(top-|x| row number); over ``to_long_panel`` the latency window adds a
+fourth.  ``tests/test_plans.py::test_feature_frame_plan_shape`` asserts
+the Window and Sort counts and the single exchange.
 
 Numeric contracts (mirrored exactly by sql/duck_features_ext.py):
 
@@ -48,79 +52,35 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from ts_raster_spark.functions.features import (
+    CHANGE_QH,
+    CHANGE_QL,
+    CUMABS,
     LAG1,
+    LAG2,
     MU,
-    ORDER_COLS,
+    QH,
+    QL,
     RN,
+    RNABS,
+    TOTABS,
     V,
+    VCNT,
+    VFIRST,
     VMAX,
     VMIN,
     _n,
-    attach_group_stats,
-    attach_value_rank,
-    quantile_aggs,
+    feature_rollup,
     rank_quantile_agg,
-    rank_quantile_window,
 )
-
-VCNT, VRN, CUMABS, TOTABS, RNABS, QL, QH = (
-    "_vcnt", "_vrn", "_cumabs", "_totabs", "_rnabs", "_ql", "_qh"
-)
-
-CHANGE_QL, CHANGE_QH = 0.25, 0.75
-
-
-def attach_ext_stats(df: DataFrame, keys: list[str]) -> DataFrame:
-    """Attach the extended helper columns.  Requires (and composes with)
-    ``features.attach_group_stats`` — call that first so MU/RN/LAG1 exist.
-
-    All four window specs partition on supersets of ``keys`` (or keys
-    itself with a different ORDER), so they reuse the one hash exchange.
-    """
-    order = [F.col(c) for c in ORDER_COLS]
-    wu = Window.partitionBy(*keys)
-    wo = wu.orderBy(*order)
-    # whole-partition aggregates ride wo's sort via an explicit
-    # unbounded frame instead of a second keys-only sort (the same
-    # one-sort collapse as features.attach_group_stats)
-    wof = wo.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    wabs = wu.orderBy(F.abs(F.col(V)).desc(), *order)
-    wval = Window.partitionBy(*keys, F.col(V))
-    wval_o = wval.orderBy(*order)
-    # Window specs are attached GROUPED BY SORT ORDER so each distinct
-    # (partition, order) pair sorts once and every compatible spec
-    # rides it: first the wo family (rides attach_group_stats' sort),
-    # then the ascending-value family ((keys, V, order) sort — wval_o,
-    # then wval and the value-rank/corridor columns whose required
-    # (keys, V) prefix it satisfies), then the |x|-descending sort.  The
-    # corridor bounds are exact rank-sum windows: a percentile() window
-    # would buffer a per-group value map and force its own pass.
-    out = (
-        df.withColumn(CUMABS, F.sum(F.abs(F.col(V))).over(wo.rowsBetween(Window.unboundedPreceding, 0)))
-        .withColumn(TOTABS, F.sum(F.abs(F.col(V))).over(wof))
-        # first-occurrence flag: lets every DISTINCT-flavored feature be
-        # a plain sum (sum(_vrn = 1) == count(DISTINCT value)), keeping
-        # Spark off the expand/gid distinct-aggregate rewrite (which
-        # costs an extra exchange and a 3x row expand)
-        .withColumn(VRN, F.row_number().over(wval_o))
-        .withColumn(VCNT, F.count("*").over(wval))
-    )
-    out = attach_value_rank(out, keys)
-    return (
-        out.withColumn(QL, rank_quantile_window(CHANGE_QL, keys))
-        .withColumn(QH, rank_quantile_window(CHANGE_QH, keys))
-        .withColumn(RNABS, F.row_number().over(wabs))
-    )
 
 
 def duplicate_aggs() -> dict[str, Column]:
     """tsfresh has_duplicate / has_duplicate_max / has_duplicate_min and
-    the four reoccurrence statistics, all from the per-value multiplicity
-    column ``_vcnt`` (one extra sort on the shared partitioning)."""
-    v, c = F.col(V), F.col(VCNT)
+    the four reoccurrence statistics, from the per-value multiplicity
+    ``_vcnt`` and the first-occurrence flag ``_vfirst``."""
+    v, c, first = F.col(V), F.col(VCNT), F.col(VFIRST)
     return {
         "has_duplicate": (F.max(c) > 1).cast("long"),
         "has_duplicate_max": (F.max(F.when(v == F.col(VMAX), c)) > 1).cast("long"),
@@ -128,15 +88,11 @@ def duplicate_aggs() -> dict[str, Column]:
         # rows whose value occurs more than once / all rows
         "percentage_of_reoccurring_datapoints_to_all_datapoints": F.avg((c > 1).cast("double")),
         # distinct values occurring more than once / distinct values
-        # (first-occurrence sums, not COUNT(DISTINCT) — see attach_ext_stats)
         "percentage_of_reoccurring_values_to_all_values": (
-            F.sum(((F.col(VRN) == 1) & (c > 1)).cast("double"))
-            / F.sum((F.col(VRN) == 1).cast("double"))
+            F.sum((first & (c > 1)).cast("double")) / F.sum(first.cast("double"))
         ),
         # each reoccurring unique value counted once
-        "sum_of_reoccurring_values": F.coalesce(
-            F.sum(F.when((F.col(VRN) == 1) & (c > 1), v)), F.lit(0.0)
-        ),
+        "sum_of_reoccurring_values": F.coalesce(F.sum(F.when(first & (c > 1), v)), F.lit(0.0)),
         # each occurrence of a reoccurring value counted
         "sum_of_reoccurring_data_points": F.coalesce(F.sum(F.when(c > 1, v)), F.lit(0.0)),
     }
@@ -251,13 +207,14 @@ def change_quantiles_agg() -> dict[str, Column]:
 
 def partial_autocorrelation_agg() -> dict[str, Column]:
     """Levinson-Durbin phi_22 on biased autocovariances (see module
-    docstring).  Only lag 2 has a closed form this small; lag 1 equals
-    rho1 and is covered by ``autocorrelation_agg``-adjacent surface."""
+    docstring).  Only lag 2 has a closed form this small; lag-1 PACF is
+    rho1 = ``autocorrelation_lag1`` * (n - 1) / n (the biased estimator
+    against tsfresh's (n - lag) divisor)."""
     v, mu = F.col(V), F.col(MU)
     n = _n().cast("double")
     g0 = F.sum((v - mu) * (v - mu))
     g1 = F.sum(F.when(F.col(LAG1).isNotNull(), (v - mu) * (F.col(LAG1) - mu)))
-    g2 = F.sum(F.when(F.col("_lag2").isNotNull(), (v - mu) * (F.col("_lag2") - mu)))
+    g2 = F.sum(F.when(F.col(LAG2).isNotNull(), (v - mu) * (F.col(LAG2) - mu)))
     rho1 = g1 / F.when(g0 > 0, g0)
     rho2 = g2 / F.when(g0 > 0, g0)
     denom = 1.0 - rho1 * rho1
@@ -297,33 +254,7 @@ def linear_trend_aggs() -> dict[str, Column]:
     }
 
 
-def quantile_ext_aggs() -> dict[str, Column]:
-    """The quartiles, as rank-sums over ``attach_ext_stats``' value
-    rank."""
-    return quantile_aggs({"quantile_q25": 0.25, "quantile_q75": 0.75})
-
-
-def ext_feature_aggs() -> dict[str, Column]:
-    """The full extended map; requires attach_group_stats THEN
-    attach_ext_stats."""
-    aggs: dict[str, Column] = {}
-    aggs.update(duplicate_aggs())
-    aggs.update(count_aggs())
-    aggs.update(mean_n_absolute_max_agg())
-    aggs.update(symmetry_looking_agg())
-    aggs.update(index_mass_quantile_agg())
-    aggs.update(fft_coefficient_aggs())
-    aggs.update(change_quantiles_agg())
-    aggs.update(partial_autocorrelation_agg())
-    aggs.update(linear_trend_aggs())
-    aggs.update(quantile_ext_aggs())
-    return aggs
-
-
 def rollup_ext_features(long_df: DataFrame, keys: list[str]) -> DataFrame:
-    """One-shot extended-feature rollup: helper windows + a single
-    groupBy on ``keys`` sharing one hash partitioning."""
-    df = attach_group_stats(long_df, keys)
-    df = attach_ext_stats(df, keys)
-    aggs = ext_feature_aggs()
-    return df.groupBy(*keys).agg(*[c.alias(n) for n, c in aggs.items()])
+    """The ``ext`` name set of :func:`features.feature_registry`
+    through :func:`features.feature_rollup`."""
+    return feature_rollup(long_df, keys, ("ext",), None)

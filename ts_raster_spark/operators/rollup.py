@@ -8,13 +8,16 @@ Retention tiers (minute/hour/day) are tumbling ``date_trunc`` buckets;
 reference's period label ``"{min}_{max}"``, calculate.py:118, becomes the
 explicit ``bucket_start`` key).
 
-Scale design: the window pre-pass and the groupBy share one hash
-partitioning on the rollup keys → a single shuffle for the whole feature
-block. Strike/trend/entropy features ride the SAME exchange: their
-helper windows partition on the rollup keys or supersets of them
-(Spark's subset rule), so they reduce to extra row columns + plain
-aggregates in the one groupBy, with no second aggregation level joined
-back to the groups.
+Scale design: :func:`FT.feature_rollup` attaches exactly the helper
+columns the requested calculators read, each once and one sort family
+at a time, and aggregates them in one groupBy.  Every helper window
+partitions on the rollup keys, so the windows and the groupBy share one
+hash partitioning: a single shuffle for the whole feature block.  The
+default hour request sorts twice after that exchange (value order for
+the quantile ranks, series order for the group stats, lags and
+peaks); strikes and trend ride the series-order sort and entropy is a
+projection, so the whole-conversation request with every extra sorts
+twice too.  Over ``to_long_panel`` the latency window adds one sort.
 """
 
 from __future__ import annotations
@@ -47,54 +50,19 @@ def rollup_features(
     include_entropy: bool = False,
     feature_names: list[str] | None = None,
 ) -> DataFrame:
-    """Wide feature rollup at a retention tier.
+    """Wide feature rollup at a retention tier: the ``default`` name set
+    of :func:`FT.feature_registry`, plus the ``strikes``/``trend``/
+    ``entropy`` sets the ``include_*`` flags name.
 
     ``feature_names`` optionally restricts the output columns (the
     reference's ``parameters`` dict of requested calculators,
-    calculate.py:103-112) to names of :func:`FT.default_feature_aggs`;
-    any other name raises ``ValueError``.
+    calculate.py:103-112) to names of those sets; any other name raises
+    ``ValueError``.
     """
     df, keys = bucketize(long_df, tier)
-    aggs = FT.default_feature_aggs()
-    if feature_names is not None:
-        wanted = set(feature_names)
-        if unknown := sorted(wanted - aggs.keys()):
-            raise ValueError(f"unknown feature names {unknown}; want names of default_feature_aggs()")
-        aggs = {k: v for k, v in aggs.items() if k in wanted}
-
-    # The value-rank, group-stat and Benford columns are attached for
-    # every request; Catalyst prunes the windows and projections that no
-    # requested aggregate reads, so a helper-free request plans as a
-    # plain groupBy.  The quantiles are rank-sums over the value-rank
-    # columns.  Attached FIRST, before the helper windows: the value sort
-    # then runs on the narrow input frame and the turn-order sort carries
-    # only the two rank longs, instead of the value sort dragging all ~12
-    # helper doubles through sorter memory.  Window outputs depend only
-    # on partition contents and each spec's own order, so attachment
-    # order cannot change any value: a tied row's _rnv can permute under
-    # a different input order, but every consumer selects the VALUE at a
-    # rank hit and tied rows share that value.  The Benford digit is a
-    # cheap per-row projection (2 transcendentals/row, no shuffle)
-    # instead of re-deriving the digit in 9 aggregate branches.
-    df = FT.attach_value_rank(df, keys)
-    df = FT.attach_group_stats(df, keys)
-    df = FT.attach_benford_digit(df)
-    # extras: window columns on the shared partitioning + plain
-    # aggregates in the SAME groupBy — one exchange, no join-backs.  They
-    # are off by default and attached only when requested: a frame is
-    # re-optimized on every action, and pruning unread extras cost each
-    # action of a default hour-tier request ~50 ms of planning.
-    if include_strikes:
-        df = FT.attach_strike_cols(df, keys)
-        aggs.update(FT.strike_aggs())
-    if include_trend:
-        df = FT.attach_trend_cols(df, keys)
-        aggs.update(FT.trend_agg())
-    if include_entropy:
-        df = FT.attach_entropy_cols(df)
-        aggs.update(FT.entropy_agg())
-
-    return df.groupBy(*keys).agg(*[c.alias(n) for n, c in aggs.items()])
+    extras = {"strikes": include_strikes, "trend": include_trend, "entropy": include_entropy}
+    sets = ["default"] + [s for s, on in extras.items() if on]
+    return FT.feature_rollup(df, keys, sets, feature_names)
 
 
 def rollup_simple_wide(turns: DataFrame, tier: str, channels: tuple[str, ...] | None = None) -> DataFrame:

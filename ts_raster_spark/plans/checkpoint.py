@@ -164,9 +164,11 @@ def read_result(spark: SparkSession, out_dir: str) -> DataFrame:
     slices — a slice=* glob would silently union stale directories left
     by a previous run with a different n_slices (double-counting). The schema
     comes from a slice's parquet footer, so building the read starts no
-    Spark job."""
+    Spark job.  Slices are read in ``slice_id`` order, not in the
+    manifest's completion order, so the scan and its plan are the same
+    on every run."""
     done = load_manifest(out_dir)
     if not done:
         raise FileNotFoundError(f"no completed slices recorded in {out_dir}/{MANIFEST}")
-    paths = [rec["path"] for rec in done.values()]
+    paths = [done[s]["path"] for s in sorted(done)]
     return read_parquet(spark, *paths)

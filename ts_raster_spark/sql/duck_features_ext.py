@@ -9,7 +9,7 @@ expression over it.
 
 from __future__ import annotations
 
-from ts_raster_spark.functions.features_ext import CHANGE_QL, CHANGE_QH
+from ts_raster_spark.functions.features import CHANGE_QL, CHANGE_QH
 from ts_raster_spark.sql.duck_features import r
 
 
