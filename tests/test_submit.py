@@ -51,6 +51,7 @@ def test_spark_submit_pyfiles_rollup(spark, turns_small, tmp_path):
             "--input", input_dir,
             "--out", out_root,
             "--tiers", "minute", "hour",
+            "--compress",  # a Python stage: its workers must import the package
             "--cpus", "4",
         ],
         capture_output=True,
@@ -65,3 +66,4 @@ def test_spark_submit_pyfiles_rollup(spark, turns_small, tmp_path):
     # tier tables landed on disk (catalog table layout: rollup_<tier>)
     assert os.path.isdir(os.path.join(out_root, "rollup_minute"))
     assert os.path.isdir(os.path.join(out_root, "rollup_hour"))
+    assert result["tier_rows"]["raw_blocks"] > 0

@@ -42,7 +42,13 @@ def main():
     ap.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
     args = ap.parse_args()
 
-    spark = get_spark(app_name="rollup-job", master=f"local[{args.cpus}]")
+    # get_spark forks Python workers from ts_raster_spark.daemon, before a
+    # task adds the --py-files zip to their path; so the package's import
+    # root (the zip, or the checkout) goes on their PYTHONPATH up front.
+    root = os.path.dirname(os.path.dirname(os.path.abspath(sys.modules["ts_raster_spark"].__file__)))
+    spark = get_spark(
+        app_name="rollup-job", master=f"local[{args.cpus}]", extra_conf={"spark.executorEnv.PYTHONPATH": root}
+    )
     spark.sparkContext.setLogLevel("ERROR")
     turns = spark.read.parquet(args.input)
     n_turns = turns.count()

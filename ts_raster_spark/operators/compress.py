@@ -83,25 +83,26 @@ def compress_blocks(long_df: DataFrame) -> DataFrame:
 
 
 def _decode_batches(batches):
+    """One frame of points per Arrow batch of blocks: the decoded arrays
+    are concatenated and each block's keys repeated over its points."""
     for pdf in batches:
-        frames = []
-        for row in pdf.itertuples(index=False):
-            if row.codec != CODEC:
-                raise ValueError(f"unsupported block codec {row.codec!r}; only {CODEC!r} blocks decode")
-            ts = decode_timestamps(bytes(row.ts_block)).view("datetime64[us]")
-            vals = decode_values(bytes(row.val_block))
-            frames.append(
-                pd.DataFrame(
-                    {
-                        "conv_id": row.conv_id,
-                        "kind": row.kind,
-                        "ts": ts,
-                        "value": vals,
-                    }
-                )
-            )
-        if frames:
-            yield pd.concat(frames, ignore_index=True)
+        if pdf.empty:
+            continue
+        ts, vals = [], []
+        for codec, ts_block, val_block in zip(pdf["codec"], pdf["ts_block"], pdf["val_block"]):
+            if codec != CODEC:
+                raise ValueError(f"unsupported block codec {codec!r}; only {CODEC!r} blocks decode")
+            ts.append(decode_timestamps(bytes(ts_block)))
+            vals.append(decode_values(bytes(val_block)))
+        counts = [len(t) for t in ts]
+        yield pd.DataFrame(
+            {
+                "conv_id": np.repeat(pdf["conv_id"].to_numpy(), counts),
+                "kind": np.repeat(pdf["kind"].to_numpy(), counts),
+                "ts": np.concatenate(ts).view("datetime64[us]"),
+                "value": np.concatenate(vals),
+            }
+        )
 
 
 def decompress_blocks(blocks: DataFrame) -> DataFrame:

@@ -9,6 +9,18 @@ Spark's 100.  Re-running the same plans (a feature batch after batch,
 a tier job per partition) compiles its classes once only if they all fit:
 the cache is an LRU, and an LRU smaller than a cyclic working set misses
 on every access.
+
+Python stages run in an engine-owned worker daemon
+(``spark.python.daemon.module`` is :mod:`ts_raster_spark.daemon`).  At
+the start of every task PySpark's worker calls
+``importlib.invalidate_caches()``, which on CPython 3.11 makes every zip
+importer on the worker's ``sys.path`` re-parse its archive's directory:
+~0.1–0.2 s of CPU per task before any Arrow kernel, pandas UDF or RDD
+lambda runs.  The daemon's workers re-read only archives that changed.
+Executors must be able to import ``ts_raster_spark`` when a worker
+starts, not only when a task runs (``spark-submit --py-files`` adds its
+zip to a worker's path only at task time): a worker that cannot import
+the daemon module does not start, and every Python stage fails.
 """
 
 from __future__ import annotations
@@ -33,6 +45,11 @@ def get_spark(
     so the bench harness can run the identical job at two parallelism
     levels (the sandbox stand-in for N vs 4N executors).
     """
+    # Imported here, not at module level: the package imports this module,
+    # and ``python -m ts_raster_spark.daemon`` warns when the package has
+    # already imported the module it is about to run.
+    from ts_raster_spark import daemon
+
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
@@ -77,6 +94,10 @@ def get_spark(
         # tier job cycles through 78.  1000 holds the larger working set
         # 8 times over (tools/codegen_probe.py measures them).
         .config("spark.sql.codegen.cache.maxEntries", "1000")
+        # Static: the module every Python worker is forked from.  It keeps
+        # each task from re-reading the unchanged zip archives on the
+        # worker's sys.path (see the module docstring).
+        .config("spark.python.daemon.module", daemon.__name__)
     )
     if extra_conf:
         for k, v in extra_conf.items():
