@@ -351,21 +351,3 @@ def test_dynamic_write_ignores_static_session_conf(spark, turns_small, tmp_path)
     expected = hour.where(cat.bucket_of(F.col("conv_id")) != k).unionByName(one)
     _assert_same_rows(cat.read(spark, "t"), expected)
 
-
-def test_full_write_leaves_session_conf_unchanged(spark, turns_small, tmp_path):
-    """``full=True`` truncates the table without touching the session's
-    overwrite mode, set or unset."""
-    cat = ParquetTierCatalog(str(tmp_path / "tiers_full"), n_buckets=8)
-    hour = _transform(turns_small)
-    one = hour.where(F.col("conv_id") == "conv-000003")
-    for mode in (None, "dynamic"):
-        cat.write(hour, "t")
-        if mode is not None:
-            spark.conf.set(OVERWRITE_MODE, mode)
-        try:
-            cat.write(one, "t", full=True)
-            assert spark.conf.get(OVERWRITE_MODE, None) == mode
-        finally:
-            spark.conf.unset(OVERWRITE_MODE)
-        assert cat.read(spark, "t").count() == one.count()
-        assert len([d for d in os.listdir(cat.path("t")) if d.startswith("bucket_id=")]) == 1

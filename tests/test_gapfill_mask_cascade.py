@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 from ts_raster_spark.operators.cascade import cascade_up
 from ts_raster_spark.operators.gapfill import SENTINEL, gapfill
 from ts_raster_spark.operators.longform import to_long_panel
-from ts_raster_spark.operators.mask import check_mask, mask_df, unmask_df
+from ts_raster_spark.operators.mask import mask_df, unmask_df
 from ts_raster_spark.operators.rollup import rollup_simple
 
 
@@ -54,7 +54,6 @@ def test_mask_unmask_roundtrip(spark, turns_small):
     masked = mask_df(turns_small, mask)
     got_ids = {r[0] for r in masked.select("conv_id").distinct().collect()}
     assert got_ids == {c for c, k in keep.items() if k == 1}
-    check_mask(turns_small, mask)
 
     # unmask: re-expand per-conv counts onto the full domain with sentinel
     counts = masked.groupBy("conv_id").agg(F.count("*").cast("double").alias("n"))

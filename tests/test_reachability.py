@@ -1,7 +1,9 @@
 """Every ``ts_raster_spark`` module is reached by the import graph of a
 non-test entry point: the driver entry, the bench harnesses, the tools,
-the perfbench workloads or the examples. A module that only tests
-import is dead engine surface; this test names it."""
+the perfbench workloads or the examples; and every function, class and
+public method of the package is named outside the tests. A module or
+function that only tests reach is dead engine surface; these tests
+name it."""
 
 from __future__ import annotations
 
@@ -56,11 +58,16 @@ def _reached(path: Path, mods: dict[str, Path]) -> set[str]:
     return out
 
 
-def test_every_package_module_is_reached_outside_tests():
-    mods = _modules()
+def _roots() -> list[Path]:
     roots = [REPO / f for f in ROOT_FILES]
     roots += [p for d in ROOT_DIRS for p in sorted((REPO / d).glob("*.py"))]
     assert all(p.exists() for p in roots) and len(roots) > len(ROOT_FILES)
+    return roots
+
+
+def test_every_package_module_is_reached_outside_tests():
+    mods = _modules()
+    roots = _roots()
 
     seen: set[str] = set()
     todo = [m for p in roots for m in _reached(p, mods)]
@@ -71,3 +78,42 @@ def test_every_package_module_is_reached_outside_tests():
             todo.extend(_reached(mods[m], mods))
     unreached = sorted(set(mods) - seen)
     assert not unreached, f"reached only from tests (or not at all): {unreached}"
+
+
+def _named(path: Path) -> set[str]:
+    """Every name a file uses: a ``Name``, an attribute, or the last part
+    of an imported name."""
+    names: set[str] = set()
+    for node in ast.walk(ast.parse(path.read_text(), str(path))):
+        if isinstance(node, ast.Name):
+            names.add(node.id)
+        elif isinstance(node, ast.Attribute):
+            names.add(node.attr)
+        elif isinstance(node, ast.alias):
+            names.add(node.name.rpartition(".")[2])
+    return names
+
+
+def _defined(path: Path) -> list[tuple[str, str]]:
+    """(qualified name, name) of a module's top-level functions and
+    classes and of its classes' public methods."""
+    out = []
+    for node in ast.parse(path.read_text(), str(path)).body:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            out.append((node.name, node.name))
+        if isinstance(node, ast.ClassDef):
+            out += [
+                (f"{node.name}.{m.name}", m.name)
+                for m in node.body
+                if isinstance(m, (ast.FunctionDef, ast.AsyncFunctionDef)) and not m.name.startswith("_")
+            ]
+    return out
+
+
+def test_every_package_function_is_named_outside_tests():
+    mods = _modules()
+    named = set().union(*(_named(p) for p in [*_roots(), *mods.values()]))
+    unnamed = sorted(
+        f"{mod}.{qual}" for mod, path in mods.items() for qual, name in _defined(path) if name not in named
+    )
+    assert not unnamed, f"named only in tests (or not at all): {unnamed}"

@@ -2,7 +2,7 @@
 tsraster/calculate.py:58-181) as a composable, resumable Spark job.
 
 Pipeline (mirrors SURVEY.md §3 EP1):
-  scan turns → (optional mask semi-join) → kind derivation/long panel →
+  scan turns → kind derivation/long panel →
   minute tier (native feature rollup) → hour/day via algebraic cascade →
   (optional gap-fill per tier) → (optional Gorilla block sink) →
   bucketed tier tables through the catalog, all under per-slice
@@ -47,7 +47,6 @@ from ts_raster_spark.operators.cascade import cascade_up
 from ts_raster_spark.operators.compress import compress_blocks
 from ts_raster_spark.operators.gapfill import gapfill
 from ts_raster_spark.operators.longform import to_long_panel
-from ts_raster_spark.operators.mask import mask_df
 from ts_raster_spark.operators.rollup import rollup_simple_wide
 from ts_raster_spark.plans.checkpoint import read_result, run_checkpointed
 from ts_raster_spark.session import run_concurrently
@@ -65,16 +64,13 @@ class RollupJobConfig:
     kinds: tuple[str, ...] = field(default=())  # () = all channels
 
 
-def run_rollup_job(
-    spark: SparkSession,
-    turns: DataFrame,
-    cfg: RollupJobConfig,
-    mask: DataFrame | None = None,
-) -> dict:
-    """Execute the retention pipeline; returns per-tier row counts."""
+def run_rollup_job(spark: SparkSession, turns: DataFrame, cfg: RollupJobConfig) -> dict:
+    """Execute the retention pipeline; returns per-tier row counts.
+
+    Late turns take the same path: re-run the job over all turns into the
+    same ``out_root``. With checkpoint slices only the slices whose input
+    changed recompute; the tier tables are then rewritten whole."""
     cat = ParquetTierCatalog(cfg.out_root, n_buckets=cfg.n_buckets)
-    if mask is not None:
-        turns = mask_df(turns, mask)
 
     def to_minute(part: DataFrame) -> DataFrame:
         return rollup_simple_wide(part, "minute", channels=cfg.kinds or None)

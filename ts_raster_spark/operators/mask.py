@@ -8,8 +8,6 @@ Reference semantics:
 - ``unmask_df`` / ``unmask_from_mask`` (prep.py:450-521): re-expand a
   masked result onto the dense domain; absent rows get the ``-9999``
   sentinel → **left outer join + coalesce**.
-- ``check_mask`` (prep.py:524-549): pre-flight compatibility assertion
-  between mask and input.
 """
 
 from __future__ import annotations
@@ -46,13 +44,3 @@ def unmask_df(
     for c in value_cols:
         out = out.withColumn(c, F.coalesce(F.col(c), F.lit(SENTINEL)))
     return out
-
-
-def check_mask(df: DataFrame, mask: DataFrame) -> None:
-    """Pre-flight: every masked conv_id must exist in the input
-    (prep.py:524-549's metadata compatibility check, recast)."""
-    missing = (
-        mask_keys(mask).join(df.select("conv_id").distinct(), "conv_id", "left_anti").limit(1).count()
-    )
-    if missing:
-        raise ValueError("mask references conv_ids absent from the input table")

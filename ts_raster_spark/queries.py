@@ -16,7 +16,7 @@ import os
 import shutil
 import tempfile
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
@@ -46,6 +46,11 @@ def load_long(spark: SparkSession, sf_dir: str, channels: tuple[str, ...] = CHAN
     the derivation (the latency window too when latency_s is left out —
     see longform.with_channels)."""
     return to_long_panel(load_turns(spark, sf_dir), channels=channels)
+
+
+def _late() -> Column:
+    """The deterministic 'late' turns of the two MERGE queries."""
+    return (F.pmod(F.xxhash64("conv_id"), F.lit(7)) == 3) & (F.col("turn_idx") >= 4)
 
 
 def _turn_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -837,16 +842,15 @@ def q_mg_top_tools_day(spark, sf_dir):
 def q_sketch_merge_retention(spark, sf_dir):
     """The KLL sketch TIER composed with the
     late-data idempotent MERGE and the retention TTL — proof that
-    sketch columns survive both tier-maintenance paths.
+    sketch columns survive both tier-maintenance rules.
 
     A deterministic late subset of turns is withheld (same hash rule as
     q_late_data_merge_hour); the minute-grain sketch tier is built from
     the on-time rows, the late rows are merged by recomputing exactly
     the affected conversations' sketches from raw+late and upserting
-    (operators/retention.upsert_convs, the body of merge_late_turns),
-    then retention drops buckets older than 7 days before the tier's own
-    horizon (operators/retention.apply_retention contract: cutoff is a
-    function of the data, never wall clock).
+    (operators/retention.merge_late), then retention drops buckets older
+    than 7 days before the tier's own horizon (operators/retention.
+    within_ttl: the cutoff is a function of the data, never wall clock).
 
     The sketch build is DETERMINISTIC (operators/kll.py), so the merged
     tier must equal a fresh build from ALL turns over the same window —
@@ -855,26 +859,15 @@ def q_sketch_merge_retention(spark, sf_dir):
     ``total_weight`` = the exact in-window raw count per hour, which
     the DuckDB oracle restates from raw."""
     from ts_raster_spark.operators.kll import kll_sketch
-    from ts_raster_spark.operators.retention import upsert_convs, within_ttl
+    from ts_raster_spark.operators.retention import merge_late, within_ttl
 
     k = 64
     turns = load_turns(spark, sf_dir)
-    is_late = (F.pmod(F.xxhash64("conv_id"), F.lit(7)) == 3) & (F.col("turn_idx") >= 4)
-    ontime = turns.where(~is_late)
 
-    sk_ontime = kll_sketch(
-        to_long_panel(ontime, channels=("text_len",)), "minute", k=k
-    )
-    affected = turns.where(is_late).select("conv_id").distinct()
-    recomputed = kll_sketch(
-        to_long_panel(
-            turns.join(F.broadcast(affected), "conv_id", "left_semi"),
-            channels=("text_len",),
-        ),
-        "minute",
-        k=k,
-    )
-    merged = upsert_convs(sk_ontime, recomputed, affected)
+    def sketch(t):
+        return kll_sketch(to_long_panel(t, channels=("text_len",)), "minute", k=k)
+
+    merged = merge_late(turns, _late(), sketch)
 
     horizon = F.broadcast(merged.agg(F.max("bucket_start").alias("_horizon")))
 
@@ -882,7 +875,7 @@ def q_sketch_merge_retention(spark, sf_dir):
         return within_ttl(tier.crossJoin(horizon), "7 days", F.col("_horizon")).drop("_horizon")
 
     retained = retain(merged)
-    fresh_ret = retain(kll_sketch(to_long_panel(turns, channels=("text_len",)), "minute", k=k))
+    fresh_ret = retain(sketch(turns))
 
     cols = ["conv_id", "kind", "bucket_start", "level", "value"]
     a = retained.groupBy(*cols).agg(F.count("*").alias("_ca"))
@@ -969,7 +962,7 @@ def q_retention_ttl_hour(spark, sf_dir):
     """Retention TTL enforcement (north rule): hour-tier buckets older
     than 7 days before the panel's own horizon (max bucket_start) are
     dropped. The cutoff is a deterministic function of the data, never
-    of wall clock — the operators/retention.apply_retention contract."""
+    of wall clock (operators/retention.within_ttl)."""
     from ts_raster_spark.operators.retention import within_ttl
 
     long_df = load_long(spark, sf_dir).where(F.col("kind") == "text_len")
@@ -980,32 +973,19 @@ def q_retention_ttl_hour(spark, sf_dir):
 
 
 def q_late_data_merge_hour(spark, sf_dir):
-    """Late-data idempotent MERGE (north rule, the body of operators/
-    retention.merge_late_turns): a deterministic 'late' subset of turns
-    is withheld, the hour tier is built from the on-time rows, then the
-    late rows are merged by recomputing exactly the affected
-    conversations' buckets and upserting them
-    (operators/retention.upsert_convs). The oracle recomputes the tier
-    from ALL turns: equality IS the proof that the merge converges to
-    the full recompute."""
-    from ts_raster_spark.operators.retention import upsert_convs
+    """Late-data idempotent MERGE (north rule, operators/retention.
+    merge_late): a deterministic 'late' subset of turns is withheld, the
+    hour tier is built from the on-time rows, then the late rows are
+    merged by recomputing exactly the affected conversations' buckets and
+    upserting them. The oracle recomputes the tier from ALL turns:
+    equality IS the proof that the merge converges to the full
+    recompute."""
+    from ts_raster_spark.operators.retention import merge_late
 
-    turns = load_turns(spark, sf_dir)
-    is_late = (F.pmod(F.xxhash64("conv_id"), F.lit(7)) == 3) & (F.col("turn_idx") >= 4)
-    ontime = turns.where(~is_late)
-    late = turns.where(is_late)
+    def hour(t):
+        return rollup_simple(to_long_panel(t).where(F.col("kind") == "text_len"), "hour")
 
-    tier_ontime = rollup_simple(
-        to_long_panel(ontime).where(F.col("kind") == "text_len"), "hour"
-    )
-    affected = late.select("conv_id").distinct()
-    recomputed = rollup_simple(
-        to_long_panel(
-            turns.join(F.broadcast(affected), "conv_id", "left_semi")
-        ).where(F.col("kind") == "text_len"),
-        "hour",
-    )
-    return finalize(upsert_convs(tier_ontime, recomputed, affected))
+    return finalize(merge_late(load_turns(spark, sf_dir), _late(), hour))
 
 
 def q_wide_to_long_panel(spark, sf_dir):

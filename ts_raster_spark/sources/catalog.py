@@ -104,15 +104,13 @@ class ParquetTierCatalog:
     def with_bucket(self, df: DataFrame) -> DataFrame:
         return df.withColumn("bucket_id", self.bucket_of(F.col("conv_id")))
 
-    def write(self, df: DataFrame, table: str, full: bool = False) -> None:
+    def write(self, df: DataFrame, table: str) -> None:
         """Write a tier table bucketed by conv_id.
 
         Overwrite with dynamic partition overwrite replaces
         only the buckets present in ``df`` — the idempotent-MERGE
         stand-in (a resumed job rewrites its own buckets byte-identically
-        instead of double-appending). ``full=True`` switches to static
-        overwrite (truncate-then-write) for operations that may empty a
-        bucket entirely (retention TTL drops).
+        instead of double-appending).
         """
         sort_cols = [c for c in ("conv_id", "kind", "bucket_start") if c in df.columns]
         (
@@ -122,7 +120,7 @@ class ParquetTierCatalog:
             .write.mode("overwrite")
             # per write, not the session conf: concurrent writes on one
             # session must not see each other's mode
-            .option("partitionOverwriteMode", "static" if full else "dynamic")
+            .option("partitionOverwriteMode", "dynamic")
             .partitionBy("bucket_id")
             .parquet(self.path(table))
         )
