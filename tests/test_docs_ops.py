@@ -81,11 +81,11 @@ def test_lang_id_mostly_right_on_latin(spark, docs):
 
 
 def test_connected_components_chain_and_singletons(spark):
-    """Min-label propagation converges on a chain (diameter > 1 forces
+    """The star solver converges on a chain (diameter > 1 forces
     multiple rounds) and carries isolated nodes as singletons."""
     from pyspark.sql import functions as F
 
-    from ts_raster_spark.operators.dedup import connected_components
+    from ts_raster_spark.operators.dedup import connected_components_star
 
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (10, 11), (20, 11)],
@@ -94,12 +94,12 @@ def test_connected_components_chain_and_singletons(spark):
     nodes = spark.createDataFrame([(i,) for i in [1, 2, 3, 4, 10, 11, 20, 99]], "node long")
     got = {
         r["node"]: r["component"]
-        for r in connected_components(edges, all_nodes=nodes).collect()
+        for r in connected_components_star(edges, all_nodes=nodes).collect()
     }
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 20: 10, 99: 99}
 
     # without all_nodes, only edge-touched nodes appear
-    got2 = connected_components(edges)
+    got2 = connected_components_star(edges)
     assert got2.count() == 7
     assert got2.where(F.col("node") == 99).count() == 0
 
@@ -126,6 +126,20 @@ def test_dedup_keep_canonical(spark):
     assert int(out.loc["doc-d", "n_dups"]) == 1
 
 
+def test_dedup_keep_canonical_deep_chain(spark, monkeypatch):
+    """A 40-document chain of pairwise near-dups (diameter 39) collapses
+    to its minimum document, which represents all 40."""
+    from ts_raster_spark.operators import dedup
+
+    ids = [f"doc-{i:02d}" for i in range(40)]
+    docs = spark.createDataFrame([(d, f"text {d}") for d in ids], "doc_id string, text string")
+    chain = spark.createDataFrame(list(zip(ids, ids[1:])), "doc_a string, doc_b string")
+    monkeypatch.setattr(dedup, "minhash_lsh_pairs", lambda _docs: chain)
+
+    out = dedup.dedup_keep_canonical(docs).collect()
+    assert [(r["doc_id"], r["component"], r["n_dups"]) for r in out] == [("doc-00", "doc-00", 40)]
+
+
 def _union_find(n_nodes, edges):
     parent = list(range(n_nodes))
 
@@ -147,24 +161,18 @@ def _union_find(n_nodes, edges):
     return {v: comp[find(v)] for v in range(n_nodes)}
 
 
-def test_components_star_deep_path_graph(spark):
-    """large-star/small-star must converge in O(log n) rounds on a
-    path graph whose diameter (200) is far beyond the min-label
-    default max_iter=25 — the case where min-label must REFUSE."""
-    import pytest as _pt
+def _path_edges(spark, n):
+    path_edges = [(i, i + 1) for i in range(n - 1)]
+    return path_edges, spark.createDataFrame(path_edges, "doc_a long, doc_b long")
 
-    from ts_raster_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
+
+def test_components_star_deep_path_graph(spark):
+    """large-star/small-star converges in O(log n) rounds on a path
+    graph of diameter 200."""
+    from ts_raster_spark.operators.dedup import connected_components_star
 
     n = 201
-    path_edges = [(i, i + 1) for i in range(n - 1)]
-    edges = spark.createDataFrame(path_edges, "doc_a long, doc_b long")
-
-    with _pt.raises(RuntimeError, match="did not converge"):
-        connected_components(edges)
-
+    path_edges, edges = _path_edges(spark, n)
     got = {
         r["node"]: r["component"]
         for r in connected_components_star(edges, max_rounds=15).collect()
@@ -173,15 +181,22 @@ def test_components_star_deep_path_graph(spark):
     assert got == want  # everything collapses to component 0
 
 
-def test_components_star_matches_min_label_random(spark):
-    """On shallow random graphs both algorithms agree with union-find
-    (and with each other), including isolated singletons."""
+def test_components_star_refuses_when_not_converged(spark):
+    """A round budget too small for the graph raises instead of
+    returning a partial labeling."""
+    from ts_raster_spark.operators.dedup import connected_components_star
+
+    _, edges = _path_edges(spark, 201)
+    with pytest.raises(RuntimeError, match="did not converge in 2 rounds"):
+        connected_components_star(edges, max_rounds=2)
+
+
+def test_components_star_matches_union_find_random(spark):
+    """On shallow random graphs the star solver agrees with union-find,
+    including isolated singletons."""
     import random
 
-    from ts_raster_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
+    from ts_raster_spark.operators.dedup import connected_components_star
 
     rng = random.Random(7)
     n = 120
@@ -195,12 +210,7 @@ def test_components_star_matches_min_label_random(spark):
         r["node"]: r["component"]
         for r in connected_components_star(edges, all_nodes=nodes).collect()
     }
-    got_min = {
-        r["node"]: r["component"]
-        for r in connected_components(edges, all_nodes=nodes).collect()
-    }
     assert got_star == want
-    assert got_min == want
 
 
 def test_repetition_stats_crafted(spark):

@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_FINER_OF = {"hour": "minute", "day": "hour"}
+from ts_raster_spark.operators.rollup import TIERS
 
 
 def cascade_up(finer: DataFrame, to_tier: str) -> DataFrame:
@@ -30,8 +30,8 @@ def cascade_up(finer: DataFrame, to_tier: str) -> DataFrame:
     buckets, plus derived ``mean``/``variance`` columns (exact — mean =
     Σsum/Σn, var_pop = Σsum²/Σn − mean²).
     """
-    if to_tier not in _FINER_OF:
-        raise ValueError(f"cascade target must be hour|day, got {to_tier!r}")
+    if to_tier not in list(TIERS)[1:]:
+        raise ValueError(f"cascade target must be one of {list(TIERS)[1:]}, got {to_tier!r}")
     keys = ["conv_id", "kind"]
     out = (
         finer.withColumn("bucket_start", F.date_trunc(to_tier, F.col("bucket_start")))

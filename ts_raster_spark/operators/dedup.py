@@ -137,73 +137,6 @@ def minhash_lsh_pairs(docs: DataFrame, k: int = 8, band_size: int = 2) -> DataFr
     )
 
 
-def connected_components(
-    edges: DataFrame,
-    all_nodes: DataFrame | None = None,
-) -> DataFrame:
-    """Connected components over near-dup pair edges: min-label
-    propagation to a fixpoint — the cluster step that turns pairwise
-    dedup output into canonical groups (component id = min doc_id in the
-    group; a pipeline keeps one doc per component).
-
-    Iterative Spark shape: each round joins current labels to the
-    undirected edge list, takes the per-node min over self+neighbors,
-    and stops when no label changed. Rounds needed = graph diameter
-    (near-dup clusters are shallow — a handful); every round is one
-    shuffle on the node key and the plan is cut per round with
-    ``localCheckpoint`` so lineage cannot grow exponentially. Raises if
-    the diameter exceeds 25 rounds — non-converged labelings must never
-    be consumed as correct. For web-graph diameters use
-    :func:`connected_components_star` (O(log n) rounds).
-
-    ``edges`` holds one pair per row in ``doc_a``/``doc_b``; ``all_nodes``
-    (one ``node`` column) adds isolated nodes as their own singleton
-    components. Output: (node, component).
-    """
-    # materialized once: every round joins it, and lazy edges (MinHash-LSH
-    # pairs) would otherwise be re-derived in every round
-    und = (
-        edges.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
-        .unionByName(edges.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v")))
-        .localCheckpoint()
-    )
-    nodes = und.select(F.col("u").alias("node")).distinct()
-    if all_nodes is not None:
-        nodes = nodes.unionByName(all_nodes.select("node")).distinct()
-    labels = nodes.select("node", F.col("node").alias("comp")).localCheckpoint()
-    converged = False
-    for _ in range(25):
-        nb_min = (
-            und.join(labels, und["v"] == labels["node"])
-            .groupBy("u")
-            .agg(F.min("comp").alias("_nb_comp"))
-            .withColumnRenamed("u", "node")
-        )
-        # the convergence flag rides the checkpointed frame, so the probe
-        # below is a limit-1 scan of already-materialized partitions —
-        # not a second labels-vs-labels join job per round
-        new_labels = (
-            labels.join(nb_min, "node", "left")
-            .select(
-                "node",
-                F.least(F.col("comp"), F.coalesce("_nb_comp", F.col("comp"))).alias("comp"),
-                F.coalesce(F.col("_nb_comp") < F.col("comp"), F.lit(False)).alias("_chg"),
-            )
-            .localCheckpoint()
-        )
-        converged = new_labels.where("_chg").isEmpty()
-        labels = new_labels.drop("_chg")
-        if converged:
-            break
-    if not converged:
-        raise RuntimeError(
-            "connected_components did not converge in 25 min-label "
-            "rounds (component diameter exceeds 25); use "
-            "connected_components_star for high-diameter graphs"
-        )
-    return labels.select(F.col("node"), F.col("comp").alias("component"))
-
-
 def _large_star(e: DataFrame) -> DataFrame:
     """Kiveris et al. large-star round: for each node u, connect every
     strictly-larger neighbor to min(Γ(u) ∪ {u}). Input/output: directed
@@ -241,18 +174,23 @@ def connected_components_star(
     all_nodes: DataFrame | None = None,
     max_rounds: int = 50,
 ) -> DataFrame:
-    """Connected components via alternating large-star / small-star
-    rounds (Kiveris et al., "Connected Components in MapReduce and
-    Beyond" — the public web-graph algorithm). Converges in O(log n)
-    rounds regardless of component diameter, unlike min-label
-    propagation whose round count IS the diameter — this is the variant
-    for deep graphs (chains of pairwise near-dups, web link graphs).
+    """Connected components over near-dup pair edges via alternating
+    large-star / small-star rounds (Kiveris et al., "Connected
+    Components in MapReduce and Beyond") — the cluster step that turns
+    pairwise dedup output into canonical groups (component id = min
+    doc_id in the group; a pipeline keeps one doc per component).
+    Converges in O(log n) rounds whatever the component diameter, so
+    deep chains of pairwise near-dups cluster as well as shallow ones.
 
-    Convergence = the edge multiset is stable across a full
+    ``edges`` holds one pair per row in ``doc_a``/``doc_b``. Every round
+    is cut with ``localCheckpoint`` so lineage cannot grow across
+    rounds. Convergence = the edge multiset is stable across a full
     (large, small) pair, detected with one count+hash aggregate per
-    round. At the fixpoint edges form stars child → component-min;
-    isolated ``all_nodes`` become singleton components. Output:
-    (node, component) — identical to :func:`connected_components`.
+    round; raises if that takes more than ``max_rounds`` — a
+    non-converged labeling must never be consumed as correct. At the
+    fixpoint edges form stars child → component-min; isolated
+    ``all_nodes`` (one ``node`` column) become singleton components.
+    Output: (node, component).
     """
     e = (
         edges.select(
@@ -264,7 +202,6 @@ def connected_components_star(
         .localCheckpoint()
     )
     prev_sig = None
-    converged = False
     for _ in range(max_rounds):
         e = _small_star(_large_star(e)).localCheckpoint()
         sig_row = e.agg(
@@ -273,10 +210,9 @@ def connected_components_star(
         ).first()
         sig = (sig_row["n"], sig_row["h"])
         if sig == prev_sig:
-            converged = True
             break
         prev_sig = sig
-    if not converged:
+    else:
         raise RuntimeError(
             f"connected_components_star did not converge in {max_rounds} rounds"
         )
@@ -297,15 +233,16 @@ def connected_components_star(
 
 def dedup_keep_canonical(docs: DataFrame) -> DataFrame:
     """The end-to-end near-dup dedup a training pipeline runs: MinHash-LSH
-    candidate pairs (:func:`minhash_lsh_pairs`' defaults) → min-label
-    connected components → keep exactly ONE document (the component
-    minimum) per near-dup cluster, plus every untouched document.
+    candidate pairs (:func:`minhash_lsh_pairs`' defaults) → connected
+    components (:func:`connected_components_star`) → keep exactly ONE
+    document (the component minimum) per near-dup cluster, plus every
+    untouched document.
 
     Output: the deduplicated corpus (all original columns) plus
     ``component`` and ``n_dups`` (cluster size the survivor represents).
     """
     pairs = minhash_lsh_pairs(docs)
-    comp = connected_components(pairs, all_nodes=docs.select(F.col("doc_id").alias("node")))
+    comp = connected_components_star(pairs, all_nodes=docs.select(F.col("doc_id").alias("node")))
     sizes = comp.groupBy("component").agg(F.count("*").cast("long").alias("n_dups"))
     keep = (
         comp.where(F.col("node") == F.col("component"))

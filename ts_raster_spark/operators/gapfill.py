@@ -25,7 +25,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-_SECONDS = {"minute": 60, "hour": 3600, "day": 86400}
+from ts_raster_spark.operators.rollup import tier_seconds
+
 SENTINEL = -9999.0  # reference missing-value contract, calculate.py:66
 
 
@@ -46,7 +47,7 @@ def scaffold(points: DataFrame, tier: str) -> DataFrame:
     on gap rows, ``_observed`` false there and for observed-but-null
     values).
     """
-    step = _SECONDS[tier]
+    step = tier_seconds(tier)
     w = Window.partitionBy("conv_id", "kind").orderBy("bucket_start")
     other = [c for c in points.columns if c not in ("conv_id", "kind", "bucket_start")]
     prev = F.lag("bucket_start").over(w)
@@ -135,6 +136,4 @@ def gapfill(points: DataFrame, tier: str, policy: str = "locf") -> DataFrame:
     fills = {"locf": fill_locf, "linear": fill_linear, "sentinel": fill_sentinel}
     if policy not in fills:
         raise ValueError(f"unknown gap-fill policy {policy!r}; want one of {sorted(fills)}")
-    if tier not in _SECONDS:
-        raise ValueError(f"unknown tier {tier!r}; want one of {sorted(_SECONDS)}")
     return fills[policy](scaffold(points, tier))

@@ -28,7 +28,16 @@ from pyspark.sql import functions as F
 
 from ts_raster_spark.functions import features as FT
 
-TIERS = {"minute": "minute", "hour": "hour", "day": "day"}
+# the retention tiers, finest first: name (also its ``date_trunc`` unit)
+# → bucket width in seconds
+TIERS = {"minute": 60, "hour": 3600, "day": 86400}
+
+
+def tier_seconds(tier: str) -> int:
+    """Bucket width of ``tier`` in seconds; ValueError on an unknown tier."""
+    if tier not in TIERS:
+        raise ValueError(f"unknown tier {tier!r}; want one of {sorted(TIERS)}")
+    return TIERS[tier]
 
 
 def bucketize(long_df: DataFrame, tier: str | None) -> tuple[DataFrame, list[str]]:
@@ -36,9 +45,8 @@ def bucketize(long_df: DataFrame, tier: str | None) -> tuple[DataFrame, list[str
     keys = ["conv_id", "kind"]
     if tier is None:
         return long_df, keys
-    if tier not in TIERS:
-        raise ValueError(f"unknown tier {tier!r}; want one of {sorted(TIERS)} or None")
-    out = long_df.withColumn("bucket_start", F.date_trunc(TIERS[tier], F.col("ts")))
+    tier_seconds(tier)
+    out = long_df.withColumn("bucket_start", F.date_trunc(tier, F.col("ts")))
     return out, keys + ["bucket_start"]
 
 
@@ -76,10 +84,9 @@ def rollup_simple_wide(turns: DataFrame, tier: str, channels: tuple[str, ...] | 
     reference-parity IR (and feeds the full feature rollup)."""
     from ts_raster_spark.operators.longform import CHANNELS, with_channels
 
-    if tier not in TIERS:
-        raise ValueError(f"unknown tier {tier!r}; want one of {sorted(TIERS)}")
+    tier_seconds(tier)
     chans = list(channels or CHANNELS)
-    wide = with_channels(turns).withColumn("bucket_start", F.date_trunc(TIERS[tier], F.col("ts")))
+    wide = with_channels(turns).withColumn("bucket_start", F.date_trunc(tier, F.col("ts")))
     aggs = []
     for c in chans:
         col = F.col(c)

@@ -10,12 +10,11 @@ layout change can never double-count: slice outputs land in their own
 directories, the manifest line is written only after the write
 succeeds, and records from a different ``n_slices`` layout are ignored.
 
-Slices use the catalog's bucket hash (``pmod(xxhash64(conv_id),
-n_slices)``, as ``ParquetTierCatalog.bucket_of``), so every slice value
-lies in ``range(n_slices)``. Every slice's input fingerprint + row count
-comes from **one** full-input aggregation pass (:func:`slice_lineage`),
-not a scan per slice — a fully-done resume costs one scan total, not
-2·n_slices.
+Slices use the catalog's bucket hash (``catalog.conv_bucket`` with
+``n_slices``), so every slice value lies in ``range(n_slices)``. Every
+slice's input fingerprint + row count comes from **one** full-input
+aggregation pass (:func:`slice_lineage`), not a scan per slice — a
+fully-done resume costs one scan total, not 2·n_slices.
 
 At cluster scale each slice is one spark-submit-able unit of retry.
 """
@@ -29,24 +28,20 @@ import time
 from collections.abc import Callable
 from functools import partial
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ts_raster_spark.session import run_concurrently
-from ts_raster_spark.sources.catalog import read_parquet
+from ts_raster_spark.sources.catalog import conv_bucket, read_parquet
 
 MANIFEST = "manifest.jsonl"
-
-
-def _slice_expr(n_slices: int) -> Column:
-    return F.pmod(F.xxhash64("conv_id"), F.lit(n_slices)).cast("int")
 
 
 def slice_lineage(df: DataFrame, n_slices: int) -> dict[int, dict]:
     """All slices' input lineage (row count + key hash) in ONE pass —
     a groupBy on the slice key instead of a filtered scan per slice."""
     rows = (
-        df.groupBy(_slice_expr(n_slices).alias("_slice"))
+        df.groupBy(conv_bucket(F.col("conv_id"), n_slices).alias("_slice"))
         .agg(
             F.count("*").alias("n"),
             F.coalesce(F.expr("bit_xor(xxhash64(conv_id, turn_idx))"), F.lit(0)).alias("h"),
@@ -135,7 +130,7 @@ def run_checkpointed(
     def run_slice(s: int) -> int:
         t0 = time.time()
         slice_path = os.path.join(out_dir, f"slice={s}")
-        transform(turns.where(_slice_expr(n_slices) == s)).write.mode("overwrite").parquet(slice_path)
+        transform(turns.where(conv_bucket(F.col("conv_id"), n_slices) == s)).write.mode("overwrite").parquet(slice_path)
         # footer-metadata count — no Spark job, no data re-read
         n_out = ds.dataset(slice_path, format="parquet").count_rows()
         rec = {

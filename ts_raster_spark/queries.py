@@ -26,6 +26,7 @@ from ts_raster_spark.operators.gapfill import gapfill
 from ts_raster_spark.operators.longform import CHANNELS, to_long_panel
 from ts_raster_spark.operators.mask import mask_df, unmask_df
 from ts_raster_spark.operators.rollup import rollup_features, rollup_simple
+from ts_raster_spark.sources.catalog import conv_bucket
 from ts_raster_spark.sources.turns import TURNS_SCHEMA, derive_turns_from_events
 from ts_raster_spark.streaming import rollup_stream as RS
 
@@ -50,7 +51,7 @@ def load_long(spark: SparkSession, sf_dir: str, channels: tuple[str, ...] = CHAN
 
 def _late() -> Column:
     """The deterministic 'late' turns of the two MERGE queries."""
-    return (F.pmod(F.xxhash64("conv_id"), F.lit(7)) == 3) & (F.col("turn_idx") >= 4)
+    return (conv_bucket(F.col("conv_id"), 7) == 3) & (F.col("turn_idx") >= 4)
 
 
 def _turn_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -291,12 +292,12 @@ def q_dedup_components(spark, sf_dir):
     """Near-dup clustering: connected components over the MinHash-LSH
     candidate pairs (pairs → canonical groups; component id = min
     doc_id). Oracle = recursive transitive-closure CTE."""
-    from ts_raster_spark.operators.dedup import connected_components, minhash_lsh_pairs
+    from ts_raster_spark.operators.dedup import connected_components_star, minhash_lsh_pairs
 
     docs = _docs(spark, sf_dir)
     pairs = minhash_lsh_pairs(docs, k=8, band_size=2)
     nodes = docs.select(F.col("doc_id").alias("node"))
-    out = connected_components(pairs, all_nodes=nodes)
+    out = connected_components_star(pairs, all_nodes=nodes)
     return out.select(F.col("node").alias("doc_id"), "component")
 
 

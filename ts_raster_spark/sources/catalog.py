@@ -7,7 +7,7 @@ the *layout semantics* on parquet while keeping the API stable: swap
 ``ParquetTierCatalog`` for an Iceberg catalog and nothing upstream
 changes.
 
-- ``bucket_id = pmod(xxhash64(conv_id), n_buckets)`` is the analog of
+- ``bucket_id = conv_bucket(conv_id, n_buckets)`` is the analog of
   Iceberg's bucket transform: co-locates each conversation's rows,
   enables bucket-pruned point lookups, and gives every tier table the
   same join-friendly clustering.
@@ -90,6 +90,13 @@ def feature_names_dim(spark: SparkSession, wide_df: DataFrame) -> DataFrame:
     )
 
 
+def conv_bucket(conv_id: Column, n: int) -> Column:
+    """The conversation hash layout, ``pmod(xxhash64(conv_id), n)`` as
+    int: tier-table buckets and checkpoint slices both use it, so a
+    slice and a bucket agree on which conversations they hold."""
+    return F.pmod(F.xxhash64(conv_id), F.lit(n)).cast("int")
+
+
 class ParquetTierCatalog:
     def __init__(self, root: str, n_buckets: int = 16):
         self.root = root
@@ -99,7 +106,7 @@ class ParquetTierCatalog:
         return os.path.join(self.root, table)
 
     def bucket_of(self, conv_id: Column) -> Column:
-        return F.pmod(F.xxhash64(conv_id), F.lit(self.n_buckets)).cast("int")
+        return conv_bucket(conv_id, self.n_buckets)
 
     def with_bucket(self, df: DataFrame) -> DataFrame:
         return df.withColumn("bucket_id", self.bucket_of(F.col("conv_id")))

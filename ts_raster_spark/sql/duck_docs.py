@@ -106,7 +106,8 @@ comp AS (SELECT node AS doc_id, min(lbl) AS component FROM reach GROUP BY node)"
 
 
 def components_sql(k: int = 8, band_size: int = 2) -> str:
-    """Twin of dedup.connected_components over minhash_lsh_pairs."""
+    """Twin of dedup.connected_components_star (large/small-star) over
+    minhash_lsh_pairs."""
     return _components_ctes(k, band_size) + "\nSELECT doc_id, component FROM comp\n"
 
 

@@ -29,9 +29,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ts_raster_spark.operators.rollup import tier_seconds
 from ts_raster_spark.sources.turns import TURNS_SCHEMA
-
-_TIER_WINDOW = {"minute": "1 minute", "hour": "1 hour", "day": "1 day"}
 
 
 def stream_turns(spark: SparkSession, input_path: str, max_files_per_trigger: int | None = None) -> DataFrame:
@@ -51,7 +50,7 @@ def stream_rollup(turns_stream: DataFrame, tier: str = "minute", watermark: str 
     )
     return (
         ch.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", _TIER_WINDOW[tier]).alias("w"), F.col("conv_id"))
+        .groupBy(F.window("ts", f"{tier_seconds(tier)} seconds").alias("w"), F.col("conv_id"))
         .agg(
             F.count("*").cast("long").alias("turn_count"),
             F.sum("text_len").alias("sum_text_len"),
